@@ -16,9 +16,10 @@ Usage:
       --binaries HEAD,3b6cd47,5a5adc0 --rounds 3 \
       --out bench_control_r13.json [--sf /root/testdata/sf0.1]
 
-HEAD means the CURRENT working tree (not a commit); anything else is a
-commit-ish checked out into a scratch worktree under .ab/ (gitignored)
-and compiled there once. NOT part of the shipped library.
+HEAD means the CURRENT working tree (not a commit); an existing
+directory is used as a checkout as-is; anything else is a commit-ish
+checked out into a scratch worktree under .ab/ (gitignored) and
+compiled there once. NOT part of the shipped library.
 """
 import argparse, json, os, re, statistics, subprocess, sys, time
 
@@ -37,6 +38,8 @@ def sh(cmd, cwd=REPO, env=None, check=True):
 def worktree_for(commit):
     if commit == "HEAD":
         return REPO
+    if os.path.isdir(commit):  # an existing checkout (e.g. a git clone)
+        return os.path.abspath(commit)
     sha = sh(["git", "rev-parse", "--short", commit]).stdout.strip()
     wt = os.path.join(REPO, ".ab", sha)
     if not os.path.isdir(wt):
@@ -99,7 +102,8 @@ def main():
     ap.add_argument("--mover-ratio", type=float, default=1.25)
     ap.add_argument("--mover-sec", type=float, default=0.3)
     ap.add_argument("--binaries", default="HEAD",
-                    help="comma list; HEAD = current tree, else commit-ish")
+                    help="comma list; HEAD = current tree, a directory = "
+                         "that checkout, else commit-ish")
     ap.add_argument("--rounds", type=int, default=3)
     ap.add_argument("--iters", type=int, default=3)
     ap.add_argument("--cpus", type=int, default=16)

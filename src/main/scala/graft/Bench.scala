@@ -84,36 +84,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt.max(1)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // NOTE (r17, measured): size-driven coalescing
-      // (coalescePartitions.parallelismFirst=false) was tried against
-      // the 32-core anti-scaling family and REJECTED — an 18-query
-      // mixed sweep at cpus=32 ran 35.8 s vs 29.8 s with this default:
-      // collapsing a small exchange to 1-2 partitions serializes every
-      // stage whose post-shuffle work EXPANDS the data (pair_expand
-      // explodes, multi-join probes: q09 4.1 s vs 1.6 s). The
-      // parallelism-first default is kept deliberately.
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // ContextCleaner reclaims broadcast blocks and SHUFFLE FILES only
-      // when driver GC collects their references — on a 128 GiB heap GC
-      // is rare and the default periodicGC.interval (30 min) is longer
-      // than the whole bench, so 211 queries x 3 iterations of shuffle
-      // state piled up on /tmp disk (the round-6 sustained slowdowns in
-      // the late-alphabet q*/src_* region). A 1-minute forced GC keeps
-      // the cleaner draining throughout the run.
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-bench")
     // Warm up the session once (codegen compiler, shuffle machinery,
     // file-source listing) so first-query numbers measure the query,
     // not JVM startup.

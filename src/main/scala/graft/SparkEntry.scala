@@ -4,7 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** One family of named queries plus, for the keys it can, DuckDB SQL
+  * that recomputes the same result over the same parquet tables. */
+trait QueryModule {
+  type Q = (SparkSession, String) => DataFrame
+  val queries: Map[String, Q]
+  val oracles: Map[String, String]
+}
+
+/** Entry-point contract (`entry`, `queries`, `oracleSql`) — see SURVEY.md §7. */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
@@ -25,32 +33,45 @@ object SparkEntry {
       .orderBy("r_name")
   }
 
+  /** Every query module, listed once; `queries` and `oracleSql` are both
+    * derived from this list. Lazy, so `entry` alone loads no module. */
+  private lazy val registry = merge(Seq(
+    TpchQueries, TpchQueries2, TpcdsQueries, TpcdsQueries2, TpcdsQueries3,
+    TpcdsQueries4, TpcdsQueries5, TpcdsQueries6, TypedQueries, Skew,
+    RelationalQueries, AggQueries, WindowQueries, FunctionQueries,
+    FunctionQueries2, FunctionQueries3, FunctionQueries4, TableOps,
+    EventQueries, AsOfJoin, BandJoin,
+    graft.pipeline.Dedup, graft.pipeline.Similarity,
+    graft.pipeline.TextAnalysis, graft.pipeline.Corpus,
+    graft.pipeline.Multimodal, graft.pipeline.Splits,
+    graft.pipeline.Curation, graft.pipeline.Tokenizer, graft.pipeline.Cluster,
+    graft.sources.NestedParquet, graft.sources.AvroQueries,
+    graft.sources.SequenceQueries, graft.sources.RcFileQueries,
+    graft.sources.IcebergQueries, graft.sources.HiveAcidQueries,
+    graft.sources.HudiQueries, graft.sources.MixedFormatQueries))
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    TpchQueries.queries ++ TpchQueries2.queries ++ TpcdsQueries.queries ++ TpcdsQueries2.queries ++ TpcdsQueries3.queries ++ TpcdsQueries4.queries ++ TpcdsQueries5.queries ++ TpcdsQueries6.queries ++ TypedQueries.queries ++ Skew.queries ++ RelationalQueries.queries ++
-      AggQueries.queries ++ WindowQueries.queries ++
-      FunctionQueries.queries ++ FunctionQueries2.queries ++ FunctionQueries3.queries ++ FunctionQueries4.queries ++
-      TableOps.queries ++ EventQueries.queries ++
-      graft.pipeline.Dedup.queries ++ graft.pipeline.Similarity.queries ++
-      graft.pipeline.TextAnalysis.queries ++ graft.pipeline.Corpus.queries ++
-      graft.pipeline.Multimodal.queries ++ graft.pipeline.Splits.queries ++ graft.pipeline.Curation.queries ++ graft.pipeline.Tokenizer.queries ++
-      graft.pipeline.Cluster.queries ++ AsOfJoin.queries ++ BandJoin.queries ++
-      graft.sources.NestedParquet.queries ++ graft.sources.AvroQueries.queries ++ graft.sources.SequenceQueries.queries ++ graft.sources.RcFileQueries.queries ++
-      graft.sources.IcebergQueries.queries ++ graft.sources.HiveAcidQueries.queries ++ graft.sources.HudiQueries.queries ++
-      graft.sources.MixedFormatQueries.queries
+  def queries: Map[String, (SparkSession, String) => DataFrame] = registry._1
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a rows-only check. */
-  def oracleSql: Map[String, String] =
-    TpchQueries.oracles ++ TpchQueries2.oracles ++ TpcdsQueries.oracles ++ TpcdsQueries2.oracles ++ TpcdsQueries3.oracles ++ TpcdsQueries4.oracles ++ TpcdsQueries5.oracles ++ TpcdsQueries6.oracles ++ TypedQueries.oracles ++ Skew.oracles ++ RelationalQueries.oracles ++
-      AggQueries.oracles ++ WindowQueries.oracles ++
-      FunctionQueries.oracles ++ FunctionQueries2.oracles ++ FunctionQueries3.oracles ++ FunctionQueries4.oracles ++
-      TableOps.oracles ++ EventQueries.oracles ++
-      graft.pipeline.Dedup.oracles ++ graft.pipeline.Similarity.oracles ++
-      graft.pipeline.TextAnalysis.oracles ++ graft.pipeline.Corpus.oracles ++
-      graft.pipeline.Multimodal.oracles ++ graft.pipeline.Splits.oracles ++ graft.pipeline.Curation.oracles ++ graft.pipeline.Tokenizer.oracles ++
-      graft.pipeline.Cluster.oracles ++ AsOfJoin.oracles ++ BandJoin.oracles ++
-      graft.sources.NestedParquet.oracles ++ graft.sources.AvroQueries.oracles ++ graft.sources.SequenceQueries.oracles ++ graft.sources.RcFileQueries.oracles ++
-      graft.sources.IcebergQueries.oracles ++ graft.sources.HiveAcidQueries.oracles ++ graft.sources.HudiQueries.oracles ++
-      graft.sources.MixedFormatQueries.oracles
+  def oracleSql: Map[String, String] = registry._2
+
+  /** Unions the modules' maps, failing on the first access instead of
+    * letting `Map ++` keep the last of two same-named entries: a name
+    * declared twice, or oracle SQL for a name no module declares,
+    * throws. */
+  private[graft] def merge(modules: Seq[QueryModule])
+      : (Map[String, (SparkSession, String) => DataFrame], Map[String, String]) = {
+    def unique[V](what: String, entries: Seq[(String, V)]): Map[String, V] = {
+      val dup = entries.groupBy(_._1).collect { case (k, es) if es.size > 1 => k }
+      require(dup.isEmpty, s"$what declared by more than one module: ${dup.toSeq.sorted.mkString(", ")}")
+      entries.toMap
+    }
+    val queries = unique("query names", modules.flatMap(_.queries))
+    val oracles = unique("oracle keys", modules.flatMap(_.oracles))
+    val orphans = oracles.keys.filterNot(queries.contains).toSeq.sorted
+    require(orphans.isEmpty, s"oracle SQL for no registered query: ${orphans.mkString(", ")}")
+    (queries, oracles)
+  }
 }

@@ -1,30 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same rationale as Bench: keep ContextCleaner draining broadcast
-      // and shuffle state across ~200 queries (default 30 min never fires)
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.ui.enabled", "false")
-    // Spill certification knob (r13 verdict #3, the Impala
-    // spilling-operator parity story): a deliberately small unified
-    // memory pool (with SPARK_DRIVER_MEM bounding the local-mode heap)
-    // forces the heavy tail's hash aggregates / sorts / joins through
-    // their spill paths; correctness must be IDENTICAL.
-    val spark = sys.env.get("SPARK_GRAFT_MEMORY_FRACTION")
-      .fold(builder)(f => builder.config("spark.memory.fraction", f))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Spill certification knob (the Impala spilling-operator parity
+    // story): a deliberately small unified memory pool (with
+    // SPARK_DRIVER_MEM bounding the local-mode heap) forces the heavy
+    // tail's hash aggregates / sorts / joins through their spill paths;
+    // correctness must be IDENTICAL. Set as a `spark.*` system
+    // property, which the session's SparkConf loads.
+    sys.env.get("SPARK_GRAFT_MEMORY_FRACTION")
+      .foreach(f => System.setProperty("spark.memory.fraction", f))
+    val spark = GraftSession.build("graft-verify")
     // Per-query spill evidence for the certification artifact: task
     // metrics summed across the query's jobs — a cert run where
     // nothing spilled would not be exercising the spill paths.

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{CpcOps, KllQuantile, Sampling, ThetaOps}
-import graft.plans.GraftFunctions
 import Exact._
 
 /** Aggregation coverage (SURVEY.md §2 A2–A11) — the grouping-aggregator
@@ -16,9 +15,7 @@ import Exact._
   * aggregate-functions-ir.cc). Spark realization: partial+final
   * HashAggregate, expand-node grouping sets, HLL++ for ndv.
   */
-object AggQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object AggQueries extends graft.QueryModule {
 
   val queries: Map[String, Q] = Map(
     // A2: several DISTINCT aggs + plain aggs in one pass.
@@ -192,7 +189,6 @@ object AggQueries {
     // CPC estimates are approximate → rows-only; SketchSpec bounds the
     // relative error vs exact countDistinct.
     "agg_cpc_ndv" -> ((spark, dir) => {
-      GraftFunctions.register(spark)
       val t = Tables(spark, dir)
       val sk = t.orders.groupBy("o_orderstatus")
         .agg(CpcOps.sketch(col("o_custkey")).as("sk"), count(lit(1)).as("n"))
@@ -208,7 +204,6 @@ object AggQueries {
     // over the DataSketches library. Sketch compaction is randomized →
     // rows-only; the spec bounds the rank error vs exact percentile.
     "agg_kll_quantile" -> ((spark, dir) => {
-      GraftFunctions.register(spark)
       val t = Tables(spark, dir)
       t.orders.groupBy("o_orderstatus")
         .agg(KllQuantile.sketch(col("o_totalprice")).as("sk"),
@@ -228,7 +223,6 @@ object AggQueries {
     // Sketch compaction is randomized → rows-only; SketchSpec bounds
     // each estimate against exact values.
     "agg_kll_rank" -> ((spark, dir) => {
-      GraftFunctions.register(spark)
       val t = Tables(spark, dir)
       val splits = array(lit(50000.0), lit(150000.0), lit(300000.0))
       t.orders.groupBy("o_orderstatus")
@@ -258,7 +252,6 @@ object AggQueries {
     // Randomized compaction beyond k remains the reason the trained
     // agg_kll_quantile/agg_kll_rank twins stay rows-only.
     "agg_kll_exact_regime" -> ((spark, dir) => {
-      GraftFunctions.register(spark)
       val t = Tables(spark, dir)
       t.supplier.filter(col("s_suppkey") <= 150)
         .withColumn("g", pmod(col("s_nationkey"), lit(5)).cast("long"))
@@ -284,7 +277,6 @@ object AggQueries {
     // here keep the CHECK structural (parse + ordering), not layout-
     // dependent.
     "agg_sketch_str" -> ((spark, dir) => {
-      GraftFunctions.register(spark)
       val t = Tables(spark, dir)
       // countDistinct lives in its OWN aggregation, joined back on the
       // 3-value status domain: mixed into the sketch .agg it would put
@@ -385,7 +377,6 @@ object AggQueries {
     // sf0.01 verification scale every estimate IS the exact distinct
     // count, so this row is oracle-checkable (unlike HLL/KLL).
     "agg_theta_overlap" -> ((spark, dir) => {
-      GraftFunctions.register(spark)
       val t = Tables(spark, dir)
       // o_custkey < 3000 bounds per-status distincts under theta's
       // k = 4096, so the sketch stays EXACT (and the exact-count oracle

@@ -15,7 +15,7 @@ import graft.Tables
   * total — the union-window formulation scales where a range-join
   * (inequality join → broadcast nested loop) would not.
   */
-object AsOfJoin {
+object AsOfJoin extends graft.QueryModule {
 
   /** For each left row (key, ts, ...), attach the payload of the latest
     * right row (key, rts, payload*) with rts <= ts. Left rows with no
@@ -84,7 +84,6 @@ object AsOfJoin {
     import org.apache.spark.sql.catalyst.expressions.Alias
     import org.apache.spark.sql.catalyst.plans.logical.Project
     val spark = left.sparkSession
-    graft.plans.GraftFunctions.register(spark)
     val lPlan = left.queryExecution.analyzed
     val rPlan0 = right.queryExecution.analyzed
     val rPlan = Project(rPlan0.output.map(a => Alias(a, a.name)()), rPlan0)
@@ -94,8 +93,6 @@ object AsOfJoin {
       lPlan, rPlan, attr(lPlan, key), attr(lPlan, ts),
       attr(rPlan, key), attr(rPlan, ts), payload.map(p => attr(rPlan, p))))
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Each purchase event joined to the user's latest prior (or same-
     * second) signup/view "state" event value. */

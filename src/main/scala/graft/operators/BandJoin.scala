@@ -12,7 +12,7 @@ import graft.Tables
   * predicate. Each pair is examined in exactly one partition; the
   * replication factor is the constant 3, not |right|.
   */
-object BandJoin {
+object BandJoin extends graft.QueryModule {
 
   /** Pairs (left row, right row) with the same `key` and |lt - rt| <= w.
     * `lt`/`rt` are epoch-second columns. */
@@ -27,8 +27,6 @@ object BandJoin {
       .filter(abs(col(lt) - col(rt)) <= w)
       .drop("__bin")
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // For each purchase, error events by the same user within ±5 min.

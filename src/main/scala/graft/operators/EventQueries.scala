@@ -13,9 +13,7 @@ import Exact._
   * to whole epoch seconds (floor) before arithmetic so nanosecond vs
   * microsecond parquet precision can never leak into results.
   */
-object EventQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object EventQueries extends graft.QueryModule {
 
   // events.ts is bigint nanoseconds — Tables.events normalizes both
   // on-disk encodings (int64-nanos and timestamp-micros) to that

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.plans.GraftFunctions
 
 /** Scalar function library coverage (SURVEY.md §2 F1–F9) — the Spark
   * equivalents of the reference engine's builtin expression families
@@ -12,9 +11,7 @@ import graft.plans.GraftFunctions
   * bit-byte-functions-ir.cc, and the fe registry BuiltinsDb.java).
   * Everything here is a codegen'd builtin — no UDFs in the hot path.
   */
-object FunctionQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object FunctionQueries extends graft.QueryModule {
 
   val queries: Map[String, Q] = Map(
     // F1: CASE / coalesce / nullif / if-else chains.
@@ -121,7 +118,6 @@ object FunctionQueries {
     // DuckDB replays FNV-1/murmur2-64A/fingerprint64 bit-for-bit via
     // generated HUGEINT arithmetic (DuckHashSql).
     "fn_fnv_hash" -> ((spark, dir) => {
-      GraftFunctions.register(spark)
       val t = Tables(spark, dir)
       t.customer.filter(col("c_custkey") < 200)
         .select(col("c_custkey"),

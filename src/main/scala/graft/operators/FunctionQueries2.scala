@@ -13,9 +13,7 @@ import graft.Tables
   * TABLESAMPLE SYSTEM(n)) as seeded Bernoulli sampling (rows-only:
   * sampling is engine-specific by construction).
   */
-object FunctionQueries2 {
-
-  type Q = (SparkSession, String) => DataFrame
+object FunctionQueries2 extends graft.QueryModule {
 
   val queries: Map[String, Q] = Map(
     "fn_string2" -> ((spark, dir) => {

@@ -23,9 +23,7 @@ import graft.Tables
   *   library (Impala stops at corr/covar) but standard SQL:2003 — Spark
   *   and DuckDB both ship them, so the row is oracle-checkable.
   */
-object FunctionQueries3 {
-
-  type Q = (SparkSession, String) => DataFrame
+object FunctionQueries3 extends graft.QueryModule {
 
   val queries: Map[String, Q] = Map(
     // F20: Ranger mask family over c_name (fixed "Customer#nnnnnnnnn",

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.plans.GraftFunctions
 
 /** Fourth builtin batch (round 3) — the remaining scalar/aggregate
   * surface from the reference registry
@@ -29,9 +28,7 @@ import graft.plans.GraftFunctions
   * - leftover date/time: months_between, next_day, monthname,
   *   weeks_add, quarter-add (months_add ×3).
   */
-object FunctionQueries4 {
-
-  type Q = (SparkSession, String) => DataFrame
+object FunctionQueries4 extends graft.QueryModule {
 
   private val mangle = translate(col("c_name"), "0123456789", "OIZEASGTBQ")
 
@@ -46,7 +43,6 @@ object FunctionQueries4 {
     // DuckDB's convention. OSA's divergent cases are pinned in
     // FunctionsSpec instead (no DuckDB OSA builtin to oracle against).
     "fn_strdist" -> ((spark, dir) => {
-      GraftFunctions.register(spark)
       val t = Tables(spark, dir)
       t.customer.filter(col("c_custkey") < 500)
         .select(col("c_custkey"),
@@ -149,7 +145,6 @@ object FunctionQueries4 {
     // floor-to-width (negative-safe) and string code-point prefix. The
     // integer/string truncate rules are pure arithmetic → oracle-exact.
     "fn_iceberg_truncate" -> ((spark, dir) => {
-      GraftFunctions.register(spark)
       val t = Tables(spark, dir)
       t.customer.filter(col("c_custkey") < 500)
         .select(col("c_custkey"),
@@ -165,7 +160,6 @@ object FunctionQueries4 {
     // arithmetic (DuckHashSql); FunctionsSpec additionally pins the
     // spec's published vectors.
     "fn_iceberg_bucket" -> ((spark, dir) => {
-      GraftFunctions.register(spark)
       val t = Tables(spark, dir)
       t.customer.filter(col("c_custkey") < 500)
         .select(col("c_custkey"),

@@ -12,9 +12,7 @@ import Exact._
   * nested-loop cross join, set ops (union-node.cc), and the planner's
   * subquery rewrites (fe/.../rewrite/StmtRewriter.java → join plans).
   */
-object RelationalQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object RelationalQueries extends graft.QueryModule {
 
   val queries: Map[String, Q] = Map(
     // R1: predicate + projection pushdown to the parquet scan.

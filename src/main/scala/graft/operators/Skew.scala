@@ -12,7 +12,7 @@ import Exact._
   * reducers, then final-aggregate on key. Results are identical to the
   * direct groupBy — the oracle checks exactly that.
   */
-object Skew {
+object Skew extends graft.QueryModule {
 
   /** count + exact sum of `value` per `key`, salted over `salts` reducers.
     * `saltSource` must vary within a key group (any per-row column). */
@@ -25,8 +25,6 @@ object Skew {
       .groupBy(col(key))
       .agg(sum(col("__n")).as("n"), sum(col("__s")).cast("double").as("total"))
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Hot-key aggregation: 5 event types over all events — the salted

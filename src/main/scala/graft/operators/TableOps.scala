@@ -21,7 +21,7 @@ import graft.Tables
   *   full-outer join with its two-sided null handling; priority order
   *   extends to n sources unchanged).
   */
-object TableOps {
+object TableOps extends graft.QueryModule {
 
   /** M4: small-file compaction — the table-maintenance pass every
     * streaming/incremental parquet lake needs (each micro-batch or
@@ -69,8 +69,6 @@ object TableOps {
     batch.write.partitionBy(partCol)
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite").parquet(tableDir)
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // M5 end-to-end: partition documents by lang, dynamically
@@ -244,7 +242,6 @@ object TableOps {
     // prune scans filtered on EITHER dimension. Key values are
     // oracle-exact (DuckDB mirrors the interleave bit-by-bit).
     "layout_zorder" -> ((spark, dir) => {
-      graft.plans.GraftFunctions.register(spark)
       val t = Tables(spark, dir)
       t.lineitem.filter(col("l_orderkey") < 400)
         .select(col("l_orderkey"), col("l_linenumber"),

@@ -21,9 +21,7 @@ import Exact._
   * fixed-cardinality dims, facts join by shuffle, all money sums via
   * Exact.dsum for engine-portable determinism.
   */
-object TpcdsQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object TpcdsQueries extends graft.QueryModule {
 
   private val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
   private val q49Slot =

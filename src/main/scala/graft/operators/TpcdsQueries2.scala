@@ -29,9 +29,7 @@ import Exact._
   * fact↔fact joins shuffle on their keys, every money/qty sum is an
   * exact DECIMAL(38,6) fold so results are shuffle-order independent.
   */
-object TpcdsQueries2 {
-
-  type Q = (SparkSession, String) => DataFrame
+object TpcdsQueries2 extends graft.QueryModule {
 
   private val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
   private val D = org.apache.spark.sql.types.DecimalType(38, 6)

@@ -37,9 +37,7 @@ import Exact._
   * the per-customer AGGREGATE, not the fact; q44's global ranking is
   * an O(k)-memory TopK aggregate, not an unpartitioned window.
   */
-object TpcdsQueries3 {
-
-  type Q = (SparkSession, String) => DataFrame
+object TpcdsQueries3 extends graft.QueryModule {
 
   private val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
   private val D = org.apache.spark.sql.types.DecimalType(38, 6)

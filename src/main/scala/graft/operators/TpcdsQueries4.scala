@@ -40,9 +40,7 @@ import Exact._
   * selective dims (q37's price-band parts) broadcast; the q91 window
   * runs on the (segment × month) aggregate grain, not the fact.
   */
-object TpcdsQueries4 {
-
-  type Q = (SparkSession, String) => DataFrame
+object TpcdsQueries4 extends graft.QueryModule {
 
   private val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
   private val D = org.apache.spark.sql.types.DecimalType(38, 6)

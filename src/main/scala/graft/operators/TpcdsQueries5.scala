@@ -49,9 +49,7 @@ import graft.Tables
   * shuffle-order-dependent); weeks are integer days-since-epoch DIV 7;
   * every LIMIT carries a total ORDER over its group keys.
   */
-object TpcdsQueries5 {
-
-  type Q = (SparkSession, String) => DataFrame
+object TpcdsQueries5 extends graft.QueryModule {
 
   private val D = org.apache.spark.sql.types.DecimalType(38, 6)
   private def micros(e: Column) = (sum(e.cast(D)) * 1000000).cast("long")

@@ -31,9 +31,7 @@ import graft.Tables
   * Exactness: money → DECIMAL(38,6) → integer micros; ranks cast to
   * BIGINT; rollup NULL keys coalesce to sentinel labels so both
   * engines sort/compare identical strings. */
-object TpcdsQueries6 {
-
-  type Q = (SparkSession, String) => DataFrame
+object TpcdsQueries6 extends graft.QueryModule {
 
   private val D = org.apache.spark.sql.types.DecimalType(38, 6)
   private val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))

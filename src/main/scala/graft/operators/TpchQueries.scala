@@ -19,9 +19,7 @@ import Exact._
   * the join key; aggregates rely on partial (map-side) aggregation.
   * Money sums go through Exact.dsum for engine-portable determinism.
   */
-object TpchQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object TpchQueries extends graft.QueryModule {
 
   val queries: Map[String, Q] = Map(
     // r16 input spread (Tables.lineitemSpread): ~98% of the fact

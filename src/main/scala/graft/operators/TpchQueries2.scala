@@ -11,9 +11,7 @@ import Exact._
   * per query). Reference workload: apache-impala-4.1.0/testdata/
   * workloads/tpch/queries/.
   */
-object TpchQueries2 {
-
-  type Q = (SparkSession, String) => DataFrame
+object TpchQueries2 extends graft.QueryModule {
 
   private val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
 

@@ -11,12 +11,10 @@ import org.apache.spark.sql.functions._
   * same top-k-per-group via window SQL, so the typed path is checked
   * against the declarative one.
   */
-object TypedQueries {
+object TypedQueries extends graft.QueryModule {
 
   case class Ev(user_id: Long, event_id: Long, value: Double)
   case class TopEv(user_id: Long, event_id: Long, value: Double, rk: Long)
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     "typed_topk_per_user" -> ((spark, dir) => {

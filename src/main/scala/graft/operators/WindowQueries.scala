@@ -13,9 +13,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * key, order keys always extended to a total order so every rank /
   * frame is deterministic at any parallelism.
   */
-object WindowQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object WindowQueries extends graft.QueryModule {
 
   private val D = DecimalType(38, 6)
 

@@ -24,7 +24,7 @@ import graft.Tables
   * price of an iterative fixpoint (one action per round) is paid once,
   * not twice.
   */
-object Cluster {
+object Cluster extends graft.QueryModule {
 
   /** Diagnostics of the LAST [[connectedComponents]] call on this JVM:
     * (label rounds run, contracted-graph node count). Dev/spec-only —
@@ -310,8 +310,6 @@ object Cluster {
       StructField("id", LongType, nullable = false),
       StructField("cluster_id", LongType, nullable = false))))
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // P21, oracle-exact: CC over CHAIN edges linking each doc to the

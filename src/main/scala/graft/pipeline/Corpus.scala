@@ -12,7 +12,7 @@ import graft.Tables
   * shuffles beyond its stages (predicates fuse into one pass over the
   * deduped relation).
   */
-object Corpus {
+object Corpus extends graft.QueryModule {
 
   case class QualityGate(minChars: Long = 60, minWords: Long = 10,
                          maxStopRatio: Double = 0.5)
@@ -119,8 +119,6 @@ object Corpus {
           .otherwise("unchanged").as("status"))
       .filter(col("status") =!= "unchanged")
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     "corpus_clean" -> ((spark, dir) => {

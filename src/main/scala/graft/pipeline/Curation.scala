@@ -12,7 +12,7 @@ import graft.Tables
   * so they scan-scale to 100 TB the same way the P9–P12 text family
   * does.
   */
-object Curation {
+object Curation extends graft.QueryModule {
 
   private def words(text: Column): Column = split(trim(lower(text)), "\\s+")
 
@@ -235,8 +235,6 @@ object Curation {
 
   // ---- queries()/oracle entries -------------------------------------
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** P35: exact-substring dedup — the ExactSubstr operator of Lee et
     * al. 2022 ("Deduplicating Training Data Makes Language Models
     * Better") re-expressed Spark-first at k-token granularity: any
@@ -311,7 +309,6 @@ object Curation {
 
   def dsirSelect(spark: SparkSession, docs: DataFrame, k: Int = 100,
                  dim: Int = 1024, alpha: Double = 0.5, scale: Long = 10000L): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val ws = words(col("text"))
     val base = docs.select(col("doc_id"), length(col("text")).cast("long").as("len"),
         filter(ws, w => length(w) > 0).as("toks"))

@@ -3,7 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.plans.GraftFunctions
 
 /** Deduplication operators for large-scale text corpora (SURVEY.md §2
   * P1–P5). The scale discipline: nothing here ever materializes an n²
@@ -14,7 +13,7 @@ import graft.plans.GraftFunctions
   * banding (Broder 1997) with an exact Jaccard verify on the candidate
   * pairs only.
   */
-object Dedup {
+object Dedup extends graft.QueryModule {
 
   /** One live cache per operator: persisting the shingle projection is
     * what keeps the pair stages from recomputing the feature pipeline,
@@ -94,7 +93,6 @@ object Dedup {
     // Feature extraction runs ONCE: a self-join would re-execute the
     // whole shingle pipeline per side (3× at 100 TB). MEMORY_AND_DISK so
     // executors spill instead of OOM on big corpora.
-    GraftFunctions.register(docs.sparkSession)
     val sh = cacheReplacing(
       docs.select(col("doc_id"), hashedShingles(col("text")).as("sh")), minhashSlot)
     val withSig = sh.select(col("doc_id"), minhashSig(col("sh"), perms).as("sig"))
@@ -157,7 +155,6 @@ object Dedup {
     * (min doc_id among verified matches), best Jaccard, match count. */
   def incrementalLshGate(docs: DataFrame, isNew: Column, bands: Int = 8,
                          rowsPerBand: Int = 2, minJaccard: Double = 0.1): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     // In this bounded demo both sides' shingles derive inline from one
     // scan; in production the !isNew side is read from the index table.
     val sh = cacheReplacing(
@@ -198,7 +195,6 @@ object Dedup {
     * production pipeline runs, with the corpus never re-read. */
   def lshIndexWrite(docs: DataFrame, indexDir: String,
                     bands: Int = 8, rowsPerBand: Int = 2): Unit = {
-    GraftFunctions.register(docs.sparkSession)
     val sh = docs.select(col("doc_id"), hashedShingles(col("text")).as("sh"))
     sh.write.mode("overwrite").parquet(s"$indexDir/shingles")
     bandExplode(sh, "sh", bands, rowsPerBand).drop("sh")
@@ -208,7 +204,6 @@ object Dedup {
   /** Append an accepted batch's bands + shingles to the index. */
   def lshIndexAppend(docs: DataFrame, indexDir: String,
                      bands: Int = 8, rowsPerBand: Int = 2): Unit = {
-    GraftFunctions.register(docs.sparkSession)
     val sh = docs.select(col("doc_id"), hashedShingles(col("text")).as("sh"))
     sh.write.mode("append").parquet(s"$indexDir/shingles")
     bandExplode(sh, "sh", bands, rowsPerBand).drop("sh")
@@ -224,7 +219,6 @@ object Dedup {
   def incrementalLshGateIndexed(spark: SparkSession, indexDir: String, batch: DataFrame,
                                 bands: Int = 8, rowsPerBand: Int = 2,
                                 minJaccard: Double = 0.1): DataFrame = {
-    GraftFunctions.register(spark)
     val batchSh = batch.select(col("doc_id"), hashedShingles(col("text")).as("sh"))
     val newB = bandExplode(batchSh, "sh", bands, rowsPerBand)
       .select(col("doc_id").as("doc_new"), col("band"), col("bh"))
@@ -252,7 +246,6 @@ object Dedup {
   /** SimHash per doc (custom codegen expression) + a 12-bit prefix
     * bucket — Hamming-close docs collide in the bucket at scale. */
   def simhashBuckets(spark: SparkSession, docs: DataFrame): DataFrame = {
-    GraftFunctions.register(spark)
     docs.select(col("doc_id"),
       call_function("simhash64", tokens(col("text"))).as("simhash"))
       .withColumn("bucket", shiftrightunsigned(col("simhash"), 52))
@@ -276,7 +269,6 @@ object Dedup {
     * result stays hash-exact end-to-end. */
   def ngramJaccardPairs(docs: DataFrame, minJaccard: Double, bands: Int = 8,
                         rowsPerBand: Int = 2, maxBucket: Int = 1000): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val withSh = cacheReplacing(
       docs.select(col("source"), col("doc_id"), hashedShingles(col("text")).as("sh")), ngramSlot)
     val banded = bandExplode(withSh, "sh", bands, rowsPerBand).drop("sh")
@@ -326,7 +318,6 @@ object Dedup {
     * engine agrees. */
   def containmentPairs(docs: DataFrame, minContainmentTenths: Int = 8,
                        maxDf: Int = 50): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val withSh = cacheReplacing(
       docs.select(col("doc_id"), hashedShingles(col("text")).as("sh")), containSlot)
     // Gram document frequency via aggregate-then-join-back, NOT a
@@ -478,7 +469,6 @@ object Dedup {
     // "\n" joins): the transform/slice/array_join builtin composition
     // evaluates interpreted and re-runs once per consumer — lineDedup
     // reads the reflowed text three times (hot set, rebuild, n_lines)
-    GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       call_function("reflow_paragraphs", col("text"),
         lit(wordsPerLine), lit(Int.MaxValue)).as("text"))
@@ -503,8 +493,6 @@ object Dedup {
     lshIdxBuilt.remove(lshIndexPath(dir))
 
   // ---- queries()/oracle entries -------------------------------------
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     "dedup_exact" -> ((spark, dir) => {

@@ -16,7 +16,7 @@ import graft.functions.HashImpl
   * the JDK genuinely lacks (H.264 etc.) degrades to the deterministic
   * fallback features, same contract as a corrupt image payload.
   */
-object Multimodal {
+object Multimodal extends graft.QueryModule {
 
   case class MediaMeta(width: Int, height: Int, sampleRateHz: Int)
   case class MediaItem(id: Long, modality: String, payload: Array[Byte], meta: MediaMeta)
@@ -378,7 +378,6 @@ object Multimodal {
     * compressed/encrypted payloads), size, and a coarse histogram
     * summary — all codegen expressions at scan speed. */
   def binaryFeatures(spark: SparkSession, docs: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     mediaWithHeaders(docs)
       .select(col("id"), col("modality"),
         call_function("sniff_format", col("payload")).as("format"),
@@ -587,8 +586,6 @@ object Multimodal {
         expr("bit_count(dh_a ^ dh_b)").cast("long").as("ham_d"))
       .filter(col("ham_a") <= maxHamming)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // oracle-exact: DuckDB parses payload bytes out of hex(BLOB), the

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.plans.GraftFunctions
 
 /** Similarity search over embedding columns (SURVEY.md §2 P6–P8, P14).
   *
@@ -14,7 +13,7 @@ import graft.plans.GraftFunctions
   * variant of the same API. Cosine is a custom codegen Expression
   * (graft.functions.CosineSimilarity) accumulating in double.
   */
-object Similarity {
+object Similarity extends graft.QueryModule {
 
   // Slot-replacing persists (§5 rule 12) for the multi-consumer
   // subtrees below: semanticDedup's assignment (feeds both edge sides,
@@ -99,7 +98,6 @@ object Similarity {
   /** Brute-force top-k neighbors for each query vector. */
   def bruteForceTopK(spark: SparkSession, queries: DataFrame, corpus: DataFrame,
                      k: Int): DataFrame = {
-    GraftFunctions.register(spark)
     val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
     val c = corpus.select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
     val scored = q.crossJoin(c).filter(col("q_id") =!= col("c_id"))
@@ -123,7 +121,6 @@ object Similarity {
     val bits = resolveBits(corpus, tables, bitsPerTable, n)
     require(tables * bits <= 64,
       s"lshTopK: tables*bitsPerTable must fit one 64-bit signature (got ${tables * bits})")
-    GraftFunctions.register(spark)
     def buckets(df: DataFrame, idAs: String, vecAs: String): DataFrame = {
       val sig = call_function("rhp_bucket", col("embedding"), lit(tables * bits))
       df.select(col("vec_id").as(idAs), col("embedding").as(vecAs), sig.as("sig"))
@@ -170,7 +167,6 @@ object Similarity {
     * Exchange-free). Strict `>` keeps the first (lowest) cell on ties
     * because the array is sorted by cell. */
   private[graft] def assignCells(corpus: DataFrame, cent: DataFrame): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     corpus.crossJoin(broadcast(centArray(cent)))
       .select(col("vec_id"), col("embedding"),
         expr(
@@ -184,7 +180,6 @@ object Similarity {
   def ivfTopK(spark: SparkSession, queries: DataFrame, corpus: DataFrame,
               k: Int, cells: Int = 16, nProbe: Int = 4, lloydIters: Int = 1): DataFrame = {
     require(nProbe <= cells, s"ivfTopK: nProbe ($nProbe) must be <= cells ($cells)")
-    GraftFunctions.register(spark)
     import graft.functions.VectorAvg
     // deterministic seeds: the `cells` lowest vec_ids (tiny frame, so
     // the unpartitioned row_number window is over <= `cells` rows)
@@ -265,7 +260,6 @@ object Similarity {
     * equi-join); oracle-exact where the trained twin is rows-only. */
   def ivfTopKPinned(spark: SparkSession, queries: DataFrame, corpus: DataFrame,
                     k: Int, nProbe: Int = 4): DataFrame = {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val cent = pinnedCentroids().toDF("cell", "cvec")
     ivfServe(queries, corpus, cent, k, nProbe)
@@ -293,7 +287,6 @@ object Similarity {
     * in SQL, so this entry is oracle-exact. */
   def pqTopKPinned(spark: SparkSession, queries: DataFrame, corpus: DataFrame,
                    k: Int): DataFrame = {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val K = 32
     val cb = pinnedCodebook().toDF("m", "code", "cvec")
@@ -348,7 +341,6 @@ object Similarity {
     * rows to their cell directory during the write). */
   def ivfIndexWrite(spark: SparkSession, corpus: DataFrame, indexDir: String,
                     cells: Int = 16, lloydIters: Int = 1): Unit = {
-    GraftFunctions.register(spark)
     import graft.functions.VectorAvg
     var cent = corpus.orderBy("vec_id").limit(cells)
       .select((row_number().over(Window.orderBy("vec_id")) - 1).cast("long").as("cell"),
@@ -375,7 +367,6 @@ object Similarity {
     * ingest is the documented rebuild trigger (the IVF literature's
     * re-train cadence), not something append papers over. */
   def ivfIndexAppend(spark: SparkSession, indexDir: String, newVecs: DataFrame): Unit = {
-    GraftFunctions.register(spark)
     val cent = spark.read.parquet(s"$indexDir/centroids")
     assignCells(newVecs, cent)
       .select(col("vec_id"), col("embedding"), col("cell"))
@@ -389,7 +380,6 @@ object Similarity {
     * directories at scan time (asserted by PipelineSpec). */
   def ivfIndexQuery(spark: SparkSession, indexDir: String, queries: DataFrame,
                     k: Int, nProbe: Int = 4): DataFrame = {
-    GraftFunctions.register(spark)
     val cent = spark.read.parquet(s"$indexDir/centroids")
     val postings = spark.read.parquet(s"$indexDir/postings")
     val probes = queries.crossJoin(broadcast(centArray(cent)))
@@ -432,7 +422,6 @@ object Similarity {
   def pqTopK(spark: SparkSession, queries: DataFrame, corpus: DataFrame,
              k: Int, subspaces: Int = 8, codes: Int = 32,
              trainSample: Int = 2048, lloydIters: Int = 2): DataFrame = {
-    GraftFunctions.register(spark)
     val K = codes
     val cb = pqTrainCodebook(corpus, subspaces, K, trainSample, lloydIters)
     // --- encode the FULL corpus: all M codes in one compiled row-local
@@ -547,7 +536,6 @@ object Similarity {
   def pqIndexWrite(spark: SparkSession, corpus: DataFrame, indexDir: String,
                    subspaces: Int = 8, codes: Int = 32,
                    trainSample: Int = 2048, lloydIters: Int = 2): Unit = {
-    GraftFunctions.register(spark)
     pqTrainCodebook(corpus, subspaces, codes, trainSample, lloydIters)
       .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/codebook")
     val cb = spark.read.parquet(s"$indexDir/codebook")
@@ -562,7 +550,6 @@ object Similarity {
     * never corpus-sized (the ivfIndexAppend contract). Codebook drift
     * under sustained ingest is the documented retrain trigger. */
   def pqIndexAppend(spark: SparkSession, indexDir: String, newVecs: DataFrame): Unit = {
-    GraftFunctions.register(spark)
     val cb = spark.read.parquet(s"$indexDir/codebook")
     val K = pqCodesOf(cb)
     newVecs.crossJoin(broadcast(cbRow(cb)))
@@ -577,7 +564,6 @@ object Similarity {
     * same corpus (spec-pinned). */
   def pqIndexQuery(spark: SparkSession, indexDir: String, queries: DataFrame,
                    k: Int): DataFrame = {
-    GraftFunctions.register(spark)
     val cb = spark.read.parquet(s"$indexDir/codebook")
     val encoded = spark.read.parquet(s"$indexDir/pq_codes")
     pqAdcScan(queries, encoded, cb, pqCodesOf(cb), k)
@@ -601,7 +587,6 @@ object Similarity {
     val bits = resolveBits(emb, tables, bitsPerTable, n)
     require(tables * bits <= 64,
       s"cosinePairs: tables*bitsPerTable must fit one 64-bit signature (got ${tables * bits})")
-    GraftFunctions.register(spark)
     def side(idAs: String, vecAs: String): DataFrame = {
       val sig = call_function("rhp_bucket", col("embedding"), lit(tables * bits))
       emb.select(col("label"), col("vec_id").as(idAs), col("embedding").as(vecAs), sig.as("sig"))
@@ -654,7 +639,6 @@ object Similarity {
     val bits = resolveBits(emb, tables, bitsPerTable, n)
     require(tables * bits <= 64,
       s"embedDedup: tables*bitsPerTable must fit one 64-bit signature (got ${tables * bits})")
-    GraftFunctions.register(spark)
     // one bucketed-signature computation, consumed by both join sides
     val bucketed = Dedup.cacheReplacing({
       val sig = call_function("rhp_bucket", col("embedding"), lit(tables * bits))
@@ -691,7 +675,6 @@ object Similarity {
   def hardNegatives(spark: SparkSession, emb: DataFrame, k: Int,
                     tables: Int = 4, bitsPerTable: Int = 0,
                     n: Long = -1L): DataFrame = {
-    GraftFunctions.register(spark)
     val bits = resolveBits(emb, tables, bitsPerTable, n)
     val sig = call_function("rhp_bucket", col("embedding"), lit(tables * bits))
     // slot-persisted: the bucketed signatures feed BOTH sides of the
@@ -743,7 +726,6 @@ object Similarity {
   def semanticDedup(spark: SparkSession, emb: DataFrame, eps: Double,
                     cells0: Int = 0, lloydIters: Int = 1,
                     n: Long = -1L): DataFrame = {
-    GraftFunctions.register(spark)
     import graft.functions.VectorAvg
     // cells0 = 0 → corpus-adaptive cell count: with FIXED cells the
     // per-cell population grows ∝ corpus and the in-cell pair join does
@@ -778,7 +760,6 @@ object Similarity {
     * the ENTIRE paper algorithm is oracle-exact end to end. */
   def semanticDedupPinned(spark: SparkSession, emb: DataFrame,
                           eps: Double): DataFrame = {
-    GraftFunctions.register(spark)
     import spark.implicits._
     semanticDedupFrom(emb, pinnedCentroids().toDF("cell", "cvec"), eps)
   }
@@ -855,8 +836,6 @@ object Similarity {
         expr("aggregate(q, CAST(128 AS BIGINT), (acc, x) -> least(acc, x))").as("q_min"))
 
   // ---- queries()/oracle entries -------------------------------------
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     "sim_brute_topk" -> ((spark, dir) => {

@@ -13,7 +13,7 @@ import graft.Tables
   * md5. Stratified sampling keeps per-stratum rates without a global
   * shuffle: Bernoulli per row, rate looked up by stratum.
   */
-object Splits {
+object Splits extends graft.QueryModule {
 
   /** split_train_test: deterministic 80/20 assignment. The 0..255
     * bucket comes from the first two hex chars of md5(doc_id) — the
@@ -243,8 +243,6 @@ object Splits {
     expr(s"CAST(CAST((doc_id % 4294967296 + ${java.lang.Long.remainderUnsigned(seed, 4294967296L)}) % 4294967296" +
       " AS DECIMAL(38,0)) * 2654435761 % 4294967296 AS DOUBLE)") /
       lit(4294967296.0)
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // P19: oracle-exact — the assignment is pure md5 arithmetic.

@@ -3,7 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{CacheSlot, Tables}
-import graft.plans.GraftFunctions
 
 /** Text analysis for training-data pipelines (SURVEY.md §2 P9–P12):
   * language ID (marker-word scoring), quality scoring (length/alpha/
@@ -11,7 +10,7 @@ import graft.plans.GraftFunctions
   * rolling-hash document fingerprints. Everything is per-row builtin
   * column algebra — embarrassingly parallel, scan-bound at 100 TB.
   */
-object TextAnalysis {
+object TextAnalysis extends graft.QueryModule {
 
   private def words(text: Column): Column = split(trim(lower(text)), "\\s+")
 
@@ -68,7 +67,6 @@ object TextAnalysis {
 
   /** Rolling-hash fingerprint + simhash per doc (custom codegen exprs). */
   def fingerprints(spark: SparkSession, docs: DataFrame): DataFrame = {
-    GraftFunctions.register(spark)
     docs.select(col("doc_id"),
       call_function("fingerprint64", col("text")).as("fp64"),
       call_function("simhash64", words(col("text"))).as("simhash"))
@@ -135,7 +133,6 @@ object TextAnalysis {
     * 1e9-doc deployment would drop the G*B class balancing into double
     * averages and lose the exact oracle, not the algorithm.) */
   def qualityClassifier(spark: SparkSession, docs: DataFrame, dim: Int = 4096): DataFrame = {
-    GraftFunctions.register(spark)
     val ws = words(col("text"))
     val base = docs.select(col("doc_id"), length(col("text")).cast("long").as("len"),
       ws.as("toks"), size(ws).cast("long").as("n_tok"),
@@ -195,7 +192,6 @@ object TextAnalysis {
 
   def perplexityBuckets(spark: SparkSession, docs: DataFrame, dim: Int = 1024,
                         alpha: Double = 0.5, scale: Long = 10000L): DataFrame = {
-    GraftFunctions.register(spark)
     val ws = words(col("text"))
     val a0 = math.floor(math.log(alpha) * scale + 0.5).toLong
     val b0 = math.floor(math.log(alpha * dim) * scale + 0.5).toLong
@@ -413,7 +409,6 @@ object TextAnalysis {
     // equivalent nested transform/slice/array_join composition runs
     // interpreted and recomputes the line array once per paragraph —
     // ~0.5 ms/row, the dominant cost of the whole P53 query before
-    GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       call_function("reflow_paragraphs", col("text"),
         lit(wordsPerLine), lit(linesPerPara)).as("text"))
@@ -445,7 +440,6 @@ object TextAnalysis {
     * line/paragraph stats are bounded array algebra. Per-row, scan-
     * bound, zero shuffles at any corpus size. */
   def gopherRepetition(spark: SparkSession, docs: DataFrame): DataFrame = {
-    GraftFunctions.register(spark)
     val text = col("text")
     // All three statistic families are compiled single-pass expressions
     // (graft.functions.RepStatsImpl / DupStatsImpl): the builtin
@@ -490,8 +484,6 @@ object TextAnalysis {
   }
 
   // ---- queries()/oracle entries -------------------------------------
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** P64: VOCABULARY GROWTH audit (Heaps 1978; Baeza-Yates &
     * Ribeiro-Neto 1999 §6.3): distinct word-bigram vocabulary V(n) at

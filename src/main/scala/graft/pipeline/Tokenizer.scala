@@ -3,7 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.plans.GraftFunctions
 
 /** P38: trained BPE tokenizer (Sennrich et al. 2016) — the real version
   * of P11's "BPE-ish regex" count: learn the merge table from the
@@ -25,7 +24,7 @@ import graft.plans.GraftFunctions
   * PipelineSpec); it is still declared rows-only because DuckDB cannot
   * replay an iterative argmax-and-rewrite loop in one SQL statement.
   */
-object Tokenizer {
+object Tokenizer extends graft.QueryModule {
 
   private def words(text: Column): Column = split(trim(lower(text)), "\\s+")
 
@@ -61,7 +60,6 @@ object Tokenizer {
     * audit column (`|`-joined so merged tokens are visible). */
   def bpeTokenize(spark: SparkSession, docs: DataFrame,
                   numMerges: Int = 16, sampleDocs: Int = 256): DataFrame = {
-    GraftFunctions.register(spark)
     val mrow = trainMerges(spark, docs, numMerges, sampleDocs)
       .agg(array_sort(collect_list(struct(col("rank"), col("a"), col("b")))).as("ms"))
       .select(expr("transform(ms, m -> named_struct('a', m.a, 'b', m.b))").as("merges"))
@@ -101,7 +99,6 @@ object Tokenizer {
     * an audit column. */
   def unigramTokenize(spark: SparkSession, docs: DataFrame, vocabSize: Int = 96,
                       maxPieceLen: Int = 4, sampleDocs: Int = 256): DataFrame = {
-    GraftFunctions.register(spark)
     val vrow = trainUnigram(spark, docs, vocabSize, maxPieceLen, sampleDocs)
       .agg(array_sort(collect_list(struct(col("piece"), col("cost")))).as("vocab"))
     docs.select(col("doc_id"), words(col("text")).as("ws"))
@@ -130,7 +127,6 @@ object Tokenizer {
     * argmax-rewrite loop has no single-SQL replay; that boundary is
     * unchanged). */
   def bpeTokenizePinned(spark: SparkSession, docs: DataFrame): DataFrame = {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val cs = (('a' to 'z') ++ ('0' to '9')).map(_.toString)
     val mrow = cs.zipWithIndex.map { case (c, r) => (r.toLong, c, c) }
@@ -165,7 +161,6 @@ object Tokenizer {
     * row-local, and the only exchange is the ≤|langs| aggregate. */
   def tokenFertility(spark: SparkSession, docs: DataFrame, vocabSize: Int = 96,
                      maxPieceLen: Int = 4, sampleDocs: Int = 256): DataFrame = {
-    GraftFunctions.register(spark)
     val vrow = trainUnigram(spark, docs, vocabSize, maxPieceLen, sampleDocs)
       .agg(array_sort(collect_list(struct(col("piece"), col("cost")))).as("vocab"))
     fertilityAgg(docs, vrow)
@@ -183,20 +178,7 @@ object Tokenizer {
     * analytic. Same scale shape: the vocab row is built by two bounded
     * distinct-aggregates over the corpus and broadcast once. */
   def tokenFertilityPinned(spark: SparkSession, docs: DataFrame): DataFrame = {
-    GraftFunctions.register(spark)
     fertilityAgg(docs, pinnedCharBigramVocab(docs))
-  }
-
-  /** Dev-probe seams (graft.tools.TokenizerProbe — the r14 verdict #5
-    * residual decomposition): the two vocab constructions alone, so the
-    * probe can time construction separately from encode. */
-  private[graft] def pinnedVocabForProbe(docs: DataFrame): DataFrame =
-    pinnedCharBigramVocab(docs)
-  private[graft] def trainedVocabForProbe(spark: SparkSession,
-                                          docs: DataFrame): DataFrame = {
-    GraftFunctions.register(spark)
-    trainUnigram(spark, docs, 96, 4, 256)
-      .agg(array_sort(collect_list(struct(col("piece"), col("cost")))).as("vocab"))
   }
 
   /** The P63b pinned analytic vocab shared by the fertility audit and
@@ -243,7 +225,6 @@ object Tokenizer {
     * stays rows-only (pipe_unigram_tokenize): EM-trained float scores
     * have no single-SQL replay — that boundary is unchanged. */
   def unigramTokenizePinned(spark: SparkSession, docs: DataFrame): DataFrame = {
-    GraftFunctions.register(spark)
     docs.select(col("doc_id"), words(col("text")).as("ws"))
       .crossJoin(broadcast(pinnedCharBigramVocab(docs)))
       .select(col("doc_id"), col("ws"),
@@ -280,8 +261,6 @@ object Tokenizer {
   }
 
   // ---- queries()/oracle entries -------------------------------------
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // deterministic integer training + compiled encode; rows-only (an

@@ -9,9 +9,10 @@ import graft.functions._
 /** Extensibility surface — the Spark-native equivalent of the reference
   * engine's builtin/UDF registry (apache-impala-4.1.0/be/src/exprs/,
   * fe/.../catalog/BuiltinsDb.java): custom codegen'd expressions
-  * registered into the SQL function registry, via either
-  * `spark.sql.extensions=graft.plans.GraftExtensions` or
-  * [[GraftFunctions.register]] on a live session.
+  * registered into the SQL function registry once, when the session is
+  * built (`spark.sql.extensions=graft.plans.GraftExtensions`, which
+  * `graft.GraftSession.build` sets), together with the `JaccardPrefilter`
+  * optimizer rule and the `AsOfJoinStrategy` planner strategy.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -149,9 +150,12 @@ object GraftFunctions {
       arity("byte_histogram16", 1)(es => ByteHistogram16(es.head))),
   )
 
-  /** Idempotent runtime registration (works on a session we didn't
-    * build): functions into the registry, optimizer rules via
-    * `experimental.extraOptimizations`. */
+  /** The one call for a session graft did not build (idempotent):
+    * functions into the registry, `JaccardPrefilter` via
+    * `experimental.extraOptimizations`, `AsOfJoinStrategy` via
+    * `experimental.extraStrategies`. Sessions from `GraftSession.build`
+    * already have all three and must not call it — on them it would
+    * run the rule in a second optimizer batch. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     all.foreach { case (name, inf, builder) =>

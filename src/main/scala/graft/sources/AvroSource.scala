@@ -353,7 +353,7 @@ object AvroConvert {
   * match therefore certifies the whole write -> container -> read path
   * preserved every row and type (any loss or mangling would shift the
   * counts/sums). */
-object AvroQueries {
+object AvroQueries extends graft.QueryModule {
   import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.functions._
   import graft.operators.Exact
@@ -361,8 +361,6 @@ object AvroQueries {
   /** SF-suffixed so runs at different scale factors never collide. */
   def path(dir: String): String =
     s"/tmp/graft_avro_events_${new java.io.File(dir).getName}"
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // r16 input spread (Tables.eventsSpread): parallelizes the avro

@@ -774,7 +774,7 @@ private[graft] class AcidOrcReaderFactory(required: org.apache.spark.sql.types.S
   *   delta_0000004_0000004        % 3 = 2, writeId 4    ABORTED — dropped
   *   → visible: (%3=0 AND NOT %9=0) OR %3=1
   */
-object HiveAcidQueries {
+object HiveAcidQueries extends graft.QueryModule {
   import graft.operators.Exact
   import HiveAcid._
 
@@ -967,8 +967,6 @@ object HiveAcidQueries {
         min(col("o_orderkey")).as("min_key"),
         max(col("o_orderkey")).as("max_key"))
       .orderBy("o_orderstatus")
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     "src_hive_acid" -> ((spark, dir) => {

@@ -297,7 +297,7 @@ object HudiRO {
   *   fg2 @ c3 (INFLIGHT): o_orderkey % 4 = 3    -- invisible
   *   → visible: o_orderkey % 4 IN (0, 2)
   */
-object HudiQueries {
+object HudiQueries extends graft.QueryModule {
   import graft.operators.Exact
 
   def path(dir: String): String =
@@ -463,8 +463,6 @@ object HudiQueries {
     }
     root
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   private def agg(df: DataFrame): DataFrame =
     df.groupBy("o_orderstatus")

@@ -464,7 +464,6 @@ object IcebergWrite {
     val allChanges = deletes.map(updates.unionByName(_)).getOrElse(updates)
     if (allChanges.isEmpty) return // nothing to merge; don't burn a snapshot id
     val spark = updates.sparkSession
-    graft.plans.GraftFunctions.register(spark)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(tableDir).getFileSystem(conf)
     val v = readSmall(fs, new Path(tableDir, "metadata/version-hint.text")).trim.toInt
@@ -856,7 +855,6 @@ object IcebergWrite {
       sourceCol: String, spec: Seq[PartField],
       snapshotId: Long, fieldIds: Seq[Int]): Seq[(Path, Any, Int)] = {
     val spark = df.sparkSession
-    graft.plans.GraftFunctions.register(spark)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(tableDir).getFileSystem(conf)
     require(df.filter(org.apache.spark.sql.functions.col(sourceCol).isNull).isEmpty,
@@ -2006,7 +2004,7 @@ object IcebergInspect {
   }
 }
 
-object IcebergQueries {
+object IcebergQueries extends graft.QueryModule {
   import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.functions._
 
@@ -2116,8 +2114,6 @@ object IcebergQueries {
     * too, or a later iceberg query in the same JVM would read a path
     * the cleanup removed. */
   private[graft] def invalidate(dir: String): Unit = written.remove(path(dir))
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     "src_iceberg_roundtrip" -> ((spark, dir) => {

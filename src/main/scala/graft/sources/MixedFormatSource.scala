@@ -367,7 +367,7 @@ object MixedFormat {
   * and pruned; DuckDB recomputes both from the flat parquet. A hash
   * match certifies every format's write → dispatch → read → normalize
   * path preserved every row and type. */
-object MixedFormatQueries {
+object MixedFormatQueries extends graft.QueryModule {
 
   def path(dir: String): String =
     s"/tmp/graft_mixed_documents_${new java.io.File(dir).getName}"
@@ -386,8 +386,6 @@ object MixedFormatQueries {
     }
     root
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     "src_mixed_formats" -> ((spark, dir) => {

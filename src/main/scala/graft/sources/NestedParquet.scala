@@ -22,7 +22,7 @@ import graft.Tables
   * implementation decoding our nested layout — so a hash match verifies
   * the physical file format, not just the in-session values.
   */
-object NestedParquet {
+object NestedParquet extends graft.QueryModule {
 
   /** Path contract with the oracle SQL. The suffix is the SF directory
     * name so a bench run at one scale factor can never overwrite the
@@ -95,8 +95,6 @@ object NestedParquet {
     p
   }
   private[graft] def invalidateOrc(dir: String): Unit = written.remove(orcPath(dir))
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     "src_nested_parquet" -> ((spark, dir) => {

@@ -199,14 +199,12 @@ object RcIO {
   * read-back aggregate projects a strict column subset, so the RCFile
   * reader's READ_COLUMN_IDS path (columnar skip) is on the measured
   * plan. DuckDB computes the same aggregate from the original parquet. */
-object RcFileQueries {
+object RcFileQueries extends graft.QueryModule {
   import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.functions._
 
   def path(dir: String): String =
     s"/tmp/graft_rc_documents_${new java.io.File(dir).getName}"
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     "src_rcfile_roundtrip" -> ((spark, dir) => {

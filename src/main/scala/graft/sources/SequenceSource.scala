@@ -279,7 +279,7 @@ object SequenceIO {
   * SequenceFile, read back through the DSv2 source, re-parsed with
   * split(), and aggregated; DuckDB computes the same aggregate from the
   * original parquet. */
-object SequenceQueries {
+object SequenceQueries extends graft.QueryModule {
   import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.functions._
 
@@ -288,8 +288,6 @@ object SequenceQueries {
 
   def v2Path(dir: String): String =
     s"/tmp/graft_seqv2_documents_${new java.io.File(dir).getName}_p${ProcessHandle.current().pid()}"
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     "src_seqfile_roundtrip" -> ((spark, dir) => {

@@ -331,7 +331,6 @@ object Streams {
     * state per (window, type) is one bounded sketch (~KB at k=200),
     * and the watermark expires whole windows. */
   def windowedQuantiles(events: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(events.sparkSession)
     import graft.functions.KllQuantile
     events.withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -378,7 +377,6 @@ object Streams {
   def neardupGate(docs: DataFrame, corpus: DataFrame, bands: Int = 8,
                   rowsPerBand: Int = 2, minJaccard: Double = 0.1): DataFrame = {
     import graft.pipeline.Dedup
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val idx = Dedup.bandExplode(
       corpus.select(col("doc_id").as("doc_old"),
         Dedup.hashedShingles(col("text")).as("sh_o")), "sh_o", bands, rowsPerBand)

@@ -55,7 +55,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("simhash: similar token sets are Hamming-close, disjoint ones are not") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(
       (1L, "spark sql query engine fast scan filter join"),
       (2L, "spark sql query engine fast scan filter merge"), // 1 token differs
@@ -71,7 +70,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("cosine_sim: orthogonal=0, parallel=1, zero vector=0") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(
       (Array(1f, 0f), Array(0f, 1f)),
       (Array(1f, 2f), Array(2f, 4f)),
@@ -84,7 +82,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("custom expressions survive whole-stage codegen over real data") {
-    GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val out = docs.selectExpr("fnv_hash(text) AS h", "fingerprint64(text) AS fp",
       "simhash64(split(lower(text), ' ')) AS sh",
@@ -92,15 +89,13 @@ class FunctionsSpec extends SparkSpec {
     assert(out.count() > 0)
     // interpreted vs codegen agreement
     val cg = out.orderBy("h").limit(5).collect()
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try {
+    SparkSpec.withConf("spark.sql.codegen.wholeStage" -> "false") {
       val interp = out.orderBy("h").limit(5).collect()
       assert(cg.sameElements(interp))
-    } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    }
   }
 
   test("JaccardPrefilter rule adds implied size checks without changing results") {
-    GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$sf0001/documents.parquet").limit(20)
     val pairs = docs.select(col("doc_id"),
       graft.pipeline.Dedup.hashedShingles(col("text")).as("a"),
@@ -118,15 +113,45 @@ class FunctionsSpec extends SparkSpec {
     assert(filtered.count() == expected && expected > 0)
   }
 
-  test("GraftExtensions registers all functions via injection points") {
-    // unit-level: the extension applies builders without touching a live session
-    val names = GraftFunctions.all.map(_._1).toSet
-    assert(names == Set("fnv_hash", "murmur_hash", "simhash64", "fingerprint64", "minhash_sig", "hashed_shingles", "jaccard_sorted", "cosine_sim", "rhp_bucket", "kll_quantile", "kll_rank", "kll_n", "kll_cdf", "kll_pmf", "kll_quantiles", "theta_estimate", "theta_union_est", "theta_intersect_est", "theta_anotb_est", "theta_union_f", "theta_intersect_f", "theta_exclude_f", "sniff_format", "byte_entropy", "byte_histogram16", "jaro_sim", "jaro_winkler_sim", "damerau_levenshtein", "damerau_levenshtein_full", "cpc_estimate", "cpc_union_est", "iceberg_bucket", "iceberg_truncate", "zorder64", "hll_bounds", "hll_stringify", "cpc_stringify", "theta_stringify", "kll_stringify", "l2_normalize", "pq_encode", "pq_dtab", "pq_adc_score", "bpe_encode", "unigram_encode", "bpe_encode_all", "unigram_encode_all", "intersect_count_sorted", "gopher_rep_stats", "dup_stats", "reflow_paragraphs", "pair_expand", "bounded_set"))
-    new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
+  test("GraftSession: extension installs functions, rule, strategy; settings pinned") {
+    // every graft function resolves from SQL text, with no register call
+    GraftFunctions.all.foreach { case (name, _, _) =>
+      val described = spark.sql(s"DESCRIBE FUNCTION $name").collect().map(_.getString(0))
+      assert(described.contains(s"Function: $name") && described.contains("Class: graft"),
+        s"$name does not resolve: ${described.mkString(" | ")}")
+    }
+    // a Jaccard filter gets the injected prefilter, an as-of join plans
+    // through the injected strategy, and neither needs the runtime hooks
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet").limit(20)
+      .select(graft.pipeline.Dedup.hashedShingles(col("text")).as("a"),
+        graft.pipeline.Dedup.hashedShingles(substring(col("text"), 1, 60)).as("b"))
+      .filter(expr("jaccard_sorted(a, b) >= 0.2"))
+    assert(docs.count() > 0)
+    assert(docs.queryExecution.optimizedPlan.toString.contains("size("))
+    val asof = SparkEntry.queries("asof_join_events_exec")(spark, sf0001)
+    assert(asof.count() > 0)
+    assert(asof.queryExecution.executedPlan.toString.contains("AsOfJoin"))
+    assert(spark.experimental.extraOptimizations.isEmpty)
+    assert(spark.experimental.extraStrategies.isEmpty)
+    // the effective settings: one value each, the AQE trio from Spark's defaults
+    import org.apache.spark.sql.internal.SQLConf
+    val conf = spark.sessionState.conf
+    val ctx = spark.sparkContext.getConf
+    assert(ctx.get("spark.sql.extensions") == classOf[GraftExtensions].getName)
+    assert(conf.autoBroadcastJoinThreshold == 64L * 1024 * 1024)
+    assert(conf.sessionLocalTimeZone == "UTC")
+    assert(conf.getConf(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG))
+    assert(conf.numShufflePartitions == 4)
+    assert(ctx.get("spark.cleaner.periodicGC.interval") == "1min")
+    assert(!ctx.getBoolean("spark.ui.enabled", defaultValue = true))
+    Seq(SQLConf.ADAPTIVE_EXECUTION_ENABLED, SQLConf.COALESCE_PARTITIONS_ENABLED,
+        SQLConf.SKEW_JOIN_ENABLED, SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST).foreach { e =>
+      assert(conf.getConf(e), e.key)
+      assert(!ctx.contains(e.key), s"${e.key} is set explicitly; it should be Spark's default")
+    }
   }
 
   test("bounded_set: equals sort_array(collect_set) under the cap, truncates above it") {
-    GraftFunctions.register(spark)
     // groups: g=0 has 3 distinct values (< cap), g=1 has 60 (> cap=51),
     // duplicates included to exercise set semantics across partitions
     val rows = (0 until 60).map(i => (1L, i.toLong)) ++
@@ -235,7 +260,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("iceberg transforms reject non-positive bucket count / width") {
-    graft.plans.GraftFunctions.register(spark)
     // foldable non-positive n/w → analysis-time failure, clear message
     for (q <- Seq("SELECT iceberg_bucket(34L, 0)", "SELECT iceberg_bucket(34L, -3)",
                   "SELECT iceberg_truncate(17L, 0L)", "SELECT iceberg_truncate(17L, -5L)")) {

@@ -571,7 +571,6 @@ class PipelineSpec extends SparkSpec {
       .orderBy("rank").collect().map(r => (r.getAs[String]("a"), r.getAs[String]("b")))
     assert(merges.sameElements(Array(("a", "b"), ("ab", "ab"), ("c", "d"))), merges.toList.toString)
     // compiled encoder applies the same rules left-to-right
-    graft.plans.GraftFunctions.register(spark)
     val enc = docsDf((1L, "ababcd", "s1")).select(
       expr("""bpe_encode('ababcd', array(named_struct('a','a','b','b'),
              |  named_struct('a','ab','b','ab'), named_struct('a','c','b','d')))""".stripMargin).as("t"))
@@ -601,7 +600,6 @@ class PipelineSpec extends SparkSpec {
 
   test("unigram tokenizer: Viterbi picks min-cost pieces, round-trips words, stable under repartition") {
     import graft.pipeline.Tokenizer
-    graft.plans.GraftFunctions.register(spark)
     // 'ab' dominates the sample, so it enters the vocab and beats the
     // char-by-char path; 'xyz' words segment to single chars
     val docs = docsDf(
@@ -851,7 +849,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("binary triage: magic-number sniffing and entropy pin known values") {
-    graft.plans.GraftFunctions.register(spark)
     import graft.functions.BinImpl
     // direct impl checks on known byte arrays
     val png = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a, 1, 2)
@@ -917,8 +914,7 @@ class PipelineSpec extends SparkSpec {
   test("connected components: reliable-checkpoint path writes per-round labels") {
     import graft.pipeline.Cluster
     val dir = java.nio.file.Files.createTempDirectory("graft_cc_chk").toString
-    spark.conf.set("spark.graft.checkpointDir", dir)
-    try {
+    try SparkSpec.withConf("spark.graft.checkpointDir" -> dir) {
       val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (9L, 10L)).toDF("a", "b")
       val got = Cluster.connectedComponents(edges).collect()
         .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster_id")).toMap
@@ -928,10 +924,7 @@ class PipelineSpec extends SparkSpec {
         if (f.isFile) 1 else Option(f.listFiles).map(_.map(countFiles).sum).getOrElse(0)
       assert(countFiles(new java.io.File(dir)) > 0,
         s"no checkpoint files written under $dir")
-    } finally {
-      spark.conf.unset("spark.graft.checkpointDir")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   test("connected components: near-dup pairs from minhash cluster transitively") {
@@ -1035,8 +1028,6 @@ class PipelineSpec extends SparkSpec {
     // flat; past it real partitioning engages and the log-step rounds
     // appear). Pin the step function with coalescing OFF so phase 1
     // genuinely runs over a residual ∝ L.
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prevCoalesce = spark.conf.get(coalesceKey, "true")
     def runSpaced(len: Int): Int = {
       val edges = spark.range(0, len.toLong)
         .select((col("id") * 4096L).as("a"), ((col("id") + 1) * 4096L).as("b"))
@@ -1045,8 +1036,7 @@ class PipelineSpec extends SparkSpec {
       assert(got.count() == len + 1L)
       Cluster.lastStats._1
     }
-    spark.conf.set(coalesceKey, "false")
-    try {
+    SparkSpec.withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       val s64 = runSpaced(64)
       val s1024 = runSpaced(1024)
       assert(s64 <= 9, s"L=64 rounds=$s64")       // log2(64)=6 + slack
@@ -1054,7 +1044,7 @@ class PipelineSpec extends SparkSpec {
       assert(s1024 - s64 <= 6, s"L=64:$s64 -> L=1024:$s1024")
       assert(s1024 >= 1, s"4 partitions cannot fully contract a spaced " +
         s"1024-chain, rounds=$s1024")
-    } finally spark.conf.set(coalesceKey, prevCoalesce)
+    }
   }
 
   test("stratified sample respects per-stratum fractions and a fixed seed") {

@@ -138,8 +138,7 @@ class PlanAuditSpec extends SparkSpec {
     * not scan customer/part/supplier, and the nation/region hints must
     * still produce broadcasts. */
   test("q05/q09/q10: no forced broadcast builds from customer/part/supplier; dims still broadcast") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    SparkSpec.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       Seq("q05_local_supplier", "q09_product_profit", "q10_returned_items").foreach { name =>
         val df = SparkEntry.queries(name)(spark, sf0001)
         val bhj = df.queryExecution.sparkPlan.collect { case b: BroadcastHashJoinExec => b }
@@ -158,7 +157,7 @@ class PlanAuditSpec extends SparkSpec {
         assert(buildScans.exists(s => s.startsWith("nation") || s.startsWith("region")),
           s"$name: expected nation/region dim broadcasts to survive, saw $buildScans")
       }
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
   }
 
   /** Impala pushes runtime filters (bloom/min-max) from a join's build
@@ -170,10 +169,10 @@ class PlanAuditSpec extends SparkSpec {
     * not the threshold, is what's audited. */
   test("runtime bloom filter injected from selective dim into fact side (Impala runtime-filter parity)") {
     import org.apache.spark.sql.functions.col
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    SparkSpec.withConf(
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val t = Tables(spark, sf0001)
       val df = t.lineitem
         .join(t.part.filter(col("p_size") === 5), col("l_partkey") === col("p_partkey"))
@@ -181,10 +180,6 @@ class PlanAuditSpec extends SparkSpec {
       val opt = df.queryExecution.optimizedPlan.toString
       assert(opt.contains("might_contain"),
         s"no runtime bloom filter in optimized plan:\n${opt.take(1500)}")
-    } finally {
-      spark.conf.unset("spark.sql.optimizer.runtime.bloomFilter.enabled")
-      spark.conf.unset("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 
@@ -285,23 +280,17 @@ class PlanAuditSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/left")
     spark.range(2000).selectExpr("id AS k", "id * 2 AS w")
       .write.mode("overwrite").parquet(s"$dir/right")
-    val confs = Map(
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "100KB",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "50KB",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    SparkSpec.withConf(
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "100KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "50KB",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = spark.read.parquet(s"$dir/left")
         .join(spark.read.parquet(s"$dir/right"), "k")
       j.collect() // AQE decides skew splits only in the final plan
       val fin = j.queryExecution.executedPlan.toString
       assert(fin.toLowerCase.contains("skew"),
         s"no skew split in final adaptive plan:\n$fin")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -493,8 +482,7 @@ class PlanAuditSpec extends SparkSpec {
     val t = Tables(spark, sf0001)
     spark.sql("DROP TABLE IF EXISTS m6_dim")
     t.nation.write.saveAsTable("m6_dim")
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    try {
+    try SparkSpec.withConf("spark.sql.cbo.enabled" -> "true") {
       spark.sql("ANALYZE TABLE m6_dim COMPUTE STATISTICS")
       spark.sql("ANALYZE TABLE m6_dim COMPUTE STATISTICS FOR ALL COLUMNS")
       val rel = spark.table("m6_dim").queryExecution.optimizedPlan
@@ -509,10 +497,7 @@ class PlanAuditSpec extends SparkSpec {
       assert(joined.queryExecution.sparkPlan.collectFirst {
         case j: BroadcastHashJoinExec => j }.isDefined,
         "analyzed 25-row dim must plan as the broadcast side")
-    } finally {
-      spark.conf.set("spark.sql.cbo.enabled", "false")
-      spark.sql("DROP TABLE IF EXISTS m6_dim")
-    }
+    } finally spark.sql("DROP TABLE IF EXISTS m6_dim")
   }
 
   /** Impala exposes per-join distribution control (STRAIGHT_JOIN plus
@@ -521,8 +506,7 @@ class PlanAuditSpec extends SparkSpec {
     * family. Audit that each hint actually selects its physical
     * operator. */
   test("join strategy hints map to their physical operators (Impala hint parity)") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    SparkSpec.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val t = Tables(spark, sf0001)
       val probe = t.lineitem.select("l_partkey")
       def planOf(hint: String) =
@@ -536,7 +520,7 @@ class PlanAuditSpec extends SparkSpec {
       assert(planOf("merge").collectFirst {
         case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j }.isDefined,
         "merge hint ignored")
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
   }
 
   /** Window-cardinality rule (§5.11): an unpartitioned Window moves ALL

@@ -86,14 +86,14 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("runtime bloom filter join (Impala runtime-filter parity)") {
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "10MB")
-    spark.conf.set("spark.sql.optimizer.runtimeFilter.number.threshold", "10")
-    // tiny test tables: drop the probe-side size gate and forbid
-    // broadcast so the rule (which skips broadcast joins) can fire
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    SparkSpec.withConf(
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "10MB",
+        "spark.sql.optimizer.runtimeFilter.number.threshold" -> "10",
+        // tiny test tables: drop the probe-side size gate and forbid
+        // broadcast so the rule (which skips broadcast joins) can fire
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
       val o = spark.read.parquet(s"$sf0001/orders.parquet")
         .filter(col("o_totalprice") > 450000.0)
@@ -103,12 +103,6 @@ class RelationalSpec extends SparkSpec {
       assert(plan.contains("might_contain") || plan.contains("bloom"),
         s"no runtime bloom filter in plan:\n${plan.take(2000)}")
       assert(j.count() > 0)
-    } finally {
-      spark.conf.unset("spark.sql.optimizer.runtime.bloomFilter.enabled")
-      spark.conf.unset("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold")
-      spark.conf.unset("spark.sql.optimizer.runtimeFilter.number.threshold")
-      spark.conf.unset("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 
@@ -125,8 +119,7 @@ class RelationalSpec extends SparkSpec {
 
   test("S7: bucketed tables join without a shuffle exchange") {
     val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try SparkSpec.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val orders = spark.read.parquet(s"$sf0001/orders.parquet")
       val customer = spark.read.parquet(s"$sf0001/customer.parquet")
       orders.write.mode(SaveMode.Overwrite)
@@ -141,7 +134,6 @@ class RelationalSpec extends SparkSpec {
       assert(!plan.contains("Exchange"), s"bucketed join should not shuffle:\n$plan")
       assert(j.count() > 0)
     } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.sql("DROP TABLE IF EXISTS orders_b")
       spark.sql("DROP TABLE IF EXISTS customer_b")
     }

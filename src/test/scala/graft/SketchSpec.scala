@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.{KllQuantile, Sampling}
-import graft.plans.GraftFunctions
 
 /** KLL quantile sketch + sampling-family aggregates: error bounds,
   * reservoir invariants, seeded determinism. */
@@ -10,7 +9,6 @@ class SketchSpec extends SparkSpec {
   import spark.implicits._
 
   test("KLL sketch quantile estimate stays within the k=200 rank-error bound") {
-    GraftFunctions.register(spark)
     val n = 20000
     val df = (1 to n).map(_.toDouble).toDF("x").repartition(8)
     val out = df.agg(KllQuantile.sketch($"x").as("sk"))
@@ -23,7 +21,6 @@ class SketchSpec extends SparkSpec {
   }
 
   test("KLL rank/n/cdf/pmf/quantiles stay within the k=200 rank-error bound") {
-    GraftFunctions.register(spark)
     val n = 20000
     val df = (1 to n).map(_.toDouble).toDF("x").repartition(8)
     val out = df.agg(KllQuantile.sketch($"x").as("sk"))
@@ -66,7 +63,6 @@ class SketchSpec extends SparkSpec {
 
   test("theta sketch: exact below k; union/intersect/a-not-b match set algebra") {
     import graft.functions.ThetaOps
-    GraftFunctions.register(spark)
     // A = {0..999}, B = {500..1499}: |A|=|B|=1000, |A∪B|=1500, |A∩B|=500, |A\B|=500
     val df = ((0 until 1000).map(i => ("a", i.toLong)) ++
       (500 until 1500).map(i => ("b", i.toLong))).toDF("g", "x").repartition(8)
@@ -142,7 +138,6 @@ class SketchSpec extends SparkSpec {
 
   test("CPC sketch: estimate within error bound, union matches multiset union") {
     import graft.functions.CpcOps
-    GraftFunctions.register(spark)
     val df = (1 to 20000).map(i => (i % 2, (i % 3000).toLong)).toDF("g", "x").repartition(8)
     val sk = df.groupBy($"g").agg(CpcOps.sketch($"x").as("sk"))
     val ests = sk.select($"g", call_function("cpc_estimate", $"sk").as("est"))
@@ -160,7 +155,6 @@ class SketchSpec extends SparkSpec {
 
   test("sketch stringify: hll_bounds brackets the exact count; summaries name their family") {
     import graft.functions.{CpcOps, KllQuantile, ThetaOps}
-    GraftFunctions.register(spark)
     val df = (1 to 10000).map(i => (i % 1500).toLong).toDF("x").repartition(8)
     val row = df.agg(
       expr("hll_sketch_agg(x)").as("hll"),

@@ -420,7 +420,6 @@ class SourcesSpec extends SparkSpec {
     assert(mans.length == 8 && mans.forall(_.getAs[Int]("n_deleted_files") == 0))
     assert(mans.map(_.getAs[Long]("record_count")).sum == docs.count())
     // partitions: rollup equals a groupBy over the data's bucket transform
-    graft.plans.GraftFunctions.register(spark)
     val parts = IcebergInspect.partitions(spark, dir).collect()
       .map(r => r.getAs[String]("partition") -> r.getAs[Long]("n_rows")).toMap
     val want = docs.groupBy(call_function("iceberg_bucket", col("doc_id"), lit(4)).as("b"))
@@ -974,7 +973,6 @@ class SourcesSpec extends SparkSpec {
     // 2-D-filtered scan row-group-prunes. Quantify: per-file span of
     // l_partkey under zorder layout vs the same data round-robin'd.
     val dir = Files.createTempDirectory("graft_zorder").toString
-    graft.plans.GraftFunctions.register(spark)
     val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
       .select(col("l_partkey"), col("l_suppkey"))
       .withColumn("zkey", call_function("zorder64", col("l_partkey"), col("l_suppkey")))
@@ -1076,8 +1074,7 @@ class SourcesSpec extends SparkSpec {
 
   test("S6: dynamic partition overwrite replaces only the written partition") {
     val dir = tmp()
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
+    SparkSpec.withConf("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       li.write.partitionBy("l_returnflag").mode(SaveMode.Overwrite).parquet(dir)
       val before = spark.read.parquet(dir).filter(col("l_returnflag") =!= "R").count()
       // overwrite only partition R with a single row
@@ -1086,7 +1083,7 @@ class SourcesSpec extends SparkSpec {
       val after = spark.read.parquet(dir)
       assert(after.filter(col("l_returnflag") === "R").count() == 1)
       assert(after.filter(col("l_returnflag") =!= "R").count() == before)
-    } finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+    }
   }
 
   // ---------------------------------------------------------------

@@ -3,19 +3,23 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all specs (one JVM, one context). */
+/** Shared local session for all specs (one JVM, one context): the
+  * `GraftSession` configuration at a fixed 4 cores, so the specs run
+  * under the settings Bench, Verify and the benchmark use. */
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .appName("graft-test")
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  lazy val session: SparkSession = GraftSession.build("graft-test", "local[4]", 4)
+
+  /** Runs `body` with the given session confs set, then puts back each
+    * key's previous value (and unsets only keys that had none), so a
+    * spec neither leaks a conf nor resets one the session was built
+    * with to Spark's default. */
+  def withConf[T](confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> session.conf.getOption(k) }
+    confs.foreach { case (k, v) => session.conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => session.conf.set(k, v)
+      case (k, None) => session.conf.unset(k)
+    }
   }
 }
 

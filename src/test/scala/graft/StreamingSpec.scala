@@ -11,6 +11,9 @@ class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(min: Long): Timestamp = new Timestamp(1700000000000L + min * 60000L)
+  /** transformWithState requires the RocksDB state store. */
+  private val rocksDbStateStore = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   test("T1: watermarked tumbling window counts") {
     implicit val ctx = spark.sqlContext
@@ -425,82 +428,72 @@ class StreamingSpec extends SparkSpec {
 
   test("T11: transformWithState keeps value/map/list state per user across batches") {
     implicit val ctx = spark.sqlContext
-    // The transformWithState operator requires the RocksDB state store.
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[Event]
-    val q = Streams.userActivitySnapshots(in.toDS(), recentK = 3)
-      .writeStream.format("memory").queryName("t11_out").outputMode("update").start()
-    try {
-      in.addData(
-        Event(1, ts(0), 1, "view", 1.0), Event(2, ts(1), 1, "view", 2.0),
-        Event(3, ts(2), 1, "click", 4.0))
-      q.processAllAvailable()
-      in.addData( // second batch: state must carry over, list trimmed to k=3
-        Event(4, ts(3), 1, "buy", 8.0), Event(5, ts(4), 1, "view", 16.0))
-      q.processAllAvailable()
-      val rows = spark.table("t11_out").collect()
-        .map(r => (r.getAs[Long]("total_events"), r.getAs[Int]("distinct_types"),
-          r.getAs[Double]("recent_value_sum"))).toSet
-      // batch 1: 3 events, 2 types, buffer [1,2,4] → 7
-      assert(rows.contains((3L, 2, 7.0)))
-      // batch 2: 5 events lifetime, 3 types, buffer trimmed to [4,8,16] → 28
-      assert(rows.contains((5L, 3, 28.0)))
-    } finally {
-      q.stop()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    SparkSpec.withConf(rocksDbStateStore) {
+      val in = MemoryStream[Event]
+      val q = Streams.userActivitySnapshots(in.toDS(), recentK = 3)
+        .writeStream.format("memory").queryName("t11_out").outputMode("update").start()
+      try {
+        in.addData(
+          Event(1, ts(0), 1, "view", 1.0), Event(2, ts(1), 1, "view", 2.0),
+          Event(3, ts(2), 1, "click", 4.0))
+        q.processAllAvailable()
+        in.addData( // second batch: state must carry over, list trimmed to k=3
+          Event(4, ts(3), 1, "buy", 8.0), Event(5, ts(4), 1, "view", 16.0))
+        q.processAllAvailable()
+        val rows = spark.table("t11_out").collect()
+          .map(r => (r.getAs[Long]("total_events"), r.getAs[Int]("distinct_types"),
+            r.getAs[Double]("recent_value_sum"))).toSet
+        // batch 1: 3 events, 2 types, buffer [1,2,4] → 7
+        assert(rows.contains((3L, 2, 7.0)))
+        // batch 2: 5 events lifetime, 3 types, buffer trimmed to [4,8,16] → 28
+        assert(rows.contains((5L, 3, 28.0)))
+      } finally q.stop()
     }
   }
 
   test("T12: event-time timers close idle sessions via handleExpiredTimer") {
     implicit val ctx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[Event]
-    val q = Streams.timerSessions(in.toDS(), gapSeconds = 1800)
-      .writeStream.format("memory").queryName("t12_out").outputMode("append").start()
-    try {
-      // user 1: events at minutes 0 and 5; user 2: one event at minute 3
-      in.addData(
-        Event(1, ts(0), 1, "view", 1.0), Event(2, ts(5), 1, "click", 2.0),
-        Event(3, ts(3), 2, "view", 3.0))
-      q.processAllAvailable()
-      // far-future event advances the watermark past both users' timers
-      in.addData(Event(4, ts(120), 3, "view", 4.0))
-      q.processAllAvailable()
-      in.addData(Event(5, ts(121), 3, "view", 5.0))
-      q.processAllAvailable()
-      val out = spark.table("t12_out").collect()
-        .map(r => (r.getAs[Long]("user_id"), r.getAs[Int]("n_events"),
-          r.getAs[Long]("duration_s"))).toSet
-      assert(out.contains((1L, 2, 300L)), s"user 1 session missing from $out")
-      assert(out.contains((2L, 1, 0L)), s"user 2 session missing from $out")
-    } finally {
-      q.stop()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    SparkSpec.withConf(rocksDbStateStore) {
+      val in = MemoryStream[Event]
+      val q = Streams.timerSessions(in.toDS(), gapSeconds = 1800)
+        .writeStream.format("memory").queryName("t12_out").outputMode("append").start()
+      try {
+        // user 1: events at minutes 0 and 5; user 2: one event at minute 3
+        in.addData(
+          Event(1, ts(0), 1, "view", 1.0), Event(2, ts(5), 1, "click", 2.0),
+          Event(3, ts(3), 2, "view", 3.0))
+        q.processAllAvailable()
+        // far-future event advances the watermark past both users' timers
+        in.addData(Event(4, ts(120), 3, "view", 4.0))
+        q.processAllAvailable()
+        in.addData(Event(5, ts(121), 3, "view", 5.0))
+        q.processAllAvailable()
+        val out = spark.table("t12_out").collect()
+          .map(r => (r.getAs[Long]("user_id"), r.getAs[Int]("n_events"),
+            r.getAs[Long]("duration_s"))).toSet
+        assert(out.contains((1L, 2, 300L)), s"user 1 session missing from $out")
+        assert(out.contains((2L, 1, 0L)), s"user 2 session missing from $out")
+      } finally q.stop()
     }
   }
 
   test("T13: initial state bootstraps per-user totals before the first batch") {
     implicit val ctx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val init = Seq((1L, 100L), (2L, 7L)).toDS()
-    val in = MemoryStream[Event]
-    val q = Streams.bootstrappedCounts(in.toDS(), init)
-      .writeStream.format("memory").queryName("t13_out").outputMode("update").start()
-    try {
-      in.addData(
-        Event(1, ts(0), 1, "view", 1.0), Event(2, ts(1), 1, "view", 2.0),
-        Event(3, ts(2), 3, "view", 3.0))
-      q.processAllAvailable()
-      val rows = spark.table("t13_out").collect()
-        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("total_events"))).toSet
-      assert(rows.contains((1L, 102L)), s"bootstrap+stream mismatch: $rows") // 100 + 2
-      assert(rows.contains((3L, 1L)), s"unseeded user mismatch: $rows")
-    } finally {
-      q.stop()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    SparkSpec.withConf(rocksDbStateStore) {
+      val init = Seq((1L, 100L), (2L, 7L)).toDS()
+      val in = MemoryStream[Event]
+      val q = Streams.bootstrappedCounts(in.toDS(), init)
+        .writeStream.format("memory").queryName("t13_out").outputMode("update").start()
+      try {
+        in.addData(
+          Event(1, ts(0), 1, "view", 1.0), Event(2, ts(1), 1, "view", 2.0),
+          Event(3, ts(2), 3, "view", 3.0))
+        q.processAllAvailable()
+        val rows = spark.table("t13_out").collect()
+          .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("total_events"))).toSet
+        assert(rows.contains((1L, 102L)), s"bootstrap+stream mismatch: $rows") // 100 + 2
+        assert(rows.contains((3L, 1L)), s"unseeded user mismatch: $rows")
+      } finally q.stop()
     }
   }
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only sweep of the S20f upsert key-locator (r13 verdict #1): a
@@ -14,7 +13,7 @@ import org.apache.spark.sql.functions._
   * shipped library.
   *
   * Usage: Test/runMain graft.tools.HudiUpsertSweep
-  * Env: SPARK_GRAFT_CPUS (default 16).
+  * Env: SPARK_GRAFT_CPUS (default: every core).
   */
 object HudiUpsertSweep {
   import graft.sources.{HudiRO, HudiSink}
@@ -23,11 +22,7 @@ object HudiUpsertSweep {
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build("hudi-upsert-sweep")
     import spark.implicits._
 
     val rowsPerGroup = 4000L

@@ -197,14 +197,7 @@ object ScaleGen {
 
   def main(args: Array[String]): Unit = {
     val Array(outDir, mult) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build("scale-gen")
     generate(spark, outDir, mult.toDouble)
     spark.stop()
   }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: Test/runMain graft.tools.ScaleSweep <m1>=<dir1> <m2>=<dir2> ...
   * Env: SPARK_GRAFT_ONLY (regex), SPARK_GRAFT_ITERS (default 2),
-  *      SPARK_GRAFT_CPUS (default 32).
+  *      SPARK_GRAFT_CPUS (default: every core).
   * Writes scale_sweep.json in the cwd.
   */
 object ScaleSweep {
@@ -73,21 +73,10 @@ object ScaleSweep {
       val Array(m, dir) = a.split("=", 2); (m.toDouble, dir)
     }.sortBy(_._1)
     require(scales.length >= 2, "need at least two <mult>=<dir> args")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.GraftSession.cpus
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "2").toInt.max(1)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build("scale-sweep")
     graft.SparkEntry.entry(spark).count() // session warmup, untimed
     val queries = defaultQueries
       .filter(q => only.forall(_.findFirstIn(q).isDefined))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only commit-cadence sweep for the OTHER two lakehouse sinks
@@ -28,7 +27,7 @@ import org.apache.spark.sql.functions._
   * Writes sink_cadence_sweep.json. NOT part of the shipped library.
   *
   * Usage: Test/runMain graft.tools.SinkCadenceSweep
-  * Env: SPARK_GRAFT_CPUS (default 16).
+  * Env: SPARK_GRAFT_CPUS (default: every core).
   */
 object SinkCadenceSweep {
   import graft.sources.{HiveAcid, HiveAcidSink}
@@ -38,11 +37,7 @@ object SinkCadenceSweep {
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build("sink-cadence-sweep")
     import spark.implicits._
 
     val kBatches = 40

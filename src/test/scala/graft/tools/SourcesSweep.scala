@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only scale sweep for the SOURCE families (round-10 verdict #6):
   * proves the driver-side metadata work of the new table-layout readers
@@ -30,14 +29,7 @@ object SourcesSweep {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("sources_sweep.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build("sources-sweep")
     val conf = spark.sparkContext.hadoopConfiguration
     val sb = new StringBuilder("{\n")
 

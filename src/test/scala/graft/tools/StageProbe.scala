@@ -15,19 +15,10 @@ import scala.collection.mutable
 object StageProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = args(1)
+    val cpus = args(1).toInt
     val iters = args(2).toInt
     val name = args(3)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("stage-probe", s"local[$cpus]", cpus)
     final case class Row(var wall: Long = 0L, var taskMs: Long = 0L,
                          var gcMs: Long = 0L, var shRead: Long = 0L,
                          var shWrite: Long = 0L, var spill: Long = 0L,
