@@ -2,122 +2,39 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Per-query bench fixtures and /tmp hygiene (round-6 verdict #1/#6,
-  * ADVICE #4).
+/** Per-query /tmp hooks for bench loops, derived from each module's
+  * [[QueryModule.tmp]] declarations.
   *
-  * Two problems with one mechanism:
+  * Bench, the benchmark harness and the dev tools call [[prepare]]
+  * before a query's iterations and [[cleanup]] after them. Two
+  * problems, one mechanism:
   *
-  * 1. Fixture writes inside timed iterations. src_nested_parquet and
-  *    the Iceberg table are INPUT fixtures — the measured plan is the
-  *    read path — but building them lazily put the one-time write
-  *    inside bench iteration 1 (Iceberg) or inside EVERY iteration
-  *    (nested parquet, whose re-write each iteration left rising
-  *    writeback debt: driver iterations [8.1, 8.6, 15.4 s]).
-  *    [[prepare]] builds them UNTIMED before a query's iterations.
+  * 1. Fixture writes inside timed iterations. A [[Fixture]] is a query
+  *    INPUT — the measured plan is its read path — so [[prepare]]
+  *    builds the query's fixtures untimed, and the query's own
+  *    `ensure` calls then hit the per-JVM memo.
+  * 2. Accumulated /tmp writeback. Each query's written state left in
+  *    /tmp bleeds its page-cache writeback into whichever queries run
+  *    next. [[cleanup]] drops every path the query declared right after
+  *    its iterations — deleting dirty pages also cancels their pending
+  *    writeback. A fixture several queries read is rebuilt, untimed, by
+  *    the next one's [[prepare]].
   *
-  * 2. Accumulated /tmp writeback. 211 queries × 3 iterations leave
-  *    ~1 GB of written parquet/avro/rcfile/seqfile state in /tmp whose
-  *    page-cache writeback bleeds into whichever queries run next
-  *    (the whole src_* alphabetical neighborhood showed inflated first
-  *    iterations in BENCH_r06). [[cleanup]] deletes each query's dirs
-  *    right after its iterations — deleting dirty pages also cancels
-  *    their pending writeback.
-  *
-  * Bench calls both; Verify calls NEITHER — the DuckDB oracle reads
-  * some of these files after the Verify process exits, and Verify's
-  * builders write their own fixtures (first call per JVM overwrites,
-  * so a verify run never reads a stale file from an older code
-  * version).
+  * Verify calls neither: its queries build their fixtures on first use,
+  * and it drops the per-JVM paths once its results are written.
   */
 object Fixtures {
   type Hook = (SparkSession, String) => Unit
 
-  /** Untimed pre-build of write-once query inputs. */
-  val prepare: Map[String, Hook] = Map(
-    "src_nested_parquet" -> ((s, d) => { sources.NestedParquet.ensureFile(s, d); () }),
-    "src_nested_orc" -> ((s, d) => { sources.NestedParquet.ensureOrcFile(s, d); () }),
-    "src_iceberg_roundtrip" -> ((s, d) => { sources.IcebergQueries.ensureTable(s, d); () }),
-    "src_iceberg_prune" -> ((s, d) => { sources.IcebergQueries.ensureTable(s, d); () }),
-    "src_iceberg_merge" -> ((s, d) => { sources.IcebergQueries.ensureMergeTable(s, d); () }),
-    "src_iceberg_cdc" -> ((s, d) => { sources.IcebergQueries.ensureCdcTable(s, d); () }),
-    "src_iceberg_partitions" -> ((s, d) => { sources.IcebergQueries.ensureTable(s, d); () }),
-    "src_iceberg_files" -> ((s, d) => { sources.IcebergQueries.ensureTable(s, d); () }),
-    "src_iceberg_snapshots" -> ((s, d) => { sources.IcebergQueries.ensureMergeTable(s, d); () }),
-    "src_iceberg_incremental" -> ((s, d) => { sources.IcebergQueries.ensureIncrTable(s, d); () }),
-    "sim_ivf_persisted" -> ((s, d) => { pipeline.Similarity.ensureIvfIndex(s, d); () }),
-    "sim_pq_persisted" -> ((s, d) => { pipeline.Similarity.ensurePqIndex(s, d); () }),
-    "dedup_incremental_indexed" -> ((s, d) => { pipeline.Dedup.ensureLshIndex(s, d); () }),
-    "src_hive_acid" -> ((s, d) => { sources.HiveAcidQueries.ensureInsertOnly(s, d); () }),
-    "src_hive_acid_full" -> ((s, d) => { sources.HiveAcidQueries.ensureFullAcid(s, d); () }),
-    "src_hive_acid_orig" -> ((s, d) => { sources.HiveAcidQueries.ensureOriginals(s, d); () }),
-    "src_hive_acid_write_rt" -> ((s, d) => { sources.HiveAcidQueries.ensureSinkTable(s, d); () }),
-    // write_cluster sorts BEFORE write_rt: its prepare builds AND
-    // clusters, so both queries time the read path of the same table
-    "src_hudi_write_cluster" -> ((s, d) => { sources.HudiQueries.ensureClusteredSink(s, d); () }),
-    "src_hudi_write_rt" -> ((s, d) => { sources.HudiQueries.ensureSinkTable(s, d); () }),
-    "src_mixed_formats" -> ((s, d) => { sources.MixedFormatQueries.ensureTable(s, d); () }),
-    "src_mixed_prune" -> ((s, d) => { sources.MixedFormatQueries.ensureTable(s, d); () }),
-  )
-
-  private def rm(spark: SparkSession, paths: String*): Unit = paths.foreach { p =>
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
+  /** Untimed build of each query's write-once inputs. */
+  val prepare: Map[String, Hook] = SparkEntry.tmpPaths.flatMap { case (name, paths) =>
+    val fixtures = paths.collect { case f: Fixture => f }
+    if (fixtures.isEmpty) None
+    else Some(name -> ((s: SparkSession, d: String) => fixtures.foreach(_.ensure(s, d))))
   }
 
-  /** Post-query deletion of everything the query wrote to /tmp. Queries
-    * with a write-once memo also drop it, so a later query (or the
-    * other Iceberg query) rebuilds rather than reading a deleted path. */
-  val cleanup: Map[String, Hook] = Map(
-    "m4_compact_small_files" ->
-      ((s, d) => rm(s, operators.TableOps.compactIn(d), operators.TableOps.compactOut(d))),
-    "m5_dynamic_overwrite" -> ((s, d) => rm(s, operators.TableOps.dynDir(d))),
-    "src_nested_parquet" ->
-      ((s, d) => { sources.NestedParquet.invalidate(d); rm(s, sources.NestedParquet.path(d)) }),
-    "src_nested_orc" ->
-      ((s, d) => { sources.NestedParquet.invalidateOrc(d)
-        rm(s, sources.NestedParquet.orcPath(d), sources.NestedParquet.orcTwinPath(d)) }),
-    "src_rcfile_roundtrip" -> ((s, d) => rm(s, sources.RcFileQueries.path(d))),
-    "src_seqfile_roundtrip" -> ((s, d) => rm(s, sources.SequenceQueries.path(d))),
-    "src_seqfile_v2write" -> ((s, d) => rm(s, sources.SequenceQueries.v2Path(d))),
-    "src_avro_roundtrip" -> ((s, d) => rm(s, sources.AvroQueries.path(d))),
-    "src_iceberg_roundtrip" ->
-      ((s, d) => { sources.IcebergQueries.invalidate(d); rm(s, sources.IcebergQueries.path(d)) }),
-    "src_iceberg_prune" ->
-      ((s, d) => { sources.IcebergQueries.invalidate(d); rm(s, sources.IcebergQueries.path(d)) }),
-    "src_iceberg_merge" ->
-      ((s, d) => { sources.IcebergQueries.invalidateMerge(d)
-        rm(s, sources.IcebergQueries.mergePath(d)) }),
-    "src_iceberg_cdc" ->
-      ((s, d) => { sources.IcebergQueries.invalidateCdc(d)
-        rm(s, sources.IcebergQueries.cdcPath(d)) }),
-    "src_iceberg_partitions" ->
-      ((s, d) => { sources.IcebergQueries.invalidate(d); rm(s, sources.IcebergQueries.path(d)) }),
-    "src_iceberg_files" ->
-      ((s, d) => { sources.IcebergQueries.invalidate(d); rm(s, sources.IcebergQueries.path(d)) }),
-    "src_iceberg_snapshots" ->
-      ((s, d) => { sources.IcebergQueries.invalidateMerge(d)
-        rm(s, sources.IcebergQueries.mergePath(d)) }),
-    "sim_ivf_persisted" ->
-      ((s, d) => { pipeline.Similarity.invalidateIvfIndex(d)
-        rm(s, pipeline.Similarity.ivfIndexPath(d)) }),
-    "sim_pq_persisted" ->
-      ((s, d) => { pipeline.Similarity.invalidatePqIndex(d)
-        rm(s, pipeline.Similarity.pqIndexPath(d)) }),
-    "dedup_incremental_indexed" ->
-      ((s, d) => { pipeline.Dedup.invalidateLshIndex(d)
-        rm(s, pipeline.Dedup.lshIndexPath(d)) }),
-    "src_iceberg_incremental" ->
-      ((s, d) => { sources.IcebergQueries.invalidateIncr(d)
-        rm(s, sources.IcebergQueries.incrPath(d)) }),
-    "src_hive_acid" -> ((s, d) => rm(s, sources.HiveAcidQueries.insertOnlyPath(d))),
-    "src_hive_acid_full" -> ((s, d) => rm(s, sources.HiveAcidQueries.fullAcidPath(d))),
-    "src_hive_acid_orig" -> ((s, d) => rm(s, sources.HiveAcidQueries.originalsPath(d))),
-    "src_hive_acid_write_rt" -> ((s, d) => rm(s, sources.HiveAcidQueries.sinkTablePath(d))),
-    // the sink table serves BOTH writer queries: only the later one
-    // (alphabetically: src_hudi_write_rt) tears it down
-    "src_hudi_write_rt" -> ((s, d) => rm(s, sources.HudiQueries.sinkPath(d))),
-    // the mixed table serves BOTH mixed queries: only the later one
-    // (alphabetically: src_mixed_prune) tears it down
-    "src_mixed_prune" -> ((s, d) => rm(s, sources.MixedFormatQueries.path(d))),
-  )
+  /** Deletion of everything the query reads or writes under /tmp. */
+  val cleanup: Map[String, Hook] = SparkEntry.tmpPaths.map { case (name, paths) =>
+    name -> ((s: SparkSession, d: String) => paths.foreach(_.drop(s, d)))
+  }
 }

@@ -5,11 +5,16 @@ import org.apache.spark.sql.functions._
 import graft.operators._
 
 /** One family of named queries plus, for the keys it can, DuckDB SQL
-  * that recomputes the same result over the same parquet tables. */
+  * that recomputes the same result over the same parquet tables, and
+  * the /tmp paths each query touches. */
 trait QueryModule {
   type Q = (SparkSession, String) => DataFrame
   val queries: Map[String, Q]
   val oracles: Map[String, String]
+  /** Every /tmp path a query reads or writes: the [[Fixture]]s it reads
+    * and the [[TmpPath]]s it writes on each run. [[Fixtures]] derives
+    * its prepare and cleanup hooks from this. */
+  val tmp: Map[String, Seq[TmpPath]] = Map.empty
 }
 
 /** Entry-point contract (`entry`, `queries`, `oracleSql`) — see SURVEY.md §7. */
@@ -57,21 +62,28 @@ object SparkEntry {
     * the same parquet tables. Omitted keys get a rows-only check. */
   def oracleSql: Map[String, String] = registry._2
 
+  /** The /tmp paths each query reads or writes ([[QueryModule.tmp]]). */
+  def tmpPaths: Map[String, Seq[TmpPath]] = registry._3
+
   /** Unions the modules' maps, failing on the first access instead of
     * letting `Map ++` keep the last of two same-named entries: a name
-    * declared twice, or oracle SQL for a name no module declares,
-    * throws. */
-  private[graft] def merge(modules: Seq[QueryModule])
-      : (Map[String, (SparkSession, String) => DataFrame], Map[String, String]) = {
+    * declared twice, or oracle SQL or /tmp paths for a name no module
+    * declares, throws. */
+  private[graft] def merge(modules: Seq[QueryModule]): (Map[String, (SparkSession, String) => DataFrame],
+      Map[String, String], Map[String, Seq[TmpPath]]) = {
     def unique[V](what: String, entries: Seq[(String, V)]): Map[String, V] = {
       val dup = entries.groupBy(_._1).collect { case (k, es) if es.size > 1 => k }
       require(dup.isEmpty, s"$what declared by more than one module: ${dup.toSeq.sorted.mkString(", ")}")
       entries.toMap
     }
     val queries = unique("query names", modules.flatMap(_.queries))
-    val oracles = unique("oracle keys", modules.flatMap(_.oracles))
-    val orphans = oracles.keys.filterNot(queries.contains).toSeq.sorted
-    require(orphans.isEmpty, s"oracle SQL for no registered query: ${orphans.mkString(", ")}")
-    (queries, oracles)
+    def declared[V](what: String, entries: Seq[(String, V)]): Map[String, V] = {
+      val m = unique(what, entries)
+      val orphans = m.keys.filterNot(queries.contains).toSeq.sorted
+      require(orphans.isEmpty, s"$what for no registered query: ${orphans.mkString(", ")}")
+      m
+    }
+    (queries, declared("oracle SQL", modules.flatMap(_.oracles)),
+      declared("/tmp paths", modules.flatMap(_.tmp)))
   }
 }

@@ -82,6 +82,9 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Leave no per-JVM copies behind; the static paths stay, because
+    // the DuckDB oracle reads them after this process exits.
+    SparkEntry.tmpPaths.values.flatten.toSet.filter(_.perJvm).foreach(_.drop(spark, sfDir))
     spark.stop()
   }
 }

@@ -45,15 +45,9 @@ object TableOps extends graft.QueryModule {
     spark.read.parquet(outDir)
   }
 
-  // SF-suffixed so runs at different scale factors never collide;
-  // private[graft] so Fixtures can delete them after the bench query
-  private[graft] def compactIn(dir: String) =
-    s"/tmp/graft_compact_in_${new java.io.File(dir).getName}"
-  private[graft] def compactOut(dir: String) =
-    s"/tmp/graft_compact_out_${new java.io.File(dir).getName}"
-
-  private[graft] def dynDir(dir: String) =
-    s"/tmp/graft_dyn_overwrite_${new java.io.File(dir).getName}_p${ProcessHandle.current().pid()}"
+  private val compactIn = new graft.TmpPath("compact_in")
+  private val compactOut = new graft.TmpPath("compact_out")
+  private val dynDir = new graft.TmpPath("dyn_overwrite")
 
   /** M5: DYNAMIC partition overwrite — the reference's
     * `INSERT OVERWRITE ... PARTITION` with dynamic partition values
@@ -320,5 +314,10 @@ object TableOps extends graft.QueryModule {
         |                 for i in range(0, 32)]) AS BIGINT) AS zkey
         |FROM lineitem WHERE l_orderkey < 400
         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
+  )
+
+  override val tmp: Map[String, Seq[graft.TmpPath]] = Map(
+    "m4_compact_small_files" -> Seq(compactIn, compactOut),
+    "m5_dynamic_overwrite" -> Seq(dynDir),
   )
 }

@@ -295,13 +295,6 @@ object Dedup extends graft.QueryModule {
       .filter(col("jaccard") >= minJaccard)
   }
 
-  /** Index location + write-once memo for the registry query (the
-    * IcebergQueries.ensureTable pattern: Verify builds on first use,
-    * Bench pre-builds untimed via Fixtures). Keyed by the ABSOLUTE
-    * dir's hash AND the JVM pid, not the basename alone: two
-    * concurrent JVMs (parallel bench+verify) or two checkouts sharing
-    * an SF name must never race one mode("overwrite") write against
-    * the other's reads under a shared /tmp path (ADVICE r7). */
   /** P49: CONTAINMENT near-dup — the asymmetric overlap Jaccard misses.
     * A short document pasted inside a long one has tiny Jaccard (the
     * union is the big doc) but containment |A∩B|/|A| ≈ 1, so minhash
@@ -474,23 +467,9 @@ object Dedup extends graft.QueryModule {
         lit(wordsPerLine), lit(Int.MaxValue)).as("text"))
   }
 
-  def lshIndexPath(dir: String): String = {
-    val abs = new java.io.File(dir).getAbsolutePath
-    s"/tmp/graft_lsh_index_${new java.io.File(dir).getName}_" +
-      s"${abs.hashCode.toHexString}_p${ProcessHandle.current().pid()}"
-  }
-  private val lshIdxBuilt = new scala.collection.concurrent.TrieMap[String, Boolean]()
-  def ensureLshIndex(spark: SparkSession, dir: String): String = {
-    val p = lshIndexPath(dir)
-    lshIdxBuilt.getOrElseUpdate(p, {
-      lshIndexWrite(Tables(spark, dir).documents
-        .filter(pmod(col("doc_id"), lit(5)) =!= 0), p)
-      true
-    })
-    p
-  }
-  private[graft] def invalidateLshIndex(dir: String): Unit =
-    lshIdxBuilt.remove(lshIndexPath(dir))
+  /** The persisted LSH index, a write-once query input. */
+  val lshIndex = new graft.Fixture("lsh_index")((spark, dir, p) =>
+    lshIndexWrite(Tables(spark, dir).documents.filter(pmod(col("doc_id"), lit(5)) =!= 0), p))
 
   // ---- queries()/oracle entries -------------------------------------
 
@@ -517,7 +496,7 @@ object Dedup extends graft.QueryModule {
     // Same gate served from the PERSISTED index tables (P43b): the
     // verdict math is identical, so it shares the inline gate's oracle.
     "dedup_incremental_indexed" -> ((spark, dir) => {
-      val p = ensureLshIndex(spark, dir)
+      val p = lshIndex.ensure(spark, dir)
       incrementalLshGateIndexed(spark, p,
         Tables(spark, dir).documents.filter(pmod(col("doc_id"), lit(5)) === 0))
         .orderBy("doc_id")
@@ -701,5 +680,9 @@ object Dedup extends graft.QueryModule {
          |FROM ver WHERE inter * 10 >= la * 8 OR inter * 10 >= lb * 8
          |ORDER BY common_shingles DESC, doc_a, doc_b LIMIT 200""".stripMargin
     },
+  )
+
+  override val tmp: Map[String, Seq[graft.TmpPath]] = Map(
+    "dedup_incremental_indexed" -> Seq(lshIndex),
   )
 }

@@ -298,31 +298,9 @@ object Similarity extends graft.QueryModule {
 
   // ---- P44: persisted IVF index (build once, serve many) -----------
 
-  /** Index location, keyed by the SF dir name (the NestedParquet.path
-    * contract: runs at different SFs never clobber each other) PLUS
-    * the absolute dir's hash and the JVM pid, so concurrent JVMs or
-    * same-named checkouts never share — and so never race — one
-    * /tmp index directory (ADVICE r7). */
-  def ivfIndexPath(dir: String): String = {
-    val abs = new java.io.File(dir).getAbsolutePath
-    s"/tmp/graft_ivf_index_${new java.io.File(dir).getName}_" +
-      s"${abs.hashCode.toHexString}_p${ProcessHandle.current().pid()}"
-  }
-
-  private val indexBuilt = new scala.collection.concurrent.TrieMap[String, Boolean]()
-
-  /** Write-once memo per JVM (the IcebergQueries.ensureTable pattern):
-    * Verify builds the index on first use; Bench pre-builds it UNTIMED
-    * via Fixtures.prepare and invalidates on cleanup. */
-  def ensureIvfIndex(spark: SparkSession, dir: String): String = {
-    val p = ivfIndexPath(dir)
-    indexBuilt.getOrElseUpdate(p, {
-      ivfIndexWrite(spark, Tables(spark, dir).embeddings, p); true
-    })
-    p
-  }
-  private[graft] def invalidateIvfIndex(dir: String): Unit =
-    indexBuilt.remove(ivfIndexPath(dir))
+  /** The persisted IVF index, a write-once query input. */
+  val ivfIndex = new graft.Fixture("ivf_index")((spark, dir, p) =>
+    ivfIndexWrite(spark, Tables(spark, dir).embeddings, p))
 
   /** P44: the IVF index as TABLES — the build-once/serve-many split
     * [[ivfTopK]] (which rebuilds its index per call) deliberately
@@ -499,26 +477,9 @@ object Similarity extends graft.QueryModule {
 
   // ---- P33b: persisted PQ index (build once, serve many) -----------
 
-  /** Index location: the ivfIndexPath contract (SF-name + absolute-dir
-    * hash + JVM pid — concurrent JVMs never share a /tmp directory). */
-  def pqIndexPath(dir: String): String = {
-    val abs = new java.io.File(dir).getAbsolutePath
-    s"/tmp/graft_pq_index_${new java.io.File(dir).getName}_" +
-      s"${abs.hashCode.toHexString}_p${ProcessHandle.current().pid()}"
-  }
-
-  private val pqIdxBuilt = new scala.collection.concurrent.TrieMap[String, Boolean]()
-
-  /** Write-once memo per JVM (the ensureIvfIndex pattern). */
-  def ensurePqIndex(spark: SparkSession, dir: String): String = {
-    val p = pqIndexPath(dir)
-    pqIdxBuilt.getOrElseUpdate(p, {
-      pqIndexWrite(spark, Tables(spark, dir).embeddings, p); true
-    })
-    p
-  }
-  private[graft] def invalidatePqIndex(dir: String): Unit =
-    pqIdxBuilt.remove(pqIndexPath(dir))
+  /** The persisted PQ index, a write-once query input. */
+  val pqIndex = new graft.Fixture("pq_index")((spark, dir, p) =>
+    pqIndexWrite(spark, Tables(spark, dir).embeddings, p))
 
   /** P33b: the PQ index as TABLES — [[pqTopK]] retrains codebooks and
     * re-encodes the corpus per call; a production ADC scan trains and
@@ -870,7 +831,7 @@ object Similarity extends graft.QueryModule {
     // float centroids -> rows-only (the IVF/PQ precedent); recall and
     // partition-pruning are asserted in PipelineSpec.
     "sim_ivf_persisted" -> ((spark, dir) => {
-      val p = ensureIvfIndex(spark, dir)
+      val p = ivfIndex.ensure(spark, dir)
       ivfIndexQuery(spark, p,
         Tables(spark, dir).embeddings.filter(col("vec_id") < 10), 5)
         .select("q_id", "c_id", "cos", "rk").orderBy("q_id", "rk")
@@ -888,7 +849,7 @@ object Similarity extends graft.QueryModule {
     // float codebooks -> rows-only (the IVF/PQ precedent); persisted ==
     // inline ranks and append-then-query are asserted in PipelineSpec.
     "sim_pq_persisted" -> ((spark, dir) => {
-      val p = ensurePqIndex(spark, dir)
+      val p = pqIndex.ensure(spark, dir)
       pqIndexQuery(spark, p,
         Tables(spark, dir).embeddings.filter(col("vec_id") < 10), 5)
         .select("q_id", "c_id", "dist", "rk").orderBy("q_id", "rk")
@@ -1218,5 +1179,10 @@ object Similarity extends graft.QueryModule {
         |  CAST(list_max(qv) AS BIGINT) AS q_max,
         |  CAST(list_min(qv) AS BIGINT) AS q_min
         |FROM q ORDER BY vec_id""".stripMargin,
+  )
+
+  override val tmp: Map[String, Seq[graft.TmpPath]] = Map(
+    "sim_ivf_persisted" -> Seq(ivfIndex),
+    "sim_pq_persisted" -> Seq(pqIndex),
   )
 }

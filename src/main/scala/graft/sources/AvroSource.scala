@@ -358,9 +358,7 @@ object AvroQueries extends graft.QueryModule {
   import org.apache.spark.sql.functions._
   import graft.operators.Exact
 
-  /** SF-suffixed so runs at different scale factors never collide. */
-  def path(dir: String): String =
-    s"/tmp/graft_avro_events_${new java.io.File(dir).getName}"
+  val path = new graft.TmpPath("avro_events")
 
   val queries: Map[String, Q] = Map(
     // r16 input spread (Tables.eventsSpread): parallelizes the avro
@@ -392,6 +390,10 @@ object AvroQueries extends graft.QueryModule {
          |  min(epoch_us(ts)) AS min_ts_us,
          |  CAST(max(length(props)) AS INT) AS max_props_len
          |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+  )
+
+  override val tmp: Map[String, Seq[graft.TmpPath]] = Map(
+    "src_avro_roundtrip" -> Seq(path),
   )
 }
 

@@ -329,7 +329,7 @@ object HiveAcid {
     if (dirs.isEmpty) {
       // valid empty snapshot: schema from whatever DATA exists on disk —
       // base/delta dirs and original files only (marker files like
-      // _built/_SUCCESS are not loadable and must not reach the reader)
+      // _SUCCESS are not loadable and must not reach the reader)
       val all = listDirNames(spark, tableDir)
         .filter(n => parseBase(n).isDefined || parseDelta(n).isDefined ||
           (!n.startsWith("_") && !n.startsWith(".")))
@@ -775,20 +775,9 @@ private[graft] class AcidOrcReaderFactory(required: org.apache.spark.sql.types.S
   *   → visible: (%3=0 AND NOT %9=0) OR %3=1
   */
 object HiveAcidQueries extends graft.QueryModule {
+  import graft.{Fixture, Fs}
   import graft.operators.Exact
   import HiveAcid._
-
-  def insertOnlyPath(dir: String): String =
-    s"/tmp/graft_acid_mm_orders_${new java.io.File(dir).getName}"
-  def fullAcidPath(dir: String): String =
-    s"/tmp/graft_acid_full_orders_${new java.io.File(dir).getName}"
-  def originalsPath(dir: String): String =
-    s"/tmp/graft_acid_orig_orders_${new java.io.File(dir).getName}"
-
-  private def exists(spark: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-  }
 
   /** Prepend the synthesized full-ACID metadata columns to a fixture
     * slice — shared by the full-ACID and originals layout builders so
@@ -800,87 +789,46 @@ object HiveAcidQueries extends graft.QueryModule {
       col("o_orderkey").as("rowId"),
       lit(writeId).as("currentTransaction")) ++ df.columns.map(col): _*)
 
-  def ensureInsertOnly(spark: SparkSession, dir: String): String = {
-    val root = insertOnlyPath(dir)
-    if (!exists(spark, s"$root/_built")) {
-      val orders = graft.Tables(spark, dir).orders
-      def slice(m: Long) = orders.filter(pmod(col("o_orderkey"), lit(7L)) === m)
-      slice(0).union(slice(1)).write.mode("overwrite").parquet(s"$root/base_0000002")
-      slice(2).write.mode("overwrite").parquet(s"$root/delta_0000003_0000003")
-      slice(3).write.mode("overwrite").parquet(s"$root/delta_0000004_0000004")
-      slice(4).write.mode("overwrite").parquet(s"$root/delta_0000005_0000005")
-      slice(5).write.mode("overwrite").parquet(s"$root/delta_0000006_0000006")
-      touch(spark, s"$root/_built")
-    }
-    root
-  }
-
-  def sinkTablePath(dir: String): String =
-    s"/tmp/graft_acid_sink_orders_${new java.io.File(dir).getName}"
+  val insertOnly = new Fixture("acid_mm_orders")((spark, dir, root) => {
+    val orders = graft.Tables(spark, dir).orders
+    def slice(m: Long) = orders.filter(pmod(col("o_orderkey"), lit(7L)) === m)
+    slice(0).union(slice(1)).write.mode("overwrite").parquet(s"$root/base_0000002")
+    slice(2).write.mode("overwrite").parquet(s"$root/delta_0000003_0000003")
+    slice(3).write.mode("overwrite").parquet(s"$root/delta_0000004_0000004")
+    slice(4).write.mode("overwrite").parquet(s"$root/delta_0000005_0000005")
+    slice(5).write.mode("overwrite").parquet(s"$root/delta_0000006_0000006")
+  })
 
   /** S18e oracle fixture: the insert-only table built by
     * [[HiveAcidSink]] ITSELF — three committed writes (%5∈{0,1}, %5=2,
     * %5=3 slices of orders), each an atomic delta dir with dense write
     * ids 1..3. The query reads at hwm=2, so the third write must stay
     * invisible — snapshot isolation over the writer's own layout. */
-  def ensureSinkTable(spark: SparkSession, dir: String): String = {
-    val root = sinkTablePath(dir)
-    if (!exists(spark, s"$root/_built")) {
-      val orders = graft.Tables(spark, dir).orders
-      def slice(m: Long*) = orders.filter(
-        pmod(col("o_orderkey"), lit(5L)).isin(m: _*))
-      HiveAcidSink.insertOnly(slice(0L, 1L), root,
-        HiveAcidSink.nextWriteId(spark, root))
-      HiveAcidSink.insertOnly(slice(2L), root,
-        HiveAcidSink.nextWriteId(spark, root))
-      HiveAcidSink.insertOnly(slice(3L), root,
-        HiveAcidSink.nextWriteId(spark, root))
-      touch(spark, s"$root/_built")
-    }
-    root
-  }
+  val sinkTable = new Fixture("acid_sink_orders")((spark, dir, root) => {
+    val orders = graft.Tables(spark, dir).orders
+    def slice(m: Long*) = orders.filter(
+      pmod(col("o_orderkey"), lit(5L)).isin(m: _*))
+    HiveAcidSink.insertOnly(slice(0L, 1L), root,
+      HiveAcidSink.nextWriteId(spark, root))
+    HiveAcidSink.insertOnly(slice(2L), root,
+      HiveAcidSink.nextWriteId(spark, root))
+    HiveAcidSink.insertOnly(slice(3L), root,
+      HiveAcidSink.nextWriteId(spark, root))
+  })
 
-  def ensureFullAcid(spark: SparkSession, dir: String): String = {
-    val root = fullAcidPath(dir)
-    if (!exists(spark, s"$root/_built")) {
-      val orders = graft.Tables(spark, dir).orders
-      def slice(m: Long) = orders.filter(pmod(col("o_orderkey"), lit(3L)) === m)
-      acidMeta(slice(0), 1L, 0).write.mode("overwrite").parquet(s"$root/base_0000001")
-      acidMeta(slice(1), 2L, 0).write.mode("overwrite").parquet(s"$root/delta_0000002_0000002")
-      // delete events reference the BASE rows' (origTxn, bucket, rowId)
-      slice(0).filter(pmod(col("o_orderkey"), lit(9L)) === 0)
-        .select(lit(2).as("operation"), lit(1L).as("originalTransaction"),
-          lit(0).as("bucket"), col("o_orderkey").as("rowId"),
-          lit(3L).as("currentTransaction"))
-        .write.mode("overwrite").parquet(s"$root/delete_delta_0000003_0000003")
-      acidMeta(slice(2), 4L, 0).write.mode("overwrite").parquet(s"$root/delta_0000004_0000004")
-      touch(spark, s"$root/_built")
-    }
-    root
-  }
-
-  private def touch(spark: SparkSession, p: String): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).create(hp, true).close()
-  }
-
-  /** Write `df` as ONE parquet FILE at `filePath` (Hive original files
-    * are bare files named `000000_0` at the table root — the file NAME
-    * carries the bucket id, so a part-file inside a directory won't
-    * do): single-task sorted write to a scratch dir, then rename the
-    * part file. Fixture-only driver-side rename of one bounded file. */
-  private def writeSingleFile(df: DataFrame, filePath: String, sortCol: String): Unit = {
-    val spark = df.sparkSession
-    val tmp = filePath + "_tmp"
-    df.repartition(1).sortWithinPartitions(sortCol)
-      .write.mode("overwrite").parquet(tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(conf)
-    val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-      .map(_.getPath).filter(_.getName.startsWith("part-")).head
-    fs.rename(part, new org.apache.hadoop.fs.Path(filePath))
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-  }
+  val fullAcid = new Fixture("acid_full_orders")((spark, dir, root) => {
+    val orders = graft.Tables(spark, dir).orders
+    def slice(m: Long) = orders.filter(pmod(col("o_orderkey"), lit(3L)) === m)
+    acidMeta(slice(0), 1L, 0).write.mode("overwrite").parquet(s"$root/base_0000001")
+    acidMeta(slice(1), 2L, 0).write.mode("overwrite").parquet(s"$root/delta_0000002_0000002")
+    // delete events reference the BASE rows' (origTxn, bucket, rowId)
+    slice(0).filter(pmod(col("o_orderkey"), lit(9L)) === 0)
+      .select(lit(2).as("operation"), lit(1L).as("originalTransaction"),
+        lit(0).as("bucket"), col("o_orderkey").as("rowId"),
+        lit(3L).as("currentTransaction"))
+      .write.mode("overwrite").parquet(s"$root/delete_delta_0000003_0000003")
+    acidMeta(slice(2), 4L, 0).write.mode("overwrite").parquet(s"$root/delta_0000004_0000004")
+  })
 
   /** Upgraded-in-place layout (snapshot hwm=3): two ORIGINAL files at
     * the table root (no acid columns; bucket from the FILE NAME, rowId
@@ -894,34 +842,28 @@ object HiveAcidQueries extends graft.QueryModule {
     *   delete_delta_0000003_0000003  every 4th row (ordinal % 4 = 0) of bucket 0
     *   → visible: (%3=0 AND rank%4≠0) ∪ (%3=1) ∪ (%3=2)
     */
-  def ensureOriginals(spark: SparkSession, dir: String): String = {
-    val root = originalsPath(dir)
-    if (!exists(spark, s"$root/_built")) {
-      val orders = graft.Tables(spark, dir).orders
-      def slice(m: Long) = orders.filter(pmod(col("o_orderkey"), lit(3L)) === m)
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(root))
-      writeSingleFile(slice(0), s"$root/000000_0", "o_orderkey")
-      writeSingleFile(slice(1), s"$root/000001_0", "o_orderkey")
-      acidMeta(slice(2), 2L, 0).write.mode("overwrite")
-        .parquet(s"$root/delta_0000002_0000002")
-      // delete keys: the in-file ordinal of a sorted single file is the
-      // o_orderkey rank — compute it relationally, no read-back needed
-      val w = org.apache.spark.sql.expressions.Window.orderBy("o_orderkey")
-      slice(0).select((row_number().over(w) - 1).cast("long").as("rowId"))
-        .filter(pmod(col("rowId"), lit(4L)) === 0)
-        .select(lit(2).as("operation"), lit(0L).as("originalTransaction"),
-          lit(1 << 29).as("bucket"), col("rowId"),
-          lit(3L).as("currentTransaction"))
-        .write.mode("overwrite").parquet(s"$root/delete_delta_0000003_0000003")
-      touch(spark, s"$root/_built")
-    }
-    root
-  }
-
-  def nestedOrcPath(dir: String): String =
-    s"/tmp/graft_acid_orc_orders_${new java.io.File(dir).getName}"
+  val originals = new Fixture("acid_orig_orders")((spark, dir, root) => {
+    val orders = graft.Tables(spark, dir).orders
+    def slice(m: Long) = orders.filter(pmod(col("o_orderkey"), lit(3L)) === m)
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(root))
+    // Hive original files are bare files named `000000_0` at the table
+    // root: the file NAME carries the bucket id
+    Fs.writeSingleFile(slice(0), s"$root/000000_0", "o_orderkey")
+    Fs.writeSingleFile(slice(1), s"$root/000001_0", "o_orderkey")
+    acidMeta(slice(2), 2L, 0).write.mode("overwrite")
+      .parquet(s"$root/delta_0000002_0000002")
+    // delete keys: the in-file ordinal of a sorted single file is the
+    // o_orderkey rank — compute it relationally, no read-back needed
+    val w = org.apache.spark.sql.expressions.Window.orderBy("o_orderkey")
+    slice(0).select((row_number().over(w) - 1).cast("long").as("rowId"))
+      .filter(pmod(col("rowId"), lit(4L)) === 0)
+      .select(lit(2).as("operation"), lit(0L).as("originalTransaction"),
+        lit(1 << 29).as("bucket"), col("rowId"),
+        lit(3L).as("currentTransaction"))
+      .write.mode("overwrite").parquet(s"$root/delete_delta_0000003_0000003")
+  })
 
   /** The REAL Hive full-ACID file shape: five acid columns beside a
     * `row` STRUCT of the user columns, in ORC (what Hive 3 actually
@@ -932,32 +874,27 @@ object HiveAcidQueries extends graft.QueryModule {
     *   delete_delta_0000003_0000003 deletes rowId %7=0 of writeId 1
     *   → visible: (%3=0 AND %7≠0) OR %3=1
     */
-  def ensureNestedOrc(spark: SparkSession, dir: String): String = {
-    val root = nestedOrcPath(dir)
-    if (!exists(spark, s"$root/_built")) {
-      // o_orderdate arrives as timestamp_ntz; Spark's vectorized ORC
-      // reader cannot decode an NTZ INSIDE a struct (probed: AIOOBE in
-      // the column reader) — cast to timestamp_ltz, identity-safe under
-      // the repo-wide UTC session pin
-      val orders = graft.Tables(spark, dir).orders
-        .withColumn("o_orderdate", col("o_orderdate").cast("timestamp"))
-      def slice(m: Long) = orders.filter(pmod(col("o_orderkey"), lit(3L)) === m)
-      def nested(df: DataFrame, writeId: Long) = df.select(
-        lit(0).as("operation"), lit(writeId).as("originalTransaction"),
+  val nestedOrc = new Fixture("acid_orc_orders")((spark, dir, root) => {
+    // o_orderdate arrives as timestamp_ntz; Spark's vectorized ORC
+    // reader cannot decode an NTZ INSIDE a struct (probed: AIOOBE in
+    // the column reader) — cast to timestamp_ltz, identity-safe under
+    // the repo-wide UTC session pin
+    val orders = graft.Tables(spark, dir).orders
+      .withColumn("o_orderdate", col("o_orderdate").cast("timestamp"))
+    def slice(m: Long) = orders.filter(pmod(col("o_orderkey"), lit(3L)) === m)
+    def nested(df: DataFrame, writeId: Long) = df.select(
+      lit(0).as("operation"), lit(writeId).as("originalTransaction"),
+      lit(0).as("bucket"), col("o_orderkey").as("rowId"),
+      lit(writeId).as("currentTransaction"),
+      struct(df.columns.map(col).toIndexedSeq: _*).as("row"))
+    nested(slice(0), 1L).write.mode("overwrite").orc(s"$root/base_0000001")
+    nested(slice(1), 2L).write.mode("overwrite").orc(s"$root/delta_0000002_0000002")
+    slice(0).filter(pmod(col("o_orderkey"), lit(7L)) === 0)
+      .select(lit(2).as("operation"), lit(1L).as("originalTransaction"),
         lit(0).as("bucket"), col("o_orderkey").as("rowId"),
-        lit(writeId).as("currentTransaction"),
-        struct(df.columns.map(col).toIndexedSeq: _*).as("row"))
-      nested(slice(0), 1L).write.mode("overwrite").orc(s"$root/base_0000001")
-      nested(slice(1), 2L).write.mode("overwrite").orc(s"$root/delta_0000002_0000002")
-      slice(0).filter(pmod(col("o_orderkey"), lit(7L)) === 0)
-        .select(lit(2).as("operation"), lit(1L).as("originalTransaction"),
-          lit(0).as("bucket"), col("o_orderkey").as("rowId"),
-          lit(3L).as("currentTransaction"))
-        .write.mode("overwrite").orc(s"$root/delete_delta_0000003_0000003")
-      touch(spark, s"$root/_built")
-    }
-    root
-  }
+        lit(3L).as("currentTransaction"))
+      .write.mode("overwrite").orc(s"$root/delete_delta_0000003_0000003")
+  })
 
   private def agg(df: DataFrame): DataFrame =
     df.groupBy("o_orderstatus")
@@ -970,7 +907,7 @@ object HiveAcidQueries extends graft.QueryModule {
 
   val queries: Map[String, Q] = Map(
     "src_hive_acid" -> ((spark, dir) => {
-      val root = ensureInsertOnly(spark, dir)
+      val root = insertOnly.ensure(spark, dir)
       agg(HiveAcid.readInsertOnly(spark, root,
         ValidWriteIds(highWatermark = 5L, aborted = Set(4L))))
     }),
@@ -978,24 +915,24 @@ object HiveAcidQueries extends graft.QueryModule {
     // snapshot that excludes the newest (hwm=2) — snapshot isolation
     // over the sink's own layout
     "src_hive_acid_write_rt" -> ((spark, dir) => {
-      val root = ensureSinkTable(spark, dir)
+      val root = sinkTable.ensure(spark, dir)
       agg(HiveAcid.readInsertOnly(spark, root,
         ValidWriteIds(highWatermark = 2L)))
     }),
     "src_hive_acid_full" -> ((spark, dir) => {
-      val root = ensureFullAcid(spark, dir)
+      val root = fullAcid.ensure(spark, dir)
       agg(HiveAcid.readFullAcid(spark, root,
         ValidWriteIds(highWatermark = 4L, aborted = Set(4L))))
     }),
     "src_hive_acid_orig" -> ((spark, dir) => {
-      val root = ensureOriginals(spark, dir)
+      val root = originals.ensure(spark, dir)
       agg(HiveAcid.readFullAcid(spark, root,
         ValidWriteIds(highWatermark = 3L)))
     }),
     // S18d: the REAL Hive file shape — ORC, user columns nested in the
     // `row` struct, delete deltas acid-columns-only
     "src_hive_acid_orc" -> ((spark, dir) => {
-      val root = ensureNestedOrc(spark, dir)
+      val root = nestedOrc.ensure(spark, dir)
       agg(HiveAcid.readFullAcid(spark, root,
         ValidWriteIds(highWatermark = 3L), format = "orc"))
     }),
@@ -1054,5 +991,13 @@ object HiveAcidQueries extends graft.QueryModule {
          |  ${Exact.sqlSum("o_totalprice")} AS sum_price,
          |  min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
          |FROM vis GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+  )
+
+  override val tmp: Map[String, Seq[graft.TmpPath]] = Map(
+    "src_hive_acid" -> Seq(insertOnly),
+    "src_hive_acid_write_rt" -> Seq(sinkTable),
+    "src_hive_acid_full" -> Seq(fullAcid),
+    "src_hive_acid_orig" -> Seq(originals),
+    "src_hive_acid_orc" -> Seq(nestedOrc),
   )
 }

@@ -129,11 +129,6 @@ object HudiSink {
       }
   }
 
-  private def touch(spark: SparkSession, p: String): Unit = {
-    val hp = new Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).create(hp, true).close()
-  }
-
   /** Atomic text write (create temp + rename — the T25 version-hint
     * device: a poller must never observe a half-written commit body). */
   private def writeAtomic(spark: SparkSession, p: String, body: String): Unit = {
@@ -844,7 +839,7 @@ object HudiSink {
       throw new IllegalStateException(
         s"instant $instant already requested in $tableDir — concurrent " +
           "writer? (HudiSink is single-writer per table)")
-    touch(spark, s"$tableDir/.hoodie/$instant.inflight")
+    graft.Fs.touch(spark, s"$tableDir/.hoodie/$instant.inflight")
     val tmp = s"$tableDir/.hoodie/.temp_$instant"
     // each (partition, group) is one shuffle partition → exactly one
     // parquet file per group; partitionBy peels the routing columns off
@@ -877,7 +872,7 @@ object HudiSink {
       val rawPart = vPart.stripPrefix("v")
       val destDir = placeDir(spark, tableDir, partitionCol, rawPart)
       val name = s"${fg}_0-0-0_$instant.parquet"
-      HudiQueries.writeSingleFile(
+      graft.Fs.writeSingleFile(
         tagged.limit(0).drop("__part", "__fg"), s"$destDir/$name")
       stats += ((relPart(partitionCol, rawPart), fg, name))
     }
@@ -916,7 +911,7 @@ object HudiSink {
     }
     fs.mkdirs(new Path(destDir))
     val marker = new Path(s"$destDir/.hoodie_partition_metadata")
-    if (!fs.exists(marker)) touch(spark, marker.toString)
+    if (!fs.exists(marker)) graft.Fs.touch(spark, marker.toString)
     destDir
   }
 

@@ -298,35 +298,13 @@ object HudiRO {
   *   → visible: o_orderkey % 4 IN (0, 2)
   */
 object HudiQueries extends graft.QueryModule {
+  import graft.{Fixture, Fs}
   import graft.operators.Exact
-
-  def path(dir: String): String =
-    s"/tmp/graft_hudi_orders_${new java.io.File(dir).getName}"
 
   private val C1 = "20240101000000000"
   private val C2 = "20240102000000000"
   private val C3 = "20240103000000000"
   private val C4 = "20240104000000000"
-
-  /** Write `df` as ONE parquet file at `filePath` (Hudi base files are
-    * single files named by the fileId/instant contract). Fixture-only
-    * single-file rename, same device as the S18c original-file writer. */
-  private[graft] def writeSingleFile(df: DataFrame, filePath: String): Unit = {
-    val spark = df.sparkSession
-    val tmp = filePath + "_tmp"
-    df.repartition(1).write.mode("overwrite").parquet(tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(tmp).getFileSystem(conf)
-    val part = fs.listStatus(new Path(tmp))
-      .map(_.getPath).filter(_.getName.startsWith("part-")).head
-    fs.rename(part, new Path(filePath))
-    fs.delete(new Path(tmp), true)
-  }
-
-  private def touch(spark: SparkSession, p: String): Unit = {
-    val hp = new Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).create(hp, true).close()
-  }
 
   private def writeText(spark: SparkSession, p: String, body: String): Unit = {
     val hp = new Path(p)
@@ -334,37 +312,38 @@ object HudiQueries extends graft.QueryModule {
     try out.write(body.getBytes("UTF-8")) finally out.close()
   }
 
-  def ensureTable(spark: SparkSession, dir: String): String = {
-    val root = path(dir)
+  /** Lays out a hand-built table at `root`: `.hoodie/hoodie.properties`
+    * and one partition dir per o_orderstatus value, whose base files
+    * `files(partitionDir, m4)` writes — `m4(r)` is the partition's
+    * orders with o_orderkey % 4 in `r`. Returns the status values. */
+  private def layOut(spark: SparkSession, dir: String, root: String)(
+      files: (String, Seq[Long] => DataFrame) => Unit): Seq[String] = {
+    val orders = graft.Tables(spark, dir).orders
+    val statuses = orders.select("o_orderstatus").distinct()
+      .collect().map(_.getString(0)).sorted.toSeq // bounded domain (3 values)
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(s"$root/_built"))) {
-      val orders = graft.Tables(spark, dir).orders
-      val statuses = orders.select("o_orderstatus").distinct()
-        .collect().map(_.getString(0)).sorted // bounded domain (3 values)
-      fs.mkdirs(new Path(s"$root/.hoodie"))
-      touch(spark, s"$root/.hoodie/hoodie.properties")
-      statuses.foreach { st =>
-        val pdir = s"$root/o_orderstatus=$st"
-        fs.mkdirs(new Path(pdir))
-        touch(spark, s"$pdir/.hoodie_partition_metadata")
-        val slice = orders.filter(col("o_orderstatus") === st).drop("o_orderstatus")
-        def m4(r: Long*) = slice.filter(pmod(col("o_orderkey"), lit(4L)).isin(r: _*))
-        writeSingleFile(m4(0L, 1L), s"$pdir/fg0_0-0-0_$C1.parquet")
-        writeSingleFile(m4(2L), s"$pdir/fg1_0-0-0_$C1.parquet")
-        writeSingleFile(m4(0L), s"$pdir/fg0_0-0-0_$C2.parquet") // COW rewrite
-        writeSingleFile(m4(3L), s"$pdir/fg2_0-0-0_$C3.parquet") // inflight
-      }
-      touch(spark, s"$root/.hoodie/$C1.commit")
-      touch(spark, s"$root/.hoodie/$C2.commit")
-      touch(spark, s"$root/.hoodie/$C3.inflight")
-      touch(spark, s"$root/.hoodie/$C3.commit.requested")
-      touch(spark, s"$root/_built")
+    fs.mkdirs(new Path(s"$root/.hoodie"))
+    Fs.touch(spark, s"$root/.hoodie/hoodie.properties")
+    statuses.foreach { st =>
+      val pdir = s"$root/o_orderstatus=$st"
+      fs.mkdirs(new Path(pdir))
+      Fs.touch(spark, s"$pdir/.hoodie_partition_metadata")
+      val slice = orders.filter(col("o_orderstatus") === st).drop("o_orderstatus")
+      files(pdir, r => slice.filter(pmod(col("o_orderkey"), lit(4L)).isin(r: _*)))
     }
-    root
+    statuses
   }
 
-  def clusterPath(dir: String): String =
-    s"/tmp/graft_hudi_cluster_${new java.io.File(dir).getName}"
+  val table = new Fixture("hudi_orders")((spark, dir, root) => {
+    layOut(spark, dir, root) { (pdir, m4) =>
+      Fs.writeSingleFile(m4(Seq(0L, 1L)), s"$pdir/fg0_0-0-0_$C1.parquet")
+      Fs.writeSingleFile(m4(Seq(2L)), s"$pdir/fg1_0-0-0_$C1.parquet")
+      Fs.writeSingleFile(m4(Seq(0L)), s"$pdir/fg0_0-0-0_$C2.parquet") // COW rewrite
+      Fs.writeSingleFile(m4(Seq(3L)), s"$pdir/fg2_0-0-0_$C3.parquet") // inflight
+    }
+    Seq(s"$C1.commit", s"$C2.commit", s"$C3.inflight", s"$C3.commit.requested")
+      .foreach(f => Fs.touch(spark, s"$root/.hoodie/$f"))
+  })
 
   /** A CLUSTERED table: C1 writes fg0 (keys %4 ∈ {0,1}) + fg1 (%4=2),
     * C2 is a completed `.replacecommit` whose body names fg0+fg1 as
@@ -373,43 +352,24 @@ object HudiQueries extends graft.QueryModule {
     * ONLY if the reader both admits the replacecommit's own file AND
     * excludes the replaced groups (ignoring the body would double
     * every %4 ∈ {0,1,2} row, which the oracle hash catches). */
-  def ensureClusteredTable(spark: SparkSession, dir: String): String = {
-    val root = clusterPath(dir)
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(s"$root/_built"))) {
-      val orders = graft.Tables(spark, dir).orders
-      val statuses = orders.select("o_orderstatus").distinct()
-        .collect().map(_.getString(0)).sorted // bounded domain (3 values)
-      fs.mkdirs(new Path(s"$root/.hoodie"))
-      touch(spark, s"$root/.hoodie/hoodie.properties")
-      statuses.foreach { st =>
-        val pdir = s"$root/o_orderstatus=$st"
-        fs.mkdirs(new Path(pdir))
-        touch(spark, s"$pdir/.hoodie_partition_metadata")
-        val slice = orders.filter(col("o_orderstatus") === st).drop("o_orderstatus")
-        def m4(r: Long*) = slice.filter(pmod(col("o_orderkey"), lit(4L)).isin(r: _*))
-        writeSingleFile(m4(0L, 1L), s"$pdir/fg0_0-0-0_$C1.parquet")
-        writeSingleFile(m4(2L), s"$pdir/fg1_0-0-0_$C1.parquet")
-        writeSingleFile(m4(0L, 1L, 2L), s"$pdir/fgc_0-0-0_$C2.parquet") // clustered
-        writeSingleFile(m4(3L), s"$pdir/fg4_0-0-0_$C3.parquet")
-      }
-      touch(spark, s"$root/.hoodie/$C1.commit")
-      // the public HoodieReplaceCommitMetadata JSON shape: replaced
-      // file groups keyed by relative partition path
-      val perPart = statuses.map(st =>
-        s""""o_orderstatus=$st": ["fg0", "fg1"]""").mkString(", ")
-      writeText(spark, s"$root/.hoodie/$C2.replacecommit",
-        s"""{"partitionToWriteStats": {}, "compacted": false,
-           | "operationType": "CLUSTER",
-           | "partitionToReplaceFileIds": {$perPart}}""".stripMargin)
-      touch(spark, s"$root/.hoodie/$C3.commit")
-      touch(spark, s"$root/_built")
+  val clustered = new Fixture("hudi_cluster")((spark, dir, root) => {
+    val statuses = layOut(spark, dir, root) { (pdir, m4) =>
+      Fs.writeSingleFile(m4(Seq(0L, 1L)), s"$pdir/fg0_0-0-0_$C1.parquet")
+      Fs.writeSingleFile(m4(Seq(2L)), s"$pdir/fg1_0-0-0_$C1.parquet")
+      Fs.writeSingleFile(m4(Seq(0L, 1L, 2L)), s"$pdir/fgc_0-0-0_$C2.parquet") // clustered
+      Fs.writeSingleFile(m4(Seq(3L)), s"$pdir/fg4_0-0-0_$C3.parquet")
     }
-    root
-  }
-
-  def sinkPath(dir: String): String =
-    s"/tmp/graft_hudi_sink_${new java.io.File(dir).getName}"
+    Fs.touch(spark, s"$root/.hoodie/$C1.commit")
+    // the public HoodieReplaceCommitMetadata JSON shape: replaced
+    // file groups keyed by relative partition path
+    val perPart = statuses.map(st =>
+      s""""o_orderstatus=$st": ["fg0", "fg1"]""").mkString(", ")
+    writeText(spark, s"$root/.hoodie/$C2.replacecommit",
+      s"""{"partitionToWriteStats": {}, "compacted": false,
+         | "operationType": "CLUSTER",
+         | "partitionToReplaceFileIds": {$perPart}}""".stripMargin)
+    Fs.touch(spark, s"$root/.hoodie/$C3.commit")
+  })
 
   /** S20d oracle fixture: the table is built by [[HudiSink]] ITSELF —
     * no hand-laid files. C1 INSERTs all orders (partitioned by
@@ -422,47 +382,38 @@ object HudiQueries extends graft.QueryModule {
     * state from flat orders; a hash match certifies the whole
     * write→read loop: group routing, COW rewrite supersession, carried
     * vs stamped meta rows, delete-to-empty visibility. */
-  def ensureSinkTable(spark: SparkSession, dir: String): String = {
-    val root = sinkPath(dir)
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(s"$root/_built"))) {
-      val orders = graft.Tables(spark, dir).orders
-      HudiSink.insert(orders, root, "o_orderkey", Some("o_orderstatus"), C1,
-        recordsPerGroup = 4000L)
-      val updates = orders.filter(pmod(col("o_orderkey"), lit(10L)) === 3L)
-        .withColumn("o_totalprice", col("o_totalprice") + lit(1000.0))
-      // insert-key shift DERIVED from the table's own max key (max+1):
-      // a fixed 20M shift collided with real orderkeys once the max key
-      // passed 20M (SF>~3.3), silently turning an 'insert' into an
-      // update while the oracle's UNION ALL kept both rows — the oracle
-      // computes the same (SELECT max(o_orderkey)+1 FROM orders)
-      val shift = orders.agg(max("o_orderkey")).head.getLong(0) + 1L
-      val inserts = orders.filter(pmod(col("o_orderkey"), lit(1000L)) === 1L)
-        .withColumn("o_orderkey", col("o_orderkey") + lit(shift))
-      HudiSink.upsert(updates.unionByName(inserts), root, "o_orderkey",
-        Some("o_orderstatus"), C2)
-      val delKeys = HudiRO.read(spark, root)
-        .filter(pmod(col("o_orderkey"), lit(7L)) === 5L).select("o_orderkey")
-      HudiSink.delete(delKeys, root, "o_orderkey", C3)
-      touch(spark, s"$root/_built")
-    }
-    root
+  private def writeSink(spark: SparkSession, dir: String, root: String): Unit = {
+    val orders = graft.Tables(spark, dir).orders
+    HudiSink.insert(orders, root, "o_orderkey", Some("o_orderstatus"), C1,
+      recordsPerGroup = 4000L)
+    val updates = orders.filter(pmod(col("o_orderkey"), lit(10L)) === 3L)
+      .withColumn("o_totalprice", col("o_totalprice") + lit(1000.0))
+    // insert-key shift DERIVED from the table's own max key (max+1):
+    // a fixed 20M shift collided with real orderkeys once the max key
+    // passed 20M (SF>~3.3), silently turning an 'insert' into an
+    // update while the oracle's UNION ALL kept both rows — the oracle
+    // computes the same (SELECT max(o_orderkey)+1 FROM orders)
+    val shift = orders.agg(max("o_orderkey")).head.getLong(0) + 1L
+    val inserts = orders.filter(pmod(col("o_orderkey"), lit(1000L)) === 1L)
+      .withColumn("o_orderkey", col("o_orderkey") + lit(shift))
+    HudiSink.upsert(updates.unionByName(inserts), root, "o_orderkey",
+      Some("o_orderstatus"), C2)
+    val delKeys = HudiRO.read(spark, root)
+      .filter(pmod(col("o_orderkey"), lit(7L)) === 5L).select("o_orderkey")
+    HudiSink.delete(delKeys, root, "o_orderkey", C3)
   }
+  val sink = new Fixture("hudi_sink")(writeSink)
 
-  /** S20e: the sink table CLUSTERED by the writer's own maintenance
-    * commit — the visible slice must be row-identical to
-    * `src_hudi_write_rt` (clustering is layout work, not data change),
-    * which only holds if the reader BOTH admits the replacecommit's
-    * new files AND kills the replaced groups its body names. */
-  def ensureClusteredSink(spark: SparkSession, dir: String): String = {
-    val root = ensureSinkTable(spark, dir)
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(s"$root/_clustered"))) {
-      HudiSink.cluster(spark, root, C4)
-      touch(spark, s"$root/_clustered")
-    }
-    root
-  }
+  /** S20e: the same sink table, written at its own path and then
+    * CLUSTERED by the writer's own maintenance commit — the visible
+    * slice must be row-identical to `src_hudi_write_rt` (clustering is
+    * layout work, not data change), which only holds if the reader BOTH
+    * admits the replacecommit's new files AND kills the replaced groups
+    * its body names. */
+  val clusteredSink = new Fixture("hudi_sink_cluster")((spark, dir, root) => {
+    writeSink(spark, dir, root)
+    HudiSink.cluster(spark, root, C4)
+  })
 
   private def agg(df: DataFrame): DataFrame =
     df.groupBy("o_orderstatus")
@@ -475,20 +426,20 @@ object HudiQueries extends graft.QueryModule {
 
   val queries: Map[String, Q] = Map(
     "src_hudi_ro" -> ((spark, dir) =>
-      agg(HudiRO.read(spark, ensureTable(spark, dir)))),
+      agg(HudiRO.read(spark, table.ensure(spark, dir)))),
     // pruned read: only the named partition's dir is ever listed
     "src_hudi_prune" -> ((spark, dir) =>
-      agg(HudiRO.read(spark, ensureTable(spark, dir), partitions = Seq("F")))),
+      agg(HudiRO.read(spark, table.ensure(spark, dir), partitions = Seq("F")))),
     // clustering: the replacecommit's new file is visible, the
     // replaced file groups are dead (body-parsed, not name-level)
     "src_hudi_cluster" -> ((spark, dir) =>
-      agg(HudiRO.read(spark, ensureClusteredTable(spark, dir)))),
+      agg(HudiRO.read(spark, clustered.ensure(spark, dir)))),
     // S20d: insert→upsert→delete through the WRITER, read back RO
     "src_hudi_write_rt" -> ((spark, dir) =>
-      agg(HudiRO.read(spark, ensureSinkTable(spark, dir)))),
+      agg(HudiRO.read(spark, sink.ensure(spark, dir)))),
     // S20e: the WRITER's clustering replacecommit — same visible rows
     "src_hudi_write_cluster" -> ((spark, dir) =>
-      agg(HudiRO.read(spark, ensureClusteredSink(spark, dir)))),
+      agg(HudiRO.read(spark, clusteredSink.ensure(spark, dir)))),
   )
 
   val oracles: Map[String, String] = Map(
@@ -553,5 +504,13 @@ object HudiQueries extends graft.QueryModule {
          |  min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
          |FROM upd WHERE o_orderkey % 7 <> 5
          |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+  )
+
+  override val tmp: Map[String, Seq[graft.TmpPath]] = Map(
+    "src_hudi_ro" -> Seq(table),
+    "src_hudi_prune" -> Seq(table),
+    "src_hudi_cluster" -> Seq(clustered),
+    "src_hudi_write_rt" -> Seq(sink),
+    "src_hudi_write_cluster" -> Seq(clusteredSink),
   )
 }

@@ -2008,116 +2008,59 @@ object IcebergQueries extends graft.QueryModule {
   import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.functions._
 
-  // abs-hash + pid in the path (the lshIndexPath convention, ADVICE
-  // r7): two JVMs sharing an SF basename must not race on one table
-  def path(dir: String): String = {
-    val abs = new java.io.File(dir).getAbsolutePath
-    s"/tmp/graft_iceberg_documents_${new java.io.File(dir).getName}_" +
-      s"${abs.hashCode.toHexString}_p${ProcessHandle.current().pid()}"
-  }
+  /** The documents table, bucketed by doc_id; the table IS the
+    * fixture: rewriting it per iteration would bench the writer, not the
+    * read path. */
+  val table = new graft.Fixture("iceberg_documents")((spark, dir, p) =>
+    IcebergWrite.write(graft.Tables(spark, dir).documents, p, "doc_id", 8))
 
-  def mergePath(dir: String): String = {
-    val abs = new java.io.File(dir).getAbsolutePath
-    s"/tmp/graft_iceberg_merge_${new java.io.File(dir).getName}_" +
-      s"${abs.hashCode.toHexString}_p${ProcessHandle.current().pid()}"
-  }
+  /** Merged-table fixture: base table from `documents`, then ONE
+    * deterministic copy-on-write merge batch — every doc_id ≡ 0
+    * (mod 97) updated, three inserts beyond the id range. The
+    * src_iceberg_merge query reads the POST-merge table; its oracle
+    * recomputes the same merged state from the parquet. */
+  val merged = new graft.Fixture("iceberg_merge")((spark, dir, p) => {
+    val docs = graft.Tables(spark, dir).documents
+    IcebergWrite.write(docs, p, "lang", "identity")
+    val updates = docs.filter(col("doc_id") % 97 === 0)
+      .withColumn("text", concat(lit("MERGED:"), col("doc_id").cast("string")))
+    val inserts = docs.filter(col("doc_id") < 3)
+      .select((col("doc_id") + 10000000L).as("doc_id"), lit("inserted").as("text"),
+        col("lang"), col("source"), col("n_chars"))
+    IcebergWrite.mergeUpsert(updates.unionByName(inserts), p, "doc_id")
+  })
 
-  /** Write-once per (JVM, sf) merged-table fixture: base table from
-    * `documents`, then ONE deterministic copy-on-write merge batch —
-    * every doc_id ≡ 0 (mod 97) updated, three inserts beyond the id
-    * range. The src_iceberg_merge query reads the POST-merge table;
-    * its oracle recomputes the same merged state from the parquet. */
-  private val mergeWritten = scala.collection.concurrent.TrieMap.empty[String, Boolean]
-  def ensureMergeTable(spark: SparkSession, dir: String): String = {
-    val p = mergePath(dir)
-    mergeWritten.getOrElseUpdate(p, {
-      val docs = graft.Tables(spark, dir).documents
-      IcebergWrite.write(docs, p, "lang", "identity")
-      val updates = docs.filter(col("doc_id") % 97 === 0)
-        .withColumn("text", concat(lit("MERGED:"), col("doc_id").cast("string")))
-      val inserts = docs.filter(col("doc_id") < 3)
-        .select((col("doc_id") + 10000000L).as("doc_id"), lit("inserted").as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      IcebergWrite.mergeUpsert(updates.unionByName(inserts), p, "doc_id")
-      true
-    })
-    p
-  }
-  private[graft] def invalidateMerge(dir: String): Unit = mergeWritten.remove(mergePath(dir))
+  /** CDC-merged fixture: base table from `documents`, then ONE mergeCdc
+    * batch — doc_id ≡ 0 (mod 97) updated, doc_id ≡ 0 (mod 101)
+    * tombstoned (updates win where both apply: the tombstone removes
+    * the old row, the update re-inserts), three inserts beyond the id
+    * range. */
+  val cdc = new graft.Fixture("iceberg_cdc")((spark, dir, p) => {
+    val docs = graft.Tables(spark, dir).documents
+    IcebergWrite.write(docs, p, "lang", "identity")
+    val upd = docs.filter(col("doc_id") % 97 === 0)
+      .withColumn("text", concat(lit("MERGED:"), col("doc_id").cast("string")))
+      .withColumn("op", lit("U"))
+    val del = docs.filter(col("doc_id") % 101 === 0).withColumn("op", lit("D"))
+    val ins = docs.filter(col("doc_id") < 3)
+      .select((col("doc_id") + 10000000L).as("doc_id"), lit("inserted").as("text"),
+        col("lang"), col("source"), col("n_chars"), lit("I").as("op"))
+    IcebergWrite.mergeCdc(upd.unionByName(del).unionByName(ins), p, "doc_id", "op")
+  })
 
-  def cdcPath(dir: String): String = {
-    val abs = new java.io.File(dir).getAbsolutePath
-    s"/tmp/graft_iceberg_cdc_${new java.io.File(dir).getName}_" +
-      s"${abs.hashCode.toHexString}_p${ProcessHandle.current().pid()}"
-  }
-
-  /** Write-once per (JVM, sf) CDC-merged fixture: base table from
-    * `documents`, then ONE mergeCdc batch — doc_id ≡ 0 (mod 97)
-    * updated, doc_id ≡ 0 (mod 101) tombstoned (updates win where both
-    * apply: the tombstone removes the old row, the update re-inserts),
-    * three inserts beyond the id range. */
-  private val cdcWritten = scala.collection.concurrent.TrieMap.empty[String, Boolean]
-  def ensureCdcTable(spark: SparkSession, dir: String): String = {
-    val p = cdcPath(dir)
-    cdcWritten.getOrElseUpdate(p, {
-      val docs = graft.Tables(spark, dir).documents
-      IcebergWrite.write(docs, p, "lang", "identity")
-      val upd = docs.filter(col("doc_id") % 97 === 0)
-        .withColumn("text", concat(lit("MERGED:"), col("doc_id").cast("string")))
-        .withColumn("op", lit("U"))
-      val del = docs.filter(col("doc_id") % 101 === 0).withColumn("op", lit("D"))
-      val ins = docs.filter(col("doc_id") < 3)
-        .select((col("doc_id") + 10000000L).as("doc_id"), lit("inserted").as("text"),
-          col("lang"), col("source"), col("n_chars"), lit("I").as("op"))
-      IcebergWrite.mergeCdc(upd.unionByName(del).unionByName(ins), p, "doc_id", "op")
-      true
-    })
-    p
-  }
-  private[graft] def invalidateCdc(dir: String): Unit = cdcWritten.remove(cdcPath(dir))
-
-  def incrPath(dir: String): String = {
-    val abs = new java.io.File(dir).getAbsolutePath
-    s"/tmp/graft_iceberg_incr_${new java.io.File(dir).getName}_" +
-      s"${abs.hashCode.toHexString}_p${ProcessHandle.current().pid()}"
-  }
-
-  /** Write-once per (JVM, sf) two-snapshot append fixture: snapshot 1
-    * holds doc_id % 5 != 0, snapshot 2 appends the rest — so the
-    * incremental read of (1, 2] is exactly the % 5 == 0 slice and the
-    * oracle recomputes it from raw parquet. */
-  private val incrWritten = scala.collection.concurrent.TrieMap.empty[String, Boolean]
-  def ensureIncrTable(spark: SparkSession, dir: String): String = {
-    val p = incrPath(dir)
-    incrWritten.getOrElseUpdate(p, {
-      val docs = graft.Tables(spark, dir).documents
-      IcebergWrite.write(docs.filter(col("doc_id") % 5 =!= 0), p, "lang", "identity")
-      IcebergWrite.append(docs.filter(col("doc_id") % 5 === 0), p)
-      true
-    })
-    p
-  }
-  private[graft] def invalidateIncr(dir: String): Unit = incrWritten.remove(incrPath(dir))
-
-  /** Write-once per (JVM, sf): the table IS the fixture; rewriting it
-    * per iteration would bench the writer, not the read path. */
-  private val written = scala.collection.concurrent.TrieMap.empty[String, Boolean]
-  def ensureTable(spark: SparkSession, dir: String): String = {
-    val p = path(dir)
-    written.getOrElseUpdate(p, {
-      IcebergWrite.write(graft.Tables(spark, dir).documents, p, "doc_id", 8)
-      true
-    })
-    p
-  }
-  /** Bench cleanup hook: after deleting the table dir, the memo must go
-    * too, or a later iceberg query in the same JVM would read a path
-    * the cleanup removed. */
-  private[graft] def invalidate(dir: String): Unit = written.remove(path(dir))
+  /** Two-snapshot append fixture: snapshot 1 holds doc_id % 5 != 0,
+    * snapshot 2 appends the rest — so the incremental read of (1, 2] is
+    * exactly the % 5 == 0 slice and the oracle recomputes it from raw
+    * parquet. */
+  val incr = new graft.Fixture("iceberg_incr")((spark, dir, p) => {
+    val docs = graft.Tables(spark, dir).documents
+    IcebergWrite.write(docs.filter(col("doc_id") % 5 =!= 0), p, "lang", "identity")
+    IcebergWrite.append(docs.filter(col("doc_id") % 5 === 0), p)
+  })
 
   val queries: Map[String, Q] = Map(
     "src_iceberg_roundtrip" -> ((spark, dir) => {
-      val back = spark.read.format("graft.sources.IcebergSource").load(ensureTable(spark, dir))
+      val back = spark.read.format("graft.sources.IcebergSource").load(table.ensure(spark, dir))
       back.groupBy("lang").agg(
           count(lit(1)).as("n"),
           min(col("doc_id")).as("min_id"),
@@ -2129,7 +2072,7 @@ object IcebergQueries extends graft.QueryModule {
     "src_iceberg_prune" -> ((spark, dir) => {
       // doc_id = 42 exists at every SF; the scan opens ONE bucket's
       // files (metadata-pruned), then the residual filter picks the row
-      spark.read.format("graft.sources.IcebergSource").load(ensureTable(spark, dir))
+      spark.read.format("graft.sources.IcebergSource").load(table.ensure(spark, dir))
         .filter(col("doc_id") === 42L)
         .select(col("doc_id"), col("lang"), col("n_chars"))
     }),
@@ -2137,7 +2080,7 @@ object IcebergQueries extends graft.QueryModule {
     // per-bucket row counts the metadata tree carries must equal what
     // the murmur3 bucket transform computes over the source parquet.
     "src_iceberg_partitions" -> ((spark, dir) => {
-      IcebergInspect.partitions(spark, ensureTable(spark, dir))
+      IcebergInspect.partitions(spark, table.ensure(spark, dir))
         .select(regexp_extract(col("partition"), "=(\\d+)", 1).cast("int")
             .as("doc_id_bucket"),
           col("n_rows"))
@@ -2146,14 +2089,14 @@ object IcebergQueries extends graft.QueryModule {
     // S16k: snapshot-log invariants of the two-commit merge fixture:
     // exactly two snapshots, the second parent-linked to the first.
     "src_iceberg_snapshots" -> ((spark, dir) => {
-      val snaps = IcebergInspect.snapshots(spark, ensureMergeTable(spark, dir))
+      val snaps = IcebergInspect.snapshots(spark, merged.ensure(spark, dir))
       snaps.agg(count(lit(1)).as("n_snapshots"),
         sum(when(col("parent_id").isNotNull, 1L).otherwise(0L)).as("n_with_parent"))
     }),
     // S16k: files metadata totals — live record counts and distinct
     // partitions seen by the metadata walk equal the raw-data truth.
     "src_iceberg_files" -> ((spark, dir) => {
-      IcebergInspect.files(spark, ensureTable(spark, dir))
+      IcebergInspect.files(spark, table.ensure(spark, dir))
         .agg(sum(col("record_count")).as("n_rows"),
           countDistinct(col("partition")).as("n_partitions"),
           (min(col("n_bound_cols")) > 0).as("bounds_present"))
@@ -2162,7 +2105,7 @@ object IcebergQueries extends graft.QueryModule {
     // tombstones + inserts in ONE commit) equals the relational
     // change application the oracle computes from the raw parquet.
     "src_iceberg_cdc" -> ((spark, dir) => {
-      spark.read.format("graft.sources.IcebergSource").load(ensureCdcTable(spark, dir))
+      spark.read.format("graft.sources.IcebergSource").load(cdc.ensure(spark, dir))
         .groupBy("lang")
         .agg(count(lit(1)).as("n"),
           sum(col("doc_id")).as("sum_id"),
@@ -2175,7 +2118,7 @@ object IcebergQueries extends graft.QueryModule {
     // consume-only-what-arrived primitive, oracle-checked against the
     // raw parquet's % 5 == 0 rows.
     "src_iceberg_incremental" -> ((spark, dir) => {
-      IcebergRead.incrementalRead(spark, ensureIncrTable(spark, dir), 1L, 2L)
+      IcebergRead.incrementalRead(spark, incr.ensure(spark, dir), 1L, 2L)
         .groupBy("lang")
         .agg(count(lit(1)).as("n"),
           min(col("doc_id")).as("min_id"),
@@ -2187,7 +2130,7 @@ object IcebergQueries extends graft.QueryModule {
     // equals the relational merge the oracle computes from the raw
     // parquet (update-beats-existing, inserts present, rest untouched).
     "src_iceberg_merge" -> ((spark, dir) => {
-      spark.read.format("graft.sources.IcebergSource").load(ensureMergeTable(spark, dir))
+      spark.read.format("graft.sources.IcebergSource").load(merged.ensure(spark, dir))
         .groupBy("lang")
         .agg(count(lit(1)).as("n"),
           sum(col("doc_id")).as("sum_id"),
@@ -2254,5 +2197,16 @@ object IcebergQueries extends graft.QueryModule {
         |  sum(CASE WHEN text LIKE 'MERGED:%' THEN 1 ELSE 0 END)::BIGINT AS n_merged,
         |  sum(CASE WHEN text = 'inserted' THEN 1 ELSE 0 END)::BIGINT AS n_inserted
         |FROM m GROUP BY lang ORDER BY lang""".stripMargin,
+  )
+
+  override val tmp: Map[String, Seq[graft.TmpPath]] = Map(
+    "src_iceberg_roundtrip" -> Seq(table),
+    "src_iceberg_prune" -> Seq(table),
+    "src_iceberg_partitions" -> Seq(table),
+    "src_iceberg_files" -> Seq(table),
+    "src_iceberg_merge" -> Seq(merged),
+    "src_iceberg_snapshots" -> Seq(merged),
+    "src_iceberg_cdc" -> Seq(cdc),
+    "src_iceberg_incremental" -> Seq(incr),
   )
 }

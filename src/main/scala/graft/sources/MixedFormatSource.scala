@@ -369,27 +369,19 @@ object MixedFormat {
   * path preserved every row and type. */
 object MixedFormatQueries extends graft.QueryModule {
 
-  def path(dir: String): String =
-    s"/tmp/graft_mixed_documents_${new java.io.File(dir).getName}"
-
   // five languages → five DISTINCT formats, one per partition
   private val formats = Seq("parquet", "avro", "rcfile", "sequencefile", "orc")
 
-  def ensureTable(spark: SparkSession, dir: String): String = {
-    val root = path(dir)
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(root, "_mixed_spec.json"))) {
-      // text LAST (the sequencefile '\u0001' packing convention)
-      val docs = graft.Tables(spark, dir).documents
-        .select(col("doc_id"), col("source"), col("n_chars"), col("text"), col("lang"))
-      MixedFormat.write(docs, root, "lang", formats)
-    }
-    root
-  }
+  val table = new graft.Fixture("mixed_documents")((spark, dir, root) => {
+    // text LAST (the sequencefile '\u0001' packing convention)
+    val docs = graft.Tables(spark, dir).documents
+      .select(col("doc_id"), col("source"), col("n_chars"), col("text"), col("lang"))
+    MixedFormat.write(docs, root, "lang", formats)
+  })
 
   val queries: Map[String, Q] = Map(
     "src_mixed_formats" -> ((spark, dir) => {
-      val back = MixedFormat.read(spark, ensureTable(spark, dir))
+      val back = MixedFormat.read(spark, table.ensure(spark, dir))
       back.groupBy("lang")
         .agg(count(lit(1)).as("n"),
           countDistinct(col("doc_id")).as("nd"),
@@ -404,7 +396,7 @@ object MixedFormatQueries extends graft.QueryModule {
     // spec pruning — asserted structurally in SourcesSpec); the oracle
     // proves the pruned result equals the flat-parquet WHERE.
     "src_mixed_prune" -> ((spark, dir) => {
-      val back = MixedFormat.read(spark, ensureTable(spark, dir),
+      val back = MixedFormat.read(spark, table.ensure(spark, dir),
         partitions = Seq("de", "fr"))
       back.groupBy("lang", "source")
         .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
@@ -425,5 +417,10 @@ object MixedFormatQueries extends graft.QueryModule {
         |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
         |FROM documents WHERE lang IN ('de', 'fr')
         |GROUP BY lang, source ORDER BY lang, source""".stripMargin,
+  )
+
+  override val tmp: Map[String, Seq[graft.TmpPath]] = Map(
+    "src_mixed_formats" -> Seq(table),
+    "src_mixed_prune" -> Seq(table),
   )
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Fixture, Tables, TmpPath}
 
 /** Nested complex types stored IN parquet — arrays of structs and maps
   * as physical columns, read back and unnested (SURVEY.md §2 S12). The
@@ -24,25 +24,6 @@ import graft.Tables
   */
 object NestedParquet extends graft.QueryModule {
 
-  /** Path contract with the oracle SQL. The suffix is the SF directory
-    * name so a bench run at one scale factor can never overwrite the
-    * file between a verify run at another and its DuckDB compare; the
-    * oracle (a static string) pins the driver's contractual
-    * verification scale, sf0.01. */
-  def path(dir: String): String =
-    s"/tmp/graft_nested_parquet_${new java.io.File(dir).getName}"
-
-  /** S12b: the nested collections stored in ORC. DuckDB reads no ORC,
-    * so the oracle reads a parquet TWIN written from the SAME
-    * deterministic build (sorted collections, sorted map entries — the
-    * S18 device): a hash match proves our ORC write+read of nested
-    * groups returns exactly what an independent engine decodes from
-    * the identical data. */
-  def orcPath(dir: String): String =
-    s"/tmp/graft_nested_orc_${new java.io.File(dir).getName}"
-  def orcTwinPath(dir: String): String =
-    s"/tmp/graft_nested_orc_twin_${new java.io.File(dir).getName}"
-
   /** lineitem rolled up to one row per order: items as a sorted
     * array<struct>, per-returnflag counts as a map<string,bigint>. ONE
     * shuffle: both collections come out of a single groupBy — the flag
@@ -61,44 +42,26 @@ object NestedParquet extends graft.QueryModule {
           f => struct(f, size(filter(col("flag_list"), x => x === f)).cast("long"))))
           .as("flags"))
 
-  /** Write-once per (JVM, sf): the nested file is the query's input
-    * fixture. First call in a process overwrites (always fresh — a
-    * stale file from an older code version can't survive into a
-    * verify run); later calls reuse it, so bench iterations measure
-    * the READ path instead of re-paying parquet writeback per
-    * iteration — the round-6 driver artifact showed RISING iteration
-    * times [8.1, 8.6, 15.4 s] from exactly that accumulated /tmp
-    * writeback. Bench pre-builds untimed via [[graft.Fixtures]] and
-    * deletes the dir after the query's iterations. */
-  private val written = scala.collection.concurrent.TrieMap.empty[String, Boolean]
-  def ensureFile(spark: SparkSession, dir: String): String = {
-    val p = path(dir)
-    written.getOrElseUpdate(p, {
-      buildNested(Tables(spark, dir).lineitem).write.mode("overwrite").parquet(p)
-      true
-    })
-    p
-  }
-  private[graft] def invalidate(dir: String): Unit = written.remove(path(dir))
+  /** The nested file, the query's input fixture. Static path, not per
+    * JVM: the DuckDB oracle reads it after Verify exits, so the oracle
+    * SQL names it; the suffix is the SF directory name so a bench run at
+    * one scale factor never overwrites the file between a verify run at
+    * another and its DuckDB compare. The oracle pins the driver's
+    * verification scale, sf0.01. */
+  val nested = new Fixture("nested_parquet", perJvm = false)((spark, dir, p) =>
+    buildNested(Tables(spark, dir).lineitem).write.mode("overwrite").parquet(p))
 
-  /** Write-once ORC + parquet twin from ONE build (same memo semantics
-    * as [[ensureFile]]). The build is deterministic (sorted array,
-    * sorted map entries), so the two files carry identical rows. */
-  def ensureOrcFile(spark: SparkSession, dir: String): String = {
-    val p = orcPath(dir)
-    written.getOrElseUpdate(p, {
-      val nested = buildNested(Tables(spark, dir).lineitem)
-      nested.write.mode("overwrite").orc(p)
-      nested.write.mode("overwrite").parquet(orcTwinPath(dir))
-      true
-    })
-    p
-  }
-  private[graft] def invalidateOrc(dir: String): Unit = written.remove(orcPath(dir))
+  /** S12b: the same collections stored in ORC, written from the nested
+    * parquet file. DuckDB reads no ORC, so the oracle reads that parquet
+    * file (the S18 device): a hash match proves our ORC write+read of
+    * nested groups returns exactly what an independent engine decodes
+    * from the identical data. */
+  val orc = new Fixture("nested_orc")((spark, dir, p) =>
+    spark.read.parquet(nested.ensure(spark, dir)).write.mode("overwrite").orc(p))
 
   val queries: Map[String, Q] = Map(
     "src_nested_parquet" -> ((spark, dir) => {
-      val back = spark.read.parquet(ensureFile(spark, dir))
+      val back = spark.read.parquet(nested.ensure(spark, dir))
       // correlated unnest: each item row re-joined with its parent's
       // scalars + a map lookup; the l_orderkey filter pushes down to
       // the nested file's row groups
@@ -116,7 +79,7 @@ object NestedParquet extends graft.QueryModule {
     // natively). Distinct projection from the parquet query so both
     // collection kinds are exercised on the ORC decode path too.
     "src_nested_orc" -> ((spark, dir) => {
-      val back = spark.read.orc(ensureOrcFile(spark, dir))
+      val back = spark.read.orc(orc.ensure(spark, dir))
       back.filter(col("l_orderkey") % 7 === 0)
         .select(col("l_orderkey"),
           element_at(col("flags"), "R").as("flag_r"),
@@ -137,17 +100,22 @@ object NestedParquet extends graft.QueryModule {
          |  SELECT l_orderkey, CAST(len(items) AS BIGINT) AS n_items,
          |         unnest(items, recursive := true),
          |         flags['N'][1] AS flag_n
-         |  FROM read_parquet('${path("sf0.01")}/*.parquet')
+         |  FROM read_parquet('${nested("sf0.01")}/*.parquet')
          |  WHERE l_orderkey < 2000)
          |ORDER BY l_orderkey, l_linenumber, l_partkey, l_quantity""".stripMargin,
-    // DuckDB reads the parquet TWIN of the ORC file (same deterministic
-    // build; DuckDB has no ORC reader — the S18 device).
+    // DuckDB reads the parquet file the ORC file was written from
+    // (DuckDB has no ORC reader — the S18 device).
     "src_nested_orc" ->
       s"""SELECT l_orderkey, flag_r, l_linenumber, l_quantity FROM (
          |  SELECT l_orderkey, flags['R'][1] AS flag_r,
          |         unnest(items, recursive := true)
-         |  FROM read_parquet('${orcTwinPath("sf0.01")}/*.parquet')
+         |  FROM read_parquet('${nested("sf0.01")}/*.parquet')
          |  WHERE l_orderkey % 7 = 0)
          |ORDER BY l_orderkey, l_linenumber""".stripMargin,
+  )
+
+  override val tmp: Map[String, Seq[TmpPath]] = Map(
+    "src_nested_parquet" -> Seq(nested),
+    "src_nested_orc" -> Seq(orc, nested),
   )
 }

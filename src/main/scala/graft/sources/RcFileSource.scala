@@ -203,8 +203,7 @@ object RcFileQueries extends graft.QueryModule {
   import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.functions._
 
-  def path(dir: String): String =
-    s"/tmp/graft_rc_documents_${new java.io.File(dir).getName}"
+  val path = new graft.TmpPath("rc_documents")
 
   val queries: Map[String, Q] = Map(
     "src_rcfile_roundtrip" -> ((spark, dir) => {
@@ -231,5 +230,9 @@ object RcFileQueries extends graft.QueryModule {
         |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
         |  min(doc_id) AS min_id, max(doc_id) AS max_id
         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
+  )
+
+  override val tmp: Map[String, Seq[graft.TmpPath]] = Map(
+    "src_rcfile_roundtrip" -> Seq(path),
   )
 }

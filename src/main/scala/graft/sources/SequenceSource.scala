@@ -283,11 +283,8 @@ object SequenceQueries extends graft.QueryModule {
   import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.functions._
 
-  def path(dir: String): String =
-    s"/tmp/graft_seq_documents_${new java.io.File(dir).getName}"
-
-  def v2Path(dir: String): String =
-    s"/tmp/graft_seqv2_documents_${new java.io.File(dir).getName}_p${ProcessHandle.current().pid()}"
+  val path = new graft.TmpPath("seq_documents")
+  val v2Path = new graft.TmpPath("seqv2_documents")
 
   val queries: Map[String, Q] = Map(
     "src_seqfile_roundtrip" -> ((spark, dir) => {
@@ -369,5 +366,10 @@ object SequenceQueries extends graft.QueryModule {
         |  CAST(sum(strlen(text)) AS BIGINT) AS sum_text_len,
         |  count(DISTINCT source) AS nd_source
         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
+  )
+
+  override val tmp: Map[String, Seq[graft.TmpPath]] = Map(
+    "src_seqfile_roundtrip" -> Seq(path),
+    "src_seqfile_v2write" -> Seq(v2Path),
   )
 }

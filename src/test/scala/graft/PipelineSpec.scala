@@ -118,7 +118,7 @@ class PipelineSpec extends SparkSpec {
   test("persisted IVF index: serving matches inline IVF, postings scan is partition-pruned") {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val queries = emb.filter($"vec_id" < 10)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_idx").toString
+    val dir = tempDir("graft_ivf_idx")
     try {
       Similarity.ivfIndexWrite(spark, emb, dir)
       // postings laid out one directory per cell — the serving-time
@@ -156,7 +156,7 @@ class PipelineSpec extends SparkSpec {
   test("pinned-quantizer IVF equals the persisted-index serve over the same frozen centroids") {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val queries = emb.filter($"vec_id" < 10)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_pin").toString
+    val dir = tempDir("graft_ivf_pin")
     try {
       // persist the PINNED quantizer as a real index: the oracle-exact
       // query entry and production ivfIndexQuery serving must be the
@@ -180,7 +180,7 @@ class PipelineSpec extends SparkSpec {
   test("pinned-codebook PQ equals the persisted-index serve over the same frozen codebook") {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val queries = emb.filter($"vec_id" < 10)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_pin").toString
+    val dir = tempDir("graft_pq_pin")
     try {
       val cb = Similarity.pinnedCodebook().toDF("m", "code", "cvec")
       cb.coalesce(1).write.parquet(s"$dir/codebook")
@@ -250,7 +250,7 @@ class PipelineSpec extends SparkSpec {
   test("persisted PQ index: serving matches inline ranks, append finds the new vector") {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val queries = emb.filter($"vec_id" < 10)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_idx").toString
+    val dir = tempDir("graft_pq_idx")
     try {
       Similarity.pqIndexWrite(spark, emb, dir)
       // the codebook table is bounded (M*K rows) and dense: every
@@ -913,7 +913,7 @@ class PipelineSpec extends SparkSpec {
 
   test("connected components: reliable-checkpoint path writes per-round labels") {
     import graft.pipeline.Cluster
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_chk").toString
+    val dir = tempDir("graft_cc_chk")
     try SparkSpec.withConf("spark.graft.checkpointDir" -> dir) {
       val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (9L, 10L)).toDF("a", "b")
       val got = Cluster.connectedComponents(edges).collect()
@@ -1495,7 +1495,7 @@ class PipelineSpec extends SparkSpec {
     val batch = docsDf(
       (100L, corpus(7)._2, "s1"),                 // exact twin of corpus 7
       (101L, "zq1 zq2 zq3 zq4 zq5 zq6", "s1"))    // novel
-    val dir = java.nio.file.Files.createTempDirectory("graft_lsh_idx").toString
+    val dir = tempDir("graft_lsh_idx")
     try {
       Dedup.lshIndexWrite(docs, dir)
       def verdicts(df: org.apache.spark.sql.DataFrame) =

@@ -111,7 +111,15 @@ class PlanAuditSpec extends SparkSpec {
         else None
       }
     }
+    // Building every query wrote its fixtures and outputs to /tmp; the
+    // declared cleanup must remove each per-JVM path again, or a query
+    // touches a path its module does not declare.
+    Fixtures.cleanup.values.foreach(_(spark, sf0001))
+    val pid = s"_p${ProcessHandle.current().pid()}"
+    val undeclared = new java.io.File("/tmp").list()
+      .filter(n => n.startsWith("graft_") && n.endsWith(pid)).sorted
     val bad = offenders.filterNot { case (n, _) => windowBounded(n) }
+    assert(undeclared.isEmpty, s"/tmp paths left after every cleanup hook: ${undeclared.mkString(", ")}")
     assert(bad.isEmpty, s"un-aggregated linear-growth broadcast hints: $bad")
     assert(windowBounded.subsetOf(offenders.map(_._1).toSet),
       s"stale window-bounded allowance: ${windowBounded -- offenders.map(_._1).toSet}")
@@ -273,7 +281,7 @@ class PlanAuditSpec extends SparkSpec {
     * (Impala parity: its hash-join fragments have no runtime skew
     * split — this is a Spark-side win the salting helper complements.) */
   test("AQE splits the skewed partition of a shuffle join at runtime") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_skew").toString
+    val dir = tempDir("graft_skew")
     // ~20k rows share key 0; the rest are unique → one fat partition.
     spark.range(200000).selectExpr(
       "CASE WHEN id % 10 = 0 THEN 0 ELSE id END AS k", "id AS v")

@@ -118,7 +118,7 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("S7: bucketed tables join without a shuffle exchange") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val wh = tempDir("graft_wh")
     try SparkSpec.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val orders = spark.read.parquet(s"$sf0001/orders.parquet")
       val customer = spark.read.parquet(s"$sf0001/customer.parquet")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,10 +12,9 @@ import org.apache.spark.sql.types._
 class SourcesSpec extends SparkSpec {
 
   private lazy val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
-  private def tmp(): String = Files.createTempDirectory("graft_src").toString
 
   test("S1: partitioned parquet write + partition pruning at the scan") {
-    val dir = tmp()
+    val dir = tempDir("graft_src")
     li.write.partitionBy("l_returnflag").mode(SaveMode.Overwrite).parquet(dir)
     val back = spark.read.parquet(dir)
     assert(back.count() == li.count())
@@ -29,7 +26,7 @@ class SourcesSpec extends SparkSpec {
 
   test("S12: nested complex types round-trip parquet; struct-field pruning reaches the scan") {
     import graft.sources.NestedParquet
-    val dir = tmp()
+    val dir = tempDir("graft_src")
     val nested = NestedParquet.buildNested(li)
     nested.write.mode(SaveMode.Overwrite).parquet(dir)
     val back = spark.read.parquet(dir)
@@ -57,7 +54,7 @@ class SourcesSpec extends SparkSpec {
     // the S12 story replayed for ORC (reference reads ORC collections
     // natively: orc-column-readers.h:513-727)
     import graft.sources.NestedParquet
-    val dir = tmp()
+    val dir = tempDir("graft_src")
     val nested = NestedParquet.buildNested(li)
     nested.write.mode(SaveMode.Overwrite).orc(dir)
     val back = spark.read.orc(dir)
@@ -83,7 +80,7 @@ class SourcesSpec extends SparkSpec {
   test("S13: Avro round trip preserves every supported type; pruning reaches the reader schema") {
     import graft.sources.{AvroIO, AvroSource}
     import java.sql.{Date, Timestamp}
-    val dir = tmp() + "/avro"
+    val dir = tempDir("graft_src") + "/avro"
     val df = spark.createDataFrame(
       java.util.Arrays.asList(
         org.apache.spark.sql.Row(1L, 7, 2.5, 1.5f, true, "héllo",
@@ -121,7 +118,7 @@ class SourcesSpec extends SparkSpec {
 
   test("S13b: a multi-block Avro container splits on sync markers into >1 partition, losslessly") {
     import graft.sources.AvroIO
-    val dir = tmp() + "/avro_split"
+    val dir = tempDir("graft_src") + "/avro_split"
     // ONE container (coalesce(1)) with many small blocks: 2000 rows of
     // ~128B INCOMPRESSIBLE text (md5 hex — constant padding would
     // deflate below one split) at a 4 KiB sync interval → dozens of
@@ -149,7 +146,7 @@ class SourcesSpec extends SparkSpec {
   test("S13c: per-file schema resolution — a mixed-schema dir reads in one scan; " +
     "old files NULL-fill added columns; renames resolve through aliases") {
     import graft.sources.AvroIO
-    val dir = tmp() + "/avro_mixed"
+    val dir = tempDir("graft_src") + "/avro_mixed"
     // epoch 1: (doc_id, txt) — the ORIGINAL layout (old column name)
     val oldDf = spark.range(0, 3).selectExpr("id AS doc_id",
       "concat('old ', CAST(id AS string)) AS txt")
@@ -157,7 +154,7 @@ class SourcesSpec extends SparkSpec {
     // epoch 2: (doc_id, text, lang) — 'txt' RENAMED to 'text', 'lang' ADDED;
     // lands beside the epoch-1 container (AvroIO.write wipes the dir, so
     // write elsewhere and move the container in)
-    val dir2 = tmp() + "/avro_mixed2"
+    val dir2 = tempDir("graft_src") + "/avro_mixed2"
     val newDf = spark.range(3, 6).selectExpr("id AS doc_id",
       "concat('new ', CAST(id AS string)) AS text", "'de' AS lang")
     AvroIO.write(newDf.coalesce(1), dir2)
@@ -185,7 +182,7 @@ class SourcesSpec extends SparkSpec {
     // projection with defaults): select only the ADDED column
     assert(back.select("lang").collect().count(_.isNullAt(0)) == 3)
     // same-name different-type files are irreconcilable — loud
-    val dir3 = tmp() + "/avro_badtype"
+    val dir3 = tempDir("graft_src") + "/avro_badtype"
     AvroIO.write(spark.range(1).selectExpr("id AS doc_id", "'s' AS txt").coalesce(1), dir3)
     AvroIO.write(spark.range(1).selectExpr("id AS doc_id", "id AS txt").coalesce(1), dir2)
     fs.rename(graft.sources.AvroSource.listFiles(dir2).head,
@@ -197,7 +194,7 @@ class SourcesSpec extends SparkSpec {
 
   test("S14: SequenceFile round trip; one container splits on sync markers into >1 partition") {
     import graft.sources.SequenceIO
-    val dir = tmp() + "/seqfile"
+    val dir = tempDir("graft_src") + "/seqfile"
     val df = spark.range(3000).selectExpr("CAST(id AS string) AS key",
       "repeat(md5(CAST(id AS string)), 2) AS value") // incompressible-ish payload
     SequenceIO.write(df.coalesce(1), dir)
@@ -215,13 +212,13 @@ class SourcesSpec extends SparkSpec {
     assert(r.getString(1).length == 64 && r.getString(1) == r.getString(1))
     // writer rejects non-(string,string) frames loudly
     intercept[IllegalArgumentException] {
-      SequenceIO.write(spark.range(3).toDF(), tmp() + "/seq_bad")
+      SequenceIO.write(spark.range(3).toDF(), tempDir("graft_src") + "/seq_bad")
     }
   }
 
   test("S15: RCFile round trip with sync splits, pruned column ids, and the \\N null sentinel") {
     import graft.sources.RcIO
-    val dir = tmp() + "/rcfile"
+    val dir = tempDir("graft_src") + "/rcfile"
     val df = spark.range(3000).selectExpr(
       "CAST(id AS string) AS k",
       "CASE WHEN id % 7 = 0 THEN NULL ELSE repeat(md5(CAST(id AS string)), 2) END AS payload",
@@ -245,7 +242,7 @@ class SourcesSpec extends SparkSpec {
 
   test("S16: Iceberg v1 table round trip; bucket pruning opens 1-of-N buckets at both metadata levels") {
     import graft.sources.{IcebergRead, IcebergWrite}
-    val dir = tmp() + "/iceberg_tbl"
+    val dir = tempDir("graft_src") + "/iceberg_tbl"
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     IcebergWrite.write(docs, dir, "doc_id", 8)
     val conf = spark.sparkContext.hadoopConfiguration
@@ -280,7 +277,7 @@ class SourcesSpec extends SparkSpec {
 
   test("S16g: snapshot expiry keeps readers whole and deletes only unreferenced files") {
     import graft.sources.IcebergWrite
-    val dir = tmp() + "/iceberg_expire"
+    val dir = tempDir("graft_src") + "/iceberg_expire"
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     IcebergWrite.write(docs.filter(col("doc_id") < 200), dir, "doc_id", 8)
     IcebergWrite.append(docs.filter(col("doc_id") >= 200 && col("doc_id") < 400), dir)
@@ -309,7 +306,7 @@ class SourcesSpec extends SparkSpec {
 
   test("S16b: Iceberg append commits a new snapshot; snapshot_id reads time-travel") {
     import graft.sources.{IcebergRead, IcebergWrite}
-    val dir = tmp() + "/iceberg_snap"
+    val dir = tempDir("graft_src") + "/iceberg_snap"
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val first = docs.filter(col("doc_id") < 400)
     val second = docs.filter(col("doc_id") >= 400)
@@ -343,7 +340,7 @@ class SourcesSpec extends SparkSpec {
 
   test("S17: DSv2 SequenceFile write — rename-commit, _SUCCESS, overwrite truncates, append coexists") {
     import spark.implicits._
-    val dir = tmp() + "/seqv2"
+    val dir = tempDir("graft_src") + "/seqv2"
     val fmt = "graft.sources.SequenceSource"
     Seq(("1", "one"), ("2", "two")).toDF("key", "value")
       .write.format(fmt).option("path", dir).mode("overwrite").save()
@@ -373,7 +370,7 @@ class SourcesSpec extends SparkSpec {
 
   test("M5: dynamic partition overwrite replaces only the partitions the batch names") {
     import spark.implicits._
-    val dir = tmp() + "/dyn"
+    val dir = tempDir("graft_src") + "/dyn"
     Seq((1L, "a", "en"), (2L, "b", "de"), (3L, "c", "en")).toDF("id", "v", "lang")
       .write.partitionBy("lang").mode("overwrite").parquet(dir)
     def listing(p: String) = new java.io.File(p).listFiles()
@@ -393,7 +390,7 @@ class SourcesSpec extends SparkSpec {
 
   test("S16k: metadata tables serve snapshots/files/manifests/partitions from the tree alone") {
     import graft.sources.{IcebergInspect, IcebergWrite}
-    val dir = tmp() + "/iceberg_inspect"
+    val dir = tempDir("graft_src") + "/iceberg_inspect"
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val first = docs.filter(col("doc_id") < 400)
     val second = docs.filter(col("doc_id") >= 400)
@@ -435,7 +432,7 @@ class SourcesSpec extends SparkSpec {
     // files (columns 1 and keyCol exchanged payloads).
     import graft.sources.IcebergWrite
     import org.apache.spark.sql.{Row, types => T}
-    val dir = tmp() + "/iceberg_merge_key2"
+    val dir = tempDir("graft_src") + "/iceberg_merge_key2"
     val schema = T.StructType(Seq(
       T.StructField("ct", T.StringType), T.StructField("k", T.StringType),
       T.StructField("doc_id", T.LongType), T.StructField("text", T.StringType)))
@@ -454,7 +451,7 @@ class SourcesSpec extends SparkSpec {
 
   test("S16i: copy-on-write merge rewrites only touched partitions; time travel sees pre-merge rows") {
     import graft.sources.{IcebergRead, IcebergWrite}
-    val dir = tmp() + "/iceberg_merge"
+    val dir = tempDir("graft_src") + "/iceberg_merge"
     val fmt = "graft.sources.IcebergSource"
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     IcebergWrite.write(docs, dir, "lang", "identity")
@@ -520,7 +517,7 @@ class SourcesSpec extends SparkSpec {
     val conf = spark.sparkContext.hadoopConfiguration
     val fmt = "graft.sources.IcebergSource"
     // identity on lang (5 partitions): THE common real-world layout
-    val idDir = tmp() + "/iceberg_identity"
+    val idDir = tempDir("graft_src") + "/iceberg_identity"
     IcebergWrite.write(docs, idDir, "lang", "identity")
     assert(spark.read.format(fmt).load(idDir).count() == docs.count())
     val dePlan = IcebergRead.planFiles(idDir, conf, Some(("lang", "de")))
@@ -532,7 +529,7 @@ class SourcesSpec extends SparkSpec {
     assert(de.rdd.getNumPartitions == dePlan.size)
     // truncate[100] on doc_id (0..499 -> 5 partitions); long-typed
     // bounds drive the manifest-list prune
-    val trDir = tmp() + "/iceberg_trunc"
+    val trDir = tempDir("graft_src") + "/iceberg_trunc"
     IcebergWrite.write(docs, trDir, "doc_id", "truncate[100]")
     assert(spark.read.format(fmt).load(trDir).count() == docs.count())
     val p250 = IcebergRead.planFiles(trDir, conf, Some(("doc_id", 250L)))
@@ -547,7 +544,7 @@ class SourcesSpec extends SparkSpec {
     // to throw BufferUnderflow; the inverse (Int probe vs 8-byte long
     // bounds) silently compared only the low 4 LE bytes. Both widths of
     // the same probe must prune identically.
-    val wdir = tmp() + "/iceberg_idint"
+    val wdir = tempDir("graft_src") + "/iceberg_idint"
     IcebergWrite.write(docs.withColumn("ki", (col("doc_id") % 5).cast("int")),
       wdir, "ki", "identity")
     val pL = IcebergRead.planFiles(wdir, conf, Some(("ki", 3L)))
@@ -562,7 +559,7 @@ class SourcesSpec extends SparkSpec {
     import graft.sources.IcebergRead.ColRange
     val conf = spark.sparkContext.hadoopConfiguration
     val fmt = "graft.sources.IcebergSource"
-    val dir = tmp() + "/iceberg_bounds"
+    val dir = tempDir("graft_src") + "/iceberg_bounds"
     // 4 identity partitions on grp; v and s are NOT partition columns
     // but their per-file ranges are disjoint by construction, so the
     // data_file lower/upper bounds can prove most files irrelevant
@@ -626,7 +623,7 @@ class SourcesSpec extends SparkSpec {
     val orders = spark.read.parquet(s"$sf0001/orders.parquet")
       .select(col("o_orderkey"), to_date(col("o_orderdate")).as("o_date"),
         col("o_totalprice"))
-    val dir = tmp() + "/iceberg_month"
+    val dir = tempDir("graft_src") + "/iceberg_month"
     IcebergWrite.write(orders, dir, "o_date", "month")
     assert(spark.read.format(fmt).load(dir).count() == orders.count())
     val probeDate = orders.agg(max(col("o_date"))).collect().head.getDate(0)
@@ -649,7 +646,7 @@ class SourcesSpec extends SparkSpec {
         (col("o_orderdate") + expr("make_interval(0, 0, 0, 0, CAST(o_orderkey % 24 AS INT), 0, 0)"))
           .cast("timestamp").as("o_ts"),
         col("o_totalprice"))
-    val hDir = tmp() + "/iceberg_hour"
+    val hDir = tempDir("graft_src") + "/iceberg_hour"
     IcebergWrite.write(tsOrders, hDir, "o_ts", "hour")
     val back = spark.read.format(fmt).load(hDir)
     assert(back.count() == tsOrders.count())
@@ -669,7 +666,7 @@ class SourcesSpec extends SparkSpec {
     import graft.sources.{IcebergRead, IcebergWrite}
     val conf = spark.sparkContext.hadoopConfiguration
     val fmt = "graft.sources.IcebergSource"
-    val dir = tmp() + "/iceberg_evolve"
+    val dir = tempDir("graft_src") + "/iceberg_evolve"
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val first = docs.filter(col("doc_id") < 400)
     IcebergWrite.write(first, dir, "doc_id", 8)
@@ -715,7 +712,7 @@ class SourcesSpec extends SparkSpec {
 
   test("S16m: incremental read returns exactly the rows appended in the snapshot range") {
     import graft.sources.{IcebergRead, IcebergWrite}
-    val dir = tmp() + "/iceberg_incr"
+    val dir = tempDir("graft_src") + "/iceberg_incr"
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val base = docs.filter(col("doc_id") < 300)
     val add1 = docs.filter(col("doc_id") >= 300 && col("doc_id") < 400)
@@ -750,7 +747,7 @@ class SourcesSpec extends SparkSpec {
     import graft.sources.{IcebergRead, IcebergWrite}
     val conf = spark.sparkContext.hadoopConfiguration
     val fmt = "graft.sources.IcebergSource"
-    val dir = tmp() + "/iceberg_compact"
+    val dir = tempDir("graft_src") + "/iceberg_compact"
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     IcebergWrite.write(docs.filter(col("doc_id") < 300), dir, "doc_id", 8)
     IcebergWrite.append(docs.filter(col("doc_id") >= 300), dir)
@@ -791,7 +788,7 @@ class SourcesSpec extends SparkSpec {
     import graft.sources.{IcebergRead, IcebergWrite}
     val conf = spark.sparkContext.hadoopConfiguration
     val fmt = "graft.sources.IcebergSource"
-    val dir = tmp() + "/iceberg_spec_evolve"
+    val dir = tempDir("graft_src") + "/iceberg_spec_evolve"
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val first = docs.filter(col("doc_id") < 400)
     val second = docs.filter(col("doc_id") >= 400)
@@ -879,8 +876,8 @@ class SourcesSpec extends SparkSpec {
 
   test("M4: compaction merges small files to the byte-sized target count, losslessly") {
     import graft.operators.TableOps
-    val in = tmp() + "/shattered"
-    val out = tmp() + "/compacted"
+    val in = tempDir("graft_src") + "/shattered"
+    val out = tempDir("graft_src") + "/compacted"
     li.repartition(32).write.mode(SaveMode.Overwrite).parquet(in)
     def parquetFiles(d: String) =
       new java.io.File(d).listFiles.filter(_.getName.endsWith(".parquet"))
@@ -906,12 +903,12 @@ class SourcesSpec extends SparkSpec {
     // twin is DPP: the broadcast dim's join keys prune fact PARTITIONS
     // at scan time, visible as a dynamicpruning PartitionFilter.
     import spark.implicits._
-    val dir = tmp()
+    val dir = tempDir("graft_src")
     li.write.partitionBy("l_returnflag").mode(SaveMode.Overwrite).parquet(dir)
     val fact = spark.read.parquet(dir)
     // dim must be file-backed: a LocalRelation would constant-fold the
     // filter away and DPP sees no selective predicate to derive from
-    val dimDir = tmp()
+    val dimDir = tempDir("graft_src")
     Seq(("R", "returned"), ("A", "acknowledged"), ("N", "none"))
       .toDF("flag", "meaning").write.mode(SaveMode.Overwrite).parquet(dimDir)
     val dim = spark.read.parquet(dimDir)
@@ -972,7 +969,7 @@ class SourcesSpec extends SparkSpec {
     // ranges carry narrow min/max stats on BOTH dimensions, so a
     // 2-D-filtered scan row-group-prunes. Quantify: per-file span of
     // l_partkey under zorder layout vs the same data round-robin'd.
-    val dir = Files.createTempDirectory("graft_zorder").toString
+    val dir = tempDir("graft_zorder")
     val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
       .select(col("l_partkey"), col("l_suppkey"))
       .withColumn("zkey", call_function("zorder64", col("l_partkey"), col("l_suppkey")))
@@ -995,7 +992,7 @@ class SourcesSpec extends SparkSpec {
     // Impala scans tolerate bad rows and surface them as warnings/error
     // rows (hdfs-scan-node error handling); Spark's twin is the CSV
     // parse-mode contract, pinned here for both modes.
-    val dir = Files.createTempDirectory("graft_badcsv").toString
+    val dir = tempDir("graft_badcsv")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/data.csv"),
       "1,alpha,10.5\n2,beta,not_a_number\n3,gamma,30.25\n".getBytes("UTF-8"))
     val schema = new StructType()
@@ -1020,13 +1017,13 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("S2: ORC round trip") {
-    val dir = tmp()
+    val dir = tempDir("graft_src")
     li.limit(100).write.mode(SaveMode.Overwrite).orc(dir)
     assert(spark.read.orc(dir).count() == 100)
   }
 
   test("S3: CSV round trip with explicit schema") {
-    val dir = tmp()
+    val dir = tempDir("graft_src")
     val subset = li.select("l_orderkey", "l_quantity", "l_returnflag").limit(50)
     subset.write.mode(SaveMode.Overwrite).option("header", "true").csv(dir)
     val schema = StructType(Seq(
@@ -1038,7 +1035,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("S4: JSON round trip preserves nested structs") {
-    val dir = tmp()
+    val dir = tempDir("graft_src")
     val df = li.limit(20).select(col("l_orderkey"),
       struct(col("l_quantity"), col("l_discount")).as("metrics"))
     df.write.mode(SaveMode.Overwrite).json(dir)
@@ -1055,7 +1052,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("S3b: text format round trip") {
-    val dir = tmp()
+    val dir = tempDir("graft_src")
     li.select(concat_ws("|", col("l_orderkey"), col("l_returnflag")).as("value"))
       .limit(30).write.mode(SaveMode.Overwrite).text(dir)
     val back = spark.read.text(dir)
@@ -1065,7 +1062,7 @@ class SourcesSpec extends SparkSpec {
 
   test("S1b: parquet compression codecs (snappy, zstd) round trip") {
     for (codec <- Seq("snappy", "zstd")) {
-      val dir = tmp()
+      val dir = tempDir("graft_src")
       li.limit(200).write.mode(SaveMode.Overwrite)
         .option("compression", codec).parquet(dir)
       assert(spark.read.parquet(dir).count() == 200, codec)
@@ -1073,7 +1070,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("S6: dynamic partition overwrite replaces only the written partition") {
-    val dir = tmp()
+    val dir = tempDir("graft_src")
     SparkSpec.withConf("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       li.write.partitionBy("l_returnflag").mode(SaveMode.Overwrite).parquet(dir)
       val before = spark.read.parquet(dir).filter(col("l_returnflag") =!= "R").count()
@@ -1219,7 +1216,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("S18: mid-write or txn-invisible compaction output cannot supersede (batch gate)") {
-    val root = tmp()
+    val root = tempDir("graft_src")
     def docs(ids: Long*) = {
       import org.apache.spark.sql.Row
       spark.createDataFrame(
@@ -1325,7 +1322,7 @@ class SourcesSpec extends SparkSpec {
     // StructColumnVector casts; exact failure shape varies with the
     // projection). Regression-pin "unusable", so if a Spark upgrade
     // ever fixes it we notice and simplify AcidOrc away.
-    val root = HiveAcidQueries.ensureNestedOrc(spark, sf0001)
+    val root = HiveAcidQueries.nestedOrc.ensure(spark, sf0001)
     val sparkPathUsable = scala.util.Try {
       val d = spark.read.orc(s"$root/base_0000001")
       val n = d.count()
@@ -1365,7 +1362,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("S18: insert-only end-to-end — snapshot sees base+committed deltas only") {
-    val root = graft.sources.HiveAcidQueries.ensureInsertOnly(spark, sf0001)
+    val root = graft.sources.HiveAcidQueries.insertOnly.ensure(spark, sf0001)
     val orders = spark.read.parquet(s"$sf0001/orders.parquet")
     val visible = HiveAcid.readInsertOnly(spark, root,
       ValidWriteIds(highWatermark = 5L, aborted = Set(4L)))
@@ -1381,7 +1378,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("S18: full-ACID end-to-end — delete-delta anti-join and aborted exclusion") {
-    val root = graft.sources.HiveAcidQueries.ensureFullAcid(spark, sf0001)
+    val root = graft.sources.HiveAcidQueries.fullAcid.ensure(spark, sf0001)
     val orders = spark.read.parquet(s"$sf0001/orders.parquet")
     val visible = HiveAcid.readFullAcid(spark, root,
       ValidWriteIds(highWatermark = 4L, aborted = Set(4L)))
@@ -1402,7 +1399,7 @@ class SourcesSpec extends SparkSpec {
   test("S18: insert-only reads dispatch non-parquet data formats (ORC) through the same selection") {
     // the format parameter is the MM table's declared file format —
     // directory selection is format-agnostic, the reader is not
-    val root = java.nio.file.Files.createTempDirectory("graft_s18_orc").toString
+    val root = tempDir("graft_s18_orc")
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .select("doc_id", "lang", "n_chars")
     def slice(m: Long) = docs.filter(pmod(col("doc_id"), lit(3L)) === m)
@@ -1419,7 +1416,7 @@ class SourcesSpec extends SparkSpec {
 
   test("S18: original files surface with synthesized acid metadata; " +
        "delete deltas land on the synthesized (bucket, rowId)") {
-    val root = graft.sources.HiveAcidQueries.ensureOriginals(spark, sf0001)
+    val root = graft.sources.HiveAcidQueries.originals.ensure(spark, sf0001)
     val orders = spark.read.parquet(s"$sf0001/orders.parquet")
     val visible = HiveAcid.readFullAcid(spark, root, ValidWriteIds(highWatermark = 3L))
     // acid columns synthesized internally, never leaked
@@ -1448,7 +1445,7 @@ class SourcesSpec extends SparkSpec {
   // ---------------------------------------------------------------
 
   test("S19: mixed-format table round-trips all five formats losslessly") {
-    val root = graft.sources.MixedFormatQueries.ensureTable(spark, sf0001)
+    val root = graft.sources.MixedFormatQueries.table.ensure(spark, sf0001)
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val back = graft.sources.MixedFormat.read(spark, root)
     assert(back.count() == docs.count())
@@ -1461,7 +1458,7 @@ class SourcesSpec extends SparkSpec {
 
   test("S19: re-running write over an existing target never doubles rows (ADVICE r12)") {
     import spark.implicits._
-    val root = tmp() + "/mixed_rewrite"
+    val root = tempDir("graft_src") + "/mixed_rewrite"
     val df = (1L to 60L).map(i => (i, s"t$i", (i % 6).toString))
       .toDF("id", "t", "pv")
     graft.sources.MixedFormat.write(df, root, "pv",
@@ -1484,16 +1481,16 @@ class SourcesSpec extends SparkSpec {
     // the read-optimized view must show base files only up to the last
     // COMPACTION (.commit) — a base file stamped by a deltacommit-only
     // instant stays invisible
-    val root = tmp() + "/hudi_mor"
+    val root = tempDir("graft_src") + "/hudi_mor"
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/.hoodie"))
     fs.create(new org.apache.hadoop.fs.Path(
       s"$root/.hoodie/hoodie.properties"), true).close()
-    graft.sources.HudiQueries.writeSingleFile(
+    graft.Fs.writeSingleFile(
       Seq((1L, "a")).toDF("doc_id", "text"),
       s"$root/fg0_0-0-0_20240101000000000.parquet")
-    graft.sources.HudiQueries.writeSingleFile(
+    graft.Fs.writeSingleFile(
       Seq((2L, "b")).toDF("doc_id", "text"),
       s"$root/fg1_0-0-0_20240102000000000.parquet")
     fs.create(new org.apache.hadoop.fs.Path(
@@ -1506,7 +1503,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("S19: partition pruning is driver-side — pruned partitions are never scanned") {
-    val root = graft.sources.MixedFormatQueries.ensureTable(spark, sf0001)
+    val root = graft.sources.MixedFormatQueries.table.ensure(spark, sf0001)
     val spec = graft.sources.MixedFormat.readSpec(spark, root)
     assert(spec.partitions.map(_.format).distinct.size >= 4)
     val pruned = graft.sources.MixedFormat.read(spark, root, partitions = Seq("de"))
@@ -1518,7 +1515,7 @@ class SourcesSpec extends SparkSpec {
     assert(pruned.count() == docs.filter(col("lang") === "de").count())
     // decisive: delete every other partition directory in a COPY — the
     // pruned read still answers (the pruned dirs were never listed)
-    val copy = tmp() + "/mixcopy"
+    val copy = tempDir("graft_src") + "/mixcopy"
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(root),
@@ -1531,7 +1528,7 @@ class SourcesSpec extends SparkSpec {
 
   test("S19: the writer scans the input once per FORMAT, not once per partition value") {
     import org.apache.spark.sql.Row
-    val root = tmp() + "/mixjobs"
+    val root = tempDir("graft_src") + "/mixjobs"
     // 12 partition values across 3 formats: the old per-partition-value
     // loop ran >= 13 jobs here; the format-grouped writer is bounded by
     // the FORMAT enum (3 write jobs + the distinct-values job + AQE
@@ -1564,7 +1561,7 @@ class SourcesSpec extends SparkSpec {
 
   test("S19: partition values are Hive-escaped in dir names; null values are rejected") {
     import org.apache.spark.sql.Row
-    val root = tmp() + "/mixesc"
+    val root = tempDir("graft_src") + "/mixesc"
     // '/', '=', ':' and space would corrupt a raw "$col=$v" layout
     val vals = Seq("a/b", "c=d", "has space", "colon:v")
     val df = spark.createDataFrame(
@@ -1670,13 +1667,13 @@ class SourcesSpec extends SparkSpec {
 
   test("S20: multi-commit supersession end-to-end; a pending commit becomes visible on its marker") {
     import graft.sources.{HudiQueries, HudiRO}
-    val root = HudiQueries.ensureTable(spark, sf0001)
+    val root = HudiQueries.table.ensure(spark, sf0001)
     val orders = spark.read.parquet(s"$sf0001/orders.parquet")
     val visible = orders.filter(pmod(col("o_orderkey"), lit(4L)).isin(0L, 2L))
     assert(HudiRO.read(spark, root).count() == visible.count())
     // flip the inflight instant to committed in a COPY of the table:
     // its file group (o_orderkey % 4 = 3) joins the snapshot
-    val copy = tmp() + "/hudicopy"
+    val copy = tempDir("graft_src") + "/hudicopy"
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(root),
@@ -1697,7 +1694,7 @@ class SourcesSpec extends SparkSpec {
       after.filter(col("o_orderstatus") === "F").count())
     // a directory without a .hoodie timeline is not a Hudi table
     intercept[IllegalArgumentException] {
-      HudiRO.read(spark, tmp() + "/nothudi")
+      HudiRO.read(spark, tempDir("graft_src") + "/nothudi")
     }
     // MOR log files are invisible to the read-optimized view (the
     // HoodieROTablePathFilter contract): a .log delta beside the base
@@ -1719,7 +1716,7 @@ class SourcesSpec extends SparkSpec {
   test("S20d: HudiSink insert/upsert/delete round-trips through HudiRO; untouched groups keep their files; carried rows keep their meta") {
     import graft.sources.{HudiRO, HudiSink}
     import spark.implicits._
-    val dir = tmp() + "/hudisink"
+    val dir = tempDir("graft_src") + "/hudisink"
     val C1 = "20300101000000001"; val C2 = "20300101000000002"
     val C3 = "20300101000000003"
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -1764,7 +1761,7 @@ class SourcesSpec extends SparkSpec {
     assert(r3.select("k").as[Long].collect().toSet == Set(1L, 2L, 5L))
     assert(files(s"$dir/p=b").exists(_.endsWith(s"_$C3.parquet")))
     // unpartitioned table: same loop without a partition column
-    val u = tmp() + "/hudisink_u"
+    val u = tempDir("graft_src") + "/hudisink_u"
     HudiSink.insert(Seq((7L, 70.0)).toDF("k", "v"), u, "k", None, C1)
     HudiSink.upsert(Seq((7L, 77.0), (8L, 80.0)).toDF("k", "v"), u, "k", None, C2)
     assert(HudiRO.read(spark, u).select("k", "v").as[(Long, Double)]
@@ -1791,7 +1788,7 @@ class SourcesSpec extends SparkSpec {
   test("S20e: the writer's clustering replacecommit compacts groups; visible rows identical, old groups dead") {
     import graft.sources.{HudiRO, HudiSink}
     import spark.implicits._
-    val dir = tmp() + "/hudicluster"
+    val dir = tempDir("graft_src") + "/hudicluster"
     val C1 = "20300201000000001"; val C2 = "20300201000000002"
     val C4 = "20300201000000004"
     // two commits -> two file groups per partition
@@ -1830,7 +1827,7 @@ class SourcesSpec extends SparkSpec {
   test("S20f: the upsert key-locator reads ONLY base files whose footer key range intersects the batch") {
     import graft.sources.{HudiRO, HudiSink}
     import spark.implicits._
-    val dir = tmp() + "/hudiprune"
+    val dir = tempDir("graft_src") + "/hudiprune"
     val C = (1 to 9).map(i => s"2030030100000000$i")
     // three inserts -> three file groups with DISJOINT string key ranges
     // (hash routing inside one insert would overlap ranges; separate
@@ -1901,7 +1898,7 @@ class SourcesSpec extends SparkSpec {
   test("S20g: locator key ranges come from commit metadata — ZERO footer probes for sink-written tables; foreign commits fall back") {
     import graft.sources.{HudiRO, HudiSink}
     import spark.implicits._
-    val dir = tmp() + "/hudimeta"
+    val dir = tempDir("graft_src") + "/hudimeta"
     val C = (1 to 9).map(i => s"2030060100000000$i")
     HudiSink.insert((1 to 4).map(i => (f"a$i%02d", i * 1.0)).toDF("k", "v"),
       dir, "k", None, C(0))
@@ -1965,7 +1962,7 @@ class SourcesSpec extends SparkSpec {
   test("S20g: the writer lock refuses a held table up front and releases on success and failure") {
     import graft.sources.{HudiRO, HudiSink}
     import spark.implicits._
-    val dir = tmp() + "/hudilock"
+    val dir = tempDir("graft_src") + "/hudilock"
     HudiSink.insert(Seq(("a01", 1.0)).toDF("k", "v"), dir, "k", None,
       "20300701000000001")
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -1999,7 +1996,7 @@ class SourcesSpec extends SparkSpec {
   test("S20g: racing writers — every loser refuses CLEANLY (lock or marker), never interleaves; the table stays exact") {
     import graft.sources.{HudiRO, HudiSink}
     import spark.implicits._
-    val dir = tmp() + "/hudirace"
+    val dir = tempDir("graft_src") + "/hudirace"
     HudiSink.insert(Seq(("seed", 0.0)).toDF("k", "v"), dir, "k", None,
       "20300901000000000")
     // 8 threads race DISTINCT instants at once: the single-writer
@@ -2049,7 +2046,7 @@ class SourcesSpec extends SparkSpec {
   test("S20g: lock lease — a dead holder's lock is taken over after the TTL; a fresh (live) lock still refuses; the heartbeat keeps a long commit alive") {
     import graft.sources.{HudiRO, HudiSink}
     import spark.implicits._
-    val dir = tmp() + "/hudilease"
+    val dir = tempDir("graft_src") + "/hudilease"
     HudiSink.insert(Seq(("a01", 1.0)).toDF("k", "v"), dir, "k", None,
       "20301101000000001")
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -2128,7 +2125,7 @@ class SourcesSpec extends SparkSpec {
           case _ => super.create(f, overwrite)
         }
     }
-    val dir = tmp() + "/hudiflaky"
+    val dir = tempDir("graft_src") + "/hudiflaky"
     new java.io.File(dir).mkdirs()
     val p = new HPath(s"$dir/.lock")
     // 1) transient blip while the path does NOT exist: propagates as itself
@@ -2151,7 +2148,7 @@ class SourcesSpec extends SparkSpec {
   test("S20g: the writer lock is held across PLANNING — a held lock refuses BEFORE the snapshot read (no stale-snapshot lost update)") {
     import graft.sources.{HudiRO, HudiSink}
     import spark.implicits._
-    val dir = tmp() + "/hudiplanlock"
+    val dir = tempDir("graft_src") + "/hudiplanlock"
     HudiSink.insert(Seq(("a01", 1.0)).toDF("k", "v"), dir, "k", None,
       "20301001000000001")
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -2219,7 +2216,7 @@ class SourcesSpec extends SparkSpec {
     // order), but UTF-8 bytes/parquet stats/Spark's UTF8String put it
     // ABOVE. A prune comparing in String order would wrongly drop the
     // supplementary-key file; cmpU compares bytes so it cannot.
-    val dir = tmp() + "/hudiprune_utf8"
+    val dir = tempDir("graft_src") + "/hudiprune_utf8"
     val kSupp = "𐀀a" // U+10000 + 'a'
     HudiSink.insert(Seq(("｡a", 1.0), ("｡b", 2.0)).toDF("k", "v"),
       dir, "k", None, "20300401000000001")
@@ -2243,7 +2240,7 @@ class SourcesSpec extends SparkSpec {
   test("T31/T33: lastCommittedBatchId returns the NEWEST batch per query id under interleaved writers") {
     import graft.sources.{HudiSink, HiveAcidSink}
     import spark.implicits._
-    val dir = tmp() + "/hudi_batchids"
+    val dir = tempDir("graft_src") + "/hudi_batchids"
     val df = Seq((1L, 1.0)).toDF("k", "v")
     // two query ids interleave commits; each must see only ITS newest
     HudiSink.insert(df, dir, "k", None, "20300501000000001",
@@ -2256,7 +2253,7 @@ class SourcesSpec extends SparkSpec {
     assert(HudiSink.lastCommittedBatchId(spark, dir, "qb").contains(5L))
     assert(HudiSink.lastCommittedBatchId(spark, dir, "qc").isEmpty)
     // ACID twin: newest delta (highest write id) wins per query id
-    val adir = tmp() + "/acid_batchids"
+    val adir = tempDir("graft_src") + "/acid_batchids"
     HiveAcidSink.insertOnly(df, adir, 1L,
       sidecar = Map("streaming-query-id" -> "qa", "streaming-batch-id" -> "0"))
     HiveAcidSink.insertOnly(df, adir, 2L,
@@ -2273,7 +2270,7 @@ class SourcesSpec extends SparkSpec {
     import spark.implicits._
     val batch = Seq((1L, "x")).toDF("k", "v")
     // signature 1: a delete_delta dir marks a full-ACID table
-    val t1 = tmp() + "/acid_full_dd"
+    val t1 = tempDir("graft_src") + "/acid_full_dd"
     val fs = new org.apache.hadoop.fs.Path(t1)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     batch.write.parquet(s"$t1/delta_0000001_0000001")
@@ -2283,7 +2280,7 @@ class SourcesSpec extends SparkSpec {
     }
     // signature 2: acid EVENT-wrapped files in an existing delta
     // (the real Hive 3 full-ACID ORC shape, the S18d fixture device)
-    val t2 = tmp() + "/acid_full_ev"
+    val t2 = tempDir("graft_src") + "/acid_full_ev"
     batch.select(lit(0).as("operation"), lit(1L).as("originalTransaction"),
       lit(0).as("bucket"), col("k").as("rowId"),
       lit(1L).as("currentTransaction"),
@@ -2293,7 +2290,7 @@ class SourcesSpec extends SparkSpec {
       HiveAcidSink.insertOnly(batch, t2, 2L)
     }
     // and the parquet-flavored event shape (fixture-shaped full ACID)
-    val t3 = tmp() + "/acid_full_evpq"
+    val t3 = tempDir("graft_src") + "/acid_full_evpq"
     batch.select(lit(0).as("operation"), lit(1L).as("originalTransaction"),
       lit(0).as("bucket"), col("k").as("rowId"),
       lit(1L).as("currentTransaction"), col("k"), col("v"))
@@ -2302,7 +2299,7 @@ class SourcesSpec extends SparkSpec {
       HiveAcidSink.insertOnly(batch, t3, 2L)
     }
     // a genuine insert-only table keeps accepting writes
-    val t4 = tmp() + "/acid_mm_ok"
+    val t4 = tempDir("graft_src") + "/acid_mm_ok"
     HiveAcidSink.insertOnly(batch, t4, 1L)
     HiveAcidSink.insertOnly(Seq((2L, "y")).toDF("k", "v"), t4, 2L)
     assert(spark.read.parquet(s"$t4/delta_0000001_0000001",
@@ -2310,7 +2307,7 @@ class SourcesSpec extends SparkSpec {
     // ADVICE r14: event files appearing only in the NEWEST delta (a
     // table converted to full-ACID mid-life) must still refuse — the
     // guard probes both ends of the delta range
-    val t5 = tmp() + "/acid_full_late"
+    val t5 = tempDir("graft_src") + "/acid_full_late"
     batch.write.parquet(s"$t5/delta_0000001_0000001") // plain MM delta
     batch.select(lit(0).as("operation"), lit(1L).as("originalTransaction"),
       lit(0).as("bucket"), col("k").as("rowId"),
@@ -2322,7 +2319,7 @@ class SourcesSpec extends SparkSpec {
     // ...while an MM table whose USER schema merely starts
     // (operation, originalTransaction) is NOT falsely refused: the
     // signature is the full five-column acid event prefix
-    val t6 = tmp() + "/acid_mm_opnames"
+    val t6 = tempDir("graft_src") + "/acid_mm_opnames"
     HiveAcidSink.insertOnly(
       Seq((0, 1L, "x")).toDF("operation", "originalTransaction", "payload"),
       t6, 1L)
@@ -2338,7 +2335,7 @@ class SourcesSpec extends SparkSpec {
     // ADVICE r12: the batch (Row-encoder) path previously surfaced the
     // internal day-ordinal Int for DATE and crashed createDataFrame;
     // pin the external type end-to-end incl. a pre-epoch day and NULL
-    val root = tmp() + "/acid_orc_date/base_0000001"
+    val root = tempDir("graft_src") + "/acid_orc_date/base_0000001"
     import spark.implicits._
     val rows = Seq(
       (1L, java.sql.Date.valueOf("2024-03-01")),
@@ -2387,7 +2384,7 @@ class SourcesSpec extends SparkSpec {
     // name; the user prunes by the RAW value and the column must carry
     // the RAW value back
     import spark.implicits._
-    val root = tmp() + "/hudi_escaped"
+    val root = tempDir("graft_src") + "/hudi_escaped"
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/.hoodie"))
@@ -2402,7 +2399,7 @@ class SourcesSpec extends SparkSpec {
       fs.mkdirs(new org.apache.hadoop.fs.Path(pd))
       fs.create(new org.apache.hadoop.fs.Path(
         s"$pd/.hoodie_partition_metadata"), true).close()
-      graft.sources.HudiQueries.writeSingleFile(
+      graft.Fs.writeSingleFile(
         Seq((1L, seg)).toDF("doc_id", "text"),
         s"$pd/fg0_0-0-0_20240101000000000.parquet")
     }
@@ -2425,7 +2422,7 @@ class SourcesSpec extends SparkSpec {
     // query could observe it disabled. Now an explicit user schema pins
     // the partition column to STRING; the conf is never written.
     import spark.implicits._
-    val root = tmp() + "/hudi_numpart"
+    val root = tempDir("graft_src") + "/hudi_numpart"
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/.hoodie"))
@@ -2436,7 +2433,7 @@ class SourcesSpec extends SparkSpec {
       fs.mkdirs(new org.apache.hadoop.fs.Path(pd))
       fs.create(new org.apache.hadoop.fs.Path(
         s"$pd/.hoodie_partition_metadata"), true).close()
-      graft.sources.HudiQueries.writeSingleFile(
+      graft.Fs.writeSingleFile(
         Seq((1L, seg)).toDF("doc_id", "text"),
         s"$pd/fg${seg}_0-0-0_20240101000000000.parquet")
     }
@@ -2456,7 +2453,7 @@ class SourcesSpec extends SparkSpec {
   test("S20b: clustering replacecommit — replaced groups dead, new base file visible, ONE scan relation") {
     import graft.sources.{HudiQueries, HudiRO}
     import org.apache.spark.sql.execution.FileSourceScanExec
-    val root = HudiQueries.ensureClusteredTable(spark, sf0001)
+    val root = HudiQueries.clustered.ensure(spark, sf0001)
     val orders = spark.read.parquet(s"$sf0001/orders.parquet")
     val df = HudiRO.read(spark, root)
     // post-clustering snapshot = every row exactly once (a reader that
@@ -2480,8 +2477,8 @@ class SourcesSpec extends SparkSpec {
 
   test("S20c: unrecognized replacecommit body shapes refuse loudly") {
     import graft.sources.{HudiQueries, HudiRO}
-    val root = HudiQueries.ensureClusteredTable(spark, sf0001)
-    val copy = tmp() + "/hudicluster_bad"
+    val root = HudiQueries.clustered.ensure(spark, sf0001)
+    val copy = tempDir("graft_src") + "/hudicluster_bad"
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(root),

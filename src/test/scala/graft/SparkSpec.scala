@@ -9,6 +9,19 @@ import org.scalatest.funsuite.AnyFunSuite
 object SparkSpec {
   lazy val session: SparkSession = GraftSession.build("graft-test", "local[4]", 4)
 
+  val sf0001 = "/root/testdata/sf0.001"
+
+  private val exitDeletes = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  // Plain file deletion: by exit time Spark and Hadoop's FileSystem
+  // cache may already be shut down. The fixtures' per-JVM paths go too
+  // (PlanAuditSpec drops them mid-run; later specs may rebuild some).
+  sys.addShutdownHook {
+    val fixtures = SparkEntry.tmpPaths.values.flatten.toSet.filter(_.perJvm)
+      .map(p => new java.io.File(p(sf0001)))
+    (exitDeletes.toArray(Array.empty[java.io.File]) ++ fixtures)
+      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+  }
+
   /** Runs `body` with the given session confs set, then puts back each
     * key's previous value (and unsets only keys that had none), so a
     * spec neither leaks a conf nor resets one the session was built
@@ -25,5 +38,13 @@ object SparkSpec {
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
-  lazy val sf0001 = "/root/testdata/sf0.001"
+  lazy val sf0001 = SparkSpec.sf0001
+
+  /** A fresh directory under /tmp, deleted with everything in it when
+    * the test JVM exits. */
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    SparkSpec.exitDeletes.add(d)
+    d.toString
+  }
 }

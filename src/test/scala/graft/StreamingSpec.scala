@@ -69,8 +69,8 @@ class StreamingSpec extends SparkSpec {
 
   test("T18: streaming Iceberg sink commits one snapshot per batch, time travel per batch") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_t18_iceberg").toString + "/tbl"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_t18_ckpt").toString
+    val dir = tempDir("graft_t18_iceberg") + "/tbl"
+    val ckpt = tempDir("graft_t18_ckpt")
     val in = MemoryStream[Streams.Doc]
     val q = Streams.icebergSink(in.toDF(), dir, "doc_id")
       .option("checkpointLocation", ckpt).start()
@@ -114,8 +114,8 @@ class StreamingSpec extends SparkSpec {
 
   test("T22: streaming upsert sink merges each batch; replayed batches are no-ops") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_t22_iceberg").toString + "/tbl"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_t22_ckpt").toString
+    val dir = tempDir("graft_t22_iceberg") + "/tbl"
+    val ckpt = tempDir("graft_t22_ckpt")
     val in = MemoryStream[Streams.Doc]
     val q = Streams.icebergUpsertSink(in.toDF(), dir, "doc_id", "lang")
       .option("checkpointLocation", ckpt).start()
@@ -150,8 +150,8 @@ class StreamingSpec extends SparkSpec {
 
   test("T23: streaming CDC sink applies tombstones; deletes drop keys and survive replay") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_t23_iceberg").toString + "/tbl"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_t23_ckpt").toString
+    val dir = tempDir("graft_t23_iceberg") + "/tbl"
+    val ckpt = tempDir("graft_t23_ckpt")
     val in = MemoryStream[Streams.CdcDoc]
     val q = Streams.icebergCdcSink(in.toDF(), dir, "doc_id", "op", "lang")
       .option("checkpointLocation", ckpt).start()
@@ -198,9 +198,9 @@ class StreamingSpec extends SparkSpec {
 
   test("T24: dead-letter dual sink routes rows by gate, tags reasons, and replays idempotently") {
     implicit val ctx = spark.sqlContext
-    val accept = java.nio.file.Files.createTempDirectory("graft_t24_ok").toString
-    val reject = java.nio.file.Files.createTempDirectory("graft_t24_dlq").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_t24_ckpt").toString
+    val accept = tempDir("graft_t24_ok")
+    val reject = tempDir("graft_t24_dlq")
+    val ckpt = tempDir("graft_t24_ckpt")
     val in = MemoryStream[Streams.Doc]
     val q = Streams.deadLetterSink(in.toDF(), accept, reject)
       .option("checkpointLocation", ckpt).start()
@@ -325,7 +325,7 @@ class StreamingSpec extends SparkSpec {
 
   test("T6: streaming parquet sink with checkpointing") {
     implicit val ctx = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val out = tempDir("graft_sink")
     val in = MemoryStream[Event]
     val q = in.toDF().writeStream.format("parquet")
       .option("path", s"$out/data").option("checkpointLocation", s"$out/chk")
@@ -563,7 +563,7 @@ class StreamingSpec extends SparkSpec {
 
   test("T9: foreachBatch writes per-batch dirs; rewriting a batch dir is idempotent") {
     implicit val ctx = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft_feb").toString
+    val out = tempDir("graft_feb")
     val in = MemoryStream[Event]
     val q = Streams.foreachBatchParquet(in.toDF(), out)
       .option("checkpointLocation", s"$out/_chk").start()
@@ -584,7 +584,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("T10: Trigger.AvailableNow drains the input once; a re-run ingests only new files") {
-    val root = java.nio.file.Files.createTempDirectory("graft_an").toString
+    val root = tempDir("graft_an")
     val inDir = s"$root/in"; val outDir = s"$root/out"; val chk = s"$root/chk"
     val first = Seq(Event(1, ts(0), 1, "view", 1.0), Event(2, ts(1), 2, "click", 2.0)).toDF()
     first.write.parquet(inDir)
@@ -601,7 +601,7 @@ class StreamingSpec extends SparkSpec {
 
   test("T25: Iceberg streaming source — one micro-batch per snapshot range, restart resumes") {
     import graft.sources.IcebergWrite
-    val root = java.nio.file.Files.createTempDirectory("graft_t25").toString
+    val root = tempDir("graft_t25")
     val dir = s"$root/tbl"; val ckpt = s"$root/ckpt"
     // nullable schema like a parquet-sourced relation: Spark's file
     // writers emit optional fields, so a required table schema would
@@ -647,7 +647,7 @@ class StreamingSpec extends SparkSpec {
 
   test("T25b: admission control — maxSnapshotsPerTrigger drains a catch-up over bounded batches") {
     import graft.sources.IcebergWrite
-    val root = java.nio.file.Files.createTempDirectory("graft_t25b").toString
+    val root = tempDir("graft_t25b")
     val dir = s"$root/tbl"; val ckpt = s"$root/ckpt"
     def docDf(ids: Long*) = {
       import org.apache.spark.sql.{Row, types => T}
@@ -684,7 +684,7 @@ class StreamingSpec extends SparkSpec {
 
   test("T26: medallion hop — exactly-once sink feeds the streaming source downstream") {
     implicit val ctx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_t26").toString
+    val root = tempDir("graft_t26")
     val bronze = s"$root/bronze"
     // upstream: raw docs land in the bronze Iceberg table, one
     // exactly-once snapshot per micro-batch (T18)
@@ -731,7 +731,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("T27: ACID streaming source — initial snapshot, then one unit per committed delta") {
-    val root = java.nio.file.Files.createTempDirectory("graft_t27").toString
+    val root = tempDir("graft_t27")
     val dir = s"$root/tbl"; val ckpt = s"$root/ckpt"
     acidDocDf(1L, 2L).write.parquet(s"$dir/base_0000002")
     acidDocDf(3L).write.parquet(s"$dir/delta_0000003_0000003")
@@ -763,7 +763,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("T27b: ACID streaming admission — maxWriteIdsPerTrigger drains the tail in bounded units") {
-    val root = java.nio.file.Files.createTempDirectory("graft_t27b").toString
+    val root = tempDir("graft_t27b")
     val dir = s"$root/tbl"; val ckpt = s"$root/ckpt"
     acidDocDf(1L).write.parquet(s"$dir/base_0000001")
     val batches = scala.collection.mutable.ArrayBuffer[Seq[Long]]()
@@ -789,7 +789,7 @@ class StreamingSpec extends SparkSpec {
   test("T27: commit detection — _temporary / side-file / empty dirs defer, _SUCCESS-only counts") {
     import graft.sources.HiveAcidStream.isComplete
     spark.sparkContext // isComplete resolves its Hadoop conf off the active session
-    val root = java.nio.file.Files.createTempDirectory("graft_t27c").toString
+    val root = tempDir("graft_t27c")
     def mk(dir: String, files: String*): Unit = {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$root/$dir"))
       files.foreach(f => java.nio.file.Files.createFile(
@@ -878,7 +878,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("T27b: the ReadLimit bounds the INITIAL batch too (fresh checkpoint, long-lived table)") {
-    val root = java.nio.file.Files.createTempDirectory("graft_t27g").toString
+    val root = tempDir("graft_t27g")
     val dir = s"$root/tbl"; val ckpt = s"$root/ckpt"
     // the table has lived for a while BEFORE the stream first starts
     acidDocDf(1L).write.parquet(s"$dir/base_0000001")
@@ -918,7 +918,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("T27: replay reconstruction — a compacted unit crossing the batch boundary fails fast") {
-    val root = java.nio.file.Files.createTempDirectory("graft_t27e").toString
+    val root = tempDir("graft_t27e")
     val ms = new graft.sources.HiveAcidMicroBatchStream(root,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
@@ -932,7 +932,7 @@ class StreamingSpec extends SparkSpec {
         graft.sources.AcidWriteIdOffset(3L))
     }
     // and a replay whose covering dirs are simply GONE is equally loud
-    val root2 = java.nio.file.Files.createTempDirectory("graft_t27f").toString
+    val root2 = tempDir("graft_t27f")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root2))
     val ms2 = new graft.sources.HiveAcidMicroBatchStream(root2,
       org.apache.spark.sql.types.StructType(Seq(
@@ -949,7 +949,7 @@ class StreamingSpec extends SparkSpec {
     // table streams its committed writes (T27 source) into an Iceberg
     // table (T18 sink), one snapshot per micro-batch — the ACID
     // counterpart of T26's same-format medallion hop
-    val root = java.nio.file.Files.createTempDirectory("graft_t28").toString
+    val root = tempDir("graft_t28")
     val hive = s"$root/hive"; val berg = s"$root/iceberg"
     acidDocDf(1L, 2L).write.parquet(s"$hive/base_0000001")
     val q = Streams.icebergSink(
@@ -998,7 +998,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("T28b: full-ACID CDC — a Hive delete lands as an Iceberg tombstone, exactly-once") {
-    val root = java.nio.file.Files.createTempDirectory("graft_t28b").toString
+    val root = tempDir("graft_t28b")
     val hive = s"$root/hive"; val berg = s"$root/iceberg"
     // write 1 inserts docs 1..3 (the base); write 2 inserts doc 4
     acidFullDf(1L, 0, 1L, 2L, 3L).write.parquet(s"$hive/base_0000001")
@@ -1094,7 +1094,7 @@ class StreamingSpec extends SparkSpec {
 
   test("T28c: a REAL Hive ORC event table (acid wrapper) streams deletes into Iceberg") {
     import org.apache.spark.sql.functions.{col, lit, struct}
-    val root = java.nio.file.Files.createTempDirectory("graft_t28c").toString
+    val root = tempDir("graft_t28c")
     val hive = s"$root/hive"; val berg = s"$root/iceberg"
     // event-shaped writes: five acid columns beside row:struct<doc cols>
     def eventWrite(dir: String, writeId: Long, ids: Long*): Unit =
@@ -1134,7 +1134,7 @@ class StreamingSpec extends SparkSpec {
   test("T27: the INITIAL snapshot also refuses delete deltas (no silent row drop)") {
     // selectDirs.dataDirs would silently exclude delete deltas, emitting
     // un-retracted rows — the initial batch must refuse like the tail does
-    val root = java.nio.file.Files.createTempDirectory("graft_t27d").toString
+    val root = tempDir("graft_t27d")
     acidDocDf(1L).write.parquet(s"$root/base_0000001")
     acidDocDf(2L).write.parquet(s"$root/delete_delta_0000002_0000002")
     val ms = new graft.sources.HiveAcidMicroBatchStream(root,
@@ -1167,12 +1167,12 @@ class StreamingSpec extends SparkSpec {
   }
   private def hudiBase(dir: String, fileId: String, instant: String,
                        ids: Long*): Unit =
-    graft.sources.HudiQueries.writeSingleFile(acidDocDf(ids: _*),
+    graft.Fs.writeSingleFile(acidDocDf(ids: _*),
       s"$dir/${fileId}_0-0-0_$instant.parquet")
   private val HI = (1 to 6).map(i => f"2024010${i}%d000000000").toArray // HI(0)=day1...
 
   test("T29: Hudi streaming source — snapshot-as-of initial batch, per-commit drain, inflight invisible, restart exactness") {
-    val root = java.nio.file.Files.createTempDirectory("graft_t29").toString
+    val root = tempDir("graft_t29")
     val dir = s"$root/tbl"; val ckpt = s"$root/ckpt"
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1230,7 +1230,7 @@ class StreamingSpec extends SparkSpec {
     // and T28 Hive ACID→Iceberg): a Hudi COW table streams its
     // read-optimized snapshot, then one Iceberg snapshot per Hudi
     // commit, through the T18 exactly-once sink
-    val root = java.nio.file.Files.createTempDirectory("graft_t30").toString
+    val root = tempDir("graft_t30")
     val hudi = s"$root/hudi"; val berg = s"$root/iceberg"
     val fs = new org.apache.hadoop.fs.Path(hudi)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1277,7 +1277,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("T29: a COW rewrite of an existing file group fails the stream fast (append-only contract)") {
-    val root = java.nio.file.Files.createTempDirectory("graft_t29rw").toString
+    val root = tempDir("graft_t29rw")
     val dir = s"$root/tbl"; val ckpt = s"$root/ckpt"
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1306,7 +1306,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("T29: mid-stream clustering fails fast; pre-stream clustering serves through the snapshot") {
-    val root = java.nio.file.Files.createTempDirectory("graft_t29cl").toString
+    val root = tempDir("graft_t29cl")
     // table A: clustering BEFORE the stream starts — the initial
     // snapshot supersedes the replaced groups (exactly-once rows)
     val a = s"$root/ta"
@@ -1360,7 +1360,7 @@ class StreamingSpec extends SparkSpec {
     // files whose instant COMPLETED — a leftover file from an aborted
     // write was never visible, so the group's first completed base
     // file is a plain insert.
-    val root = java.nio.file.Files.createTempDirectory("graft_t29orph").toString
+    val root = tempDir("graft_t29orph")
     val dir = s"$root/tbl"; val ckpt = s"$root/ckpt"
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1400,12 +1400,12 @@ class StreamingSpec extends SparkSpec {
       spark.sparkContext.parallelize(rows.map { case (k, id, txt, ct) =>
         Row(ct, k, id, txt)
       }), schema)
-    graft.sources.HudiQueries.writeSingleFile(df,
+    graft.Fs.writeSingleFile(df,
       s"$dir/${fileId}_0-0-0_$instant.parquet")
   }
 
   test("T29b: with _hoodie_* meta columns a COW rewrite flows as upserts exactly-once under replay/restart") {
-    val root = java.nio.file.Files.createTempDirectory("graft_t29b").toString
+    val root = tempDir("graft_t29b")
     val dir = s"$root/tbl"; val ckpt = s"$root/ckpt"
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1457,7 +1457,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("T30b: hudiMigrationHopUpsert — an UPDATING Hudi table migrates into Iceberg key-latest, exactly-once") {
-    val root = java.nio.file.Files.createTempDirectory("graft_t30b").toString
+    val root = tempDir("graft_t30b")
     val hudi = s"$root/hudi"; val berg = s"$root/iceberg"
     val fs = new org.apache.hadoop.fs.Path(hudi)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1512,7 +1512,7 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.HudiRO
     import graft.streaming.Streams
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_t31").toString
+    val root = tempDir("graft_t31")
     val dir = s"$root/tbl"; val ckpt = s"$root/ckpt"
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1558,7 +1558,7 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.HudiRO
     import graft.streaming.Streams
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_t31b").toString
+    val root = tempDir("graft_t31b")
     // orderCol last-wins: the highest seq per key survives
     val d1 = s"$root/t1"
     Streams.hudiUpsertBatch(
@@ -1587,7 +1587,7 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.HudiRO
     import graft.streaming.Streams
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_t32").toString
+    val root = tempDir("graft_t32")
     val ice = s"$root/ice"; val hudi = s"$root/hudi"; val ckpt = s"$root/ckpt"
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1629,7 +1629,7 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.HiveAcid
     import graft.streaming.Streams
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_t33").toString
+    val root = tempDir("graft_t33")
     val dir = s"$root/tbl"; val ckpt = s"$root/ckpt"
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1675,7 +1675,7 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.{HiveAcidSink, HudiSink}
     import graft.streaming.Streams
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_cadence").toString
+    val root = tempDir("graft_cadence")
     // --- T33 Hive ACID: newest-first delta walk stops at the query's
     // own last commit, whatever accumulated before it ---
     val acid = s"$root/acid"
@@ -1723,8 +1723,7 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.IcebergWrite
     import graft.streaming.Streams
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_t18_expiry").toString + "/tbl"
+    val dir = tempDir("graft_t18_expiry") + "/tbl"
     val conf = spark.sparkContext.hadoopConfiguration
     val qidKey = org.apache.spark.sql.execution.streaming.runtime
       .StreamExecution.QUERY_ID_KEY
@@ -1769,7 +1768,7 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.{HiveAcid, HiveAcidSink, HudiRO}
     import graft.streaming.Streams
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_t34").toString
+    val root = tempDir("graft_t34")
     val acid1 = s"$root/acid1"; val hudi = s"$root/hudi"
     val acid2 = s"$root/acid2"; val ice = s"$root/ice"; val acid3 = s"$root/acid3"
     def docs(ids: Long*) = ids.map(i => (i, s"text $i")).toDF("doc_id", "text")
