@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -8,9 +10,36 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (apache-impala-4.1.0/testdata/datasets/tpch) plus the pipeline tables
   * (documents, embeddings, events). One parquet scan per table; column
   * pruning / predicate pushdown is left to Catalyst — callers select.
-  */
+  *
+  * Every accessor lists the table path once and resolves its schema
+  * through a small metadata catalog, the way the reference engine's
+  * catalog service spares each query the file footers: a plain
+  * `spark.read.parquet` runs a one-task Spark job to infer the schema
+  * (about 100 ms per read at sf0.1), and a query reads 2–6 tables. The
+  * catalog maps a content key — the path, every listed file's (path,
+  * length, mtime), and the session values of the confs that change an
+  * inferred parquet schema ([[Tables.SchemaConfs]]) — to the inferred
+  * `StructType`; a hit reads with `spark.read.schema(cached)`, which
+  * runs no job. Rewriting a file, adding or removing one, or flipping
+  * one of those confs changes the key, so a stale schema is never
+  * served. Only the schema is cached: no data, result or resolved
+  * relation, so Spark still lists the files and plans every scan
+  * fresh, and each query gets fresh expression IDs (a table read twice
+  * in one self-join stays unambiguous). If the listing fails, the read
+  * is the plain uncached one, so errors (a missing path's
+  * PATH_NOT_FOUND) surface exactly as Spark reports them and nothing
+  * is cached for them. The same listing feeds the input-spread gate
+  * ([[spread]]). */
 final case class Tables(spark: SparkSession, dir: String) {
-  private def t(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  private def t(name: String): DataFrame = read(name)._1
+
+  /** The table's DataFrame and the listing its schema was keyed by
+    * (None when the listing failed). */
+  private def read(name: String): (DataFrame, Option[Seq[Tables.FileId]]) = {
+    val path = s"$dir/$name.parquet"
+    val files = Tables.list(spark, path)
+    (Tables.parquet(spark, path, files), files)
+  }
 
   /** Guide §2.5 ("input skew: one huge unsplittable file — repartition
     * immediately after the read"), applied scale-adaptively and OPT-IN
@@ -42,9 +71,11 @@ final case class Tables(spark: SparkSession, dir: String) {
     * sums / total orders (re-verified against the DuckDB oracle at all
     * three SFs with the spread active). */
   private def spread(name: String): DataFrame = {
-    val df = t(name)
+    val (df, files) = read(name)
     val cores = spark.sparkContext.defaultParallelism
-    val (splits, bytes) = layoutBound(s"$dir/$name.parquet")
+    // a failed listing falls back to "no spread", so the gate can never
+    // make a readable table unreadable
+    val (splits, bytes) = files.fold((Long.MaxValue, 0L))(Tables.layoutBound(spark, _))
     // bytes is an upper bound on the row count a repartition could ever
     // use (every row occupies >= 1 byte), so min() keeps the exchange
     // width from exceeding what the table can possibly fill — a
@@ -53,40 +84,6 @@ final case class Tables(spark: SparkSession, dir: String) {
     if (splits >= cores) df
     else df.repartition(Tables.spreadWidth(cores, bytes))
   }
-
-  /** Lower bound on how many scan tasks the file layout can feed —
-    * per-file ceil(bytes / maxPartitionBytes), i.e. the split count
-    * Spark would plan BEFORE row-group snapping (a single-row-group
-    * file yields its splits but only one is non-empty, so this bound
-    * is also optimistic — never repartitions too eagerly) — plus the
-    * total data bytes (an upper bound on row count for the spread's
-    * width guard). Hidden files are skipped with BOTH Spark's prefixes
-    * ('_' and '.', mirroring shouldFilterOutPathName): a local-FS
-    * checksum sibling like .part-0.crc would otherwise count as a
-    * split Spark's InMemoryFileIndex never plans, wrongly suppressing
-    * the spread (ADVICE r16). Memoized per (resolved dir, table): the
-    * walk re-ran on every accessor call — free locally, not on object
-    * stores (ADVICE r16). Any listing failure — not just IOException;
-    * object-store clients surface RuntimeException wrappers — falls
-    * back to "no spread", so the gate can never make a readable table
-    * unreadable (ADVICE r16). */
-  private def layoutBound(path: String): (Long, Long) =
-    Tables.layoutCache.computeIfAbsent(path, { _ =>
-      val hp = new org.apache.hadoop.fs.Path(path)
-      val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
-      def walk(fs: org.apache.hadoop.fs.FileSystem,
-               p: org.apache.hadoop.fs.Path): (Long, Long) =
-        fs.listStatus(p).foldLeft((0L, 0L)) { case ((s, b), st) =>
-          val n = st.getPath.getName
-          if (n.startsWith("_") || n.startsWith(".")) (s, b)
-          else if (st.isDirectory) {
-            val (s2, b2) = walk(fs, st.getPath); (s + s2, b + b2)
-          } else if (st.getLen == 0L) (s, b)
-          else (s + (st.getLen + maxSplit - 1) / maxSplit, b + st.getLen)
-        }
-      try walk(hp.getFileSystem(spark.sessionState.newHadoopConf()), hp)
-      catch { case scala.util.control.NonFatal(_) => (Long.MaxValue, 0L) }
-    })
 
   /** events.ts arrives as either int64 nanoseconds (TIMESTAMP(NANOS)
     * parquet under spark.sql.legacy.parquet.nanosAsLong — the original
@@ -130,13 +127,85 @@ final case class Tables(spark: SparkSession, dir: String) {
 }
 
 object Tables {
-  /** JVM-wide memo of [[Tables.layoutBound]] results. The testdata
-    * layouts this gate inspects are immutable within a run (Bench,
-    * Verify and the oracle all read the same static SF dirs), so one
-    * listing per (path) per JVM is correct; a process that rewrites a
-    * table layout mid-run would need to restart anyway to re-plan. */
-  private val layoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
+  /** One listed file: (qualified path, length, mtime). */
+  private[graft] type FileId = (String, Long, Long)
+
+  /** The session confs that change the schema parquet inference
+    * returns for the same files (nanos as bigint, binary as string,
+    * INT96 and NTZ timestamp mapping, merging every file's schema). */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  private type SchemaKey = (String, Seq[FileId], Seq[Option[String]])
+
+  /** Inferred schemas by content key (see the [[Tables]] scaladoc).
+    * Per-entry LRU, the HudiSink discipline: a schema is a few KB and
+    * the key holds one tuple per file, so 256 entries bound driver
+    * memory while holding every table of several scale-factor dirs. */
+  private val schemaCache =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[SchemaKey, StructType](64, 0.75f, /* accessOrder = */ true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[SchemaKey, StructType]): Boolean = size() > 256
+      })
+
+  /** The files Spark's file index would list under `path` (a file or a
+    * directory tree): hidden '_' and '.' names are skipped, mirroring
+    * InMemoryFileIndex.shouldFilterOutPathName, except partition dirs
+    * ('=' in the name) and the parquet summary files, which schema
+    * inference reads first. Any listing failure — not just
+    * IOException; object-store clients surface RuntimeException
+    * wrappers — yields None. */
+  private def list(spark: SparkSession, path: String): Option[Seq[FileId]] = {
+    def visible(n: String) =
+      n.startsWith("_metadata") || n.startsWith("_common_metadata") ||
+        !(n.startsWith(".") || (n.startsWith("_") && !n.contains("=")))
+    def walk(fs: FileSystem, p: Path): Seq[FileId] =
+      fs.listStatus(p).toSeq.filter(st => visible(st.getPath.getName)).flatMap { st =>
+        if (st.isDirectory) walk(fs, st.getPath)
+        else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+      }
+    val hp = new Path(path)
+    try Some(walk(hp.getFileSystem(spark.sessionState.newHadoopConf()), hp))
+    catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** Reads `path` with its cached schema on a key hit. On a miss the
+    * plain read infers it; the schema is stored only if a second
+    * listing still matches the first, so a table rewritten during
+    * inference cannot pin the new schema to the old files' key. */
+  private def parquet(spark: SparkSession, path: String,
+                      files: Option[Seq[FileId]]): DataFrame = files match {
+    case None => spark.read.parquet(path)
+    case Some(listed) =>
+      val key = (path, listed, SchemaConfs.map(spark.conf.getOption))
+      Option(schemaCache.get(key)) match {
+        case Some(schema) => spark.read.schema(schema).parquet(path)
+        case None =>
+          val df = spark.read.parquet(path)
+          if (list(spark, path) == files) schemaCache.put(key, df.schema)
+          df
+      }
+  }
+
+  /** Lower bound on how many scan tasks the file layout can feed —
+    * per-file ceil(bytes / maxPartitionBytes), i.e. the split count
+    * Spark would plan BEFORE row-group snapping (a single-row-group
+    * file yields its splits but only one is non-empty, so this bound
+    * is also optimistic — never repartitions too eagerly) — plus the
+    * total data bytes (an upper bound on row count for the spread's
+    * width guard). Summary files and empty files hold no rows and
+    * count for neither. It is derived from the read's own listing, so
+    * a table rewritten mid-run is judged by its current layout. */
+  private def layoutBound(spark: SparkSession, files: Seq[FileId]): (Long, Long) = {
+    val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
+    files.collect { case (p, len, _) if len > 0 && !new Path(p).getName.startsWith("_") => len }
+      .foldLeft((0L, 0L)) { case ((s, b), len) => (s + (len + maxSplit - 1) / maxSplit, b + len) }
+  }
 
   /** Width of the input-spread exchange: the session's parallelism,
     * capped by the table's byte length (>= its row count — every row
