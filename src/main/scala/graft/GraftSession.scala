@@ -12,6 +12,10 @@ import org.apache.spark.sql.SparkSession
   * AQE (runtime join re-planning, skew splitting, partition coalescing
   * — the Spark analogue of the reference engine's runtime filters and
   * scheduler) runs on Spark's own defaults, which enable all three.
+  * Under it `SmallSort` plans a global ORDER BY whose input is at most
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes` as one range
+  * partition, so the sort runs no sampling job; it is installed only
+  * here, not by `GraftFunctions.register`.
   */
 object GraftSession {
   /** Local core count: `SPARK_GRAFT_CPUS`, else every available core. */

@@ -12,7 +12,9 @@ import graft.functions._
   * registered into the SQL function registry once, when the session is
   * built (`spark.sql.extensions=graft.plans.GraftExtensions`, which
   * `graft.GraftSession.build` sets), together with the `JaccardPrefilter`
-  * optimizer rule and the `AsOfJoinStrategy` planner strategy.
+  * optimizer rule, the `AsOfJoinStrategy` planner strategy and the
+  * `SmallSort` query-stage preparation rule (AQE applies it to the
+  * initial plan and again at every re-plan).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -21,6 +23,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     ext.injectOptimizerRule(_ => JaccardPrefilter)
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    ext.injectQueryStagePrepRule(_ => SmallSort)
   }
 }
 
@@ -155,7 +158,10 @@ object GraftFunctions {
     * `experimental.extraOptimizations`, `AsOfJoinStrategy` via
     * `experimental.extraStrategies`. Sessions from `GraftSession.build`
     * already have all three and must not call it — on them it would
-    * run the rule in a second optimizer batch. */
+    * run the rule in a second optimizer batch. `SmallSort` is not
+    * installed here: query-stage rules are read from the session's
+    * extensions when its state is built, and Spark has no experimental
+    * hook for them, so a foreign session keeps Spark's sampled sort. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     all.foreach { case (name, inf, builder) =>

@@ -1,12 +1,17 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, SortOrder}
 import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, ResolvedHint}
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, ResolvedHint}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, REPARTITION_BY_NUM, ShuffleExchangeExec, ShuffleOrigin}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** Scale-hygiene plan audit (SURVEY.md §5): broadcast hints must be
   * limited to fixed-cardinality relations. `customer`, `part`,
@@ -317,10 +322,23 @@ class PlanAuditSpec extends SparkSpec {
       s"no runtime partition coalescing in final plan:\n${plan.take(900)}")
   }
 
-  /** A global ORDER BY must plan a sample-based range exchange feeding
-    * per-partition sorts (Impala's parallel sort: sort-node.cc fed by
-    * an exchange) — never a single-partition global sort. TopN must
-    * instead collapse to TakeOrderedAndProject (no full sort at all). */
+  /** Partition count and origin of every range exchange in a query's
+    * current adaptive plan, query stages included. */
+  private def rangeExchanges(df: DataFrame): Seq[(Int, ShuffleOrigin)] =
+    AqePlans.collect(df.queryExecution.executedPlan) {
+      case ShuffleExchangeExec(RangePartitioning(_, n), _, origin, _) => (n, origin)
+    }
+  private object AqePlans extends AdaptiveSparkPlanHelper
+  private lazy val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+
+  /** A global ORDER BY plans a range exchange feeding per-partition
+    * sorts (Impala's parallel sort: sort-node.cc fed by an exchange),
+    * sized by `SmallSort`: an input of at most one advisory partition
+    * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`) plans ONE
+    * range partition, so `RangePartitioner` runs no sampling job; a
+    * larger input keeps the sample-based n > 1 exchange and its job.
+    * Both return the same rows in the same order. TopN must instead
+    * collapse to TakeOrderedAndProject (no full sort at all). */
   test("global sort plans a range exchange; TopN collapses to TakeOrderedAndProject") {
     val t = Tables(spark, sf0001)
     // executedPlan: exchanges are inserted by EnsureRequirements, after
@@ -333,6 +351,53 @@ class PlanAuditSpec extends SparkSpec {
     val topPlan = topn.queryExecution.executedPlan.toString
     assert(topPlan.contains("TakeOrderedAndProject"),
       s"TopN did not collapse:\n${topPlan.take(800)}")
+
+    // the sort key covers every output column, so ties are equal rows
+    // and the row order is fully determined
+    val keys = Seq("l_extendedprice", "l_orderkey", "l_linenumber").map(col)
+    def run() = {
+      val df = t.lineitem.select(keys: _*).orderBy(keys: _*)
+      val (rows, jobs) = jobsDuring(df.collect().toSeq)
+      (rows, jobs, rangeExchanges(df))
+    }
+    val (small, smallJobs, smallRanges) = run()
+    val (forced, forcedJobs, forcedRanges) =
+      SparkSpec.withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1")(run())
+    assert(smallRanges == Seq((1, ENSURE_REQUIREMENTS)),
+      s"small sort did not plan one range partition: $smallRanges")
+    assert(forcedRanges == Seq((shufflePartitions, ENSURE_REQUIREMENTS)),
+      s"sort over the advisory size lost its n > 1 range exchange: $forcedRanges")
+    assert(forcedJobs == smallJobs + 1,
+      s"one range partition ran $smallJobs jobs, n > 1 ran $forcedJobs (expected one sampling job more)")
+    assert(small.nonEmpty && small == forced, "the two sorts returned different rows or order")
+  }
+
+  /** `SmallSort` only resizes the exchanges a global sort needs, and only
+    * on a known size: a user's `repartitionByRange` keeps its count, and
+    * an input with no estimate (an RDD reports Spark's default size) or
+    * no logical link at all keeps today's partitioning. */
+  test("SmallSort leaves user-requested and unknown-size range exchanges alone") {
+    val t = Tables(spark, sf0001)
+    val user = t.lineitem.repartitionByRange(8, col("l_orderkey"))
+    user.collect()
+    assert(rangeExchanges(user) == Seq((8, REPARTITION_BY_NUM)),
+      s"user range exchange changed: ${rangeExchanges(user)}")
+
+    val rdd = spark.createDataFrame(spark.sparkContext.parallelize(1 to 100, 2).map(Row(_)),
+      StructType(Seq(StructField("x", IntegerType)))).orderBy(col("x"))
+    assert(rdd.collect().map(_.getInt(0)).toSeq == (1 to 100))
+    assert(rangeExchanges(rdd) == Seq((shufflePartitions, ENSURE_REQUIREMENTS)),
+      s"unknown-size sort was resized: ${rangeExchanges(rdd)}")
+
+    val a = AttributeReference("a", IntegerType)()
+    def exchange(child: SparkPlan) =
+      ShuffleExchangeExec(RangePartitioning(Seq(SortOrder(a, Ascending)), 4), child)
+    val unlinked = exchange(LocalTableScanExec(Seq(a), Nil, None))
+    assert(graft.plans.SmallSort(unlinked) eq unlinked, "an exchange with no size estimate was resized")
+    val linked = LocalTableScanExec(Seq(a), Nil, None)
+    linked.setLogicalLink(LocalRelation(a))
+    assert(graft.plans.SmallSort(exchange(linked)).outputPartitioning.numPartitions == 1,
+      "an empty linked input kept its n > 1 range exchange")
   }
 
   /** Verify's per-query spill attribution drains the listener bus via

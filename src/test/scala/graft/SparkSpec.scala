@@ -47,4 +47,22 @@ trait SparkSpec extends AnyFunSuite {
     SparkSpec.exitDeletes.add(d)
     d.toString
   }
+
+  /** Spark jobs started while `body` runs; the listener bus is drained
+    * through the reflection PlanAuditSpec pins. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    def drain(): Unit = bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    drain()
+    sc.addSparkListener(listener)
+    try { val r = body; drain(); (r, jobs.get()) }
+    finally sc.removeSparkListener(listener)
+  }
 }

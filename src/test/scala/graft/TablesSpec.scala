@@ -25,24 +25,6 @@ class TablesSpec extends SparkSpec {
   private def copyInto(dir: String, table: String): Unit =
     Files.copy(Paths.get(sf0001, s"$table.parquet"), Paths.get(dir, s"$table.parquet"))
 
-  /** Spark jobs started while `body` runs; the listener bus is drained
-    * through the reflection PlanAuditSpec pins. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    def drain(): Unit = bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    drain()
-    sc.addSparkListener(listener)
-    try { val r = body; drain(); (r, jobs.get()) }
-    finally sc.removeSparkListener(listener)
-  }
-
   test("Tables: the first read under a new key infers in one job, the next read runs none") {
     val dir = copyOf("lineitem")
     val (first, firstJobs) = jobsDuring(Tables(spark, dir).lineitem)
