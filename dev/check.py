@@ -2,13 +2,19 @@
 """Dev-only correctness harness mirroring the driver's gate:
 runs graft.Verify at a given SF, then replays each oracle SQL in DuckDB
 over the same parquet tables and diffs against Spark's parquet output
-(sorted rows, exact values). NOT part of the shipped library.
+with perfbench/run.py's rule (sorted rows, exact string values). The
+result of an oracle that reads only the tables is cached under
+perfbench/.work/oracle, keyed by its SQL, the DuckDB version and every
+table file's (path, size, mtime); `rm -r perfbench/.work/oracle` clears
+it. Oracles that read a file Verify wrote, and Spark outputs, are never
+cached. NOT part of the shipped library.
 
 Usage: python3 dev/check.py [sfDir] [outDir] [--skip-verify]
 """
 import sys, os, json, glob, subprocess
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "perfbench"))
 import duckdb
+from run import canonical, compare, expected_rows
 
 pos = [a for a in sys.argv[1:] if not a.startswith("--")]
 sf = pos[0] if len(pos) > 0 else "/root/testdata/sf0.01"
@@ -32,6 +38,13 @@ for p in glob.glob(f"{sf}/*.parquet"):
     # dirs (ScaleGen) are Spark-written DIRECTORIES — glob inside them
     src = f"{p}/*.parquet" if os.path.isdir(p) else p
     con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{src}'")
+# the oracle cache key covers every table file; a directory table
+# counts file by file, so rewriting any file in it misses the cache
+files = []
+for p in sorted(glob.glob(f"{sf}/*.parquet")):
+    files += sorted(os.path.join(d, n) for d, _, ns in os.walk(p) for n in ns) if os.path.isdir(p) else [p]
+fingerprint = json.dumps([duckdb.__version__] + [
+    (f, os.stat(f).st_size, os.stat(f).st_mtime_ns) for f in files])
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
 # File-reading oracles pin the driver's verification SF (sf0.01) in
@@ -47,31 +60,15 @@ for name in sorted(oracle):
     if not os.path.isdir(spark_dir):
         results[name] = "NO_SPARK_OUTPUT"; continue
     try:
-        odf = con.sql(sql).df()
+        expected = expected_rows(con, sql, fingerprint)
     except Exception as e:
         results[name] = f"ORACLE_ERR {e}"; continue
     try:
         sdf = con.sql(f"SELECT * FROM '{spark_dir}/*.parquet'").df()
     except Exception as e:
         results[name] = f"SPARK_READ_ERR {e}"; continue
-    o = odf.reindex(sorted(odf.columns), axis=1)
-    s = sdf.reindex(sorted(sdf.columns), axis=1)
-    if list(o.columns) != list(s.columns):
-        results[name] = f"COLS oracle={list(o.columns)} spark={list(s.columns)}"; continue
-    if len(o) != len(s):
-        results[name] = f"ROWS oracle={len(o)} spark={len(s)}"; continue
-    for c in o.columns:  # arrays are unhashable/unsortable in pandas
-        if o[c].dtype == object:
-            o[c] = o[c].astype(str); s[c] = s[c].astype(str)
-    o = o.sort_values(by=list(o.columns)).reset_index(drop=True)
-    s = s.sort_values(by=list(s.columns)).reset_index(drop=True)
-    o = o.astype(str); s = s.astype(str)
-    if o.equals(s):
-        results[name] = "OK"
-    else:
-        diff = (o != s).any(axis=1)
-        i = diff[diff].index[0]
-        results[name] = f"VALS first diff row {i}: oracle={o.loc[i].to_dict()} spark={s.loc[i].to_dict()}"
+    problem = compare(expected, canonical(sdf))
+    results[name] = "OK" if problem is None else f"DIFF {problem}"
 
 # rows-only entries (no oracle)
 for d in sorted(glob.glob(f"{out}/*")):
@@ -83,16 +80,10 @@ for d in sorted(glob.glob(f"{out}/*")):
         except Exception as e:
             results[name] = f"ROWS_ONLY_ERR {e}"
 
-# the rows-only set must never grow silently: every no-oracle entry
-# needs a declared reason in dev/rows_only_audit.py
-import rows_only_audit
-audit_ok = rows_only_audit.audit(out) == 0
-
 ok = sum(1 for v in results.values()
          if v == "OK" or (v.startswith("ROWS_ONLY n=") and "EMPTY" not in v))
 for k, v in results.items():
     flag = "  " if (v == "OK" or (v.startswith("ROWS_ONLY n=") and "EMPTY" not in v)) else "XX"
     print(f"{flag} {k}: {v}")
-print(f"\n{ok}/{len(results)} pass" + ("" if audit_ok else "  [rows-only audit FAILED]"))
-if not audit_ok:
-    sys.exit(1)
+print(f"\n{ok}/{len(results)} pass")
+sys.exit(0 if ok == len(results) else 1)

@@ -32,8 +32,10 @@ object Bench {
     * current run — a hand-picked list alone let sim_ivf_topk (#2 in
     * the whole suite) and ds_q4_growth_ratio (#3) go unheadlined for
     * six rounds. Everything still RUNS and counts toward `value`; this
-    * only bounds the printed map's size. */
-  private val headline: Set[String] = Set(
+    * only bounds the printed map's size. RegistrySpec checks that every
+    * name here is a registered query, so a rename cannot drop one from
+    * the printed set unnoticed. */
+  private[graft] val headline: Set[String] = Set(
     "q01_pricing_summary", "q03_shipping_priority", "q04_order_priority",
     "q05_local_supplier",
     "q06_forecast_revenue", "q07_volume_shipping", "q08_market_share",

@@ -4,13 +4,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
 
-/** One family of named queries plus, for the keys it can, DuckDB SQL
-  * that recomputes the same result over the same parquet tables, and
-  * the /tmp paths each query touches. */
+/** One family of named queries, how each one is checked, and the /tmp
+  * paths each query touches. Every query has exactly one check: DuckDB
+  * SQL in `oracles` that recomputes the same result over the same
+  * parquet tables, or a reason in `rowsOnly` why no such SQL exists. */
 trait QueryModule {
   type Q = (SparkSession, String) => DataFrame
   val queries: Map[String, Q]
   val oracles: Map[String, String]
+  /** Why a query has no oracle; it then gets only a rows > 0 check, a
+    * weaker gate, so each reason names the oracle-exact twin that checks
+    * the same machinery over a replayable regime, or says why no replay
+    * exists. Each reason starts with its category: `approx-estimator`
+    * (sketch state, not a portable value), `seeded-rng` (engine-local
+    * seeded RNG), `float-centroid` (float k-means/EM training, whose
+    * reduction order differs by topology), `sequential-argmin` (an
+    * order-dependent greedy loop), `codec` (engine-local binary or
+    * string codec), `env` (engine identity) or `fake-codec` (a
+    * multimodal decode through a fake codec; pinned-value specs check
+    * the values). */
+  val rowsOnly: Map[String, String] = Map.empty
   /** Every /tmp path a query reads or writes: the [[Fixture]]s it reads
     * and the [[TmpPath]]s it writes on each run. [[Fixtures]] derives
     * its prepare and cleanup hooks from this. */
@@ -59,18 +72,22 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] = registry._1
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys get a rows-only check. */
+    * the same parquet tables. The other keys get a rows-only check. */
   def oracleSql: Map[String, String] = registry._2
 
+  /** Why each query outside `oracleSql` has no oracle ([[QueryModule.rowsOnly]]). */
+  def rowsOnly: Map[String, String] = registry._3
+
   /** The /tmp paths each query reads or writes ([[QueryModule.tmp]]). */
-  def tmpPaths: Map[String, Seq[TmpPath]] = registry._3
+  def tmpPaths: Map[String, Seq[TmpPath]] = registry._4
 
   /** Unions the modules' maps, failing on the first access instead of
     * letting `Map ++` keep the last of two same-named entries: a name
-    * declared twice, or oracle SQL or /tmp paths for a name no module
-    * declares, throws. */
+    * declared twice, an oracle, rows-only reason or /tmp paths for a
+    * name no module declares, and a query with both an oracle and a
+    * reason or with neither, throw. */
   private[graft] def merge(modules: Seq[QueryModule]): (Map[String, (SparkSession, String) => DataFrame],
-      Map[String, String], Map[String, Seq[TmpPath]]) = {
+      Map[String, String], Map[String, String], Map[String, Seq[TmpPath]]) = {
     def unique[V](what: String, entries: Seq[(String, V)]): Map[String, V] = {
       val dup = entries.groupBy(_._1).collect { case (k, es) if es.size > 1 => k }
       require(dup.isEmpty, s"$what declared by more than one module: ${dup.toSeq.sorted.mkString(", ")}")
@@ -83,7 +100,13 @@ object SparkEntry {
       require(orphans.isEmpty, s"$what for no registered query: ${orphans.mkString(", ")}")
       m
     }
-    (queries, declared("oracle SQL", modules.flatMap(_.oracles)),
-      declared("/tmp paths", modules.flatMap(_.tmp)))
+    val oracles = declared("oracle SQL", modules.flatMap(_.oracles))
+    val rowsOnly = declared("rows-only reasons", modules.flatMap(_.rowsOnly))
+    val tmp = declared("/tmp paths", modules.flatMap(_.tmp))
+    val both = oracles.keySet.intersect(rowsOnly.keySet).toSeq.sorted
+    require(both.isEmpty, s"both oracle SQL and a rows-only reason: ${both.mkString(", ")}")
+    val unchecked = queries.keys.filterNot(k => oracles.contains(k) || rowsOnly.contains(k)).toSeq.sorted
+    require(unchecked.isEmpty, s"neither oracle SQL nor a rows-only reason: ${unchecked.mkString(", ")}")
+    (queries, oracles, rowsOnly, tmp)
   }
 }

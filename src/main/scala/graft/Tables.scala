@@ -146,12 +146,7 @@ object Tables {
     * Per-entry LRU, the HudiSink discipline: a schema is a few KB and
     * the key holds one tuple per file, so 256 entries bound driver
     * memory while holding every table of several scale-factor dirs. */
-  private val schemaCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[SchemaKey, StructType](64, 0.75f, /* accessOrder = */ true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[SchemaKey, StructType]): Boolean = size() > 256
-      })
+  private val schemaCache = Lru[SchemaKey, StructType](256)
 
   /** The files Spark's file index would list under `path` (a file or a
     * directory tree): hidden '_' and '.' names are skipped, mirroring

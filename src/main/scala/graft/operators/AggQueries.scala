@@ -449,6 +449,31 @@ object AggQueries extends graft.QueryModule {
     }),
   )
 
+  override val rowsOnly: Map[String, String] = Map(
+    "agg_approx_ndv" -> ("approx-estimator: HLL ndv() register estimate beyond exact mode — no " +
+      "replay exists; error-bound property spec (SketchSpec); exact-count twins " +
+      "agg_condcount/stats_table ARE oracle-checked"),
+    "agg_cpc_ndv" -> ("approx-estimator: CPC coupon/window estimate — no replay exists; " +
+      "error-bound property spec; theta twin agg_theta_overlap IS oracle-exact in its <=k exact " +
+      "mode"),
+    "agg_histogram" -> ("approx-estimator: sketch histogram bounds depend on randomized " +
+      "compaction — no replay exists; invariants spec'd; the non-sketch twin agg_equidepth_hist " +
+      "IS oracle-checked"),
+    "agg_hll_sketch" -> ("codec: HLL register-state binary is engine-local — no replay exists; " +
+      "round-trip + merge specs"),
+    "agg_kll_quantile" -> ("approx-estimator: KLL estimate beyond k=200 retention (randomized " +
+      "compaction) — no replay exists there; rank-error property spec; exact-regime twin " +
+      "agg_kll_exact_regime IS oracle-exact (r14)"),
+    "agg_kll_rank" -> ("approx-estimator: KLL rank estimate beyond the exact regime — no replay " +
+      "exists there; property spec; exact-regime twin agg_kll_exact_regime IS oracle-exact (r14)"),
+    "agg_sample" -> ("seeded-rng: reservoir sample from an engine-local seeded RNG — no replay " +
+      "exists; membership+size property spec"),
+    "agg_sampled_ndv" -> ("approx-estimator: estimator over a seeded row sample — no replay " +
+      "exists (RNG + estimator state)"),
+    "agg_sketch_str" -> ("codec: sketch summary strings are library-layout-specific — no replay " +
+      "exists; parse/ordering spec"),
+  )
+
   val oracles: Map[String, String] = Map(
     // exact-regime KLL (every group <= 150 items < k=200 retention →
     // no compaction): INCLUSIVE quantile = order statistic at

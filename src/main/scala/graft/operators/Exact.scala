@@ -18,7 +18,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   *   CAST(SUM(CAST(<expr> AS DECIMAL(38,6))) AS DOUBLE)
   */
 object Exact {
-  private val D = DecimalType(38, 6)
+  /** The exact-money type every sum here folds in. */
+  val D = DecimalType(38, 6)
 
   /** Exact order-independent sum of a double expression. */
   def dsum(e: Column): Column = sum(e.cast(D)).cast(DoubleType)
@@ -32,4 +33,15 @@ object Exact {
 
   /** SQL text for the oracle side of [[davg]]. */
   def sqlAvg(expr: String): String = s"(${sqlSum(expr)} / COUNT($expr))"
+
+  /** Exact money in integer micros: DECIMAL(38,6) fold × 1e6. */
+  def micros(e: Column): Column = (sum(e.cast(D)) * 1000000).cast("long")
+  def sqlMicros(expr: String): String =
+    s"CAST(SUM(CAST(($expr) AS DECIMAL(38,6))) * 1000000 AS BIGINT)"
+
+  /** Conditional micros: only rows matching `cond` contribute. */
+  def microsIf(cond: Column, e: Column): Column =
+    (sum(when(cond, e.cast(D)).otherwise(lit(0).cast(D))) * 1000000).cast("long")
+  def sqlMicrosIf(cond: String, expr: String): String =
+    s"CAST(SUM(CASE WHEN $cond THEN CAST(($expr) AS DECIMAL(38,6)) ELSE CAST(0 AS DECIMAL(38,6)) END) * 1000000 AS BIGINT)"
 }

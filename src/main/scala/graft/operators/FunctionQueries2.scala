@@ -285,6 +285,11 @@ object FunctionQueries2 extends graft.QueryModule {
     }),
   )
 
+  override val rowsOnly: Map[String, String] = Map(
+    "rel_tablesample" -> ("seeded-rng: TABLESAMPLE draws from the engine's seeded RNG — no " +
+      "replay exists; bounds spec"),
+  )
+
   val oracles: Map[String, String] = Map(
     // lambda results mirrored with scalar arithmetic over the same
     // constructed elements (m7=c%7, m5=c%5, m3=c%3; weights 2,3,4)

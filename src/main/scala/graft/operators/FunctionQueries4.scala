@@ -397,6 +397,11 @@ object FunctionQueries4 extends graft.QueryModule {
 
   private val duckMangle = "translate(c_name, '0123456789', 'OIZEASGTBQ')"
 
+  override val rowsOnly: Map[String, String] = Map(
+    "fn_env" -> ("env: version()/current_database() are engine identity by definition — no " +
+      "replay exists"),
+  )
+
   val oracles: Map[String, String] = Map(
     "fn_strdist" ->
       s"""SELECT c_custkey,

@@ -245,6 +245,13 @@ object TableOps extends graft.QueryModule {
     }),
   )
 
+  override val rowsOnly: Map[String, String] = Map(
+    "stats_table_incremental" -> ("approx-estimator: incremental HLL-NDV merge — register state " +
+      "unreplayable; exact twin stats_table IS oracle-checked"),
+    "stats_table_ndv" -> ("approx-estimator: HLL column NDV — register state unreplayable; exact " +
+      "twin stats_table IS oracle-checked"),
+  )
+
   val oracles: Map[String, String] = Map(
     // the relational meaning of a dynamic overwrite: non-named
     // partitions verbatim, the named partition replaced by the batch

@@ -40,13 +40,6 @@ import Exact._
 object TpcdsQueries3 extends graft.QueryModule {
 
   private val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-  private val D = org.apache.spark.sql.types.DecimalType(38, 6)
-
-  /** Exact money in integer micros: DECIMAL(38,6) fold × 1e6. */
-  private def micros(e: org.apache.spark.sql.Column) =
-    (sum(e.cast(D)) * 1000000).cast("long")
-  private def sqlMicros(expr: String): String =
-    s"CAST(SUM(CAST(($expr) AS DECIMAL(38,6))) * 1000000 AS BIGINT)"
 
   private def views(spark: SparkSession, dir: String): Unit = {
     val t = Tables(spark, dir)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import Exact._
@@ -43,17 +43,6 @@ import Exact._
 object TpcdsQueries4 extends graft.QueryModule {
 
   private val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-  private val D = org.apache.spark.sql.types.DecimalType(38, 6)
-
-  /** Exact money in integer micros: DECIMAL(38,6) fold × 1e6. */
-  private def micros(e: Column) = (sum(e.cast(D)) * 1000000).cast("long")
-  private def sqlMicros(expr: String): String =
-    s"CAST(SUM(CAST(($expr) AS DECIMAL(38,6))) * 1000000 AS BIGINT)"
-  /** Conditional micros: only rows matching `cond` contribute. */
-  private def microsIf(cond: Column, e: Column) =
-    (sum(when(cond, e.cast(D)).otherwise(lit(0).cast(D))) * 1000000).cast("long")
-  private def sqlMicrosIf(cond: String, expr: String): String =
-    s"CAST(SUM(CASE WHEN $cond THEN CAST(($expr) AS DECIMAL(38,6)) ELSE CAST(0 AS DECIMAL(38,6)) END) * 1000000 AS BIGINT)"
 
   val queries: Map[String, Q] = Map(
     // DS51 (q13 shape): one global average row under three disjunctive

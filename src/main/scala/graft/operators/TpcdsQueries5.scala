@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import Exact._
 
 /** Round-11 TPC-DS batch 6 (SURVEY.md §2 DS60–DS62): the three
   * heaviest planner stress-tests of the reference's own TPC-DS suite
@@ -50,15 +51,6 @@ import graft.Tables
   * every LIMIT carries a total ORDER over its group keys.
   */
 object TpcdsQueries5 extends graft.QueryModule {
-
-  private val D = org.apache.spark.sql.types.DecimalType(38, 6)
-  private def micros(e: Column) = (sum(e.cast(D)) * 1000000).cast("long")
-  private def sqlMicros(expr: String): String =
-    s"CAST(SUM(CAST(($expr) AS DECIMAL(38,6))) * 1000000 AS BIGINT)"
-  private def microsIf(cond: Column, e: Column) =
-    (sum(when(cond, e.cast(D)).otherwise(lit(0).cast(D))) * 1000000).cast("long")
-  private def sqlMicrosIf(cond: String, expr: String): String =
-    s"CAST(SUM(CASE WHEN $cond THEN CAST(($expr) AS DECIMAL(38,6)) ELSE CAST(0 AS DECIMAL(38,6)) END) * 1000000 AS BIGINT)"
 
   /** Integer week index: days since epoch DIV 7 (both engines exact —
     * the dates are midnight timestamps). */

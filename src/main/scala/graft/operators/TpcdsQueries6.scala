@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import Exact._
 
 /** Round-11 TPC-DS batch 7 (SURVEY.md §2 DS63–DS64), adapting
   * apache-impala-4.1.0/testdata/workloads/tpcds/queries/
@@ -33,11 +34,7 @@ import graft.Tables
   * engines sort/compare identical strings. */
 object TpcdsQueries6 extends graft.QueryModule {
 
-  private val D = org.apache.spark.sql.types.DecimalType(38, 6)
   private val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-  private def micros(e: Column) = (sum(e.cast(D)) * 1000000).cast("long")
-  private def sqlMicros(expr: String): String =
-    s"CAST(SUM(CAST(($expr) AS DECIMAL(38,6))) * 1000000 AS BIGINT)"
 
   private def views(spark: SparkSession, dir: String): Unit = {
     val t = Tables(spark, dir)

@@ -393,6 +393,11 @@ object Curation extends graft.QueryModule {
       sourceCap(Tables(spark, dir).documents).orderBy("doc_id")),
   )
 
+  override val rowsOnly: Map[String, String] = Map(
+    "pipe_pack_bfd" -> ("sequential-argmin: best-fit-decreasing packing is order-dependent — no " +
+      "replay exists; capacity/coverage spec"),
+  )
+
   val oracles: Map[String, String] = Map(
     // full replay: FNV-hashed uni+bigram buckets, conditional counts,
     // the one floored log-ratio quantization per bucket, integer score

@@ -709,6 +709,21 @@ object Multimodal extends graft.QueryModule {
     }),
   )
 
+  override val rowsOnly: Map[String, String] = Map(
+    "mm_audio_decode" -> ("fake-codec: no DuckDB-side codec (real or fake) — no replay exists; " +
+      "pinned-value spec (PipelineSpec)"),
+    "mm_audio_frames" -> ("fake-codec: frame windows over fake PCM — no replay exists; " +
+      "pinned-value spec"),
+    "mm_image_decode" -> ("fake-codec: deterministic fake image decode — no replay exists; " +
+      "pinned-value spec"),
+    "mm_image_phash" -> ("fake-codec: perceptual hash over fake decode — no replay exists; " +
+      "pinned-value spec"),
+    "mm_image_resize" -> ("fake-codec: resize over fake decode — no replay exists; pinned-value " +
+      "spec"),
+    "mm_video_decode" -> ("fake-codec: frame-sample over fake video — no replay exists; " +
+      "pinned-value spec"),
+  )
+
   val oracles: Map[String, String] = Map(
     // byte-level triage replay: payload reconstructed per modality
     // (magic || text bytes), bytes recovered from hex(payload) pairs,

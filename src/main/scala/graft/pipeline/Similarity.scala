@@ -920,6 +920,22 @@ object Similarity extends graft.QueryModule {
        |    $rows) AS t(m, code, ci))""".stripMargin
   }
 
+  override val rowsOnly: Map[String, String] = Map(
+    "dedup_semantic" -> ("float-centroid: k-means TRAINING (IEEE reduction order) — no replay of " +
+      "training exists; planted-collapse spec; pinned-cell twin dedup_semantic_pinned IS " +
+      "oracle-exact + g10-certified"),
+    "sim_ivf_persisted" -> ("float-centroid: IVF centroids are float k-means TRAINING output — " +
+      "training unreplayable; recall spec; pinned-quantizer twin sim_ivf_topk_pinned IS " +
+      "oracle-exact + spec-pinned equal to this serve path over the frozen tables"),
+    "sim_ivf_topk" -> ("float-centroid: IVF probe against trained float centroids — training " +
+      "unreplayable; pinned-quantizer twin sim_ivf_topk_pinned IS oracle-exact (P8c)"),
+    "sim_pq_persisted" -> ("float-centroid: PQ codebooks are float k-means TRAINING output — " +
+      "training unreplayable; recall spec; pinned-codebook twin sim_pq_topk_pinned IS " +
+      "oracle-exact + spec-pinned equal to this serve path"),
+    "sim_pq_topk" -> ("float-centroid: PQ ADC scan under trained codebooks — training " +
+      "unreplayable; pinned-codebook twin sim_pq_topk_pinned IS oracle-exact (P33c)"),
+  )
+
   val oracles: Map[String, String] = Map(
     // DuckDB computes the same double-accumulated cosine once FLOAT[] is
     // cast to DOUBLE[]; rank ties broken by c_id after rounding to 6.

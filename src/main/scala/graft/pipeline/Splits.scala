@@ -293,6 +293,11 @@ object Splits extends graft.QueryModule {
       leakageSafeSplit(Tables(spark, dir).documents).orderBy("doc_id")),
   )
 
+  override val rowsOnly: Map[String, String] = Map(
+    "sample_weighted" -> ("seeded-rng: A-ES weighted reservoir keys are engine-local — no replay " +
+      "exists; distribution spec"),
+  )
+
   val oracles: Map[String, String] = Map(
     // Full replay of the temperature pipeline: DuckDB's power() runs on
     // the same 5 (n_l, N) pairs, lands on the same 1e6 grid, and every

@@ -294,6 +294,18 @@ object Tokenizer extends graft.QueryModule {
   private val DoubledPat: String =
     (('a' to 'z') ++ ('0' to '9')).map(c => s"$c$c").mkString("(", "|", ")")
 
+  override val rowsOnly: Map[String, String] = Map(
+    "pipe_bpe_merges" -> ("sequential-argmin: BPE TRAINING = sequential argmax merge loop — no " +
+      "single-SQL replay exists; pinned-merges spec"),
+    "pipe_bpe_tokenize" -> ("sequential-argmin: tokenization under the TRAINED merge list — " +
+      "training unreplayable; pinned-table twin pipe_bpe_tokenize_pinned IS oracle-exact"),
+    "pipe_token_fertility" -> ("float-centroid: fertility under the TRAINED unigram vocab — " +
+      "training unreplayable; pinned-vocab twin pipe_token_fertility_pinned IS oracle-exact"),
+    "pipe_unigram_tokenize" -> ("float-centroid: unigram EM training (float likelihood loop) — " +
+      "training unreplayable; pinned-vocab twin pipe_unigram_tokenize_pinned IS oracle-exact " +
+      "(piece-for-piece, P50b)"),
+  )
+
   val oracles: Map[String, String] = Map(
     // closed-form replay of the pinned char+bigram vocab: every word of
     // length L Viterbi-segments into ceil(L/2) pieces (see

@@ -357,14 +357,7 @@ object HudiSink {
     * through more distinct commit files than that (test suites). A
     * stale entry cannot be served: the key carries length + mtime and
     * completed commits are immutable. */
-  private val rangeCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long, Long), Map[String, KeyRange]](
-        1024, 0.75f, /* accessOrder = */ true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Long), Map[String, KeyRange]]): Boolean =
-          size() > 65536
-      })
+  private val rangeCache = graft.Lru[(String, Long, Long), Map[String, KeyRange]](65536)
 
   /** Footer-probe results for FOREIGN-writer base files (no recorded
     * range in any commit body), keyed by (path, length, mtime) — base
@@ -374,14 +367,7 @@ object HudiSink {
     * cost class S20g removed for sink-written tables). Same per-entry
     * LRU discipline as [[rangeCache]]: never clear-all, and a stale
     * entry cannot be served because the key carries length + mtime. */
-  private val probeCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long, Long), KeyRange](
-        1024, 0.75f, /* accessOrder = */ true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Long), KeyRange]): Boolean =
-          size() > 65536
-      })
+  private val probeCache = graft.Lru[(String, Long, Long), KeyRange](65536)
 
   /** Per-file `_hoodie_record_key` ranges recorded in completed commit
     * bodies (`minKeyHex`/`maxKeyHex`/`emptyFile` on each writeStat —

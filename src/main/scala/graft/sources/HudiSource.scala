@@ -94,14 +94,7 @@ object HudiRO {
     * never clear-all (a >cap timeline must keep its working set). A
     * REFUSAL (unparsable body) is deliberately NOT cached: the file
     * could be fixed in place, and refusing is already the slow path. */
-  private val replaceCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long, Long), Map[String, Set[String]]](
-        1024, 0.75f, /* accessOrder = */ true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Long), Map[String, Set[String]]]): Boolean =
-          size() > 65536
-      })
+  private val replaceCache = graft.Lru[(String, Long, Long), Map[String, Set[String]]](65536)
 
   private def parseReplaceBody(fs: org.apache.hadoop.fs.FileSystem,
                                tableDir: String, fp: Path,

@@ -85,4 +85,12 @@ class TablesSpec extends SparkSpec {
     orders.repartition(spark.sparkContext.defaultParallelism).write.mode("overwrite").parquet(path)
     assert(!spreads, "a table with a file per core must not be spread")
   }
+
+  test("Lru: past its bound it drops the least recently used entry, not the oldest") {
+    val m = Lru[String, Int](2)
+    m.put("a", 1); m.put("b", 2)
+    m.get("a")
+    m.put("c", 3)
+    assert(m.containsKey("a") && !m.containsKey("b") && m.containsKey("c") && m.size == 2)
+  }
 }
