@@ -4,14 +4,14 @@ runs graft.Verify at a given SF, then replays each oracle SQL in DuckDB
 over the same parquet tables and diffs against Spark's parquet output
 with perfbench/run.py's rule (sorted rows, exact string values). The
 result of an oracle that reads only the tables is cached under
-perfbench/.work/oracle, keyed by its SQL, the DuckDB version and every
-table file's (path, size, mtime); `rm -r perfbench/.work/oracle` clears
-it. Oracles that read a file Verify wrote, and Spark outputs, are never
-cached. NOT part of the shipped library.
+perfbench/.work/oracle, keyed by its SQL, the DuckDB version and the
+(path, size, mtime) of every file of the tables its SQL names;
+`rm -r perfbench/.work/oracle` clears it. Oracles that read a file
+Verify wrote, and Spark outputs, are never cached. NOT part of the shipped library.
 
 Usage: python3 dev/check.py [sfDir] [outDir] [--skip-verify]
 """
-import sys, os, json, glob, subprocess
+import sys, os, re, json, glob, subprocess
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "perfbench"))
 import duckdb
 from run import canonical, compare, expected_rows
@@ -32,19 +32,25 @@ if "--skip-verify" not in sys.argv:
             print(line)
 
 con = duckdb.connect()
-for p in glob.glob(f"{sf}/*.parquet"):
+tables = {}  # view name -> its files; a directory table counts file by file
+for p in sorted(glob.glob(f"{sf}/*.parquet")):
     name = os.path.basename(p).replace(".parquet", "")
     # driver testdata ships single-file parquet; dev-generated scale
     # dirs (ScaleGen) are Spark-written DIRECTORIES — glob inside them
     src = f"{p}/*.parquet" if os.path.isdir(p) else p
     con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{src}'")
-# the oracle cache key covers every table file; a directory table
-# counts file by file, so rewriting any file in it misses the cache
-files = []
-for p in sorted(glob.glob(f"{sf}/*.parquet")):
-    files += sorted(os.path.join(d, n) for d, _, ns in os.walk(p) for n in ns) if os.path.isdir(p) else [p]
-fingerprint = json.dumps([duckdb.__version__] + [
-    (f, os.stat(f).st_size, os.stat(f).st_mtime_ns) for f in files])
+    tables[name] = sorted(os.path.join(d, n) for d, _, ns in os.walk(p) for n in ns) if os.path.isdir(p) else [p]
+
+
+def fingerprint(sql):
+    """The oracle cache key beside the SQL: the DuckDB version and the
+    files of every table the SQL names as a whole word, in any case. A
+    name that is also a column or a word in a literal over-matches,
+    which costs only a cache miss."""
+    named = [n for n in tables if re.search(rf"\b{re.escape(n)}\b", sql, re.IGNORECASE)]
+    return json.dumps([duckdb.__version__] + [
+        (f, os.stat(f).st_size, os.stat(f).st_mtime_ns) for n in named for f in tables[n]])
+
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
 # File-reading oracles pin the driver's verification SF (sf0.01) in
@@ -60,7 +66,7 @@ for name in sorted(oracle):
     if not os.path.isdir(spark_dir):
         results[name] = "NO_SPARK_OUTPUT"; continue
     try:
-        expected = expected_rows(con, sql, fingerprint)
+        expected = expected_rows(con, sql, fingerprint(sql))
     except Exception as e:
         results[name] = f"ORACLE_ERR {e}"; continue
     try:

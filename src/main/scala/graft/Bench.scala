@@ -106,80 +106,46 @@ object Bench {
         case p if p.nodeName.contains("Join") => p.nodeName
       } catch { case _: Throwable => Nil }
     val runs = selected.map { case (name, fn) =>
-      // Untimed fixture pre-build: write-once inputs (nested parquet
-      // file, Iceberg table) land OUTSIDE the timed iterations, so the
-      // iterations measure the read path with a flat profile.
-      try Fixtures.prepare.get(name).foreach(_(spark, sfDir))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name fixture prepare failed: ${e.getMessage}")
-      }
-      var err: String = null
-      // One UNTIMED warm-up iteration before the timed ones (r9 verdict
-      // #4): the driver artifact's medians swung up to 15x off steady
-      // state because a cold first iteration (file listing, codegen,
-      // page cache) could land IN the median window of 3. The warm-up
-      // absorbs the cold state so the timed iterations measure the
-      // query. A warm-up failure is not an error by itself — the timed
-      // loop below reports it identically.
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      // Per-iteration 1-minute load average, sampled AT each iteration
-      // start: a slow iteration with high load1m is machine-attributable
-      // contamination, not a code regression (r9 verdict #4).
-      val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      // (load, time) sampled together so the emitted iter_load1m array
-      // stays ALIGNED with iter_times when an iteration fails — a load
-      // attributed to the wrong timing sample would point contamination
-      // diagnosis at the wrong iteration (round-10 review).
-      val samples = (1 to iters).map { _ =>
-        val load = osBean.getSystemLoadAverage
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (load, Some((System.nanoTime() - t0) / 1e9))
-        } catch { case e: Throwable =>
-          if (err == null) {
-            err = String.valueOf(e.getMessage).take(200)
-            System.err.println(s"[bench] $name FAILED: $err")
+      RunStep.around(spark, sfDir, name) {
+        // One UNTIMED warm-up iteration (r9 verdict #4): a cold first
+        // iteration (file listing, codegen, page cache) in the median
+        // window of 3 swung medians up to 15x off steady state. A
+        // warm-up failure is reported by the timed loop, identically.
+        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        catch { case _: Throwable => () }
+        // The 1-minute load average at each iteration's start, sampled
+        // with its time so iter_load1m stays aligned with iter_times when
+        // an iteration fails: a slow iteration under high load is
+        // co-tenant contamination, not a regression (r9 #4, r10 review).
+        val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+        var err: String = null
+        (1 to iters).map { _ =>
+          val load = osBean.getSystemLoadAverage
+          val t0 = System.nanoTime()
+          try {
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            (load, Some((System.nanoTime() - t0) / 1e9))
+          } catch { case e: Throwable =>
+            if (err == null) {
+              err = String.valueOf(e.getMessage).take(200)
+              System.err.println(s"[bench] $name FAILED: $err")
+            }
+            (load, None)
           }
-          (load, None)
         }
+      } { samples =>
+        // Iterations share a warm cache (persist() is part of a query's
+        // plan); the step's sweep has cleared it. The join signature is
+        // planned now, before the step's cleanup deletes the inputs of a
+        // fixture-backed query, for headliners and anything >= 0.8 s
+        // (every query a dynamic top-10 could select).
+        val times = samples.flatMap(_._2)
+        val median =
+          if (times.isEmpty) None else Some(times.sorted.apply(times.length / 2))
+        val joins =
+          if (median.exists(m => m >= 0.8 || headline.contains(name))) joinSig(fn) else Nil
+        (name, median, times, joins, samples.collect { case (l, Some(_)) => l })
       }
-      val times = samples.flatMap(_._2)
-      val loads = samples.collect { case (l, Some(_)) => l }
-      // Cache hygiene BETWEEN queries (iterations of one query share
-      // warm cache — persist() is part of that query's plan): without
-      // this, every persisted subtree (corpus gate, q49 aggregate) and
-      // the CC fixpoint's label RDDs pile up across ~200 queries × 3
-      // iterations, and storage-vs-execution memory contention slows
-      // every query that runs after them. Root cause of the round-4
-      // driver regressions: dedup_minhash_lsh, ds_cte_chain, ds_q14,
-      // ds_q23, ds_q49 all sort alphabetically AFTER the two queries
-      // that introduced persists in round 4. catalog.clearCache()
-      // only drops SQL-cached plans; raw RDD persists need the
-      // getPersistentRDDs sweep. blocking = true: async removal lets a
-      // predecessor's storage reclaim stay in flight into the NEXT
-      // query's timed iterations (the round-5 residual-slowness
-      // suspect) — the sweep itself is untimed, so paying the wait here
-      // costs nothing and makes each query's start state deterministic.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      val median =
-        if (times.isEmpty) None else Some(times.sorted.apply(times.length / 2))
-      // Capture the join signature BEFORE fixture cleanup (the plan of
-      // a fixture-backed query needs its input on disk) — for static
-      // headliners and anything expensive enough to matter (>= 0.8 s:
-      // covers every query a dynamic top-10 could ever select).
-      val joins =
-        if (median.exists(m => m >= 0.8 || headline.contains(name))) joinSig(fn) else Nil
-      // Delete this query's /tmp output so its writeback can't bleed
-      // into the next queries' timings (round-6: the whole src_*
-      // neighborhood showed inflated first iterations).
-      try Fixtures.cleanup.get(name).foreach(_(spark, sfDir))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name fixture cleanup failed: ${e.getMessage}")
-      }
-      (name, median, times, joins, loads.toSeq)
     }
     val failed = runs.collect { case (n, None, _, _, _) => n }
     val flaky = runs.collect { case (n, Some(_), ts, _, _) if ts.length < iters => n }

@@ -30,18 +30,10 @@ object Verify {
           }
         }
       })
-    // ADVICE r14: task-end events are delivered ASYNCHRONOUSLY on the
-    // listener bus, so spill deltas sampled right after a query's action
-    // could misattribute bytes to the next query. Drain the bus before
-    // each sample (listenerBus/waitUntilEmpty are private[spark] —
-    // public at the bytecode level, so reflection reaches them;
-    // best-effort: if the method moves, attribution degrades to the old
-    // approximate sampling rather than failing the run).
-    def drainListenerBus(): Unit = try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    } catch { case _: Throwable => () }
+    // Task-end events arrive ASYNCHRONOUSLY on the listener bus, so
+    // spill deltas sampled right after a query's action could
+    // misattribute bytes to the next query: drain the bus before each
+    // sample (ADVICE r14).
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY: regex filter for local iteration (same knob as
     // Bench); the driver runs unfiltered.
@@ -49,23 +41,18 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
       .foreach { case (name, fn) =>
-      drainListenerBus() // flush the PREVIOUS query's stragglers first
+      RunStep.drain(spark) // flush the PREVIOUS query's stragglers first
       val (m0, d0) = (memSpilled.get(), diskSpilled.get())
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      drainListenerBus() // ...and THIS query's, before sampling
+      RunStep.drain(spark) // ...and THIS query's, before sampling
       val (dm, dd) = (memSpilled.get() - m0, diskSpilled.get() - d0)
       if (dm > 0 || dd > 0)
         System.err.println(s"[verify] spill $name mem=$dm disk=$dd")
-      // same cache hygiene as Bench: drop each query's persisted
-      // subtrees/RDDs so ~200 queries don't accumulate storage blocks
-      // (blocking, so reclaim can't overlap the next query — same
-      // determinism rationale as Bench's sweep)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      RunStep.sweep(spark) // same cache hygiene as Bench
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -37,26 +37,12 @@ class PipelineSpec extends SparkSpec {
   test("minhash LSH surfaces bucket truncation via observed metrics") {
     // 5 identical docs, maxBucket=3: every band bucket holds 5 ids →
     // each counts as truncated; the observe() metric must report it
-    @volatile var seen: Option[org.apache.spark.sql.Row] = None
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit =
-        qe.observedMetrics.get("minhash_lsh_buckets").foreach(r => seen = Some(r))
-      override def onFailure(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val docs = docsDf((1L to 5L).map(i => (i, "same words in every document", "s1")): _*)
+    val docs = docsDf((1L to 5L).map(i => (i, "same words in every document", "s1")): _*)
+    val m = observed("minhash_lsh_buckets") {
       Dedup.minhashCandidates(docs, maxBucket = 3, minJaccard = 0.1).collect()
-      var tries = 0 // listener fires asynchronously after the action
-      while (seen.isEmpty && tries < 100) { Thread.sleep(100); tries += 1 }
-      val m = seen.getOrElse(fail("no minhash_lsh_buckets metric observed"))
-      assert(m.getAs[Long]("truncated_buckets") > 0, m.toString)
-      assert(m.getAs[Int]("max_bucket_size") == 5, m.toString)
-    } finally spark.listenerManager.unregister(listener)
+    }
+    assert(m.getAs[Long]("truncated_buckets") > 0, m.toString)
+    assert(m.getAs[Int]("max_bucket_size") == 5, m.toString)
   }
 
   test("ngram jaccard pairs stay within source buckets and respect the threshold") {
@@ -823,29 +809,14 @@ class PipelineSpec extends SparkSpec {
 
   test("corpus cleaner reports per-gate attrition via observed metrics") {
     import graft.pipeline.Corpus
-    @volatile var seen: Option[org.apache.spark.sql.Row] = None
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit =
-        qe.observedMetrics.get("corpus_gates").foreach(r => seen = Some(r))
-      override def onFailure(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-      val kept = Corpus.clean(docs).count()
-      var tries = 0
-      while (seen.isEmpty && tries < 100) { Thread.sleep(100); tries += 1 }
-      val m = seen.getOrElse(fail("no corpus_gates metric observed"))
-      val drops = Seq("dropped_len", "dropped_words", "dropped_stop", "dropped_lang")
-        .map(m.getAs[Long]).sum
-      // first-failing-gate attribution: kept + drops == rows after dedup
-      assert(m.getAs[Long]("kept") == kept, m.toString)
-      assert(m.getAs[Long]("after_dedup") == kept + drops, m.toString)
-    } finally spark.listenerManager.unregister(listener)
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+    var kept = 0L
+    val m = observed("corpus_gates") { kept = Corpus.clean(docs).count() }
+    val drops = Seq("dropped_len", "dropped_words", "dropped_stop", "dropped_lang")
+      .map(m.getAs[Long]).sum
+    // first-failing-gate attribution: kept + drops == rows after dedup
+    assert(m.getAs[Long]("kept") == kept, m.toString)
+    assert(m.getAs[Long]("after_dedup") == kept + drops, m.toString)
   }
 
   test("binary triage: magic-number sniffing and entropy pin known values") {

@@ -400,15 +400,12 @@ class PlanAuditSpec extends SparkSpec {
       "an empty linked input kept its n > 1 range exchange")
   }
 
-  /** Verify's per-query spill attribution drains the listener bus via
-    * reflection (listenerBus/waitUntilEmpty are private[spark], public
-    * at the bytecode level) and DEGRADES SILENTLY if the method moves —
-    * this pin turns a Spark-upgrade rename into a loud test failure
-    * instead of quietly approximate spill numbers in the cert. */
+  /** Verify's per-query spill attribution, the profile and
+    * `jobsDuring` drain the listener bus through reflection on a
+    * private[spark] member; this pin turns a Spark-upgrade rename into
+    * a loud test failure instead of a failed run. */
   test("the listener-bus drain reflection Verify relies on resolves and runs") {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty").invoke(bus) // throws if renamed
+    RunStep.drain(spark) // throws if renamed
   }
 
   /** R19's whole point is driving the EXTERNAL-SORT path: the query
@@ -784,31 +781,10 @@ class PlanAuditSpec extends SparkSpec {
         s"stale allowance: ${allowed -- offenders.toSet}")
   }
 
-  /** The guide-§2.5 input-spread exchange Tables.fact() adds when the
-    * file layout cannot feed the session's parallelism (the bench's
-    * single-row-group parquet inputs): a round-robin repartition
-    * DIRECTLY over a bare file scan — nothing but the scan (possibly
-    * codegen-wrapped) below it. The scan-bound pins below ignore
-    * exactly this shape and nothing else: a keyed exchange (hash or
-    * range partitioning), or a round-robin above real compute, still
-    * fails the pin. On any layout with >= cores input splits the
-    * spread is not planned at all, so at scale the pins are unchanged. */
-  private def isInputSpread(
-      e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec): Boolean =
-    e.outputPartitioning.isInstanceOf[
-      org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning] &&
-      // the spread's signature is numPartitions <= defaultParallelism
-      // (== in practice; < only for a table with fewer BYTES than cores
-      // under the width guard) — an unconditional repartition-after-read
-      // with any other width does not ride this exemption (ADVICE r16)
-      e.outputPartitioning.numPartitions <= spark.sparkContext.defaultParallelism &&
-      e.child.collect { case n => n }.forall {
-        case _: FileSourceScanExec => true
-        case _: org.apache.spark.sql.execution.InputAdapter => true
-        case _: org.apache.spark.sql.execution.WholeStageCodegenExec => true
-        case _: org.apache.spark.sql.execution.ColumnarToRowExec => true
-        case _ => false
-      }
+  /** The scan-bound pins below ignore exactly the input spread
+    * ([[graft.tools.Profile.isInputSpread]]) and nothing else. */
+  private def isInputSpread(e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec): Boolean =
+    graft.tools.Profile.isInputSpread(e, spark.sparkContext.defaultParallelism)
 
   /** Round-8 third-session plan shapes: P53 is pure per-row expression
     * work (its only exchange in the registry query is the final

@@ -48,21 +48,33 @@ trait SparkSpec extends AnyFunSuite {
     d.toString
   }
 
-  /** Spark jobs started while `body` runs; the listener bus is drained
-    * through the reflection PlanAuditSpec pins. */
+  /** The `Dataset.observe` metrics row `name` of the last action `body`
+    * runs, read after [[RunStep.drain]] has delivered its events. */
+  def observed(name: String)(body: => Unit): org.apache.spark.sql.Row = {
+    val seen = new java.util.concurrent.atomic.AtomicReference[org.apache.spark.sql.Row]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        qe.observedMetrics.get(name).foreach(seen.set)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { body; RunStep.drain(spark) } finally spark.listenerManager.unregister(listener)
+    Option(seen.get).getOrElse(fail(s"no $name metric observed"))
+  }
+
+  /** Spark jobs started while `body` runs, counted after
+    * [[RunStep.drain]] (which PlanAuditSpec pins). */
   def jobsDuring[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    def drain(): Unit = bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         jobs.incrementAndGet(); ()
       }
     }
-    drain()
+    RunStep.drain(spark)
     sc.addSparkListener(listener)
-    try { val r = body; drain(); (r, jobs.get()) }
+    try { val r = body; RunStep.drain(spark); (r, jobs.get()) }
     finally sc.removeSparkListener(listener)
   }
 }

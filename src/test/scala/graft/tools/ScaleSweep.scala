@@ -86,24 +86,18 @@ object ScaleSweep {
     // even when absolute numbers carry co-tenant noise.
     val results = queries.map { case (name, fn) =>
       val times = scales.map { case (m, dir) =>
-        try graft.Fixtures.prepare.get(name).foreach(_(spark, dir))
-        catch { case e: Throwable =>
-          System.err.println(s"[sweep] $name fixture($dir) failed: ${e.getMessage}")
-        }
-        val ts = (1 to iters).flatMap { _ =>
-          val t0 = System.nanoTime()
-          try {
-            fn(spark, dir).write.format("noop").mode("overwrite").save()
-            Some((System.nanoTime() - t0) / 1e9)
-          } catch { case e: Throwable =>
-            System.err.println(s"[sweep] $name@$m FAILED: ${String.valueOf(e.getMessage).take(200)}")
-            None
+        val ts = graft.RunStep(spark, dir, name) {
+          (1 to iters).flatMap { _ =>
+            val t0 = System.nanoTime()
+            try {
+              fn(spark, dir).write.format("noop").mode("overwrite").save()
+              Some((System.nanoTime() - t0) / 1e9)
+            } catch { case e: Throwable =>
+              System.err.println(s"[sweep] $name@$m FAILED: ${String.valueOf(e.getMessage).take(200)}")
+              None
+            }
           }
         }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-        try graft.Fixtures.cleanup.get(name).foreach(_(spark, dir))
-        catch { case _: Throwable => }
         // min over iters: co-tenant stalls only ever ADD time, so the
         // min is the best estimate of the query's intrinsic cost
         if (name == "dedup_cluster_cc") // r12 drift diagnosis: attribute
