@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   *    `ensure` calls then hit the per-JVM memo.
   * 2. Accumulated /tmp writeback. Each query's written state left in
   *    /tmp bleeds its page-cache writeback into whichever queries run
-  *    next. [[cleanup]] drops every path the query declared right after
+  *    next. [[cleanup]] drops every per-JVM path the query declared right after
   *    its iterations — deleting dirty pages also cancels their pending
   *    writeback. A fixture several queries read is rebuilt, untimed, by
   *    the next one's [[prepare]].
@@ -33,8 +33,11 @@ object Fixtures {
     else Some(name -> ((s: SparkSession, d: String) => fixtures.foreach(_.ensure(s, d))))
   }
 
-  /** Deletion of everything the query reads or writes under /tmp. */
+  /** Deletion of the per-JVM paths the query reads or writes under
+    * /tmp. Static paths stay, as in Verify: the DuckDB oracle reads them
+    * after the writing JVM exits, so a bench run beside a replay must
+    * not delete them. */
   val cleanup: Map[String, Hook] = SparkEntry.tmpPaths.map { case (name, paths) =>
-    name -> ((s: SparkSession, d: String) => paths.foreach(_.drop(s, d)))
+    name -> ((s: SparkSession, d: String) => paths.filter(_.perJvm).foreach(_.drop(s, d)))
   }
 }

@@ -61,7 +61,7 @@ class AvroSource extends TableProvider {
     * aliases). One header read per file is driver-side metadata work,
     * the same bound as the listing itself. */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val path = AvroSource.pathOf(options)
+    val path = SplitFiles.pathOf(options)
     val aliases = AvroSource.parseAliases(options.get("aliases"))
     val files = AvroSource.listFiles(path)
     require(files.nonEmpty, s"no .avro files under $path")
@@ -77,16 +77,12 @@ class AvroSource extends TableProvider {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table = {
-    val split = Option(properties.get("split_bytes")).map(_.toLong)
-      .getOrElse(AvroSource.DefaultSplitBytes)
-    new AvroTable(properties.get("path"), schema, split,
+    new AvroTable(properties.get("path"), schema, SplitFiles.splitBytes(properties),
       AvroSource.parseAliases(properties.get("aliases")))
   }
 }
 
 object AvroSource {
-  val DefaultSplitBytes: Long = 64L * 1024 * 1024
-
   /** `"new:old[|older],new2:old2"` → reader-field aliases (Avro spec
     * rename resolution); empty map when unset. */
   def parseAliases(opt: String): Map[String, Seq[String]] =
@@ -130,25 +126,8 @@ object AvroSource {
       if (seen(f.name) < perFile.length) f.copy(nullable = true) else f))
   }
 
-  def pathOf(options: CaseInsensitiveStringMap): String = {
-    val p = options.get("path")
-    require(p != null, "graft.sources.AvroSource requires .load(path)")
-    p
-  }
-
-  /** Deterministic (name-sorted) listing so partition planning is
-    * stable across runs. */
   def listFiles(path: String): Seq[org.apache.hadoop.fs.Path] =
-    listStatus(path).map(_.getPath)
-
-  def listStatus(path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val conf = org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    fs.listStatus(p).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".avro"))
-      .sortBy(_.getPath.getName)
-  }
+    SplitFiles.listStatus(path, ".avro").map(_.getPath)
 }
 
 class AvroTable(path: String, schema: StructType, splitBytes: Long,
@@ -159,7 +138,7 @@ class AvroTable(path: String, schema: StructType, splitBytes: Long,
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val split = Option(options.get("split_bytes")).map(_.toLong).getOrElse(splitBytes)
+    val split = SplitFiles.splitBytes(options, splitBytes)
     val al = Option(options.get("aliases")).map(AvroSource.parseAliases)
       .filter(_.nonEmpty).getOrElse(aliases)
     new AvroScanBuilder(path, schema, split, al)
@@ -174,27 +153,14 @@ class AvroScanBuilder(path: String, full: StructType, splitBytes: Long,
   override def build(): Scan = new AvroScan(path, pruned, splitBytes, aliases)
 }
 
-/** One byte range of one container; [start, end) in the sync-marker
-  * protocol — read blocks whose first sync AFTER `start` begins before
-  * `end` (DataFileReader.sync/pastSync). Ranges tile the file, so every
-  * block lands in exactly one partition. */
-case class AvroInputPartition(file: String, start: Long, end: Long) extends InputPartition
-
 class AvroScan(path: String, pruned: StructType, splitBytes: Long,
                aliases: Map[String, Seq[String]] = Map.empty) extends Scan with Batch {
   override def readSchema(): StructType = pruned
   override def toBatch: Batch = this
   override def description(): String =
     s"graft_avro $path cols=${pruned.fieldNames.mkString(",")} split=$splitBytes"
-  override def planInputPartitions(): Array[InputPartition] = {
-    require(splitBytes > 0, s"split_bytes must be positive, got $splitBytes")
-    AvroSource.listStatus(path).flatMap { st =>
-      val len = st.getLen
-      val f = st.getPath.toString
-      (0L until math.max(1L, (len + splitBytes - 1) / splitBytes))
-        .map(i => AvroInputPartition(f, i * splitBytes, math.min(len, (i + 1) * splitBytes)))
-    }.toArray
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    SplitFiles.plan(path, ".avro", splitBytes)
   override def createReaderFactory(): PartitionReaderFactory =
     new AvroReaderFactory(pruned, aliases)
 }
@@ -203,7 +169,7 @@ class AvroReaderFactory(pruned: StructType,
                         aliases: Map[String, Seq[String]] = Map.empty)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[AvroInputPartition]
+    val p = partition.asInstanceOf[FileRange]
     new PartitionReader[InternalRow] {
       // executor-local Configuration: file:// and default-FS reads need
       // no driver-side settings; cluster deployments get core-site.xml

@@ -2,10 +2,9 @@ package graft.sources
 
 import java.util
 
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -34,13 +33,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    initial batch are compaction output of already-emitted ids and
   *    are skipped by construction.
   *  - a delta mid-write (Hive Streaming `_flush_length` side file
-  *    present) is deferred to a later trigger, never admitted, never
-  *    fatal — the polling discipline of the Iceberg source.
+  *    present) is deferred to a later trigger, never admitted.
   *
+  * Offsets, admission and poll failures follow the one rule of
+  * [[TailingStream]]: a missing table directory is a failed poll; the
+  * delete-delta and compacted-range refusals fail the stream at once.
   * Admission control (`maxWriteIdsPerTrigger`): at most N delta units
-  * per micro-batch, the T25b analogue — a stream restarted after
-  * downtime drains its catch-up over bounded batches instead of one
-  * unbounded one.
+  * per micro-batch.
   *
   * `abortedWriteIds` (csv option): the reader-side invalid set — a
   * unit whose whole range is aborted is skipped AND stepped over (the
@@ -64,53 +63,20 @@ class HiveAcidStreamSource extends TableProvider {
       Option(options.get("format")).getOrElse("parquet"))
   }
   override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new HiveAcidStreamTable(properties.get("path"), schema)
-}
-
-class HiveAcidStreamTable(path: String, tableSchema: StructType)
-    extends Table with SupportsRead {
-  override def name(): String = s"graft-hive-acid-stream($path)"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val mode = Option(options.get("acidMode")).getOrElse("insert_only")
-    require(mode == "insert_only" || mode == "full",
-      s"acidMode must be insert_only or full, got $mode")
-    new HiveAcidStreamScanBuilder(path, tableSchema,
-      Option(options.get("maxWriteIdsPerTrigger")).map(_.toInt),
-      Option(options.get("abortedWriteIds")).map(
-        _.split(",").map(_.trim.toLong).toSet).getOrElse(Set.empty),
-      fullAcid = mode == "full",
-      format = Option(options.get("format")).getOrElse("parquet"))
+                        properties: util.Map[String, String]): Table = {
+    val path = properties.get("path")
+    new TailTable("hive-acid", path, schema, options => {
+      val mode = Option(options.get("acidMode")).getOrElse("insert_only")
+      require(mode == "insert_only" || mode == "full",
+        s"acidMode must be insert_only or full, got $mode")
+      val maxUnits = Option(options.get("maxWriteIdsPerTrigger")).map(_.toInt)
+      val aborted = Option(options.get("abortedWriteIds"))
+        .map(_.split(",").map(_.trim.toLong).toSet).getOrElse(Set.empty[Long])
+      val format = Option(options.get("format")).getOrElse("parquet")
+      required => new HiveAcidMicroBatchStream(path, required, maxUnits, aborted,
+        fullAcid = mode == "full", format)
+    })
   }
-}
-
-class HiveAcidStreamScanBuilder(path: String, fullSchema: StructType,
-                                maxUnits: Option[Int], aborted: Set[Long],
-                                fullAcid: Boolean = false,
-                                format: String = "parquet")
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = fullSchema
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def build(): Scan = new Scan {
-    override def readSchema(): StructType = required
-    override def description(): String =
-      s"graft-hive-acid-stream $path cols=${required.fieldNames.mkString(",")}"
-    override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-      new HiveAcidMicroBatchStream(path, required, maxUnits, aborted, fullAcid, format)
-  }
-}
-
-case class AcidWriteIdOffset(writeId: Long) extends Offset {
-  override def json(): String = s"""{"writeId":$writeId}"""
-}
-
-/** At most `max` delta units admitted per micro-batch (T25b shape). */
-case class ReadMaxWriteIds(max: Int) extends ReadLimit {
-  require(max > 0, s"maxWriteIdsPerTrigger must be positive, got $max")
 }
 
 object HiveAcidStream {
@@ -298,7 +264,7 @@ class HiveAcidMicroBatchStream(path: String, required: StructType,
                                maxUnits: Option[Int], aborted: Set[Long],
                                fullAcid: Boolean = false,
                                format: String = "parquet")
-    extends MicroBatchStream with SupportsAdmissionControl {
+    extends TailingStream[Long](path, "writeId", -1L, "maxWriteIdsPerTrigger", maxUnits) {
   import HiveAcidStream._
   private def conf =
     org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
@@ -312,88 +278,36 @@ class HiveAcidMicroBatchStream(path: String, required: StructType,
         s"insert-only (rows would need retraction); stream with acidMode=full " +
         s"(CDC rows) or read in batch via readFullAcid")
 
-  @volatile private var lastSeen = -1L
-  private def noteSeen(id: Long): Unit = if (id > lastSeen) lastSeen = id
-
-  override def getDefaultReadLimit: ReadLimit =
-    maxUnits.map(ReadMaxWriteIds(_): ReadLimit).getOrElse(ReadLimit.allAvailable())
-
-  /** Admission-controlled end offset. A polling path never kills the
-    * stream: any listing failure answers `from` (no progress this
-    * trigger). Mid-write units defer themselves AND everything behind
-    * them (units are emitted in write-id order — skipping over an
+  /** Delta units in write-id order, each keyed by its max id. Mid-write
+    * units defer themselves AND everything behind them (skipping over an
     * in-flight unit would reorder the log). */
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val from = start.asInstanceOf[AcidWriteIdOffset].writeId
-    noteSeen(from)
-    val end =
-      try {
-        val names = HiveAcidStream.listNames(path)
-        if (from < 0L) {
-          requireInsertOnly(names)
-          // initial snapshot: start from the best COMPLETE base (it
-          // opaquely covers everything at/below its id), then walk the
-          // complete delta units CONTIGUOUSLY — an in-flight or
-          // not-yet-appeared write id under the watermark holds the
-          // snapshot back (ids commit out of order; skipping one would
-          // lose its rows forever)
-          val complete = names.filter(isComplete(path, _))
-          val start = complete.flatMap(HiveAcid.parseBase(_))
-            .map(_.writeId).maxOption.getOrElse(0L)
-          val walked = HiveAcidStream.contiguousUnits(
-            HiveAcidStream.tailUnits(complete, start, aborted, fullAcid),
-            start, aborted, _ => true)
-          // The ReadLimit applies to the INITIAL batch too: the base is
-          // one unsplittable unit (that justifies base granularity), but
-          // admitting the whole delta tail with it would plan exactly
-          // the unbounded catch-up batch the option exists to prevent —
-          // a fresh checkpoint against a long-lived table drains the
-          // tail in bounded batches like any restart.
-          val limited = limit match {
-            case ReadMaxWriteIds(max) => walked.take(max)
-            case _ => walked
-          }
-          limited.lastOption.map(_.maxId).getOrElse(start)
-        } else {
-          val ready = HiveAcidStream.contiguousUnits(
-            HiveAcidStream.tailUnits(names, from, aborted, fullAcid), from, aborted,
-            u => u.dirs.forall(isComplete(path, _)))
-          val admitted = limit match {
-            case ReadMaxWriteIds(max) => ready.take(max)
-            case _ => ready
-          }
-          if (admitted.isEmpty) from else admitted.last.maxId
-        }
-      } catch {
-        // unsplittable compacted range / delete-delta refusal: these are
-        // permanent table-state facts, not transient races — fail loudly
-        // instead of stalling forever behind the polling catch
-        case e: IllegalStateException => throw e
-        case e: IllegalArgumentException => throw e
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[acid-stream] poll failed (no progress this trigger): $e")
-          from
-      }
-    val off = math.max(end, from)
-    noteSeen(off)
-    AcidWriteIdOffset(off)
+  override protected def pending(from: Long): Seq[Long] = {
+    val names = listNames(path)
+    if (from >= 0L)
+      contiguousUnits(tailUnits(names, from, aborted, fullAcid), from, aborted,
+        u => u.dirs.forall(isComplete(path, _))).map(_.maxId)
+    else {
+      requireInsertOnly(names)
+      // initial snapshot: start from the best COMPLETE base (it
+      // opaquely covers everything at/below its id), then walk the
+      // complete delta units CONTIGUOUSLY — an in-flight or
+      // not-yet-appeared write id under the watermark holds the
+      // snapshot back (ids commit out of order; skipping one would
+      // lose its rows forever)
+      val complete = names.filter(isComplete(path, _))
+      val base = complete.flatMap(HiveAcid.parseBase(_))
+        .map(_.writeId).maxOption.getOrElse(0L)
+      val walked = contiguousUnits(
+        tailUnits(complete, base, aborted, fullAcid), base, aborted, _ => true)
+      // The base is one unsplittable unit that rides with the first
+      // delta unit, so the ReadLimit bounds the INITIAL batch too: a
+      // fresh checkpoint against a long-lived table drains the tail in
+      // bounded batches like any restart.
+      if (walked.isEmpty) Seq(base) else walked.map(_.maxId)
+    }
   }
 
-  override def reportLatestOffset(): Offset = AcidWriteIdOffset(lastSeen)
-  override def latestOffset(): Offset = throw new IllegalStateException(
-    "latestOffset(Offset, ReadLimit) should be called instead (SupportsAdmissionControl)")
-
-  override def initialOffset(): Offset = AcidWriteIdOffset(-1L)
-  override def deserializeOffset(json: String): Offset = {
-    val id = IcebergMeta.mapper.readTree(json).get("writeId").asLong
-    noteSeen(id)
-    AcidWriteIdOffset(id)
-  }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val from = start.asInstanceOf[AcidWriteIdOffset].writeId
-    val to = end.asInstanceOf[AcidWriteIdOffset].writeId
-    noteSeen(to)
+  override protected def plan(from: Long, to: Long): Array[InputPartition] = {
     if (to <= from && from >= 0) return Array.empty
     val names = HiveAcidStream.listNames(path)
     val dirs =
@@ -454,7 +368,4 @@ class HiveAcidMicroBatchStream(path: String, required: StructType,
       // name resolution (empty id map): MM parquet files carry no field ids
       new IcebergReaderFactory(required, Map.empty, HadoopConfBroadcast.get(
         org.apache.spark.sql.SparkSession.active.sparkContext, conf))
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }

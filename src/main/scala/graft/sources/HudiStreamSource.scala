@@ -4,10 +4,9 @@ import java.util
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -44,10 +43,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    through the snapshot path.
   *  - an INFLIGHT instant (no completion marker) is invisible — its
   *    files are never admitted; when the marker lands, the commit is
-  *    picked up whole on a later trigger (the polling discipline).
+  *    picked up whole on a later trigger.
   *
+  * Offsets, admission and poll failures follow the one rule of
+  * [[TailingStream]]; a missing `.hoodie` timeline is a failed poll.
   * Admission control (`maxCommitsPerTrigger`): at most N instants
-  * admitted per micro-batch (T25b shape) — the initial catch-up
+  * admitted per micro-batch — the initial catch-up
   * snapshot lands AS OF the Nth instant (still a consistent view) and
   * the remaining history drains over bounded per-commit batches.
   *
@@ -69,52 +70,17 @@ class HudiStreamSource extends TableProvider {
     HudiStream.tableSchema(path)
   }
   override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new HudiStreamTable(properties.get("path"), schema)
-}
-
-class HudiStreamTable(path: String, tableSchema: StructType)
-    extends Table with SupportsRead {
-  override def name(): String = s"graft-hudi-stream($path)"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new HudiStreamScanBuilder(path, tableSchema,
-      Option(options.get("maxCommitsPerTrigger")).map(_.toInt))
-}
-
-class HudiStreamScanBuilder(path: String, fullSchema: StructType,
-                            maxCommits: Option[Int])
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = fullSchema
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def build(): Scan = new Scan {
-    override def readSchema(): StructType = required
-    override def description(): String =
-      s"graft-hudi-stream $path cols=${required.fieldNames.mkString(",")}"
-    override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-      new HudiMicroBatchStream(path, required, maxCommits,
-        // T29b: real Hudi base files carry record-level meta columns;
-        // their presence (in the TABLE schema, not the pruned
-        // projection) upgrades rewrite commits from fail-fast to CDC
-        hasMetaCols = fullSchema.fieldNames.contains("_hoodie_commit_time"))
+                        properties: util.Map[String, String]): Table = {
+    val path = properties.get("path")
+    new TailTable("hudi", path, schema, options => {
+      val maxCommits = Option(options.get("maxCommitsPerTrigger")).map(_.toInt)
+      // T29b: real Hudi base files carry record-level meta columns;
+      // their presence (in the TABLE schema, not the pruned
+      // projection) upgrades rewrite commits from fail-fast to CDC
+      val hasMetaCols = schema.fieldNames.contains("_hoodie_commit_time")
+      required => new HudiMicroBatchStream(path, required, maxCommits, hasMetaCols)
+    })
   }
-}
-
-/** Offset = instant time ("" = before all history). */
-case class HudiInstantOffset(instant: String) extends Offset {
-  override def json(): String = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    val n = m.createObjectNode(); n.put("instant", instant)
-    m.writeValueAsString(n)
-  }
-}
-
-/** At most `max` commits admitted per micro-batch (T25b shape). */
-case class ReadMaxCommits(max: Int) extends ReadLimit {
-  require(max > 0, s"maxCommitsPerTrigger must be positive, got $max")
 }
 
 object HudiStream {
@@ -149,11 +115,11 @@ object HudiStream {
   /** Completed instants (commits AND replacecommits) in the timeline —
     * replacecommits are included so the end offset CROSSES them and
     * batch planning fails fast, instead of the stream silently
-    * stalling just before one forever. */
+    * stalling just before one forever. A missing timeline throws
+    * `FileNotFoundException`: a failed poll, not a table-state check. */
   private[graft] def completedInstants(tableDir: String): Seq[String] = {
     val p = new Path(tableDir, ".hoodie")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"$tableDir is not a Hudi table (no .hoodie timeline)")
     fs.listStatus(p).toSeq.map(_.getPath.getName).collect {
       case n if n.endsWith(".commit") => n.stripSuffix(".commit")
       case n if n.endsWith(".replacecommit") => n.stripSuffix(".replacecommit")
@@ -164,72 +130,17 @@ object HudiStream {
 class HudiMicroBatchStream(path: String, required: StructType,
                            maxCommits: Option[Int] = None,
                            hasMetaCols: Boolean = false)
-    extends MicroBatchStream with SupportsAdmissionControl {
+    extends TailingStream[String](path, "instant", "", "maxCommitsPerTrigger", maxCommits) {
   private def spark = org.apache.spark.sql.SparkSession.active
   private def hconf = spark.sparkContext.hadoopConfiguration
 
-  /** Newest completed instant successfully observed — the fallback
-    * when a poll races transient filesystem trouble; instants are
-    * monotone so answering an older one just defers pickup (the
-    * polling discipline shared with T25/T27). */
-  @volatile private var lastSeen = ""
-  private def noteSeen(i: String): Unit = if (i > lastSeen) lastSeen = i
-
-  /** Consecutive failed timeline polls. A transient IO hiccup defers
-    * pickup one trigger (the T25/T27 polling discipline), but a
-    * PERMANENTLY missing/deleted table must fail loudly like the batch
-    * reader does — after this many consecutive failures the poll
-    * rethrows instead of idling forever. */
-  private var pollFailures = 0
-  private val maxPollFailures = 3
-
-  override def getDefaultReadLimit: ReadLimit =
-    maxCommits.map(ReadMaxCommits(_): ReadLimit).getOrElse(ReadLimit.allAvailable())
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val from = start.asInstanceOf[HudiInstantOffset].instant
-    noteSeen(from)
-    val all = try {
-      val r = HudiStream.completedInstants(path); pollFailures = 0; r
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        pollFailures += 1
-        if (pollFailures >= maxPollFailures) throw new IllegalStateException(
-          s"$path: timeline poll failed $pollFailures consecutive times — " +
-            "the table is likely missing or deleted, not transiently slow", e)
-        Seq.empty
-    }
-    all.lastOption.foreach(noteSeen)
-    val end = limit match {
-      case ReadMaxCommits(max) =>
-        val pending = all.filter(_ > from)
-        if (pending.isEmpty) from else pending.take(max).last
-      case _ => lastSeen
-    }
-    HudiInstantOffset(if (end > from) end else from)
-  }
-
-  override def reportLatestOffset(): Offset = HudiInstantOffset(lastSeen)
-
-  override def latestOffset(): Offset = throw new IllegalStateException(
-    "latestOffset(Offset, ReadLimit) should be called instead (SupportsAdmissionControl)")
-
-  override def initialOffset(): Offset = HudiInstantOffset("")
-
-  override def deserializeOffset(json: String): Offset = {
-    val inst = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(json).get("instant").asText()
-    noteSeen(inst)
-    HudiInstantOffset(inst)
-  }
+  override protected def pending(from: String): Seq[String] =
+    HudiStream.completedInstants(path).filter(_ > from)
 
   /** (from, to] → input files. From "" it is the RO snapshot as of
     * `to`; otherwise the per-commit file diff, failing fast on
     * rewrites and mid-stream clustering (scaladoc contract above). */
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val from = start.asInstanceOf[HudiInstantOffset].instant
-    val to = end.asInstanceOf[HudiInstantOffset].instant
-    noteSeen(to)
+  override protected def plan(from: String, to: String): Array[InputPartition] = {
     if (to <= from) return Array.empty
     val fs = new Path(path).getFileSystem(hconf)
     val dirs = HudiRO.listPartitionDirs(spark, path)
@@ -313,9 +224,6 @@ class HudiMicroBatchStream(path: String, required: StructType,
     new HudiStreamReaderFactory(required, pcol,
       HadoopConfBroadcast.get(spark.sparkContext, hconf))
   }
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 /** `commitFilter`: non-null on a T29b CDC drain — only rows whose

@@ -1074,7 +1074,7 @@ object IcebergWrite {
     * a concurrent reader — the streaming source polls the hint every
     * trigger — could observe an EMPTY hint mid-rewrite. Rename keeps
     * the window to at-worst "briefly missing", which pollers retry
-    * ([[IcebergMicroBatchStream.latestOffset]]); new-named metadata
+    * (the [[TailingStream]] poll rule); new-named metadata
     * files never overwrite, so this only changes hint behavior. */
   private def writeSmall(fs: FileSystem, p: Path, s: String): Unit = {
     val tmp = new Path(p.getParent, s".${p.getName}.tmp${System.nanoTime()}")
@@ -1362,31 +1362,21 @@ object IcebergRead {
     spark.read.schema(withIds).parquet(files.map(_.path): _*)
   }
 
-  /** Current snapshot id from the metadata tree (0 for a dir that is
-    * not yet a table — the streaming source's "nothing yet" offset). */
-  def currentSnapshotId(tableDir: String, conf: Configuration): Long = {
-    val fs = new Path(tableDir).getFileSystem(conf)
-    val hint = new Path(tableDir, "metadata/version-hint.text")
-    if (!fs.exists(hint)) return 0L
-    load(tableDir, conf).snapshotId
-  }
-
   /** Snapshot ids in (fromId, toId] in commit order — the T25 admission
     * control's unit of batching. Commit order is the metadata file's
     * snapshot-log order; ids from [[IcebergWrite]] are monotone, so the
     * sort is a no-op for our own tables and a safety net for foreign
-    * writers. One metadata-json read; no manifest I/O. */
+    * writers. One metadata-json read; no manifest I/O. A missing
+    * version hint throws `FileNotFoundException`. */
   def snapshotIdsInRange(tableDir: String, conf: Configuration,
                          fromId: Long, toId: Long): Seq[Long] = {
     if (fromId >= toId) return Nil
     val fs = new Path(tableDir).getFileSystem(conf)
-    val hint = new Path(tableDir, "metadata/version-hint.text")
-    if (!fs.exists(hint)) return Nil
     def readAll(p: Path): String = {
       val in = fs.open(p)
       try new String(in.readAllBytes(), "UTF-8") finally in.close()
     }
-    val v = readAll(hint).trim.toInt
+    val v = readAll(new Path(tableDir, "metadata/version-hint.text")).trim.toInt
     val metaNode = mapper.readTree(
       readAll(new Path(tableDir, s"metadata/v$v.metadata.json")))
     metaNode.get("snapshots").elements().asScala
@@ -1591,100 +1581,23 @@ class IcebergScan(path: String, required: StructType, eq: Option[(String, Any)],
     new IcebergMicroBatchStream(path, required, maxSnapshotsPerTrigger)
 }
 
-case class IcebergSnapOffset(id: Long)
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = s"""{"snapshot":$id}"""
-}
-
-/** T25b: the admission-control unit for the Iceberg streaming source —
-  * at most `max` snapshots admitted per micro-batch. Without a cap, a
-  * stream restarted after downtime plans ONE batch spanning every
-  * snapshot committed while it was down; at 100 TB ingest rates that
-  * catch-up batch is unbounded. This is the source-shaped analogue of
-  * the file sources' `maxFilesPerTrigger` / Kafka's
-  * `maxOffsetsPerTrigger`, surfaced as
-  * `.option("maxSnapshotsPerTrigger", n)`. */
-case class ReadMaxSnapshots(max: Int)
-    extends org.apache.spark.sql.connector.read.streaming.ReadLimit {
-  require(max > 0, s"maxSnapshotsPerTrigger must be positive, got $max")
-}
-
+/** T25: the Iceberg table tailed one snapshot range per micro-batch.
+  * Pending units are the snapshot ids after the start offset, read from
+  * the metadata json; a poll that finds no version hint (a deleted
+  * table, or a writer mid-rename) is a failed poll under the
+  * [[TailingStream]] rule. */
 class IcebergMicroBatchStream(path: String, required: StructType,
                               maxSnapshotsPerTrigger: Option[Int] = None)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
-  import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
+    extends TailingStream[Long](path, "snapshot", 0L, "maxSnapshotsPerTrigger",
+      maxSnapshotsPerTrigger) {
   private def conf = org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
 
-  /** Last successfully observed snapshot id — the fallback when a poll
-    * races a writer's hint rename (file briefly missing). Snapshot ids
-    * are monotone, so answering with an older id is always safe: the
-    * new snapshot is simply picked up on the next trigger. A polling
-    * path must never kill the query on a transient metadata race.
-    * Seeded from every offset Spark hands back (deserialize/start), so
-    * a RESTART whose first poll hits the race answers with the
-    * checkpointed offset — not a fresh 0 that would plan an inverted
-    * (N, 0] range and kill the query (ADVICE r8). */
-  @volatile private var lastSeen = 0L
-  private def noteSeen(id: Long): Unit = if (id > lastSeen) lastSeen = id
+  override protected def pending(from: Long): Seq[Long] =
+    IcebergRead.snapshotIdsInRange(path, conf, from, Long.MaxValue)
 
-  override def getDefaultReadLimit: ReadLimit =
-    maxSnapshotsPerTrigger.map(ReadMaxSnapshots(_): ReadLimit)
-      .getOrElse(ReadLimit.allAvailable())
-
-  /** Admission-controlled end offset: poll the hint, then cap the range
-    * (start, newest] to the first `max` snapshots in commit order so a
-    * post-downtime catch-up drains over several bounded micro-batches.
-    * Never answers below `start` — monotone by construction. */
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val from = start.asInstanceOf[IcebergSnapOffset].id
-    noteSeen(from)
-    val id = try IcebergRead.currentSnapshotId(path, conf)
-    catch { case scala.util.control.NonFatal(_) => lastSeen }
-    noteSeen(id)
-    val end = limit match {
-      case ReadMaxSnapshots(max) if lastSeen > from =>
-        // The range enumeration reads the hint + metadata json again and
-        // can hit the same writer-rename race as the poll above; a
-        // POLLING path must never kill the stream, so on failure answer
-        // `from` (no progress this trigger — the cap holds, the next
-        // trigger retries) instead of an uncapped lastSeen.
-        try {
-          val pending = IcebergRead.snapshotIdsInRange(path, conf, from, lastSeen)
-          // Empty range with lastSeen > from is the SAME race in a
-          // different shape: snapshotIdsInRange returns Nil (not a
-          // throw) when the hint is briefly missing mid-rename, and a
-          // snapshot with id lastSeen should otherwise appear in the
-          // range. Answering lastSeen here would bypass the cap and
-          // plan the full catch-up batch — apply the catch branch's
-          // policy instead: no progress this trigger, retry next.
-          if (pending.isEmpty) from
-          else pending.take(max).last
-        } catch { case scala.util.control.NonFatal(_) => from }
-      case _ => lastSeen
-    }
-    IcebergSnapOffset(math.max(end, from))
-  }
-
-  override def reportLatestOffset(): Offset = IcebergSnapOffset(lastSeen)
-
-  override def latestOffset(): Offset = throw new IllegalStateException(
-    "latestOffset(Offset, ReadLimit) should be called instead (SupportsAdmissionControl)")
-
-  override def initialOffset(): Offset = IcebergSnapOffset(0L)
-  override def deserializeOffset(json: String): Offset = {
-    val id = IcebergMeta.mapper.readTree(json).get("snapshot").asLong
-    noteSeen(id)
-    IcebergSnapOffset(id)
-  }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val from = start.asInstanceOf[IcebergSnapOffset].id
-    val to = end.asInstanceOf[IcebergSnapOffset].id
-    noteSeen(to)
+  override protected def plan(from: Long, to: Long): Array[InputPartition] =
     IcebergRead.incrementalFilePaths(path, conf, from, to)
       .map(p => IcebergInputPartition(p): InputPartition).toArray
-  }
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val meta = IcebergMeta.load(path, conf)
@@ -1692,9 +1605,6 @@ class IcebergMicroBatchStream(path: String, required: StructType,
     new IcebergReaderFactory(required, idByName, HadoopConfBroadcast.get(
       org.apache.spark.sql.SparkSession.active.sparkContext, conf))
   }
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 /** Java-serialization carrier for the DRIVER's Hadoop configuration —

@@ -39,14 +39,11 @@ import scala.jdk.CollectionConverters._
   */
 class RcFileSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    RcIO.readSchemaSidecar(AvroSource.pathOf(options))
+    RcIO.readSchemaSidecar(SplitFiles.pathOf(options))
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table = {
-    val split = Option(properties.get("split_bytes")).map(_.toLong)
-      .getOrElse(AvroSource.DefaultSplitBytes)
-    new RcFileTable(properties.get("path"), schema, split)
-  }
+                        properties: util.Map[String, String]): Table =
+    new RcFileTable(properties.get("path"), schema, SplitFiles.splitBytes(properties))
 }
 
 class RcFileTable(path: String, schema: StructType, splitBytes: Long)
@@ -55,10 +52,8 @@ class RcFileTable(path: String, schema: StructType, splitBytes: Long)
   override def schema(): StructType = schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val split = Option(options.get("split_bytes")).map(_.toLong).getOrElse(splitBytes)
-    new RcFileScanBuilder(path, schema, split)
-  }
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new RcFileScanBuilder(path, schema, SplitFiles.splitBytes(options, splitBytes))
 }
 
 class RcFileScanBuilder(path: String, full: StructType, splitBytes: Long)
@@ -68,23 +63,14 @@ class RcFileScanBuilder(path: String, full: StructType, splitBytes: Long)
   override def build(): Scan = new RcFileScan(path, full, pruned, splitBytes)
 }
 
-case class RcInputPartition(file: String, start: Long, end: Long) extends InputPartition
-
 class RcFileScan(path: String, full: StructType, pruned: StructType, splitBytes: Long)
     extends Scan with Batch {
   override def readSchema(): StructType = pruned
   override def toBatch: Batch = this
   override def description(): String =
     s"graft_rcfile $path cols=${pruned.fieldNames.mkString(",")} split=$splitBytes"
-  override def planInputPartitions(): Array[InputPartition] = {
-    require(splitBytes > 0, s"split_bytes must be positive, got $splitBytes")
-    RcIO.listStatus(path).flatMap { st =>
-      val len = st.getLen
-      (0L until math.max(1L, (len + splitBytes - 1) / splitBytes))
-        .map(i => RcInputPartition(st.getPath.toString,
-          i * splitBytes, math.min(len, (i + 1) * splitBytes)))
-    }.toArray
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    SplitFiles.plan(path, ".rc", splitBytes)
   override def createReaderFactory(): PartitionReaderFactory = {
     // pruned ids in the FULL schema's column order — what the Hive
     // reader skips decompression/IO for
@@ -95,7 +81,7 @@ class RcFileScan(path: String, full: StructType, pruned: StructType, splitBytes:
 
 class RcReaderFactory(prunedIds: Seq[Int]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[RcInputPartition]
+    val p = partition.asInstanceOf[FileRange]
     new PartitionReader[InternalRow] {
       private val conf = new org.apache.hadoop.conf.Configuration()
       ColumnProjectionUtils.setReadColumnIDs(conf,
@@ -133,15 +119,6 @@ class RcReaderFactory(prunedIds: Seq[Int]) extends PartitionReaderFactory {
   * sidecar. All cells UTF-8 text; null → `\N`. */
 object RcIO {
   private[sources] val NullBytes = "\\N".getBytes("UTF-8")
-
-  def listStatus(path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val conf = org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    fs.listStatus(p).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".rc"))
-      .sortBy(_.getPath.getName)
-  }
 
   def readSchemaSidecar(path: String): StructType = {
     val conf = org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration

@@ -40,26 +40,14 @@ class SequenceSource extends TableProvider {
     SequenceSource.schema
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table = {
-    val split = Option(properties.get("split_bytes")).map(_.toLong)
-      .getOrElse(AvroSource.DefaultSplitBytes)
-    new SeqFileTable(properties.get("path"), split)
-  }
+                        properties: util.Map[String, String]): Table =
+    new SeqFileTable(properties.get("path"), SplitFiles.splitBytes(properties))
 }
 
 object SequenceSource {
   val schema: StructType = StructType(Seq(
     StructField("key", StringType, nullable = false),
     StructField("value", StringType, nullable = false)))
-
-  def listStatus(path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val conf = org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    fs.listStatus(p).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".seq"))
-      .sortBy(_.getPath.getName)
-  }
 
   private[sources] def stringify(w: Writable): UTF8String = w match {
     case t: Text => UTF8String.fromBytes(t.getBytes, 0, t.getLength)
@@ -81,34 +69,25 @@ class SeqFileTable(path: String, splitBytes: Long) extends Table
       : org.apache.spark.sql.connector.write.WriteBuilder =
     new SeqFileWriteBuilder(path, info.schema())
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val split = Option(options.get("split_bytes")).map(_.toLong).getOrElse(splitBytes)
+    val split = SplitFiles.splitBytes(options, splitBytes)
     new ScanBuilder {
       override def build(): Scan = new SeqFileScan(path, split)
     }
   }
 }
 
-case class SeqFileInputPartition(file: String, start: Long, end: Long) extends InputPartition
-
 class SeqFileScan(path: String, splitBytes: Long) extends Scan with Batch {
   override def readSchema(): StructType = SequenceSource.schema
   override def toBatch: Batch = this
   override def description(): String = s"graft_seqfile $path split=$splitBytes"
-  override def planInputPartitions(): Array[InputPartition] = {
-    require(splitBytes > 0, s"split_bytes must be positive, got $splitBytes")
-    SequenceSource.listStatus(path).flatMap { st =>
-      val len = st.getLen
-      (0L until math.max(1L, (len + splitBytes - 1) / splitBytes))
-        .map(i => SeqFileInputPartition(st.getPath.toString,
-          i * splitBytes, math.min(len, (i + 1) * splitBytes)))
-    }.toArray
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    SplitFiles.plan(path, ".seq", splitBytes)
   override def createReaderFactory(): PartitionReaderFactory = new SeqFileReaderFactory
 }
 
 class SeqFileReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[SeqFileInputPartition]
+    val p = partition.asInstanceOf[FileRange]
     new PartitionReader[InternalRow] {
       private val conf = new org.apache.hadoop.conf.Configuration()
       private val reader = new SequenceFile.Reader(conf,

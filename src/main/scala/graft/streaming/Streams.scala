@@ -422,32 +422,50 @@ object Streams {
     * is directly testable: committing the same batchId twice must
     * leave the table unchanged. */
   def icebergCommitBatch(batch0: DataFrame, batchId: Long, tableDir: String,
-                         bucketCol: String, nBuckets: Int = 4): Unit = {
-    if (batch0.isEmpty) return
-    val conf = batch0.sparkSession.sparkContext.hadoopConfiguration
-    // foreachBatch runs on the query's driver thread, where Spark sets
-    // the query id as a SparkContext local property; direct (non-query)
-    // callers — the replay-contract spec — share one "unattached" lineage.
-    val queryId = Option(batch0.sparkSession.sparkContext.getLocalProperty(
+                         bucketCol: String, nBuckets: Int = 4): Unit =
+    icebergOnce(batch0, batchId, tableDir) { (summary, exists) =>
+      val batch = nullable(batch0)
+      if (exists) graft.sources.IcebergWrite.append(batch, tableDir, summary)
+      else graft.sources.IcebergWrite.write(batch, tableDir, bucketCol, nBuckets, summary)
+    }
+
+  /** The exactly-once step every lakehouse sink shares. `commit` runs
+    * with the marker the format records beside its commit (micro-batch
+    * id, streaming query id) unless `lastCommitted(queryId)`, the
+    * format's own reader of that marker, already covers the batch: a
+    * replayed micro-batch of the same query. foreachBatch runs on the
+    * query's driver thread, where Spark sets the query id as a
+    * SparkContext local property; direct (non-query) callers — the
+    * replay-contract specs — share one "unattached" lineage. */
+  private def exactlyOnce(batch: DataFrame, batchId: Long)(
+      lastCommitted: String => Option[Long])(commit: Map[String, String] => Unit): Unit = {
+    if (batch.isEmpty) return
+    val queryId = Option(batch.sparkSession.sparkContext.getLocalProperty(
       org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY))
       .getOrElse("unattached")
-    val committed = graft.sources.IcebergWrite.lastSummaryLongForId(
-      tableDir, conf, "streaming-batch-id", "streaming-query-id", queryId)
-    if (committed.exists(batchId <= _)) return // replayed micro-batch (same query)
-    // micro-batch schemas flip nullability between the first and
-    // later executions; pin every batch to nullable so the table
-    // schema and all data files agree (parquet required vs
-    // optional). Dataset.to() keeps the original nullability, so
-    // rebuild from the row RDD with the relaxed schema.
-    val batch = batch0.sparkSession.createDataFrame(batch0.rdd,
-      org.apache.spark.sql.types.StructType(batch0.schema.map(_.copy(nullable = true))))
-    val summary = Map("streaming-batch-id" -> batchId.toString,
-      "streaming-query-id" -> queryId)
-    val p = new org.apache.hadoop.fs.Path(tableDir, "metadata/version-hint.text")
-    val fs = p.getFileSystem(conf)
-    if (fs.exists(p)) graft.sources.IcebergWrite.append(batch, tableDir, summary)
-    else graft.sources.IcebergWrite.write(batch, tableDir, bucketCol, nBuckets, summary)
+    if (lastCommitted(queryId).exists(batchId <= _)) return
+    commit(Map("streaming-batch-id" -> batchId.toString, "streaming-query-id" -> queryId))
   }
+
+  /** [[exactlyOnce]] over an Iceberg table, whose snapshot summary holds
+    * the marker; `commit` also learns whether the table exists yet. */
+  private def icebergOnce(batch: DataFrame, batchId: Long, tableDir: String)(
+      commit: (Map[String, String], Boolean) => Unit): Unit = {
+    val conf = batch.sparkSession.sparkContext.hadoopConfiguration
+    exactlyOnce(batch, batchId)(graft.sources.IcebergWrite.lastSummaryLongForId(
+      tableDir, conf, "streaming-batch-id", "streaming-query-id", _)) { summary =>
+      val hint = new org.apache.hadoop.fs.Path(tableDir, "metadata/version-hint.text")
+      commit(summary, hint.getFileSystem(conf).exists(hint))
+    }
+  }
+
+  /** Micro-batch schemas flip nullability between the first and later
+    * executions; pin every batch to nullable so the table schema and all
+    * data files agree (parquet required vs optional). Dataset.to() keeps
+    * the original nullability, so rebuild from the row RDD. */
+  private def nullable(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.rdd,
+      org.apache.spark.sql.types.StructType(df.schema.map(_.copy(nullable = true))))
 
   /** T22: streaming UPSERT sink — the CDC shape: each micro-batch is a
     * set of key-latest rows MERGED into the Iceberg table (S16i
@@ -469,25 +487,12 @@ object Streams {
     * [[icebergCommitBatch]]: replaying a batch id is a no-op). */
   def icebergUpsertBatch(batch0: DataFrame, batchId: Long, tableDir: String,
                          keyCol: String, partitionCol: String,
-                         transform: String = "identity"): Unit = {
-    if (batch0.isEmpty) return
-    val conf = batch0.sparkSession.sparkContext.hadoopConfiguration
-    val queryId = Option(batch0.sparkSession.sparkContext.getLocalProperty(
-      org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY))
-      .getOrElse("unattached")
-    val committed = graft.sources.IcebergWrite.lastSummaryLongForId(
-      tableDir, conf, "streaming-batch-id", "streaming-query-id", queryId)
-    if (committed.exists(batchId <= _)) return
-    val batch = batch0.sparkSession.createDataFrame(
-      batch0.dropDuplicates(keyCol).rdd,
-      org.apache.spark.sql.types.StructType(batch0.schema.map(_.copy(nullable = true))))
-    val summary = Map("streaming-batch-id" -> batchId.toString,
-      "streaming-query-id" -> queryId)
-    val p = new org.apache.hadoop.fs.Path(tableDir, "metadata/version-hint.text")
-    val fs = p.getFileSystem(conf)
-    if (fs.exists(p)) graft.sources.IcebergWrite.mergeUpsert(batch, tableDir, keyCol, summary)
-    else graft.sources.IcebergWrite.write(batch, tableDir, partitionCol, transform, summary)
-  }
+                         transform: String = "identity"): Unit =
+    icebergOnce(batch0, batchId, tableDir) { (summary, exists) =>
+      val batch = nullable(batch0.dropDuplicates(keyCol))
+      if (exists) graft.sources.IcebergWrite.mergeUpsert(batch, tableDir, keyCol, summary)
+      else graft.sources.IcebergWrite.write(batch, tableDir, partitionCol, transform, summary)
+    }
 
   /** T23: streaming CDC sink WITH tombstones — the full
     * change-data-capture shape: each micro-batch carries inserts,
@@ -512,32 +517,19 @@ object Streams {
     * [[icebergUpsertBatch]]). */
   def icebergCdcBatch(batch0: DataFrame, batchId: Long, tableDir: String,
                       keyCol: String, opCol: String, partitionCol: String,
-                      transform: String = "identity"): Unit = {
-    if (batch0.isEmpty) return
-    val conf = batch0.sparkSession.sparkContext.hadoopConfiguration
-    val queryId = Option(batch0.sparkSession.sparkContext.getLocalProperty(
-      org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY))
-      .getOrElse("unattached")
-    val committed = graft.sources.IcebergWrite.lastSummaryLongForId(
-      tableDir, conf, "streaming-batch-id", "streaming-query-id", queryId)
-    if (committed.exists(batchId <= _)) return
-    val batch = batch0.sparkSession.createDataFrame(
-      batch0.dropDuplicates(keyCol).rdd,
-      org.apache.spark.sql.types.StructType(batch0.schema.map(_.copy(nullable = true))))
-    val summary = Map("streaming-batch-id" -> batchId.toString,
-      "streaming-query-id" -> queryId)
-    val p = new org.apache.hadoop.fs.Path(tableDir, "metadata/version-hint.text")
-    val fs = p.getFileSystem(conf)
-    if (fs.exists(p))
-      graft.sources.IcebergWrite.mergeCdc(batch, tableDir, keyCol, opCol, summary)
-    else {
-      // first commit: tombstones against a table that doesn't exist
-      // yet are no-ops; create from the surviving rows
-      val live = batch.filter(org.apache.spark.sql.functions.col(opCol) =!= "D").drop(opCol)
-      if (!live.isEmpty)
-        graft.sources.IcebergWrite.write(live, tableDir, partitionCol, transform, summary)
+                      transform: String = "identity"): Unit =
+    icebergOnce(batch0, batchId, tableDir) { (summary, exists) =>
+      val batch = nullable(batch0.dropDuplicates(keyCol))
+      if (exists)
+        graft.sources.IcebergWrite.mergeCdc(batch, tableDir, keyCol, opCol, summary)
+      else {
+        // first commit: tombstones against a table that doesn't exist
+        // yet are no-ops; create from the surviving rows
+        val live = batch.filter(col(opCol) =!= "D").drop(opCol)
+        if (!live.isEmpty)
+          graft.sources.IcebergWrite.write(live, tableDir, partitionCol, transform, summary)
+      }
     }
-  }
 
   /** T28b: the Hive→Iceberg migration hop WITH DELETES — a full-ACID
     * table streamed in CDC mode (`acidMode=full`, the T27c source)
@@ -677,17 +669,12 @@ object Streams {
     * contract, the icebergCommitBatch shape). */
   def hudiCommitBatch(batch: DataFrame, batchId: Long, tableDir: String,
                       keyCol: String, partitionCol: Option[String]): Unit = {
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
-    val queryId = Option(spark.sparkContext.getLocalProperty(
-      org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY))
-      .getOrElse("unattached")
-    val committed = graft.sources.HudiSink.lastCommittedBatchId(spark, tableDir, queryId)
-    if (committed.exists(batchId <= _)) return // replayed micro-batch
-    graft.sources.HudiSink.insert(batch, tableDir, keyCol, partitionCol,
-      graft.sources.HudiSink.nextInstant(spark, tableDir),
-      extraMetadata = Map("streaming-batch-id" -> batchId.toString,
-        "streaming-query-id" -> queryId))
+    exactlyOnce(batch, batchId)(graft.sources.HudiSink.lastCommittedBatchId(
+      spark, tableDir, _)) { marker =>
+      graft.sources.HudiSink.insert(batch, tableDir, keyCol, partitionCol,
+        graft.sources.HudiSink.nextInstant(spark, tableDir), extraMetadata = marker)
+    }
   }
 
   /** T31b: streaming Hudi UPSERT sink — CDC-shaped micro-batches MERGE
@@ -718,13 +705,7 @@ object Streams {
   def hudiUpsertBatch(batch: DataFrame, batchId: Long, tableDir: String,
                       keyCol: String, partitionCol: Option[String],
                       orderCol: Option[String] = None): Unit = {
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
-    val queryId = Option(spark.sparkContext.getLocalProperty(
-      org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY))
-      .getOrElse("unattached")
-    val committed = graft.sources.HudiSink.lastCommittedBatchId(spark, tableDir, queryId)
-    if (committed.exists(batchId <= _)) return
     // last-wins collapse: orderCol first (desc), then every remaining
     // ORDERABLE column desc as the deterministic tie-break — never an
     // arbitrary dropDuplicates survivor. Unorderable payloads (MapType,
@@ -756,17 +737,18 @@ object Streams {
     val collapsed = batch
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val em = Map("streaming-batch-id" -> batchId.toString,
-      "streaming-query-id" -> queryId)
-    val instant = graft.sources.HudiSink.nextInstant(spark, tableDir)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$tableDir/.hoodie")))
-      graft.sources.HudiSink.insert(collapsed, tableDir, keyCol, partitionCol,
-        instant, extraMetadata = em)
-    else
-      graft.sources.HudiSink.upsert(collapsed, tableDir, keyCol, partitionCol,
-        instant, extraMetadata = em)
+    exactlyOnce(batch, batchId)(graft.sources.HudiSink.lastCommittedBatchId(
+      spark, tableDir, _)) { em =>
+      val fs = new org.apache.hadoop.fs.Path(tableDir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val instant = graft.sources.HudiSink.nextInstant(spark, tableDir)
+      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$tableDir/.hoodie")))
+        graft.sources.HudiSink.insert(collapsed, tableDir, keyCol, partitionCol,
+          instant, extraMetadata = em)
+      else
+        graft.sources.HudiSink.upsert(collapsed, tableDir, keyCol, partitionCol,
+          instant, extraMetadata = em)
+    }
   }
 
   /** T32: the REVERSE migration hop — Iceberg→Hudi: the T25 snapshot-
@@ -807,18 +789,12 @@ object Streams {
   /** T33's idempotent commit step (directly testable replay contract). */
   def hiveAcidCommitBatch(batch: DataFrame, batchId: Long,
                           tableDir: String): Unit = {
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
-    val queryId = Option(spark.sparkContext.getLocalProperty(
-      org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY))
-      .getOrElse("unattached")
-    val committed = graft.sources.HiveAcidSink.lastCommittedBatchId(
-      spark, tableDir, queryId)
-    if (committed.exists(batchId <= _)) return // replayed micro-batch
-    graft.sources.HiveAcidSink.insertOnly(batch, tableDir,
-      graft.sources.HiveAcidSink.nextWriteId(spark, tableDir),
-      sidecar = Map("streaming-batch-id" -> batchId.toString,
-        "streaming-query-id" -> queryId))
+    exactlyOnce(batch, batchId)(graft.sources.HiveAcidSink.lastCommittedBatchId(
+      spark, tableDir, _)) { marker =>
+      graft.sources.HiveAcidSink.insertOnly(batch, tableDir,
+        graft.sources.HiveAcidSink.nextWriteId(spark, tableDir), sidecar = marker)
+    }
   }
 
   /** T34–T36: the REMAINING migration hops — with T26/T28/T30/T32

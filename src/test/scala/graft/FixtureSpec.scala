@@ -47,4 +47,16 @@ class FixtureSpec extends SparkSpec {
       assert(Files.exists(Paths.get(p, "data")))
     }
   }
+
+  test("Fixtures.cleanup drops the per-JVM nested ORC file and keeps the static parquet file") {
+    import graft.sources.NestedParquet
+    // the DuckDB oracle reads the static file after the writing JVM
+    // exits; a bench run's cleanup must not delete it under a replay
+    val static = NestedParquet.nested.ensure(spark, sf0001)
+    val orc = NestedParquet.orc.ensure(spark, sf0001)
+    Fixtures.cleanup("src_nested_parquet")(spark, sf0001)
+    Fixtures.cleanup("src_nested_orc")(spark, sf0001)
+    assert(Files.exists(Paths.get(static)))
+    assert(!Files.exists(Paths.get(orc)))
+  }
 }

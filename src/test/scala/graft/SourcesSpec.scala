@@ -198,7 +198,7 @@ class SourcesSpec extends SparkSpec {
     val df = spark.range(3000).selectExpr("CAST(id AS string) AS key",
       "repeat(md5(CAST(id AS string)), 2) AS value") // incompressible-ish payload
     SequenceIO.write(df.coalesce(1), dir)
-    assert(graft.sources.SequenceSource.listStatus(dir).size == 1)
+    assert(graft.sources.SplitFiles.listStatus(dir, ".seq").size == 1)
     val back = spark.read.format("graft.sources.SequenceSource")
       .option("split_bytes", "16384").load(dir)
     assert(back.rdd.getNumPartitions > 1,

@@ -928,8 +928,8 @@ class StreamingSpec extends SparkSpec {
     // be carved out exactly
     acidDocDf(9L).write.parquet(s"$root/delta_0000002_0000005_v0000009")
     intercept[IllegalStateException] {
-      ms.planInputPartitions(graft.sources.AcidWriteIdOffset(1L),
-        graft.sources.AcidWriteIdOffset(3L))
+      ms.planInputPartitions(graft.sources.TailOffset("writeId", 1L),
+        graft.sources.TailOffset("writeId", 3L))
     }
     // and a replay whose covering dirs are simply GONE is equally loud
     val root2 = tempDir("graft_t27f")
@@ -939,8 +939,8 @@ class StreamingSpec extends SparkSpec {
         org.apache.spark.sql.types.StructField("doc_id",
           org.apache.spark.sql.types.LongType))), None, Set.empty)
     intercept[IllegalStateException] {
-      ms2.planInputPartitions(graft.sources.AcidWriteIdOffset(1L),
-        graft.sources.AcidWriteIdOffset(3L))
+      ms2.planInputPartitions(graft.sources.TailOffset("writeId", 1L),
+        graft.sources.TailOffset("writeId", 3L))
     }
   }
 
@@ -1142,12 +1142,12 @@ class StreamingSpec extends SparkSpec {
         org.apache.spark.sql.types.StructField("doc_id",
           org.apache.spark.sql.types.LongType))), None, Set.empty)
     intercept[IllegalArgumentException] {
-      ms.latestOffset(graft.sources.AcidWriteIdOffset(-1L),
+      ms.latestOffset(graft.sources.TailOffset("writeId", -1L),
         org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
     }
     intercept[IllegalArgumentException] {
-      ms.planInputPartitions(graft.sources.AcidWriteIdOffset(-1L),
-        graft.sources.AcidWriteIdOffset(1L))
+      ms.planInputPartitions(graft.sources.TailOffset("writeId", -1L),
+        graft.sources.TailOffset("writeId", 1L))
     }
   }
 
@@ -1821,15 +1821,94 @@ class StreamingSpec extends SparkSpec {
       "/nonexistent/graft_t29_missing",
       new org.apache.spark.sql.types.StructType()
         .add("doc_id", org.apache.spark.sql.types.LongType))
-    val start = graft.sources.HudiInstantOffset("")
+    val start = graft.sources.TailOffset("instant", "")
     val lim = ReadLimit.allAvailable()
     // first failures defer pickup (the transient-IO discipline)...
     assert(s.latestOffset(start, lim) ==
-      graft.sources.HudiInstantOffset(""))
+      graft.sources.TailOffset("instant", ""))
     assert(s.latestOffset(start, lim) ==
-      graft.sources.HudiInstantOffset(""))
+      graft.sources.TailOffset("instant", ""))
     // ...but the stream must not idle forever on a permanent condition
     val e = intercept[IllegalStateException] { s.latestOffset(start, lim) }
     assert(e.getMessage.contains("consecutive"), e.getMessage)
+  }
+
+  // ---------------------------------------------------------------
+  // The tailing-stream scaffold the Iceberg, Hive ACID and Hudi
+  // sources share: one poll rule, one offset lifecycle
+  // ---------------------------------------------------------------
+
+  private val docIdSchema = new org.apache.spark.sql.types.StructType()
+    .add("doc_id", org.apache.spark.sql.types.LongType)
+
+  /** The three lakehouse streams, each with its name, over `dirOf(name)`. */
+  private def tails(dirOf: String => String): Seq[(String, graft.sources.TailingStream[_])] = Seq(
+    "iceberg" -> new graft.sources.IcebergMicroBatchStream(dirOf("iceberg"), docIdSchema),
+    "hive-acid" -> new graft.sources.HiveAcidMicroBatchStream(dirOf("hive-acid"), docIdSchema,
+      None, Set.empty),
+    "hudi" -> new graft.sources.HudiMicroBatchStream(dirOf("hudi"), docIdSchema))
+
+  test("Tail: a permanently missing table fails every lakehouse stream after 3 consecutive failed polls") {
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    val missing = "/nonexistent/graft_tail_missing"
+    for ((name, s) <- tails(_ => missing)) {
+      val start = s.initialOffset()
+      // a failed poll makes no progress on its trigger...
+      assert(s.latestOffset(start, ReadLimit.allAvailable()) == start, name)
+      assert(s.latestOffset(start, ReadLimit.allAvailable()) == start, name)
+      // ...and the third consecutive one fails the stream, naming the path
+      val e = intercept[IllegalStateException] {
+        s.latestOffset(start, ReadLimit.allAvailable())
+      }
+      assert(e.getMessage.contains("consecutive") && e.getMessage.contains(missing),
+        s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("Tail: a transient poll failure costs one trigger, and a successful poll resets the count") {
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    import graft.sources.TailOffset
+    val root = tempDir("graft_tail_transient")
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // one committed unit per format
+    graft.sources.IcebergWrite.write(acidDocDf(1L), s"$root/iceberg", "text", "identity")
+    acidDocDf(1L).write.parquet(s"$root/hive-acid/base_0000001")
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/hudi/.hoodie"))
+    hudiTouch(s"$root/hudi/.hoodie/${HI(0)}.commit")
+    val next = Map("iceberg" -> TailOffset("snapshot", 1L),
+      "hive-acid" -> TailOffset("writeId", 1L), "hudi" -> TailOffset("instant", HI(0)))
+    for ((name, s) <- tails(name => s"$root/$name")) {
+      val dir = new org.apache.hadoop.fs.Path(s"$root/$name")
+      val away = new org.apache.hadoop.fs.Path(s"$root/${name}_away")
+      def poll(from: org.apache.spark.sql.connector.read.streaming.Offset) =
+        s.latestOffset(from, ReadLimit.allAvailable())
+      val start = s.initialOffset()
+      assert(fs.rename(dir, away))
+      assert(poll(start) == start, name)
+      assert(poll(start) == start, name)
+      assert(fs.rename(away, dir))
+      // the table is back: this trigger makes progress
+      assert(poll(start) == next(name), name)
+      // the success reset the count: two failures pass again, a third fails
+      assert(fs.rename(dir, away))
+      assert(poll(next(name)) == next(name), name)
+      assert(poll(next(name)) == next(name), name)
+      val e = intercept[IllegalStateException] { poll(next(name)) }
+      assert(e.getMessage.contains("consecutive"), s"$name: ${e.getMessage}")
+      assert(fs.rename(away, dir))
+    }
+  }
+
+  test("Tail: checkpointed offset JSON reads back and renders byte-identical") {
+    val json = Map("iceberg" -> """{"snapshot":7}""", "hive-acid" -> """{"writeId":12}""",
+      "hudi" -> """{"instant":"20240101000000000"}""")
+    val initial = Map("iceberg" -> """{"snapshot":0}""", "hive-acid" -> """{"writeId":-1}""",
+      "hudi" -> """{"instant":""}""")
+    for ((name, s) <- tails(_ => "/nonexistent/graft_tail_json")) {
+      assert(s.deserializeOffset(json(name)).json() == json(name), name)
+      assert(s.initialOffset().json() == initial(name), name)
+      assert(s.deserializeOffset(initial(name)) == s.initialOffset(), name)
+    }
   }
 }
