@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** A path under /tmp that a query writes or reads, one per scale-factor
@@ -85,7 +85,33 @@ object Fs {
       .write.mode("overwrite").parquet(tmp.toString)
     val f = fs(spark, tmp)
     val part = f.listStatus(tmp).map(_.getPath).filter(_.getName.startsWith("part-")).head
-    f.rename(part, new Path(filePath))
+    rename(f, part, new Path(filePath))
     f.delete(tmp, true)
+  }
+
+  /** `fs.rename` that throws when the filesystem refuses (returns
+    * false), so no caller goes on to delete the source or mark the
+    * output complete without it. */
+  def rename(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to)) throw new java.io.IOException(s"rename refused: $from -> $to")
+
+  /** Writes `body` to `p` whole, the HadoopTableOperations device: a
+    * unique hidden temp file beside `p`, then a rename, so a reader —
+    * a streaming source polls its table's version hint every trigger —
+    * never sees a half-written or empty file. Rename FIRST (most
+    * filesystems refuse to rename onto an existing path) and only on
+    * refusal delete `p` and rename again: a JVM that dies before the
+    * rename leaves the old `p` intact, and the window without `p` is
+    * the delete-to-retry gap, which pollers retry. An existing `p` is
+    * replaced. The temp file never outlives a failed write. */
+  def writeAtomic(fs: FileSystem, p: Path, body: String): Unit = {
+    val tmp = new Path(p.getParent, s".${p.getName}.${java.util.UUID.randomUUID()}.tmp")
+    var renamed = false
+    try {
+      val out = fs.create(tmp, false)
+      try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
+      if (!fs.rename(tmp, p)) { fs.delete(p, false); rename(fs, tmp, p) }
+      renamed = true
+    } finally if (!renamed) fs.delete(tmp, false)
   }
 }

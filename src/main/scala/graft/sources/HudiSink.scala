@@ -129,17 +129,6 @@ object HudiSink {
       }
   }
 
-  /** Atomic text write (create temp + rename — the T25 version-hint
-    * device: a poller must never observe a half-written commit body). */
-  private def writeAtomic(spark: SparkSession, p: String, body: String): Unit = {
-    val hp = new Path(p)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(p + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    require(fs.rename(tmp, hp), s"atomic rename failed: $tmp -> $hp")
-  }
-
   /** Create the table skeleton; no-op when the timeline already
     * exists. */
   def createTable(spark: SparkSession, tableDir: String,
@@ -148,7 +137,7 @@ object HudiSink {
     val hoodie = new Path(s"$tableDir/.hoodie")
     if (!fs.exists(hoodie)) {
       fs.mkdirs(hoodie)
-      writeAtomic(spark, s"$tableDir/.hoodie/hoodie.properties",
+      graft.Fs.writeAtomic(fs, new Path(s"$tableDir/.hoodie/hoodie.properties"),
         s"hoodie.table.name=$tableName\nhoodie.table.type=COPY_ON_WRITE\n")
     }
   }
@@ -945,7 +934,8 @@ object HudiSink {
     }
     val em = root.putObject("extraMetadata")
     extraMetadata.foreach { case (k, v) => em.put(k, v) }
-    writeAtomic(spark, s"$tableDir/.hoodie/$instant$markerSuffix", root.toString)
+    graft.Fs.writeAtomic(hfs(spark, tableDir), new Path(s"$tableDir/.hoodie/$instant$markerSuffix"),
+      root.toString)
   }
 
   /** Test seam: commit bodies the most recent [[lastCommittedBatchId]]

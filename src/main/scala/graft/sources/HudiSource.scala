@@ -299,12 +299,6 @@ object HudiQueries extends graft.QueryModule {
   private val C3 = "20240103000000000"
   private val C4 = "20240104000000000"
 
-  private def writeText(spark: SparkSession, p: String, body: String): Unit = {
-    val hp = new Path(p)
-    val out = hp.getFileSystem(spark.sparkContext.hadoopConfiguration).create(hp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-  }
-
   /** Lays out a hand-built table at `root`: `.hoodie/hoodie.properties`
     * and one partition dir per o_orderstatus value, whose base files
     * `files(partitionDir, m4)` writes — `m4(r)` is the partition's
@@ -357,7 +351,8 @@ object HudiQueries extends graft.QueryModule {
     // file groups keyed by relative partition path
     val perPart = statuses.map(st =>
       s""""o_orderstatus=$st": ["fg0", "fg1"]""").mkString(", ")
-    writeText(spark, s"$root/.hoodie/$C2.replacecommit",
+    val replace = new Path(s"$root/.hoodie/$C2.replacecommit")
+    Fs.writeAtomic(replace.getFileSystem(spark.sparkContext.hadoopConfiguration), replace,
       s"""{"partitionToWriteStats": {}, "compacted": false,
          | "operationType": "CLUSTER",
          | "partitionToReplaceFileIds": {$perPart}}""".stripMargin)

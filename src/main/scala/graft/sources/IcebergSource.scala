@@ -1,8 +1,10 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
@@ -150,15 +152,59 @@ object IcebergMeta {
     def specById(id: Int): Seq[PartField] = specs.getOrElse(id, spec)
   }
 
+  /** The table's version hint, relative to the table directory. */
+  private val HintFile = "metadata/version-hint.text"
+
+  /** One committed metadata version: its number N and the parsed
+    * vN.metadata.json tree. Version 0 is a table not yet committed. */
+  private[graft] case class Version(n: Int, tree: ObjectNode)
+
+  /** Reads the table's current version: version-hint.text names N,
+    * then vN.metadata.json. A missing hint throws
+    * `FileNotFoundException`. */
+  private[graft] def current(tableDir: String, conf: Configuration): Version = {
+    val fs = new Path(tableDir).getFileSystem(conf)
+    def read(name: String): Array[Byte] = {
+      val in = fs.open(new Path(tableDir, name))
+      try in.readAllBytes() finally in.close()
+    }
+    val n = new String(read(HintFile), UTF_8).trim.toInt
+    Version(n, mapper.readTree(read(s"metadata/v$n.metadata.json")).asInstanceOf[ObjectNode])
+  }
+
+  /** True when `tableDir` holds a committed table (a version hint). */
+  private[graft] def exists(tableDir: String, conf: Configuration): Boolean = {
+    val hint = new Path(tableDir, HintFile)
+    hint.getFileSystem(conf).exists(hint)
+  }
+
+  /** The one commit step: applies `edit` to `base`'s tree, then writes
+    * it as v(N+1).metadata.json and only then moves the hint to N+1, so
+    * a reader sees version N or N+1 and never a hint to a missing file.
+    * Each file is written whole through a rename ([[graft.Fs.writeAtomic]]).
+    * Not a compare-and-swap: two writers that both read version N both
+    * write v(N+1), and the later rename silently replaces the earlier
+    * commit. */
+  private[sources] def commit(tableDir: String, conf: Configuration, base: Version)(
+      edit: ObjectNode => Unit): Unit = {
+    val fs = new Path(tableDir).getFileSystem(conf)
+    edit(base.tree)
+    base.tree.put("last-updated-ms", System.currentTimeMillis())
+    graft.Fs.writeAtomic(fs, new Path(tableDir, s"metadata/v${base.n + 1}.metadata.json"),
+      mapper.writeValueAsString(base.tree))
+    graft.Fs.writeAtomic(fs, new Path(tableDir, HintFile), (base.n + 1).toString)
+  }
+
   /** Parse metadata/vN.metadata.json (version from version-hint.text).
     * `snapshotId` selects a historical snapshot (time travel); default
     * is the table's current one. */
   def load(tableDir: String, conf: Configuration,
-           snapshotId: Option[Long] = None): TableMeta = {
-    val fs = new Path(tableDir).getFileSystem(conf)
-    val hint = new Path(tableDir, "metadata/version-hint.text")
-    val v = readSmall(fs, hint).trim.toInt
-    val meta = mapper.readTree(readSmall(fs, new Path(tableDir, s"metadata/v$v.metadata.json")))
+           snapshotId: Option[Long] = None): TableMeta =
+    tableMeta(current(tableDir, conf).tree, snapshotId)
+
+  /** The [[TableMeta]] of a parsed metadata tree at `snapshotId`
+    * (default: the current snapshot). */
+  private[graft] def tableMeta(meta: JsonNode, snapshotId: Option[Long] = None): TableMeta = {
     val fields = meta.get("schema").get("fields").elements().asScala.toSeq
     val schema = StructType(fields.map { f =>
       StructField(f.get("name").asText, toSpark(f.get("type").asText),
@@ -186,10 +232,18 @@ object IcebergMeta {
       specs, defaultSpecId)
   }
 
-  private def readSmall(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  /** Every record of the Avro container file at `path`, read with
+    * `schema` (default: the file's own writer schema). */
+  private[sources] def readAvro(path: String, conf: Configuration,
+                                schema: Schema = null): List[GenericRecord] = {
+    val r = new DataFileReader[GenericRecord](new FsInput(new Path(path), conf),
+      new GenericDatumReader[GenericRecord](schema))
+    try r.iterator().asScala.toList finally r.close()
   }
+
+  /** The records of a snapshot's manifest list. */
+  private[sources] def readListRecords(listPath: String, conf: Configuration): List[GenericRecord] =
+    readAvro(listPath, conf, manifestListSchema)
 
   /** Avro schema of a manifest-list entry (v1 manifest_file, the subset
     * this writer populates; field-ids per spec). */
@@ -269,15 +323,6 @@ object IcebergWrite {
             summary: Map[String, String]): Unit =
     write(df, tableDir, bucketCol, s"bucket[$nBuckets]", summary)
 
-  /** Extra snapshot-summary entries rendered after the mandatory
-    * "operation" key — the spec's summary map is the documented place
-    * for commit provenance (the streaming sink stores its batch id
-    * here, the same device iceberg-core's Spark sink uses for
-    * exactly-once). Keys/values must be JSON-string-safe. */
-  private def summaryJson(extra: Map[String, String]): String =
-    (""""operation":"append"""" +:
-      extra.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":"$v"""" }).mkString(",")
-
   /** Streaming replay watermark persisted in TABLE PROPERTIES (r16):
     * snapshot summaries are the T18/T22 commit log, but summaries die
     * with their snapshots — S16g expiry keeping the newest K can drop
@@ -289,15 +334,13 @@ object IcebergWrite {
     * `graft.stream.watermark.<queryId>` (monotone max, never
     * lowered) and [[lastSummaryLongForId]] takes the max of the
     * summary scan and the property. */
-  private def raiseWatermarkProp(
-      node: com.fasterxml.jackson.databind.node.ObjectNode,
-      summary: Map[String, String]): Unit =
+  private def raiseWatermarkProp(node: ObjectNode, summary: Map[String, String]): Unit =
     for {
       qid <- summary.get("streaming-query-id")
       bid <- summary.get("streaming-batch-id").flatMap(_.toLongOption)
     } {
       val props = node.get("properties") match {
-        case o: com.fasterxml.jackson.databind.node.ObjectNode => o
+        case o: ObjectNode => o
         case _ => node.putObject("properties")
       }
       val key = s"graft.stream.watermark.$qid"
@@ -305,68 +348,105 @@ object IcebergWrite {
       if (!prev.exists(_ >= bid)) props.put(key, bid.toString)
     }
 
+  /** The add-snapshot edit: snapshot `id` over the manifest list at
+    * `listPath`, parent-linked to the tree's current snapshot (none on
+    * a new table), becomes current. Its summary is `"operation":
+    * "append"` overridden by `summary`'s entries — the spec's summary
+    * map is the documented place for commit provenance (the streaming
+    * sink stores its batch id here, the same device iceberg-core's
+    * Spark sink uses for exactly-once). */
+  private def addSnapshot(tree: ObjectNode, id: Long, summary: Map[String, String],
+                          listPath: String): Unit = {
+    val snap = tree.get("snapshots").asInstanceOf[ArrayNode].addObject()
+    snap.put("snapshot-id", id)
+    snap.put("timestamp-ms", System.currentTimeMillis())
+    Option(tree.get("current-snapshot-id")).foreach(p => snap.put("parent-snapshot-id", p.asLong))
+    val sm = snap.putObject("summary").put("operation", "append")
+    summary.toSeq.sortBy(_._1).foreach { case (k, v) => sm.put(k, v) }
+    snap.put("manifest-list", listPath)
+    tree.put("current-snapshot-id", id)
+    raiseWatermarkProp(tree, summary)
+  }
+
+  /** Commits `rows` as the next snapshot of the table at `base`, whose
+    * current snapshot `meta` describes: new data files and one manifest
+    * per partition value under the default spec, a manifest list of
+    * `carry` plus the new manifests, then the add-snapshot edit. */
+  private def commitRows(rows: DataFrame, tableDir: String, base: Version, meta: TableMeta,
+                         carry: Seq[GenericRecord], summary: Map[String, String]): Unit = {
+    val conf = rows.sparkSession.sparkContext.hadoopConfiguration
+    val fs = new Path(tableDir).getFileSystem(conf)
+    val snapshotId = meta.snapshotId + 1
+    val sourceCol = meta.schema.fieldNames(meta.spec.head.sourceId - 1)
+    val manifests = writeDataAndManifests(rows, tableDir,
+      if (base.n == 0) "data" else s"data-s$snapshotId",
+      sourceCol, meta.spec, snapshotId, meta.fieldIds)
+    val listPath = writeManifestList(fs, tableDir, snapshotId, carry, manifests, meta.defaultSpecId)
+    commit(tableDir, conf, base)(
+      addSnapshot(_, snapshotId, summary, fs.makeQualified(listPath).toString))
+  }
+
+  /** A partition field on `sourceCol`, named after it with the
+    * transform kind as suffix (none for identity). */
+  private def partField(sourceCol: String, transform: String, sourceId: Int,
+                        fieldId: Int): PartField = {
+    val suffix = transform.takeWhile(_ != '[') match {
+      case "identity" => ""
+      case kind => "_" + kind
+    }
+    PartField(s"$sourceCol$suffix", transform, sourceId, fieldId)
+  }
+
+  private def partFieldNode(p: PartField): ObjectNode = mapper.createObjectNode()
+    .put("name", p.name).put("transform", p.transform)
+    .put("source-id", p.sourceId).put("field-id", p.fieldId)
+
   /** General form: `transform` is any of the spec's value transforms
     * this source supports — "bucket[N]", "truncate[W]", "identity".
     * Identity/truncate on a long or (simple, fs-safe) string column is
     * the common real-world layout (date/tenant partitioning); bucket
-    * spreads a high-cardinality key. */
+    * spreads a high-cardinality key. The new table's tree starts with
+    * no snapshot; its first snapshot commits as version 1 through the
+    * same step as every append. */
   def write(df: DataFrame, tableDir: String, sourceCol: String, transform: String,
             summary: Map[String, String] = Map.empty): Unit = {
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
     val root = new Path(tableDir)
     val fs = root.getFileSystem(conf)
     // create-or-replace guard: only replace a directory that IS an
-    // Iceberg table we (or iceberg-core) wrote — a version-hint or
-    // metadata dir marks it. Refusing to clobber an arbitrary existing
-    // directory keeps a mistyped tableDir from silently destroying
-    // unrelated data (ADVICE r6).
+    // Iceberg table we (or iceberg-core) wrote — a metadata dir marks
+    // it. Refusing to clobber an arbitrary existing directory keeps a
+    // mistyped tableDir from silently destroying unrelated data
+    // (ADVICE r6).
     if (fs.exists(root)) {
-      val looksIceberg = fs.exists(new Path(tableDir, "metadata/version-hint.text")) ||
-        fs.exists(new Path(tableDir, "metadata"))
-      require(looksIceberg,
+      require(fs.exists(new Path(tableDir, "metadata")),
         s"graft iceberg: refusing to replace non-Iceberg directory $tableDir " +
           "(no metadata/ marker); delete it explicitly first")
       fs.delete(root, true)
     }
     fs.mkdirs(new Path(tableDir, "metadata"))
-    val suffix = transform.takeWhile(_ != '[') match {
-      case "identity" => ""
-      case kind => "_" + kind
-    }
-    val spec = Seq(PartField(s"$sourceCol$suffix", transform,
+    val spec = Seq(partField(sourceCol, transform,
       sourceId = df.schema.fieldIndex(sourceCol) + 1, fieldId = 1000))
-    val snapshotId = 1L
-    val manifests = writeDataAndManifests(df, tableDir, "data", sourceCol, spec, snapshotId,
-      fieldIds = 1 to df.schema.length)
-    val listPath = writeManifestList(fs, tableDir, snapshotId, Nil, manifests)
-    val schemaJson = df.schema.fields.zipWithIndex.map { case (f, i) =>
-      s"""{"id":${i + 1},"name":"${f.name}","required":${!f.nullable},"type":"${toIceberg(f.dataType)}"}"""
-    }.mkString("[", ",", "]")
-    val snapJson =
-      s"""{"snapshot-id":$snapshotId,"timestamp-ms":${System.currentTimeMillis()},
-         |"summary":{${summaryJson(summary)}},"manifest-list":"${fs.makeQualified(listPath)}"}""".stripMargin
-    // first commit of a streaming query: seed the expiry-proof
-    // watermark property (see raiseWatermarkProp)
-    val initialProps = (for {
-      qid <- summary.get("streaming-query-id")
-      bid <- summary.get("streaming-batch-id")
-    } yield s""""graft.stream.watermark.$qid":"$bid"""").getOrElse("")
-    val metaJson =
-      s"""{"format-version":1,"table-uuid":"graft-${tableDir.hashCode.toHexString}",
-         |"location":"$tableDir","last-updated-ms":${System.currentTimeMillis()},
-         |"last-column-id":${df.schema.length},
-         |"schema":{"type":"struct","fields":$schemaJson},
-         |"partition-spec":[{"name":"${spec.head.name}","transform":"${spec.head.transform}",
-         |"source-id":${spec.head.sourceId},"field-id":${spec.head.fieldId}}],
-         |"partition-specs":[{"spec-id":0,"fields":[{"name":"${spec.head.name}",
-         |"transform":"${spec.head.transform}","source-id":${spec.head.sourceId},
-         |"field-id":${spec.head.fieldId}}]}],
-         |"last-partition-id":${spec.head.fieldId},
-         |"default-spec-id":0,"properties":{$initialProps},
-         |"current-snapshot-id":$snapshotId,
-         |"snapshots":[$snapJson]}""".stripMargin
-    writeSmall(fs, new Path(tableDir, "metadata/v1.metadata.json"), metaJson)
-    writeSmall(fs, new Path(tableDir, "metadata/version-hint.text"), "1")
+    val tree = mapper.createObjectNode()
+    tree.put("format-version", 1)
+    tree.put("table-uuid", s"graft-${tableDir.hashCode.toHexString}")
+    tree.put("location", tableDir)
+    tree.put("last-column-id", df.schema.length)
+    val fields = tree.putObject("schema").put("type", "struct").putArray("fields")
+    df.schema.fields.zipWithIndex.foreach { case (f, i) =>
+      fields.addObject().put("id", i + 1).put("name", f.name)
+        .put("required", !f.nullable).put("type", toIceberg(f.dataType))
+    }
+    tree.putArray("partition-spec").add(partFieldNode(spec.head))
+    tree.putArray("partition-specs").addObject().put("spec-id", 0)
+      .putArray("fields").add(partFieldNode(spec.head))
+    tree.put("last-partition-id", spec.head.fieldId)
+    tree.put("default-spec-id", 0)
+    tree.putObject("properties")
+    tree.putArray("snapshots")
+    val meta = TableMeta(df.schema, 1 to df.schema.length, spec, manifestList = "",
+      snapshotId = 0L, specs = Map(0 -> spec))
+    commitRows(df, tableDir, Version(0, tree), meta, carry = Nil, summary)
   }
 
   /** Append `df` as a NEW snapshot (Iceberg's snapshot-isolation commit):
@@ -379,40 +459,15 @@ object IcebergWrite {
   def append(df: DataFrame, tableDir: String,
              summary: Map[String, String] = Map.empty): Unit = {
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val fs = new Path(tableDir).getFileSystem(conf)
-    val v = readSmall(fs, new Path(tableDir, "metadata/version-hint.text")).trim.toInt
-    val metaNode = mapper.readTree(
-      readSmall(fs, new Path(tableDir, s"metadata/v$v.metadata.json")))
-    val meta = load(tableDir, conf)
+    val base = current(tableDir, conf)
+    val meta = tableMeta(base.tree)
     require(df.schema.fieldNames.sameElements(meta.schema.fieldNames),
       s"graft iceberg append: schema mismatch ${df.schema.fieldNames.mkString(",")} vs ${meta.schema.fieldNames.mkString(",")}")
-    val pf = meta.spec.head
-    val sourceCol = meta.schema.fieldNames(pf.sourceId - 1)
-    val snapshotId = meta.snapshotId + 1
-    val manifests = writeDataAndManifests(df, tableDir, s"data-s$snapshotId",
-      sourceCol, meta.spec, snapshotId, fieldIds = meta.fieldIds)
     // previous snapshot's manifest-list entries carry over as-is
     // (their files become `existing` in spirit; the v1 counts fields
     // are advisory — the reader unions all listed manifests). They keep
     // their own partition_spec_id; new manifests get the DEFAULT spec's.
-    val prevEntries = readListRecords(meta.manifestList, conf)
-    val listPath = writeManifestList(fs, tableDir, snapshotId, prevEntries, manifests,
-      specId = meta.defaultSpecId)
-    val oldSnaps = metaNode.get("snapshots").elements().asScala
-      .map(n => mapper.writeValueAsString(n)).mkString(",")
-    val snapJson =
-      s"""{"snapshot-id":$snapshotId,"timestamp-ms":${System.currentTimeMillis()},"parent-snapshot-id":${meta.snapshotId},"summary":{${summaryJson(summary)}},"manifest-list":"${fs.makeQualified(listPath)}"}"""
-    val metaJson = {
-      val node = metaNode.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      node.put("current-snapshot-id", snapshotId)
-      node.put("last-updated-ms", System.currentTimeMillis())
-      node.set[JsonNode]("snapshots",
-        mapper.readTree(s"[$oldSnaps,$snapJson]"))
-      raiseWatermarkProp(node, summary)
-      mapper.writeValueAsString(node)
-    }
-    writeSmall(fs, new Path(tableDir, s"metadata/v${v + 1}.metadata.json"), metaJson)
-    writeSmall(fs, new Path(tableDir, "metadata/version-hint.text"), (v + 1).toString)
+    commitRows(df, tableDir, base, meta, readListRecords(meta.manifestList, conf), summary)
   }
 
   /** S16h: copy-on-write MERGE (upsert) — the write operation Iceberg
@@ -465,11 +520,8 @@ object IcebergWrite {
     if (allChanges.isEmpty) return // nothing to merge; don't burn a snapshot id
     val spark = updates.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(tableDir).getFileSystem(conf)
-    val v = readSmall(fs, new Path(tableDir, "metadata/version-hint.text")).trim.toInt
-    val metaNode = mapper.readTree(
-      readSmall(fs, new Path(tableDir, s"metadata/v$v.metadata.json")))
-    val meta = load(tableDir, conf)
+    val base = current(tableDir, conf)
+    val meta = tableMeta(base.tree)
     require(updates.schema.fieldNames.sameElements(meta.schema.fieldNames),
       s"graft iceberg merge: schema mismatch ${updates.schema.fieldNames.mkString(",")} " +
         s"vs ${meta.schema.fieldNames.mkString(",")}")
@@ -498,33 +550,17 @@ object IcebergWrite {
     }
     val (replaced, survivors) = prevEntries.partition(e => affectedBytes.contains(entryPv(e)))
     // 3. current rows of the affected partitions only: the replaced
-    //    manifests' live data files, read directly
+    //    manifests' live data files, read by field id — after a rename
+    //    (S16e) the replaced files still carry the old column names, and
+    //    a by-name read would silently null the renamed column in every
+    //    surviving row of the rewritten partitions.
     val replacedFiles = replaced.flatMap { rec =>
-      val mp = rec.get("manifest_path").toString
-      val in = new FsInput(new Path(mp), conf)
-      val r = new DataFileReader[GenericRecord](in, new GenericDatumReader[GenericRecord]())
-      try r.iterator().asScala.collect {
+      readAvro(rec.get("manifest_path").toString, conf).collect {
         case e if e.get("status").asInstanceOf[Int] != 2 =>
           e.get("data_file").asInstanceOf[GenericRecord].get("file_path").toString
-      }.toList finally r.close()
-    }
-    // Read replaced files with field-id resolution (the toDataFrame
-    // device), NOT the bare current schema: after a rename (S16e) the
-    // replaced files still carry the old column names, and a by-name
-    // read would silently null the renamed column in every surviving
-    // row of the rewritten partitions.
-    val withIds = org.apache.spark.sql.types.StructType(
-      meta.schema.fields.zip(meta.fieldIds).map { case (f, id) =>
-        f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-          .withMetadata(f.metadata).putLong("parquet.field.id", id.toLong).build())
-      })
-    val current =
-      if (replacedFiles.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], updates.schema)
-      else {
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        spark.read.schema(withIds).parquet(replacedFiles: _*)
       }
+    }
+    val existing = IcebergRead.readFiles(spark, meta, replacedFiles)
     // 4. partition-local merge: existing rows lose to same-key updates
     //    and to tombstones; tombstoned keys simply don't come back.
     //    Re-select in TABLE column order: the using-column join moves
@@ -534,32 +570,13 @@ object IcebergWrite {
     //    re-select every merge whose key is not already the first
     //    column writes value-swapped files (r13: found by the T30b
     //    hop, whose key `_hoodie_record_key` is column 2).
-    val merged = current
+    val merged = existing
       .join(allChanges.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
       .unionByName(updates)
       .select(meta.schema.fieldNames.map(col).toSeq: _*)
     // 5. new data files + manifests for the affected partitions,
     //    committed as snapshot N+1 alongside the untouched manifests
-    val snapshotId = meta.snapshotId + 1
-    val manifests = writeDataAndManifests(merged, tableDir, s"data-s$snapshotId",
-      sourceCol, meta.spec, snapshotId, fieldIds = meta.fieldIds)
-    val listPath = writeManifestList(fs, tableDir, snapshotId, survivors, manifests,
-      specId = meta.defaultSpecId)
-    val oldSnaps = metaNode.get("snapshots").elements().asScala
-      .map(n => mapper.writeValueAsString(n)).mkString(",")
-    val mergedSummary = summary + ("operation" -> "overwrite")
-    val snapJson =
-      s"""{"snapshot-id":$snapshotId,"timestamp-ms":${System.currentTimeMillis()},"parent-snapshot-id":${meta.snapshotId},"summary":{${summaryJson(mergedSummary)}},"manifest-list":"${fs.makeQualified(listPath)}"}"""
-    val metaJson = {
-      val node = metaNode.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      node.put("current-snapshot-id", snapshotId)
-      node.put("last-updated-ms", System.currentTimeMillis())
-      node.set[JsonNode]("snapshots", mapper.readTree(s"[$oldSnaps,$snapJson]"))
-      raiseWatermarkProp(node, mergedSummary)
-      mapper.writeValueAsString(node)
-    }
-    writeSmall(fs, new Path(tableDir, s"metadata/v${v + 1}.metadata.json"), metaJson)
-    writeSmall(fs, new Path(tableDir, "metadata/version-hint.text"), (v + 1).toString)
+    commitRows(merged, tableDir, base, meta, survivors, summary + ("operation" -> "overwrite"))
   }
 
   /** S16j: table COMPACTION (rewrite) — one snapshot that re-lays the
@@ -581,33 +598,10 @@ object IcebergWrite {
     * partition-scoped rewrites. */
   def compact(spark: org.apache.spark.sql.SparkSession, tableDir: String,
               summary: Map[String, String] = Map.empty): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(tableDir).getFileSystem(conf)
-    val v = readSmall(fs, new Path(tableDir, "metadata/version-hint.text")).trim.toInt
-    val metaNode = mapper.readTree(
-      readSmall(fs, new Path(tableDir, s"metadata/v$v.metadata.json")))
-    val meta = load(tableDir, conf)
-    val pf = meta.spec.head
-    val sourceCol = meta.schema.fieldNames(pf.sourceId - 1)
-    val current = spark.read.format("graft.sources.IcebergSource").load(tableDir)
-    val snapshotId = meta.snapshotId + 1
-    val manifests = writeDataAndManifests(current, tableDir, s"data-s$snapshotId",
-      sourceCol, meta.spec, snapshotId, fieldIds = meta.fieldIds)
-    val listPath = writeManifestList(fs, tableDir, snapshotId, Nil, manifests,
-      specId = meta.defaultSpecId)
-    val oldSnaps = metaNode.get("snapshots").elements().asScala
-      .map(n => mapper.writeValueAsString(n)).mkString(",")
-    val snapJson =
-      s"""{"snapshot-id":$snapshotId,"timestamp-ms":${System.currentTimeMillis()},"parent-snapshot-id":${meta.snapshotId},"summary":{${summaryJson(summary + ("operation" -> "replace"))}},"manifest-list":"${fs.makeQualified(listPath)}"}"""
-    val metaJson = {
-      val node = metaNode.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      node.put("current-snapshot-id", snapshotId)
-      node.put("last-updated-ms", System.currentTimeMillis())
-      node.set[JsonNode]("snapshots", mapper.readTree(s"[$oldSnaps,$snapJson]"))
-      mapper.writeValueAsString(node)
-    }
-    writeSmall(fs, new Path(tableDir, s"metadata/v${v + 1}.metadata.json"), metaJson)
-    writeSmall(fs, new Path(tableDir, "metadata/version-hint.text"), (v + 1).toString)
+    val base = current(tableDir, spark.sparkContext.hadoopConfiguration)
+    val rows = spark.read.format("graft.sources.IcebergSource").load(tableDir)
+    commitRows(rows, tableDir, base, tableMeta(base.tree), carry = Nil,
+      summary + ("operation" -> "replace"))
   }
 
   /** S16g: snapshot EXPIRY — the retention-maintenance commit every
@@ -627,25 +621,16 @@ object IcebergWrite {
   def expireSnapshots(tableDir: String, conf: org.apache.hadoop.conf.Configuration,
                       keepLast: Int): Int = {
     require(keepLast >= 1, s"graft iceberg expire: keepLast must be >= 1 (got $keepLast)")
-    val fs = new Path(tableDir).getFileSystem(conf)
-    val v = readSmall(fs, new Path(tableDir, "metadata/version-hint.text")).trim.toInt
-    val metaNode = mapper.readTree(
-      readSmall(fs, new Path(tableDir, s"metadata/v$v.metadata.json")))
-    val snaps = metaNode.get("snapshots").elements().asScala.toList
+    val base = current(tableDir, conf)
+    val snaps = base.tree.get("snapshots").elements().asScala.toList
     if (snaps.length <= keepLast) return 0
     val (expired, kept) = snaps.splitAt(snaps.length - keepLast)
     // referenced set = manifest list + manifests + data files, per side
     def refs(snapNodes: Seq[JsonNode]): Set[String] = snapNodes.flatMap { s =>
       val listPath = s.get("manifest-list").asText
       val manifests = readListRecords(listPath, conf).map(_.get("manifest_path").toString)
-      val data = manifests.flatMap { mp =>
-        val in = new FsInput(new Path(mp), conf)
-        val r = new DataFileReader[GenericRecord](in,
-          new GenericDatumReader[GenericRecord]())
-        try r.iterator().asScala.map(e =>
-          e.get("data_file").asInstanceOf[GenericRecord].get("file_path").toString).toList
-        finally r.close()
-      }
+      val data = manifests.flatMap(mp => readAvro(mp, conf).map(e =>
+        e.get("data_file").asInstanceOf[GenericRecord].get("file_path").toString))
       listPath +: (manifests ++ data)
     }.toSet
     val doomed = refs(expired) -- refs(kept)
@@ -656,44 +641,23 @@ object IcebergWrite {
     // reverse order would leave the still-current metadata pointing at
     // deleted manifest lists — time travel dies with FileNotFound and
     // a re-run of expiry throws reading the already-deleted lists.
-    val node = metaNode.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    node.put("last-updated-ms", System.currentTimeMillis())
-    node.set[JsonNode]("snapshots",
-      mapper.readTree(kept.map(mapper.writeValueAsString).mkString("[", ",", "]")))
-    writeSmall(fs, new Path(tableDir, s"metadata/v${v + 1}.metadata.json"),
-      mapper.writeValueAsString(node))
-    writeSmall(fs, new Path(tableDir, "metadata/version-hint.text"), (v + 1).toString)
+    commit(tableDir, conf, base) { tree => tree.putArray("snapshots").addAll(kept.asJava) }
     // best-effort orphan cleanup; paths are stored fully qualified
+    val fs = new Path(tableDir).getFileSystem(conf)
     doomed.foreach(p => try fs.delete(new Path(p), false) catch { case _: java.io.IOException => })
     expired.length
   }
 
-  /** Largest long value stored under `key` across ALL snapshots'
-    * summary maps (None if no snapshot carries it). The exactly-once
-    * streaming sink asks this for "streaming-batch-id" before
-    * committing: batch ids are monotone, so a replayed micro-batch
-    * (id <= max committed) is detected without any external state —
-    * the table IS the commit log. */
-  def lastSummaryLong(tableDir: String, conf: org.apache.hadoop.conf.Configuration,
-                      key: String): Option[Long] = {
-    val fs = new Path(tableDir).getFileSystem(conf)
-    val hint = new Path(tableDir, "metadata/version-hint.text")
-    if (!fs.exists(hint)) return None
-    val v = readSmall(fs, hint).trim.toInt
-    val metaNode = mapper.readTree(
-      readSmall(fs, new Path(tableDir, s"metadata/v$v.metadata.json")))
-    val vals = metaNode.get("snapshots").elements().asScala.flatMap { s =>
-      Option(s.get("summary")).flatMap(sm => Option(sm.get(key))).map(_.asText.toLong)
-    }.toSeq
-    if (vals.isEmpty) None else Some(vals.max)
-  }
-
-  /** Like [[lastSummaryLong]], but restricted to snapshots whose
-    * summary carries `idKey` == `idVal`. The exactly-once streaming
-    * sink scopes its replay check this way: batch ids restart at 0 for
-    * every NEW streaming query, so "batchId <= table max" is only a
-    * replay signal WITHIN one query lineage — a fresh query writing to
-    * an existing table must not have its first batches silently
+  /** Largest long value stored under `key` across the snapshots whose
+    * summary carries `idKey` == `idVal` (None if none does, or the
+    * table does not exist yet). The exactly-once streaming sink asks
+    * this for "streaming-batch-id" before committing: batch ids are
+    * monotone, so a replayed micro-batch (id <= max committed) is
+    * detected without any external state — the table IS the commit
+    * log. Scoped by query id because batch ids restart at 0 for every
+    * NEW streaming query, so "batchId <= table max" is only a replay
+    * signal WITHIN one query lineage — a fresh query writing to an
+    * existing table must not have its first batches silently
     * swallowed by an older query's high-water mark (ADVICE r7).
     * Additionally consults the EXPIRY-PROOF watermark property
     * `graft.stream.watermark.<id>` ([[raiseWatermarkProp]]) when
@@ -702,13 +666,9 @@ object IcebergWrite {
     * would look fresh and commit duplicates. */
   def lastSummaryLongForId(tableDir: String, conf: org.apache.hadoop.conf.Configuration,
                            key: String, idKey: String, idVal: String): Option[Long] = {
-    val fs = new Path(tableDir).getFileSystem(conf)
-    val hint = new Path(tableDir, "metadata/version-hint.text")
-    if (!fs.exists(hint)) return None
-    val v = readSmall(fs, hint).trim.toInt
-    val metaNode = mapper.readTree(
-      readSmall(fs, new Path(tableDir, s"metadata/v$v.metadata.json")))
-    val vals = metaNode.get("snapshots").elements().asScala.flatMap { s =>
+    if (!exists(tableDir, conf)) return None
+    val tree = current(tableDir, conf).tree
+    val vals = tree.get("snapshots").elements().asScala.flatMap { s =>
       Option(s.get("summary")).flatMap { sm =>
         if (Option(sm.get(idKey)).exists(_.asText == idVal))
           Option(sm.get(key)).map(_.asText.toLong)
@@ -717,7 +677,7 @@ object IcebergWrite {
     }.toSeq
     val prop =
       if (key == "streaming-batch-id" && idKey == "streaming-query-id")
-        Option(metaNode.get("properties"))
+        Option(tree.get("properties"))
           .flatMap(p => Option(p.get(s"graft.stream.watermark.$idVal")))
           .flatMap(_.asText.toLongOption)
       else None
@@ -736,14 +696,12 @@ object IcebergWrite {
   def renameColumn(spark: org.apache.spark.sql.SparkSession, tableDir: String,
                    oldName: String, newName: String): Unit =
     evolveSchema(spark, tableDir) { node =>
-      val fields = node.get("schema").get("fields")
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
-      val names = fields.elements().asScala.map(_.get("name").asText).toSeq
+      val fields = node.get("schema").get("fields").elements().asScala.toSeq
+      val names = fields.map(_.get("name").asText)
       require(names.contains(oldName), s"graft iceberg rename: no column $oldName (have $names)")
       require(!names.contains(newName), s"graft iceberg rename: $newName already exists")
-      fields.elements().asScala.foreach {
-        case f: com.fasterxml.jackson.databind.node.ObjectNode
-          if f.get("name").asText == oldName => f.put("name", newName)
+      fields.foreach {
+        case f: ObjectNode if f.get("name").asText == oldName => f.put("name", newName)
         case _ =>
       }
     }
@@ -755,14 +713,13 @@ object IcebergWrite {
   def addColumn(spark: org.apache.spark.sql.SparkSession, tableDir: String,
                 name: String, icebergType: String): Unit =
     evolveSchema(spark, tableDir) { node =>
-      val fields = node.get("schema").get("fields")
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
+      val fields = node.get("schema").get("fields").asInstanceOf[ArrayNode]
       require(!fields.elements().asScala.exists(_.get("name").asText == name),
         s"graft iceberg add: column $name already exists")
       val id = node.get("last-column-id").asInt + 1
       node.put("last-column-id", id)
-      fields.add(mapper.readTree(
-        s"""{"id":$id,"name":"$name","required":false,"type":"$icebergType"}"""))
+      fields.addObject().put("id", id).put("name", name)
+        .put("required", false).put("type", icebergType)
     }
 
   /** PARTITION-SPEC evolution — re-layout the table going forward as a
@@ -786,50 +743,30 @@ object IcebergWrite {
       // spec evolution carry only the legacy single "partition-spec")
       if (node.get("partition-specs") == null) {
         val legacy = node.get("partition-spec")
-        node.set[JsonNode]("partition-specs", mapper.readTree(
-          s"""[{"spec-id":0,"fields":${mapper.writeValueAsString(legacy)}}]"""))
-        val maxPid = legacy.elements().asScala.map(_.get("field-id").asInt).max
-        node.put("last-partition-id", maxPid)
+        node.putArray("partition-specs").addObject().put("spec-id", 0)
+          .set[JsonNode]("fields", legacy.deepCopy[JsonNode]())
+        node.put("last-partition-id", legacy.elements().asScala.map(_.get("field-id").asInt).max)
       }
-      val specsNode = node.get("partition-specs")
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
+      val specsNode = node.get("partition-specs").asInstanceOf[ArrayNode]
       val specId = specsNode.elements().asScala.map(_.get("spec-id").asInt).max + 1
       val pid = node.get("last-partition-id").asInt + 1
       node.put("last-partition-id", pid)
-      val suffix = transform.takeWhile(_ != '[') match {
-        case "identity" => ""
-        case kind => "_" + kind
-      }
-      val fieldJson =
-        s"""{"name":"$sourceCol$suffix","transform":"$transform",
-           |"source-id":${names.indexOf(sourceCol) + 1},"field-id":$pid}""".stripMargin
-      specsNode.add(mapper.readTree(
-        s"""{"spec-id":$specId,"fields":[$fieldJson]}"""))
+      val field = partField(sourceCol, transform, names.indexOf(sourceCol) + 1, pid)
+      specsNode.addObject().put("spec-id", specId).putArray("fields").add(partFieldNode(field))
       node.put("default-spec-id", specId)
       // keep the legacy field in sync for pre-evolution readers
-      node.set[JsonNode]("partition-spec", mapper.readTree(s"[$fieldJson]"))
+      node.putArray("partition-spec").add(partFieldNode(field))
     }
 
-  /** Shared metadata-commit machinery for schema evolution: load vN,
-    * mutate the metadata tree, write v(N+1) + version-hint. Snapshots
-    * and manifests are untouched — that is what makes evolution O(1)
-    * at any table size. */
+  /** Commits a pure metadata edit on the current version. Snapshots
+    * and manifests are untouched — that is what makes schema and spec
+    * evolution O(1) at any table size. */
   private def evolveSchema(spark: org.apache.spark.sql.SparkSession, tableDir: String)(
-      mutate: com.fasterxml.jackson.databind.node.ObjectNode => Unit): Unit = {
+      edit: ObjectNode => Unit): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(tableDir).getFileSystem(conf)
-    val v = readSmall(fs, new Path(tableDir, "metadata/version-hint.text")).trim.toInt
-    val node = mapper.readTree(readSmall(fs, new Path(tableDir, s"metadata/v$v.metadata.json")))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    mutate(node)
-    node.put("last-updated-ms", System.currentTimeMillis())
-    writeSmall(fs, new Path(tableDir, s"metadata/v${v + 1}.metadata.json"),
-      mapper.writeValueAsString(node))
-    writeSmall(fs, new Path(tableDir, "metadata/version-hint.text"), (v + 1).toString)
+    commit(tableDir, conf, current(tableDir, conf))(edit)
   }
 
-  /** Spark-parquet write partitioned by the transform value + one Avro
-    * manifest per partition value. Returns (manifestPath, pv, nFiles). */
   /** The partition-tuple value of a row under `pf`, as the Catalyst
     * column the write path partitions by (shared by write/append and
     * mergeUpsert so both sides of a merge compute the SAME layout). */
@@ -851,6 +788,8 @@ object IcebergWrite {
     }
   }
 
+  /** Spark-parquet write partitioned by the transform value + one Avro
+    * manifest per partition value. Returns (manifestPath, pv, nFiles). */
   private def writeDataAndManifests(df: DataFrame, tableDir: String, dataSubdir: String,
       sourceCol: String, spec: Seq[PartField],
       snapshotId: Long, fieldIds: Seq[Int]): Seq[(Path, Any, Int)] = {
@@ -1016,9 +955,6 @@ object IcebergWrite {
     }
   }
 
-  /** Manifest list = carried-over records from the parent snapshot +
-    * one record per new manifest, each with field_summary bounds (the
-    * level-1 pruning index). */
   /** Single-value binary per the spec's Appendix D (int/long LE,
     * string UTF-8). */
   private def pvBytes(pv: Any): Array[Byte] = pv match {
@@ -1028,6 +964,9 @@ object IcebergWrite {
     case other => sys.error(s"graft iceberg: unsupported partition value $other")
   }
 
+  /** Manifest list = carried-over records from the parent snapshot +
+    * one record per new manifest, each with field_summary bounds (the
+    * level-1 pruning index). */
   private def writeManifestList(fs: FileSystem, tableDir: String, snapshotId: Long,
       carryOver: Seq[GenericRecord], added: Seq[(Path, Any, Int)],
       specId: Int = 0): Path = {
@@ -1056,49 +995,6 @@ object IcebergWrite {
     lw.close()
     listPath
   }
-
-  private def readListRecords(listPath: String, conf: Configuration): Seq[GenericRecord] = {
-    val in = new FsInput(new Path(listPath), conf)
-    val r = new DataFileReader[GenericRecord](in,
-      new GenericDatumReader[GenericRecord](manifestListSchema))
-    try r.iterator().asScala.toList finally r.close()
-  }
-
-  private def readSmall(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try new String(in.readAllBytes(), "UTF-8") finally in.close()
-  }
-
-  /** Small-file commit via temp + rename (the HadoopTableOperations
-    * version-hint device): `create(overwrite)` truncates in place, so
-    * a concurrent reader — the streaming source polls the hint every
-    * trigger — could observe an EMPTY hint mid-rewrite. Rename keeps
-    * the window to at-worst "briefly missing", which pollers retry
-    * (the [[TailingStream]] poll rule); new-named metadata
-    * files never overwrite, so this only changes hint behavior. */
-  private def writeSmall(fs: FileSystem, p: Path, s: String): Unit = {
-    val tmp = new Path(p.getParent, s".${p.getName}.tmp${System.nanoTime()}")
-    var renamed = false
-    try {
-      val out = fs.create(tmp, false)
-      try out.write(s.getBytes("UTF-8")) finally out.close()
-      // Rename FIRST (most filesystems refuse to rename onto an existing
-      // path); only on refusal delete the target and retry. That keeps
-      // the no-hint window to the delete→retry gap — and if the JVM dies
-      // before the first rename the old hint is still intact, instead of
-      // the delete-then-rename order where a crash between the two steps
-      // loses the hint permanently.
-      renamed = fs.rename(tmp, p)
-      if (!renamed) {
-        if (fs.exists(p)) fs.delete(p, false)
-        renamed = fs.rename(tmp, p)
-      }
-      require(renamed, s"graft iceberg: rename $tmp -> $p failed")
-    } finally {
-      // never leak the temp file when the write or both renames fail
-      if (!renamed && fs.exists(tmp)) fs.delete(tmp, false)
-    }
-  }
 }
 
 object IcebergRead {
@@ -1121,9 +1017,12 @@ object IcebergRead {
     * plan: everything after it is plain parquet reading. */
   def planFiles(tableDir: String, conf: Configuration, eq: Option[(String, Any)],
                 snapshotId: Option[Long] = None,
-                ranges: Seq[ColRange] = Nil): Seq[DataFileEntry] = {
-    val meta = load(tableDir, conf, snapshotId)
-    val fs = new Path(tableDir).getFileSystem(conf)
+                ranges: Seq[ColRange] = Nil): Seq[DataFileEntry] =
+    planFiles(load(tableDir, conf, snapshotId), conf, eq, ranges)
+
+  /** [[planFiles]] over an already-loaded snapshot's metadata. */
+  private[sources] def planFiles(meta: TableMeta, conf: Configuration, eq: Option[(String, Any)],
+                                 ranges: Seq[ColRange]): Seq[DataFileEntry] = {
     // predicate -> expected partition tuple value, via the transform.
     // Computed PER SPEC: after partition-spec evolution each manifest
     // is pruned under the layout it was written with; a spec that does
@@ -1174,71 +1073,62 @@ object IcebergRead {
     // one want per spec-id the table has ever had
     val wantBySpec: Map[Int, Option[(PartField, Any)]] =
       meta.specs.map { case (id, s) => id -> wantFor(s) }
-    val listIn = new FsInput(new Path(meta.manifestList), conf)
-    val listReader = new DataFileReader[GenericRecord](listIn,
-      new GenericDatumReader[GenericRecord]())
-    val manifestPaths = try {
-      listReader.iterator().asScala.filter { m =>
-        val want = wantBySpec.getOrElse(
-          m.get("partition_spec_id").asInstanceOf[Int], wantFor(meta.spec))
-        // level-1 prune: field_summary bounds of the first (only)
-        // partition field. Bounds are decoded by their STORED byte
-        // length (4 -> int, 8 -> long), never by the probe value's
-        // runtime class: an Int probe against 8-byte bounds (identity/
-        // truncate on a bigint column via the direct planFiles API)
-        // would otherwise compare only the low 4 LE bytes and silently
-        // false-prune; the inverse mismatch threw BufferUnderflow.
-        // Unknown widths (string bounds) skip the range compare —
-        // pruning falls through to the per-file tuple check.
-        def boundVal(b: Array[Byte]): Option[Long] = b.length match {
-          case 4 => Some(bytesToInt(b).toLong)
-          case 8 => Some(bytesToLong(b))
-          case _ => None
-        }
-        def mkCheck(p: Long): (Array[Byte], Array[Byte]) => Boolean =
-          (lo, hi) => boundVal(lo).forall(_ <= p) && boundVal(hi).forall(_ >= p)
-        val checkBounds: Option[(Array[Byte], Array[Byte]) => Boolean] = want.flatMap {
-          case (_, pv: Int) => Some(mkCheck(pv.toLong))
-          case (_, pv: Long) => Some(mkCheck(pv))
-          case _ => None
-        }
-        checkBounds.forall { check =>
-          val parts = m.get("partitions")
-          parts == null || {
-            val sums = parts.asInstanceOf[java.util.List[GenericRecord]]
-            sums.isEmpty || {
-              val s = sums.get(0)
-              (Option(s.get("lower_bound")), Option(s.get("upper_bound"))) match {
-                case (Some(lo), Some(hi)) => check(toBytes(lo), toBytes(hi))
-                case _ => true
-              }
+    val manifestPaths = readListRecords(meta.manifestList, conf).filter { m =>
+      val want = wantBySpec.getOrElse(
+        m.get("partition_spec_id").asInstanceOf[Int], wantFor(meta.spec))
+      // level-1 prune: field_summary bounds of the first (only)
+      // partition field. Bounds are decoded by their STORED byte
+      // length (4 -> int, 8 -> long), never by the probe value's
+      // runtime class: an Int probe against 8-byte bounds (identity/
+      // truncate on a bigint column via the direct planFiles API)
+      // would otherwise compare only the low 4 LE bytes and silently
+      // false-prune; the inverse mismatch threw BufferUnderflow.
+      // Unknown widths (string bounds) skip the range compare —
+      // pruning falls through to the per-file tuple check.
+      def boundVal(b: Array[Byte]): Option[Long] = b.length match {
+        case 4 => Some(bytesToInt(b).toLong)
+        case 8 => Some(bytesToLong(b))
+        case _ => None
+      }
+      def mkCheck(p: Long): (Array[Byte], Array[Byte]) => Boolean =
+        (lo, hi) => boundVal(lo).forall(_ <= p) && boundVal(hi).forall(_ >= p)
+      val checkBounds: Option[(Array[Byte], Array[Byte]) => Boolean] = want.flatMap {
+        case (_, pv: Int) => Some(mkCheck(pv.toLong))
+        case (_, pv: Long) => Some(mkCheck(pv))
+        case _ => None
+      }
+      checkBounds.forall { check =>
+        val parts = m.get("partitions")
+        parts == null || {
+          val sums = parts.asInstanceOf[java.util.List[GenericRecord]]
+          sums.isEmpty || {
+            val s = sums.get(0)
+            (Option(s.get("lower_bound")), Option(s.get("upper_bound"))) match {
+              case (Some(lo), Some(hi)) => check(toBytes(lo), toBytes(hi))
+              case _ => true
             }
           }
         }
-      }.map(m => (m.get("manifest_path").toString,
-        m.get("partition_spec_id").asInstanceOf[Int])).toList
-    } finally listReader.close()
+      }
+    }.map(m => (m.get("manifest_path").toString,
+      m.get("partition_spec_id").asInstanceOf[Int]))
     manifestPaths.flatMap { case (mp, specId) =>
       val want = wantBySpec.getOrElse(specId, wantFor(meta.spec))
-      val in = new FsInput(new Path(mp), conf)
-      val r = new DataFileReader[GenericRecord](in, new GenericDatumReader[GenericRecord]())
-      try {
-        r.iterator().asScala.flatMap { e =>
-          if (e.get("status").asInstanceOf[Int] == 2) None // DELETED
-          else {
-            val df = e.get("data_file").asInstanceOf[GenericRecord]
-            val keep = want.forall { case (pf, pv) =>
-              val tuple = df.get("partition").asInstanceOf[GenericRecord]
-              val actual = if (tuple.getSchema.getField(pf.name) == null) null
-                           else tuple.get(pf.name)
-              actual == null || normalize(actual) == normalize(pv)
-            } && ranges.forall(r => fileAdmits(df, r, meta.schema, meta.fieldIds))
-            if (keep) Some(DataFileEntry(df.get("file_path").toString,
-              df.get("record_count").asInstanceOf[Long]))
-            else None
-          }
-        }.toList
-      } finally r.close()
+      readAvro(mp, conf).flatMap { e =>
+        if (e.get("status").asInstanceOf[Int] == 2) None // DELETED
+        else {
+          val df = e.get("data_file").asInstanceOf[GenericRecord]
+          val keep = want.forall { case (pf, pv) =>
+            val tuple = df.get("partition").asInstanceOf[GenericRecord]
+            val actual = if (tuple.getSchema.getField(pf.name) == null) null
+                         else tuple.get(pf.name)
+            actual == null || normalize(actual) == normalize(pv)
+          } && ranges.forall(r => fileAdmits(df, r, meta.schema, meta.fieldIds))
+          if (keep) Some(DataFileEntry(df.get("file_path").toString,
+            df.get("record_count").asInstanceOf[Long]))
+          else None
+        }
+      }
     }
   }
 
@@ -1338,29 +1228,35 @@ object IcebergRead {
                   snapshotId: Option[Long] = None,
                   ranges: Seq[ColRange] = Nil): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val files = planFiles(tableDir, conf, eq, snapshotId, ranges)
+    val meta = load(tableDir, conf, snapshotId)
+    val files = planFiles(meta, conf, eq, ranges)
     // an unpredicated scan of a healthy table always has files; a
     // predicated one may legitimately prune to zero (empty result)
     require(files.nonEmpty || eq.nonEmpty || ranges.nonEmpty,
       s"graft iceberg: no data files at $tableDir")
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        IcebergMeta.load(tableDir, conf, snapshotId).schema)
-    // Read with the CURRENT table schema carrying each field's id as
-    // `parquet.field.id` metadata, and field-id resolution enabled:
-    // Spark then matches parquet columns by id, not name — which is
-    // what makes renamed columns resolve in pre-rename data files and
-    // added columns surface as NULL. (The conf only changes behavior
-    // for requested fields that CARRY an id, so leaving it set is
-    // inert for every other parquet read in the session.)
-    val meta = IcebergMeta.load(tableDir, conf, snapshotId)
-    val withIds = StructType(meta.schema.fields.zip(meta.fieldIds).map { case (f, id) =>
-      f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-        .withMetadata(f.metadata).putLong("parquet.field.id", id.toLong).build())
-    })
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    spark.read.schema(withIds).parquet(files.map(_.path): _*)
+    readFiles(spark, meta, files.map(_.path))
   }
+
+  /** Reads data files with the table's CURRENT schema carrying each
+    * field's id as `parquet.field.id` metadata, and field-id resolution
+    * enabled: Spark then matches parquet columns by id, not name —
+    * which is what makes renamed columns resolve in pre-rename data
+    * files and added columns surface as NULL. (The conf only changes
+    * behavior for requested fields that CARRY an id, so leaving it set
+    * is inert for every other parquet read in the session.) No files:
+    * an empty DataFrame of the schema. */
+  private[sources] def readFiles(spark: org.apache.spark.sql.SparkSession, meta: TableMeta,
+                                 files: Seq[String]): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], meta.schema)
+    else {
+      val withIds = StructType(meta.schema.fields.zip(meta.fieldIds).map { case (f, id) =>
+        f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
+          .withMetadata(f.metadata).putLong("parquet.field.id", id.toLong).build())
+      })
+      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+      spark.read.schema(withIds).parquet(files: _*)
+    }
 
   /** Snapshot ids in (fromId, toId] in commit order — the T25 admission
     * control's unit of batching. Commit order is the metadata file's
@@ -1371,15 +1267,7 @@ object IcebergRead {
   def snapshotIdsInRange(tableDir: String, conf: Configuration,
                          fromId: Long, toId: Long): Seq[Long] = {
     if (fromId >= toId) return Nil
-    val fs = new Path(tableDir).getFileSystem(conf)
-    def readAll(p: Path): String = {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
-    val v = readAll(new Path(tableDir, "metadata/version-hint.text")).trim.toInt
-    val metaNode = mapper.readTree(
-      readAll(new Path(tableDir, s"metadata/v$v.metadata.json")))
-    metaNode.get("snapshots").elements().asScala
+    current(tableDir, conf).tree.get("snapshots").elements().asScala
       .map(_.get("snapshot-id").asLong)
       .filter(id => id > fromId && id <= toId).toSeq.sorted
   }
@@ -1393,15 +1281,8 @@ object IcebergRead {
     require(fromId <= toId,
       s"graft iceberg incremental: fromId $fromId > toId $toId")
     if (fromId == toId) return Nil
-    val fs = new Path(tableDir).getFileSystem(conf)
-    def readAll(p: Path): String = {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
-    val v = readAll(new Path(tableDir, "metadata/version-hint.text")).trim.toInt
-    val metaNode = mapper.readTree(
-      readAll(new Path(tableDir, s"metadata/v$v.metadata.json")))
-    val inRange = metaNode.get("snapshots").elements().asScala.toList
+    val tree = current(tableDir, conf).tree
+    val inRange = tree.get("snapshots").elements().asScala.toList
       .filter(s => s.get("snapshot-id").asLong > fromId && s.get("snapshot-id").asLong <= toId)
     require(inRange.nonEmpty,
       s"graft iceberg incremental: no snapshots in ($fromId, $toId] at $tableDir")
@@ -1418,10 +1299,10 @@ object IcebergRead {
         "the file diff only means 'added rows' across explicit appends; " +
         "consume replaces/overwrites (or unlabeled snapshots) via a full read")
     }
-    val fromFiles =
-      if (fromId == 0L) Set.empty[String]
-      else planFiles(tableDir, conf, None, Some(fromId)).map(_.path).toSet
-    planFiles(tableDir, conf, None, Some(toId)).map(_.path).filterNot(fromFiles.contains)
+    def files(id: Long): Seq[String] =
+      planFiles(tableMeta(tree, Some(id)), conf, None, Nil).map(_.path)
+    val fromFiles = if (fromId == 0L) Set.empty[String] else files(fromId).toSet
+    files(toId).filterNot(fromFiles.contains)
   }
 
   /** S16m: INCREMENTAL (changelog) read — the rows ADDED between two
@@ -1441,16 +1322,7 @@ object IcebergRead {
                       fromId: Long, toId: Long): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
     val meta = load(tableDir, conf, if (toId > 0) Some(toId) else None)
-    val added = incrementalFilePaths(tableDir, conf, fromId, toId)
-    if (added.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], meta.schema)
-    val withIds = StructType(meta.schema.fields.zip(meta.fieldIds).map { case (f, id) =>
-      f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-        .withMetadata(f.metadata).putLong("parquet.field.id", id.toLong).build())
-    })
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    spark.read.schema(withIds).parquet(added: _*)
+    readFiles(spark, meta, incrementalFilePaths(tableDir, conf, fromId, toId))
   }
 }
 
@@ -1483,6 +1355,12 @@ class IcebergDsv2Table(path: String, schema: StructType, snapshotId: Option[Long
       Option(options.get("maxSnapshotsPerTrigger")).map(_.toInt))
 }
 
+/** Resolves the table's metadata once, on first use, for everything
+  * this builder plans: filter pushdown, the file plan and the reader
+  * factory. A new builder — one per query action — reads the version
+  * current then; the [[IcebergDsv2Table]] caches nothing, so a
+  * DataFrame loaded before a commit sees that commit on its next
+  * action. */
 class IcebergScanBuilder(path: String, fullSchema: StructType, snapshotId: Option[Long],
                          maxSnapshotsPerTrigger: Option[Int] = None)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
@@ -1490,10 +1368,10 @@ class IcebergScanBuilder(path: String, fullSchema: StructType, snapshotId: Optio
   private var pruneEq: Option[(String, Any)] = None
   private var ranges: Seq[IcebergRead.ColRange] = Nil
   private var pruned: Array[Filter] = Array.empty
+  private lazy val meta = IcebergMeta.load(path,
+    org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration, snapshotId)
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val meta = IcebergMeta.load(path,
-      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
     // union over ALL specs: after spec evolution a probe on either the
     // old or the new layout's source column prunes that layout's
     // manifests (planFiles keys the check by each manifest's spec-id)
@@ -1535,12 +1413,12 @@ class IcebergScanBuilder(path: String, fullSchema: StructType, snapshotId: Optio
     required = requiredSchema
 
   override def build(): Scan =
-    new IcebergScan(path, required, pruneEq, snapshotId, ranges, maxSnapshotsPerTrigger)
+    new IcebergScan(path, meta, required, pruneEq, snapshotId, ranges, maxSnapshotsPerTrigger)
 }
 
-class IcebergScan(path: String, required: StructType, eq: Option[(String, Any)],
-                  snapshotId: Option[Long], ranges: Seq[IcebergRead.ColRange] = Nil,
-                  maxSnapshotsPerTrigger: Option[Int] = None)
+class IcebergScan(path: String, meta: IcebergMeta.TableMeta, required: StructType,
+                  eq: Option[(String, Any)], snapshotId: Option[Long],
+                  ranges: Seq[IcebergRead.ColRange], maxSnapshotsPerTrigger: Option[Int])
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -1548,23 +1426,13 @@ class IcebergScan(path: String, required: StructType, eq: Option[(String, Any)],
     s"graft-iceberg $path snap=${snapshotId.getOrElse("current")} pruneEq=$eq " +
       s"boundsPrune=${ranges.mkString(",")} cols=${required.fieldNames.mkString(",")}"
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val conf = org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-    IcebergRead.planFiles(path, conf, eq, snapshotId, ranges)
+  override def planInputPartitions(): Array[InputPartition] =
+    IcebergRead.planFiles(meta,
+      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration, eq, ranges)
       .map(f => IcebergInputPartition(f.path): InputPartition).toArray
-  }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-    // current-schema name -> field-id map: executors resolve each data
-    // file's columns by id (rename evolution), falling back to name for
-    // id-less legacy files, surfacing NULL for columns newer than the
-    // file (add evolution).
-    val meta = IcebergMeta.load(path, conf)
-    val idByName = meta.schema.fieldNames.zip(meta.fieldIds).toMap
-    new IcebergReaderFactory(required, idByName, HadoopConfBroadcast.get(
-      org.apache.spark.sql.SparkSession.active.sparkContext, conf))
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    IcebergReaderFactory(meta, required)
 
   /** T25: the table as a STREAMING SOURCE — one micro-batch per
     * committed snapshot range. Offsets ARE snapshot ids (what the
@@ -1599,12 +1467,8 @@ class IcebergMicroBatchStream(path: String, required: StructType,
     IcebergRead.incrementalFilePaths(path, conf, from, to)
       .map(p => IcebergInputPartition(p): InputPartition).toArray
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val meta = IcebergMeta.load(path, conf)
-    val idByName = meta.schema.fieldNames.zip(meta.fieldIds).toMap
-    new IcebergReaderFactory(required, idByName, HadoopConfBroadcast.get(
-      org.apache.spark.sql.SparkSession.active.sparkContext, conf))
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    IcebergReaderFactory(IcebergMeta.load(path, conf), required)
 }
 
 /** Java-serialization carrier for the DRIVER's Hadoop configuration —
@@ -1672,6 +1536,18 @@ object HadoopConfBroadcast {
 }
 
 case class IcebergInputPartition(file: String) extends InputPartition
+
+object IcebergReaderFactory {
+  /** The reader factory over `meta`'s current schema: executors resolve
+    * each data file's columns by field id (rename evolution), falling
+    * back to name for id-less legacy files, and surface NULL for columns
+    * newer than the file (add evolution). */
+  def apply(meta: IcebergMeta.TableMeta, required: StructType): IcebergReaderFactory = {
+    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+    new IcebergReaderFactory(required, meta.schema.fieldNames.zip(meta.fieldIds).toMap,
+      HadoopConfBroadcast.get(sc, sc.hadoopConfiguration))
+  }
+}
 
 class IcebergReaderFactory(required: StructType, idByName: Map[String, Int],
                            conf: org.apache.spark.broadcast.Broadcast[SerializableHadoopConf])
@@ -1782,11 +1658,6 @@ class IcebergPartitionReader(file: String, required: StructType,
   override def close(): Unit = reader.close()
 }
 
-/** Oracle-checked coverage: the documents table round-trips through a
-  * bucket[8]-partitioned Iceberg table; DuckDB aggregates the ORIGINAL
-  * parquet, so a hash match certifies metadata tree + manifest walk +
-  * parquet decode all preserved every row. The prune query reads one
-  * bucket's files only (file-count asserted in IcebergSpec). */
 /** S16k: Iceberg METADATA tables — the inspection surface real tables
   * ship (`table$snapshots`, `$files`, `$manifests`, `$partitions` in
   * the public Iceberg spec) and the reference exposes as SHOW FILES IN
@@ -1803,20 +1674,10 @@ object IcebergInspect {
   import IcebergMeta._
   import org.apache.spark.sql.{Row, SparkSession}
 
-  private def metaJson(tableDir: String, conf: Configuration): JsonNode = {
-    val fs = new Path(tableDir).getFileSystem(conf)
-    def readSmall(p: Path): String = {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
-    val v = readSmall(new Path(tableDir, "metadata/version-hint.text")).trim.toInt
-    mapper.readTree(readSmall(new Path(tableDir, s"metadata/v$v.metadata.json")))
-  }
-
   /** One row per snapshot, in log order: id, parent link, a
     * deterministic "k=v" rendering of the summary, manifest-list path. */
   def snapshots(spark: SparkSession, tableDir: String): DataFrame = {
-    val meta = metaJson(tableDir, spark.sessionState.newHadoopConf())
+    val meta = current(tableDir, spark.sessionState.newHadoopConf()).tree
     val rows = meta.get("snapshots").elements().asScala.toSeq.zipWithIndex.map {
       case (s, i) =>
         val summary = Option(s.get("summary")).map { n =>
@@ -1899,21 +1760,19 @@ object IcebergInspect {
 
   private def manifestEntries(manifestList: String, conf: Configuration)
       : Seq[(String, Int, GenericRecord)] = {
-    val listIn = new FsInput(new Path(manifestList), conf)
-    val listReader = new DataFileReader[GenericRecord](listIn,
-      new GenericDatumReader[GenericRecord]())
-    val manifestPaths = try {
-      listReader.iterator().asScala.map(m => (m.get("manifest_path").toString,
-        m.get("partition_spec_id").asInstanceOf[Int])).toList
-    } finally listReader.close()
-    manifestPaths.flatMap { case (mp, specId) =>
-      val in = new FsInput(new Path(mp), conf)
-      val r = new DataFileReader[GenericRecord](in, new GenericDatumReader[GenericRecord]())
-      try r.iterator().asScala.map(e => (mp, specId, e)).toList finally r.close()
+    readListRecords(manifestList, conf).flatMap { m =>
+      val mp = m.get("manifest_path").toString
+      val specId = m.get("partition_spec_id").asInstanceOf[Int]
+      readAvro(mp, conf).map(e => (mp, specId, e))
     }
   }
 }
 
+/** Oracle-checked coverage: the documents table round-trips through a
+  * bucket[8]-partitioned Iceberg table; DuckDB aggregates the ORIGINAL
+  * parquet, so a hash match certifies metadata tree + manifest walk +
+  * parquet decode all preserved every row. The prune query reads one
+  * bucket's files only (file count asserted in SourcesSpec S16). */
 object IcebergQueries extends graft.QueryModule {
   import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.functions._

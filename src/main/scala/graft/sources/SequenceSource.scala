@@ -171,7 +171,7 @@ class SeqFileBatchWrite(path: String, truncate: Boolean)
       fs.listStatus(out).filter(s => s.isFile && s.getPath.getName.endsWith(".seq"))
         .foreach(s => fs.delete(s.getPath, false))
     messages.foreach { case SeqFileCommit(tmp, name, _) =>
-      fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(out, name))
+      graft.Fs.rename(fs, new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(out, name))
     }
     fs.delete(new org.apache.hadoop.fs.Path(tempDir), true)
     val ok = fs.create(new org.apache.hadoop.fs.Path(out, "_SUCCESS"), true)

@@ -395,7 +395,7 @@ object Streams {
     * Iceberg SNAPSHOT per micro-batch through the S16 writer
     * (sources/IcebergSource): the first batch creates the table, every
     * later batch appends atomically (data files + manifests + new
-    * metadata version, version-hint flipped last), so downstream batch
+    * metadata version, version pointer moved last), so downstream batch
     * readers get snapshot isolation, per-batch time travel
     * (`snapshot_id` = batch ordinal) and metadata-level pruning over a
     * continuously ingesting table — the standard streaming→lakehouse
@@ -454,8 +454,7 @@ object Streams {
     val conf = batch.sparkSession.sparkContext.hadoopConfiguration
     exactlyOnce(batch, batchId)(graft.sources.IcebergWrite.lastSummaryLongForId(
       tableDir, conf, "streaming-batch-id", "streaming-query-id", _)) { summary =>
-      val hint = new org.apache.hadoop.fs.Path(tableDir, "metadata/version-hint.text")
-      commit(summary, hint.getFileSystem(conf).exists(hint))
+      commit(summary, graft.sources.IcebergMeta.exists(tableDir, conf))
     }
   }
 

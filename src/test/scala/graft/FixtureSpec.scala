@@ -59,4 +59,47 @@ class FixtureSpec extends SparkSpec {
     assert(Files.exists(Paths.get(static)))
     assert(!Files.exists(Paths.get(orc)))
   }
+
+  test("Fs.writeSingleFile: a refused rename throws and keeps the staged parquet") {
+    RefuseRenameFs.register(spark)
+    val dir = tempDir("graft_fs_refuse")
+    intercept[java.io.IOException] {
+      Fs.writeSingleFile(spark.range(3).toDF("id"), s"refuse:$dir/one.parquet")
+    }
+    assert(!Files.exists(Paths.get(dir, "one.parquet")))
+    assert(Files.list(Paths.get(dir, "one.parquet_tmp")).anyMatch(_.getFileName.toString.startsWith("part-")))
+  }
+
+  test("Fs.writeAtomic: replaces the target whole; a refused rename throws and leaks no temp file") {
+    val dir = tempDir("graft_fs_atomic")
+    val local = new org.apache.hadoop.fs.Path(s"$dir/hint")
+    val fs = local.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Fs.writeAtomic(fs, local, "1")
+    Fs.writeAtomic(fs, local, "2")
+    assert(Files.readString(Paths.get(dir, "hint")) == "2")
+    RefuseRenameFs.register(spark)
+    val refused = new org.apache.hadoop.fs.Path(s"refuse:$dir/hint")
+    intercept[java.io.IOException] {
+      Fs.writeAtomic(refused.getFileSystem(spark.sparkContext.hadoopConfiguration), refused, "3")
+    }
+    assert(Files.list(Paths.get(dir)).noneMatch(_.getFileName.toString.endsWith(".tmp")))
+  }
+}
+
+/** The local filesystem under its own scheme, `refuse:`, whose rename
+  * returns false — as HDFS does for a missing parent or an existing
+  * target — except inside a `_temporary/` staging tree, so that Spark's
+  * own output committer still works. */
+class RefuseRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("refuse:///")
+  override def getScheme: String = "refuse"
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    src.toString.contains("/_temporary/") && super.rename(src, dst)
+}
+
+object RefuseRenameFs {
+  /** Maps the `refuse:` scheme to this filesystem in the session's
+    * Hadoop configuration. */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.hadoopConfiguration.set("fs.refuse.impl", classOf[RefuseRenameFs].getName)
 }

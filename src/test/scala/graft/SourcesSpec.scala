@@ -368,6 +368,21 @@ class SourcesSpec extends SparkSpec {
     assert(fin == Seq(("1", "x"), ("9", "nine")))
   }
 
+  test("S17b: a refused rename fails the SequenceFile commit before _SUCCESS and keeps the staged file") {
+    RefuseRenameFs.register(spark)
+    val dir = tempDir("graft_src") + "/seq_refuse"
+    val staged = new java.io.File(dir, "staged.seq")
+    java.nio.file.Files.createDirectories(staged.toPath.getParent)
+    java.nio.file.Files.writeString(staged.toPath, "rows")
+    val write = new graft.sources.SeqFileBatchWrite(s"refuse:$dir", truncate = false)
+    intercept[java.io.IOException] {
+      write.commit(Array(graft.sources.SeqFileCommit(s"refuse:$staged", "part-00000.seq", 1L)))
+    }
+    assert(staged.exists())
+    assert(!new java.io.File(dir, "part-00000.seq").exists())
+    assert(!new java.io.File(dir, "_SUCCESS").exists())
+  }
+
   test("M5: dynamic partition overwrite replaces only the partitions the batch names") {
     import spark.implicits._
     val dir = tempDir("graft_src") + "/dyn"
@@ -827,6 +842,47 @@ class SourcesSpec extends SparkSpec {
     val meta = graft.sources.IcebergMeta.load(dir, conf)
     assert(meta.specs.keySet == Set(0, 1, 2) && meta.defaultSpecId == 2)
     assert(spark.read.format(fmt).load(dir).count() == docs.count())
+  }
+
+  test("S16n: column names and summary values with quotes and backslashes round-trip the metadata") {
+    // the partition column stays plain: Avro names (the manifest's
+    // partition tuple) forbid both characters
+    import graft.sources.{IcebergInspect, IcebergRead, IcebergWrite}
+    import org.apache.spark.sql.Row
+    val dir = tempDir("graft_src") + "/iceberg_escape"
+    val quoted = "say \"hi\""
+    val slashed = "back\\slash"
+    val schema = StructType(Seq(StructField("id", LongType), StructField(quoted, StringType),
+      StructField(slashed, LongType)))
+    def rows(ids: Long*) = spark.createDataFrame(
+      spark.sparkContext.parallelize(ids.map(i => Row(i, s"v$i", i * 10))), schema)
+    val note = "a \"quoted\" \\ value"
+    IcebergWrite.write(rows(1L, 2L), dir, "id", "identity", Map("note" -> note))
+    IcebergWrite.append(rows(3L), dir, Map("note" -> note))
+    val added = "new \"col\" \\ x"
+    IcebergWrite.addColumn(spark, dir, added, "long")
+    val back = IcebergRead.toDataFrame(spark, dir)
+    assert(back.columns.toSeq == Seq("id", quoted, slashed, added))
+    assert(back.orderBy("id").collect().map(r =>
+      (r.getLong(0), r.getString(1), r.getLong(2), r.isNullAt(3))).toSeq ==
+      Seq((1L, "v1", 10L, true), (2L, "v2", 20L, true), (3L, "v3", 30L, true)))
+    val summaries = IcebergInspect.snapshots(spark, dir).collect().map(_.getAs[String]("summary"))
+    assert(summaries.length == 2 && summaries.forall(_.contains(s"note=$note")), summaries.toSeq)
+  }
+
+  test("S16o: a DataFrame loaded before an append counts the appended rows on its next action") {
+    // the table metadata is resolved once per scan builder, i.e. per
+    // action, and never cached on the loaded table
+    import graft.sources.IcebergWrite
+    val dir = tempDir("graft_src") + "/iceberg_fresh"
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+    val first = docs.filter(col("doc_id") < 400)
+    IcebergWrite.write(first, dir, "doc_id", 8)
+    val loaded = spark.read.format("graft.sources.IcebergSource").load(dir)
+    assert(loaded.count() == first.count())
+    IcebergWrite.append(docs.filter(col("doc_id") >= 400), dir)
+    assert(loaded.count() == docs.count())
+    assert(loaded.filter(col("doc_id") >= 400).count() == docs.count() - first.count())
   }
 
   test("M1b: HLL COMPUTE STATS matches the exact variant within rsd, with no Expand in its plan") {
