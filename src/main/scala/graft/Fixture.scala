@@ -114,4 +114,39 @@ object Fs {
       renamed = true
     } finally if (!renamed) fs.delete(tmp, false)
   }
+
+  /** Creates the empty file `p` only if it is absent: the race decider
+    * for the Hudi writer lock, the Hudi `.requested` marker and the next
+    * Iceberg metadata version. Hadoop's RawLocalFileSystem implements
+    * `create(overwrite = false)` as exists-check-then-create, a window
+    * two same-box writers can both slip through, so on a local FS this
+    * goes through NIO `Files.createFile` (O_EXCL, atomic in the kernel);
+    * on HDFS and object stores `create(overwrite = false)` is atomic
+    * natively. Returns false ONLY when the path already exists: a
+    * transient I/O failure surfaces as itself, since reading it as
+    * "already exists" would tell a lock's caller to delete a lock a
+    * live writer may hold. */
+  def createExclusive(fs: FileSystem, p: Path): Boolean = fs match {
+    case _: org.apache.hadoop.fs.LocalFileSystem |
+         _: org.apache.hadoop.fs.RawLocalFileSystem =>
+      try {
+        java.nio.file.Files.createFile(java.nio.file.Paths.get(p.toUri.getPath))
+        true
+      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    case _ =>
+      try { fs.create(p, /* overwrite = */ false).close(); true }
+      catch {
+        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+        case _: java.nio.file.FileAlreadyExistsException => false
+        case e: java.io.IOException =>
+          // some stores signal a create collision as a plain
+          // IOException (incl. a RemoteException-wrapped
+          // FileAlreadyExistsException): trust an exists re-check —
+          // if the path is there, the collision reading is correct;
+          // if not, the failure propagates as what it was
+          if (try fs.exists(p) catch { case _: java.io.IOException => throw e })
+            false
+          else throw e
+      }
+  }
 }

@@ -1,8 +1,11 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import com.fasterxml.jackson.databind.JsonNode
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 /** Hudi copy-on-write table reads (read-optimized view), built from the
   * PUBLIC Hudi table layout — the third lakehouse format family the
@@ -51,11 +54,14 @@ import org.apache.spark.sql.functions._
   * and so would this parquet scan — the fixtures omit them because the
   * RO selection logic never consults them (it is purely name-level). */
 object HudiRO {
+  import HudiSink.{FileEmpty, KeyRange, Range}
 
   /** `<fileId>_<writeToken>_<instantTime>.parquet` (public Hudi
     * FSUtils base-file naming; fileId may itself contain '_' so the
-    * token+instant match anchors at the END). */
-  private val FilePat = """(.+)_([0-9]+-[0-9]+-[0-9]+)_([0-9]+)\.parquet""".r
+    * token+instant match anchors at the END). Group 1 is the fileId,
+    * group 3 the instant. */
+  private[graft] val BaseFileName = """(.+)_([0-9]+-[0-9]+-[0-9]+)_([0-9]+)\.parquet"""
+  private val FilePat = BaseFileName.r
 
   private[graft] final case class BaseFile(fileId: String, instant: String,
                                            name: String)
@@ -65,148 +71,239 @@ object HudiRO {
     case _ => None
   }
 
-  /** The visible-timeline facts a read-optimized scan needs: which
-    * instants COMPLETED, and which file groups a completed clustering
-    * replacecommit killed (keyed by relative partition path; "" for an
-    * unpartitioned table). */
-  private[graft] final case class Timeline(completed: Set[String],
-                                           replaced: Map[String, Set[String]]) {
-    def dead(partitionDir: String): Set[String] =
-      replaced.getOrElse(partitionDir, Set.empty)
-  }
+  private def hfs(spark: SparkSession, dir: String) =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Read the timeline: `<instant>.commit` markers are completed
-    * writes (an `.inflight` / `.commit.requested` without its
-    * completion marker is a writer mid-flight — its files must stay
-    * invisible). A completed `<instant>.replacecommit` (clustering)
-    * BOTH completes its own new base files and kills the file groups
-    * named in its JSON body's `partitionToReplaceFileIds` (the public
-    * Hudi timeline-metadata field — reference parity:
-    * HoodieROTablePathFilter handles clustered tables, HudiUtil.java:
-    * 26-38). A replacecommit body the parser does not recognize stays
-    * a LOUD refusal — reading on would silently duplicate replaced
-    * rows (the Iceberg-v2-deletes discipline). */
-  /** Parsed replacecommit bodies, cached per immutable file
-    * (path+length+mtime — completed commits never change; the S20g
-    * discipline applied to the READ side too): a long-lived reader or
-    * stream re-plans the timeline every batch, and without this each
-    * re-plan re-read every clustering body on disk. Per-entry LRU,
-    * never clear-all (a >cap timeline must keep its working set). A
-    * REFUSAL (unparsable body) is deliberately NOT cached: the file
-    * could be fixed in place, and refusing is already the slow path. */
-  private val replaceCache = graft.Lru[(String, Long, Long), Map[String, Set[String]]](65536)
+  /** What a completed commit's JSON body records: the file groups a
+    * clustering replacecommit replaced (`partitionToReplaceFileIds`, by
+    * relative partition path), each written file's `_hoodie_record_key`
+    * range (`minKeyHex`/`maxKeyHex`/`emptyFile` on its writeStat, by
+    * table-relative path; [[HudiSink]] records them) and the streaming
+    * (query id, batch id) of its `extraMetadata`. */
+  private[graft] final case class CommitBody(replaced: Map[String, Set[String]],
+                                             ranges: Map[String, KeyRange],
+                                             batch: Option[(String, Long)])
 
-  private def parseReplaceBody(fs: org.apache.hadoop.fs.FileSystem,
-                               tableDir: String, fp: Path,
-                               n: String): Map[String, Set[String]] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val in = fs.open(fp)
-    val bytes = try {
-      val len = fs.getFileStatus(fp).getLen.toInt
-      val b = new Array[Byte](len); in.readFully(b); b
-    } finally in.close()
-    val node = try mapper.readTree(bytes) catch {
-      case e: Exception => throw new IllegalArgumentException(
-        s"$tableDir/.hoodie/$n: clustering replacecommit body is not JSON — " +
-          "refusing to read (the replaced file groups are only named there); " +
-          s"cause: ${e.getMessage}")
+  /** Parsed commit bodies per immutable file (path, length, mtime):
+    * completed commits are written once through a rename and never
+    * modified, so a stale entry cannot be served, and a long-lived
+    * reader, stream or sink parses only the commits new since its last
+    * look. Per-entry LRU, never clear-all: a timeline past the bound
+    * keeps its working set. A refusal is never cached: the file could
+    * be fixed in place, and refusing is already the slow path. */
+  private val bodies = graft.Lru[(String, Long, Long), CommitBody](65536)
+
+  /** The one reader of commit bodies. An empty or foreign `.commit`
+    * body records nothing (the hand-touched fixture markers are empty
+    * files). A `.replacecommit` body the parser does not recognize is a
+    * LOUD refusal: the replaced file groups are only named there, and
+    * reading on would silently duplicate replaced rows (the
+    * Iceberg-v2-deletes discipline). */
+  private def parseBody(fs: FileSystem, tableDir: String, s: FileStatus): CommitBody = {
+    val where = s"$tableDir/.hoodie/${s.getPath.getName}"
+    val replace = s.getPath.getName.endsWith(".replacecommit")
+    val in = fs.open(s.getPath)
+    val bytes = try in.readAllBytes() finally in.close()
+    val node = try Option(IcebergMeta.mapper.readTree(bytes)) catch {
+      case e: Exception if replace => throw new IllegalArgumentException(
+        s"$where: clustering replacecommit body is not JSON — refusing to read " +
+          s"(the replaced file groups are only named there); cause: ${e.getMessage}")
+      case _: Exception => None
     }
-    val ptr = if (node == null) null else node.get("partitionToReplaceFileIds")
-    require(ptr != null && ptr.isObject,
-      s"$tableDir/.hoodie/$n: replacecommit body carries no " +
-        "partitionToReplaceFileIds object — unrecognized shape, refusing " +
-        "to read (reading on would duplicate replaced rows)")
-    val out = scala.collection.mutable.HashMap.empty[String, Set[String]]
-    val it = ptr.fields()
-    while (it.hasNext) {
-      val e = it.next()
-      val arr = e.getValue
-      require(arr.isArray,
-        s"$tableDir/.hoodie/$n: partitionToReplaceFileIds['${e.getKey}'] " +
+    def field(n: Option[JsonNode], name: String) = n.flatMap(x => Option(x.get(name)))
+    val replaced = if (!replace) Map.empty[String, Set[String]] else {
+      val ptr = field(node, "partitionToReplaceFileIds").filter(_.isObject)
+      require(ptr.nonEmpty, s"$where: replacecommit body carries no " +
+        "partitionToReplaceFileIds object — unrecognized shape, refusing to read " +
+        "(reading on would duplicate replaced rows)")
+      ptr.get.fields().asScala.map { e =>
+        require(e.getValue.isArray, s"$where: partitionToReplaceFileIds['${e.getKey}'] " +
           "is not an array — unrecognized shape, refusing to read")
-      val ids = (0 until arr.size()).map { i =>
-        val v = arr.get(i)
-        require(v.isTextual,
-          s"$tableDir/.hoodie/$n: non-string fileId in " +
+        e.getKey -> e.getValue.elements().asScala.map { v =>
+          require(v.isTextual, s"$where: non-string fileId in " +
             s"partitionToReplaceFileIds['${e.getKey}'] — refusing to read")
-        v.asText()
-      }.toSet
-      out(e.getKey) = out.getOrElse(e.getKey, Set.empty) ++ ids
+          v.asText()
+        }.toSet
+      }.toMap
     }
-    out.toMap
+    val ranges = for {
+      p2ws <- field(node, "partitionToWriteStats").filter(_.isObject).toSeq
+      stats <- p2ws.elements().asScala if stats.isArray
+      st <- stats.elements().asScala
+      path <- Option(st.get("path")).filter(_.isTextual)
+      kr <- Option(st.get("emptyFile")).filter(_.asBoolean(false)).map(_ => FileEmpty)
+        .orElse(for {
+          mn <- Option(st.get("minKeyHex")).filter(_.isTextual)
+          mx <- Option(st.get("maxKeyHex")).filter(_.isTextual)
+          // malformed hex from a foreign writer's colliding field name
+          // must not crash the prune: the file falls back to a footer
+          // probe like any other stats-less file
+          r <- scala.util.Try(Range(HudiSink.fromHex(mn.asText), HudiSink.fromHex(mx.asText))).toOption
+        } yield r)
+    } yield path.asText -> kr
+    val em = field(node, "extraMetadata")
+    val batch = for {
+      q <- field(em, "streaming-query-id")
+      b <- field(em, "streaming-batch-id").flatMap(_.asText.toLongOption)
+    } yield (q.asText, b)
+    CommitBody(replaced, ranges.toMap, batch)
   }
 
-  private[graft] def timeline(spark: SparkSession, tableDir: String,
-                              asOf: Option[String] = None): Timeline = {
-    val p = new Path(tableDir, ".hoodie")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"$tableDir is not a Hudi table (no .hoodie timeline)")
-    // asOf: the timeline AS OF an instant (inclusive) — instants are
-    // fixed-width digit strings, lexicographic = commit order; marker
-    // files without a digit prefix (hoodie.properties) pass through
-    val statuses = fs.listStatus(p).toSeq.filter { s =>
-      val n = s.getPath.getName
-      asOf.forall { max =>
-        val inst = n.takeWhile(_.isDigit); inst.isEmpty || inst <= max
-      }
+  /** One listing of `<table>/.hoodie`: every fact the readers and
+    * writers take from the timeline. `isTable` is false when the
+    * directory is missing. Instants are fixed-width digit strings,
+    * lexicographic = commit order (the public instant contract). Only
+    * `<instant>.commit` and `<instant>.replacecommit` complete an
+    * instant: an `.inflight`, a `.requested` or a MOR `.deltacommit`
+    * without its completion marker is a writer mid-flight (or a log
+    * the read-optimized view never reads), and its files stay
+    * invisible. A completed replacecommit (clustering) BOTH completes
+    * its own new base files and kills the file groups its body names
+    * (reference parity: HoodieROTablePathFilter handles clustered
+    * tables, HudiUtil.java:26-38). */
+  private[graft] final class Timeline(fs: FileSystem, tableDir: String,
+                                      val isTable: Boolean, entries: Seq[FileStatus]) {
+    private def instantOf(s: FileStatus) = s.getPath.getName.takeWhile(_.isDigit)
+    private def marked(suffix: String) =
+      entries.filter(_.getPath.getName.endsWith(suffix)).sortBy(_.getPath.getName)
+    /** Completed `.commit` markers, oldest first. */
+    val commits: Seq[FileStatus] = marked(".commit")
+    private val replacecommits = marked(".replacecommit")
+    /** Completed instants (commits AND replacecommits), in commit order. */
+    val completedInstants: Seq[String] = (commits ++ replacecommits).map(instantOf).sorted
+    val completed: Set[String] = completedInstants.toSet
+    def replacecommitsIn(from: String, to: String): Seq[String] =
+      replacecommits.map(instantOf).filter(i => i > from && i <= to)
+
+    /** The timeline AS OF `max` (inclusive); files without a digit
+      * prefix (hoodie.properties) pass through. */
+    def asOf(max: String): Timeline = new Timeline(fs, tableDir, isTable, entries.filter { s =>
+      val i = instantOf(s); i.isEmpty || i <= max
+    })
+
+    /** Max over every timeline file's digit prefix (any state), plus one. */
+    def nextInstant: String = {
+      val max = entries.map(instantOf).filter(_.nonEmpty).maxOption
+      f"${max.getOrElse("20240101000000000").toLong + 1}%017d"
     }
-    val names = statuses.map(_.getPath.getName)
-    val commits = names.filter(_.endsWith(".commit"))
-      .map(_.stripSuffix(".commit")).toSet
-    val replaced = scala.collection.mutable.HashMap.empty[String, Set[String]]
-    val replacecommits = statuses.filter(_.getPath.getName.endsWith(".replacecommit"))
-    replacecommits.foreach { s =>
+
+    def body(s: FileStatus): CommitBody = {
       val key = (s.getPath.toString, s.getLen, s.getModificationTime)
-      val hit = replaceCache.get(key)
-      val body =
-        if (hit != null) hit
-        else {
-          // parse outside the map lock; duplicate parse of an
-          // immutable file is harmless and yields the same value
-          val parsed = parseReplaceBody(fs, tableDir, s.getPath, s.getPath.getName)
-          replaceCache.put(key, parsed)
-          parsed
-        }
-      body.foreach { case (part, ids) =>
-        replaced(part) = replaced.getOrElse(part, Set.empty) ++ ids
+      val hit = bodies.get(key)
+      if (hit != null) hit
+      else {
+        // parse outside the map lock; a racing duplicate parse of an
+        // immutable file yields the same value
+        val parsed = parseBody(fs, tableDir, s)
+        bodies.put(key, parsed)
+        parsed
       }
     }
-    Timeline(commits ++ replacecommits.map(_.getPath.getName.stripSuffix(".replacecommit")),
-      replaced.toMap)
+
+    /** Replaced file groups per relative partition path ("" for an
+      * unpartitioned table). */
+    lazy val replaced: Map[String, Set[String]] =
+      replacecommits.flatMap(body(_).replaced).groupMapReduce(_._1)(_._2)(_ ++ _)
+    def dead(partitionDir: String): Set[String] = replaced.getOrElse(partitionDir, Set.empty)
+
+    /** The `_hoodie_record_key` range of every file a completed commit
+      * recorded, by table-relative path: the upsert locator prunes by
+      * these instead of re-opening snapshot footers (the public Hudi
+      * bloom-index idea; ranges are immutable per base file). Files of
+      * commits that record none fall back to footer probes. File names
+      * carry their instant: no cross-commit collisions. */
+    def keyRanges: Map[String, KeyRange] =
+      (commits ++ replacecommits).flatMap(body(_).ranges).toMap
   }
 
-  /** Latest completed base file per file group among `names`, minus
-    * `dead` file groups (clustering-replaced) — the
-    * HoodieROTablePathFilter decision, name-level. */
-  private[graft] def selectLatest(names: Seq[String], completed: Set[String],
-                                  dead: Set[String] = Set.empty): Seq[String] =
-    names.flatMap(parseFile)
-      .filter(b => completed(b.instant) && !dead(b.fileId))
-      .groupBy(_.fileId)
-      .values.map(_.maxBy(_.instant)).toSeq // lexicographic = timeline order
-      .map(_.name)
-      .sorted
+  /** Lists `<tableDir>/.hoodie` once. */
+  private[graft] def timeline(spark: SparkSession, tableDir: String): Timeline = {
+    val fs = hfs(spark, tableDir)
+    val entries = try Some(fs.listStatus(new Path(tableDir, ".hoodie")).toSeq)
+      catch { case _: java.io.FileNotFoundException => None }
+    new Timeline(fs, tableDir, entries.isDefined, entries.getOrElse(Nil))
+  }
 
-  /** Hive-style partition dirs (`col=value`) carrying the
-    * `.hoodie_partition_metadata` marker; an UNPARTITIONED table keeps
-    * its files at the root (returned as the single "" partition). */
-  private[graft] def listPartitionDirs(spark: SparkSession,
-                                       tableDir: String): Seq[String] = {
-    val p = new Path(tableDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && !s.getPath.getName.startsWith("."))
+  /** One listing of the table directory: the Hive-style partition dirs
+    * (`col=value`) carrying the `.hoodie_partition_metadata` marker,
+    * and the files at the root. An UNPARTITIONED table keeps its files
+    * at the root (`dirs` is the single "" partition). */
+  private[graft] final case class Layout(dirs: Seq[String], root: Seq[FileStatus]) {
+    def partitionCol: Option[String] = HudiRO.partitionCol(dirs)
+  }
+
+  private[graft] def layout(spark: SparkSession, tableDir: String): Layout = {
+    val fs = hfs(spark, tableDir)
+    val all = fs.listStatus(new Path(tableDir)).toSeq
+    val dirs = all.filter(s => s.isDirectory && !s.getPath.getName.startsWith("."))
       .map(_.getPath.getName)
       .filter(d => fs.exists(new Path(s"$tableDir/$d/.hoodie_partition_metadata")))
-    if (dirs.nonEmpty) dirs.sorted else Seq("")
+    Layout(if (dirs.nonEmpty) dirs.sorted else Seq(""), all.filter(_.isFile))
   }
+
+  /** The partition column named by the first `col=value` segment of
+    * `relPaths` (partition dirs or table-relative file paths). */
+  private[graft] def partitionCol(relPaths: Seq[String]): Option[String] =
+    relPaths.find(_.contains("=")).map(_.split("=", 2)(0))
+
+  /** A partition dir's raw value: its `col=value` segment Hive-UNESCAPED
+    * (a value with space/':'/'%' escapes in the path). */
+  private[graft] def partitionValue(dir: String): Option[String] =
+    if (!dir.contains("=")) None
+    else Some(org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+      .unescapePathName(dir.split("=", 2)(1)))
+
+  /** One partition dir's base files; `path` is its absolute dir. */
+  private[graft] final case class Slice(dir: String, path: String, files: Seq[BaseFile]) {
+    def file(b: BaseFile): String = s"$path/${b.name}"
+  }
+
+  /** A table as of one read: its timeline, its layout and the base files
+    * of the partition dirs kept by `keep`, each listed once (the root's
+    * files come from the layout's own listing). */
+  private[graft] final case class Snapshot(timeline: Timeline, layout: Layout,
+                                           slices: Seq[Slice]) {
+    /** The read-optimized view, per slice: the latest completed base
+      * file of each live file group. */
+    def visible: Seq[(Slice, BaseFile)] = slices.flatMap(s =>
+      latest(s.files, timeline.completed, timeline.dead(s.dir)).map(s -> _))
+    def visibleFiles: Seq[String] = visible.map { case (s, b) => s.file(b) }
+  }
+
+  private[graft] def snapshot(spark: SparkSession, tableDir: String,
+                              keep: String => Boolean = _ => true,
+                              tl: Option[Timeline] = None): Snapshot = {
+    val t = tl.getOrElse(timeline(spark, tableDir))
+    require(t.isTable, s"$tableDir is not a Hudi table (no .hoodie timeline)")
+    val lay = layout(spark, tableDir)
+    val fs = hfs(spark, tableDir)
+    val slices = lay.dirs.filter(keep).map { d =>
+      val path = if (d.isEmpty) tableDir else s"$tableDir/$d"
+      val files = if (d.isEmpty) lay.root else fs.listStatus(new Path(path)).toSeq.filter(_.isFile)
+      Slice(d, path, files.flatMap(f => parseFile(f.getPath.getName)))
+    }
+    Snapshot(t, lay, slices)
+  }
+
+  /** Latest completed base file per file group among `files`, minus
+    * `dead` file groups (clustering-replaced) — the
+    * HoodieROTablePathFilter decision, name-level. */
+  private def latest(files: Seq[BaseFile], completed: Set[String],
+                     dead: Set[String]): Seq[BaseFile] =
+    files.filter(b => completed(b.instant) && !dead(b.fileId))
+      .groupBy(_.fileId)
+      .values.map(_.maxBy(_.instant)).toSeq // lexicographic = timeline order
+      .sortBy(_.name)
+
+  private[graft] def selectLatest(names: Seq[String], completed: Set[String],
+                                  dead: Set[String] = Set.empty): Seq[String] =
+    latest(names.flatMap(parseFile), completed, dead).map(_.name)
 
   /** Read the read-optimized view. `partitions` non-empty prunes to
     * those partition VALUES on the driver before any file listing (the
     * S19 pruning shape); dir segments Hive-UNESCAPE before the pruning
-    * comparison (a value with space/':'/'%' escapes in the path — the
-    * user supplies the raw value, the reference unescapes the same
-    * way).
+    * comparison (the user supplies the raw value, the reference
+    * unescapes the same way).
     *
     * Scale design: ALL selected files feed ONE parquet relation
     * (`basePath`-anchored), so a 1000-partition table plans a single
@@ -224,28 +321,15 @@ object HudiRO {
   }
 
   /** The visible snapshot's base-file paths (the same name-level
-    * selection [[read]] scans), for callers that prune the list further
-    * before scanning — the S20d upsert key-locator reads only files
-    * whose footer key range intersects its batch. */
+    * selection [[read]] scans). */
   private[graft] def snapshotFiles(spark: SparkSession, tableDir: String,
                                    partitions: Seq[String] = Nil): Seq[String] = {
-    val tl = timeline(spark, tableDir)
-    val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val want = partitions.toSet
-    val dirs = listPartitionDirs(spark, tableDir).filter { d =>
-      want.isEmpty || d.split("=", 2).lastOption
-        .map(org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName)
-        .exists(want)
-    }
-    require(dirs.nonEmpty, s"no Hudi partitions selected under $tableDir")
-    dirs.flatMap { d =>
-      val dirPath = if (d.isEmpty) tableDir else s"$tableDir/$d"
-      val names = fs.listStatus(new Path(dirPath)).toSeq
-        .filter(_.isFile).map(_.getPath.getName)
-      // an all-inflight/replaced partition is a valid empty slice
-      selectLatest(names, tl.completed, tl.dead(d)).map(n => s"$dirPath/$n")
-    }
+    val snap = snapshot(spark, tableDir,
+      keep = d => want.isEmpty || partitionValue(d).exists(want))
+    require(snap.slices.nonEmpty, s"no Hudi partitions selected under $tableDir")
+    // an all-inflight/replaced partition is a valid empty slice
+    snap.visibleFiles
   }
 
   /** ONE parquet relation over an explicit base-file subset (paths from
@@ -254,23 +338,20 @@ object HudiRO {
   private[graft] def readFiles(spark: SparkSession, tableDir: String,
                                files: Seq[String]): DataFrame = {
     require(files.nonEmpty, s"no Hudi base files to read under $tableDir")
-    val partitioned = files.exists(f =>
-      f.stripPrefix(tableDir).stripPrefix("/").contains("="))
-    if (!partitioned) spark.read.parquet(files: _*)
-    else {
-      // Pin the partition column to STRING via an explicit user schema
-      // (data fields from the first selected file's footer + the
-      // partition column appended, the discovery order) instead of
-      // toggling the session-global type-inference conf — a concurrent
-      // query on the same SparkSession must never observe a flipped
-      // conf, and two overlapping reads could restore a stale value.
-      val pcol = files.find(f => f.stripPrefix(tableDir).contains("=")).get
-        .stripPrefix(tableDir).stripPrefix("/").split("=", 2)(0)
-      val data = spark.read.parquet(files.head).schema
-      val full = org.apache.spark.sql.types.StructType(
-        data.fields :+ org.apache.spark.sql.types.StructField(
-          pcol, org.apache.spark.sql.types.StringType))
-      spark.read.schema(full).option("basePath", tableDir).parquet(files: _*)
+    partitionCol(files.map(_.stripPrefix(tableDir).stripPrefix("/"))) match {
+      case None => spark.read.parquet(files: _*)
+      case Some(pcol) =>
+        // Pin the partition column to STRING via an explicit user schema
+        // (data fields from the first selected file's footer + the
+        // partition column appended, the discovery order) instead of
+        // toggling the session-global type-inference conf — a concurrent
+        // query on the same SparkSession must never observe a flipped
+        // conf, and two overlapping reads could restore a stale value.
+        val data = spark.read.parquet(files.head).schema
+        val full = org.apache.spark.sql.types.StructType(
+          data.fields :+ org.apache.spark.sql.types.StructField(
+            pcol, org.apache.spark.sql.types.StringType))
+        spark.read.schema(full).option("basePath", tableDir).parquet(files: _*)
     }
   }
 }

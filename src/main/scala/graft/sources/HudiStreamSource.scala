@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -91,39 +90,14 @@ object HudiStream {
     * a string (the batch reader's discovery convention, appended
     * last). */
   private[graft] def tableSchema(tableDir: String): StructType = {
-    val tl = HudiRO.timeline(spark, tableDir)
-    val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = HudiRO.listPartitionDirs(spark, tableDir)
-    val first = dirs.iterator.flatMap { d =>
-      val dirPath = if (d.isEmpty) tableDir else s"$tableDir/$d"
-      val names = fs.listStatus(new Path(dirPath)).toSeq
-        .filter(_.isFile).map(_.getPath.getName)
-      HudiRO.selectLatest(names, tl.completed, tl.dead(d))
-        .headOption.map(n => (d, s"$dirPath/$n"))
-    }.toSeq.headOption
+    val snap = HudiRO.snapshot(spark, tableDir)
+    val first = snap.visibleFiles.headOption
     require(first.nonEmpty, s"no completed Hudi base files under $tableDir")
-    val data = spark.read.parquet(first.get._2).schema
-    partitionCol(dirs) match {
+    val data = spark.read.parquet(first.get).schema
+    snap.layout.partitionCol match {
       case Some(c) => StructType(data.fields :+ StructField(c, StringType))
       case None => data
     }
-  }
-
-  private[graft] def partitionCol(dirs: Seq[String]): Option[String] =
-    dirs.find(_.contains("=")).map(_.split("=", 2)(0))
-
-  /** Completed instants (commits AND replacecommits) in the timeline —
-    * replacecommits are included so the end offset CROSSES them and
-    * batch planning fails fast, instead of the stream silently
-    * stalling just before one forever. A missing timeline throws
-    * `FileNotFoundException`: a failed poll, not a table-state check. */
-  private[graft] def completedInstants(tableDir: String): Seq[String] = {
-    val p = new Path(tableDir, ".hoodie")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).toSeq.map(_.getPath.getName).collect {
-      case n if n.endsWith(".commit") => n.stripSuffix(".commit")
-      case n if n.endsWith(".replacecommit") => n.stripSuffix(".replacecommit")
-    }.sorted
   }
 }
 
@@ -134,64 +108,54 @@ class HudiMicroBatchStream(path: String, required: StructType,
   private def spark = org.apache.spark.sql.SparkSession.active
   private def hconf = spark.sparkContext.hadoopConfiguration
 
-  override protected def pending(from: String): Seq[String] =
-    HudiStream.completedInstants(path).filter(_ > from)
+  /** Completed instants (commits AND replacecommits) after `from` —
+    * replacecommits are included so the end offset CROSSES them and
+    * batch planning fails fast, instead of the stream silently
+    * stalling just before one forever. A missing timeline throws
+    * `FileNotFoundException`: a failed poll, not a table-state check. */
+  override protected def pending(from: String): Seq[String] = {
+    val tl = HudiRO.timeline(spark, path)
+    if (!tl.isTable) throw new java.io.FileNotFoundException(s"$path/.hoodie")
+    tl.completedInstants.filter(_ > from)
+  }
 
   /** (from, to] → input files. From "" it is the RO snapshot as of
     * `to`; otherwise the per-commit file diff, failing fast on
     * rewrites and mid-stream clustering (scaladoc contract above). */
   override protected def plan(from: String, to: String): Array[InputPartition] = {
     if (to <= from) return Array.empty
-    val fs = new Path(path).getFileSystem(hconf)
-    val dirs = HudiRO.listPartitionDirs(spark, path)
+    val tl = HudiRO.timeline(spark, path)
     val parts: Seq[HudiStreamInputPartition] =
       if (from.isEmpty) {
         // initial batch: the consistent RO snapshot as of `to` — full
         // rows, no commit-time filter (point-in-time state, not a diff)
-        val tl = HudiRO.timeline(spark, path, asOf = Some(to))
-        dirs.flatMap { d =>
-          val dirPath = if (d.isEmpty) path else s"$path/$d"
-          val names = fs.listStatus(new Path(dirPath)).toSeq
-            .filter(_.isFile).map(_.getPath.getName)
-          HudiRO.selectLatest(names, tl.completed, tl.dead(d))
-            .map(n => HudiStreamInputPartition(s"$dirPath/$n", partValue(d), null))
+        HudiRO.snapshot(spark, path, tl = Some(tl.asOf(to))).visible.map { case (s, b) =>
+          HudiStreamInputPartition(s.file(b), HudiRO.partitionValue(s.dir).orNull, null)
         }
       } else {
         // drain: whole commits in (from, to]
-        val tlNames = fs.listStatus(new Path(path, ".hoodie")).toSeq
-          .map(_.getPath.getName)
-        val replacing = tlNames.filter(_.endsWith(".replacecommit"))
-          .map(_.stripSuffix(".replacecommit")).filter(i => i > from && i <= to)
+        val replacing = tl.replacecommitsIn(from, to)
         if (replacing.nonEmpty) throw new IllegalStateException(
           s"$path: clustering replacecommit ${replacing.head} inside the " +
             "admitted range — a replacecommit is a pure rewrite; replaying its " +
             "base files as inserts would duplicate rows. Restart the stream " +
             "from a fresh checkpoint (its initial snapshot supersedes " +
             "clustering) or stop clustering the streamed table.")
-        val admitted = tlNames.filter(_.endsWith(".commit"))
-          .map(_.stripSuffix(".commit")).filter(i => i > from && i <= to).toSet
-        // Only COMPLETED older instants make a commit a rewrite: an
-        // orphan base file from an aborted/inflight instant was never
-        // visible, so a new commit stamping the same fileId is a plain
-        // insert, not a rewrite.
-        val completedAll = tlNames.collect {
-          case n if n.endsWith(".commit") => n.stripSuffix(".commit")
-          case n if n.endsWith(".replacecommit") => n.stripSuffix(".replacecommit")
-        }.toSet
-        dirs.flatMap { d =>
-          val dirPath = if (d.isEmpty) path else s"$path/$d"
-          val names = fs.listStatus(new Path(dirPath)).toSeq
-            .filter(_.isFile).map(_.getPath.getName)
-          val parsed = names.flatMap(HudiRO.parseFile)
-          val fresh = parsed.filter(b => admitted(b.instant))
+        val admitted = tl.completedInstants.filter(i => i > from && i <= to).toSet
+        HudiRO.snapshot(spark, path, tl = Some(tl)).slices.flatMap { s =>
+          val fresh = s.files.filter(b => admitted(b.instant))
           fresh.foreach { b =>
-            val older = parsed.exists(o => o.fileId == b.fileId &&
-              o.instant < b.instant && completedAll(o.instant))
+            // Only COMPLETED older instants make a commit a rewrite: an
+            // orphan base file from an aborted/inflight instant was never
+            // visible, so a new commit stamping the same fileId is a plain
+            // insert, not a rewrite.
+            val older = s.files.exists(o => o.fileId == b.fileId &&
+              o.instant < b.instant && tl.completed(o.instant))
             // T29b: with record-level meta columns, a COW rewrite is
             // row-filterable to exactly its changed rows (below) —
             // only a meta-less table must fail fast.
             if (older && !hasMetaCols) throw new IllegalStateException(
-              s"$path/$d: commit ${b.instant} REWRITES file group ${b.fileId} " +
+              s"$path/${s.dir}: commit ${b.instant} REWRITES file group ${b.fileId} " +
                 "(COW update/delete) — its new base file carries the group's " +
                 "old rows and replaying it as inserts would duplicate. This " +
                 "stream is append-only without _hoodie_* meta columns; serve " +
@@ -207,23 +171,16 @@ class HudiMicroBatchStream(path: String, required: StructType,
           // commit). Deletes do not emit — this is the upsert-CDC
           // shape (the T22 sink's contract), not tombstone CDC.
           fresh.sortBy(b => (b.instant, b.name))
-            .map(b => HudiStreamInputPartition(s"$dirPath/${b.name}", partValue(d),
+            .map(b => HudiStreamInputPartition(s.file(b), HudiRO.partitionValue(s.dir).orNull,
               if (hasMetaCols) b.instant else null))
         }
       }
     parts.toArray
   }
 
-  private def partValue(d: String): String =
-    if (!d.contains("=")) null
-    else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      .unescapePathName(d.split("=", 2)(1))
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val pcol = HudiStream.partitionCol(HudiRO.listPartitionDirs(spark, path))
-    new HudiStreamReaderFactory(required, pcol,
+  override def createReaderFactory(): PartitionReaderFactory =
+    new HudiStreamReaderFactory(required, HudiRO.layout(spark, path).partitionCol,
       HadoopConfBroadcast.get(spark.sparkContext, hconf))
-  }
 }
 
 /** `commitFilter`: non-null on a T29b CDC drain — only rows whose

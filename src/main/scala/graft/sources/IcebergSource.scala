@@ -12,8 +12,12 @@ import org.apache.avro.mapred.FsInput
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
+import org.apache.parquet.hadoop.api.ReadSupport.ReadContext
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types, Type => PType}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, BOOLEAN, DOUBLE, INT32, INT64}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -181,17 +185,25 @@ object IcebergMeta {
   /** The one commit step: applies `edit` to `base`'s tree, then writes
     * it as v(N+1).metadata.json and only then moves the hint to N+1, so
     * a reader sees version N or N+1 and never a hint to a missing file.
-    * Each file is written whole through a rename ([[graft.Fs.writeAtomic]]).
-    * Not a compare-and-swap: two writers that both read version N both
-    * write v(N+1), and the later rename silently replaces the earlier
-    * commit. */
+    * v(N+1) is claimed with [[graft.Fs.createExclusive]] and then filled,
+    * so of two writers that both read version N only one commits: the
+    * other throws an `IllegalStateException` naming the taken version
+    * and leaves it untouched. No reader opens v(N+1) before the hint
+    * names it; a failed fill gives the claim back. The hint is written
+    * whole through a rename ([[graft.Fs.writeAtomic]]). */
   private[sources] def commit(tableDir: String, conf: Configuration, base: Version)(
       edit: ObjectNode => Unit): Unit = {
     val fs = new Path(tableDir).getFileSystem(conf)
     edit(base.tree)
     base.tree.put("last-updated-ms", System.currentTimeMillis())
-    graft.Fs.writeAtomic(fs, new Path(tableDir, s"metadata/v${base.n + 1}.metadata.json"),
-      mapper.writeValueAsString(base.tree))
+    val next = new Path(tableDir, s"metadata/v${base.n + 1}.metadata.json")
+    if (!graft.Fs.createExclusive(fs, next)) throw new IllegalStateException(
+      s"$tableDir: metadata version ${base.n + 1} (${next.getName}) is already taken " +
+        s"by another commit; this commit read version ${base.n} and is refused")
+    try {
+      val out = fs.create(next, /* overwrite = */ true)
+      try out.write(mapper.writeValueAsBytes(base.tree)) finally out.close()
+    } catch { case e: Throwable => fs.delete(next, false); throw e }
     graft.Fs.writeAtomic(fs, new Path(tableDir, HintFile), (base.n + 1).toString)
   }
 
@@ -1568,16 +1580,17 @@ class IcebergPartitionReader(file: String, required: StructType,
                              idByName: Map[String, Int],
                              base: org.apache.spark.broadcast.Broadcast[SerializableHadoopConf])
     extends PartitionReader[InternalRow] {
-  private val conf = new Configuration(base.value.value)
+  private val conf = base.value.value
   // empty projection (e.g. count(*)) still needs one column to drive
   // row iteration; emit empty rows from it
   private val emptyProjection = required.isEmpty
   // srcIdx(i): position of required column i within the projected
   // group, or -1 when the file predates the column (NULL).
   private val srcIdx = new Array[Int](required.length)
-  init()
-  private def init(): Unit = {
-    if (emptyProjection) return
+  // built as a typed schema, never parsed from text: a column name may
+  // hold any character (quotes, spaces, ';')
+  private val projection: Option[MessageType] = if (emptyProjection) None else Some(init())
+  private def init(): MessageType = {
     // file schema: one footer read; columns carry the writer's ids
     val footer = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
     val fileFields =
@@ -1590,7 +1603,7 @@ class IcebergPartitionReader(file: String, required: StructType,
       } yield c.getName
       byId.orElse(fileFields.find(_.getName == name).map(_.getName))
     }
-    val cols = scala.collection.mutable.ArrayBuffer.empty[String]
+    val cols = scala.collection.mutable.ArrayBuffer.empty[PType]
     required.fields.zipWithIndex.foreach { case (f, i) =>
       resolve(f.name) match {
         case None => srcIdx(i) = -1
@@ -1600,34 +1613,34 @@ class IcebergPartitionReader(file: String, required: StructType,
           // writers mark non-null columns `required`, and parquet's
           // projection check rejects a repetition mismatch
           val rep = fileFields.find(_.getName == fileName)
-            .map(_.getRepetition.name.toLowerCase).getOrElse("optional")
+            .map(_.getRepetition).getOrElse(PType.Repetition.OPTIONAL)
           cols += (f.dataType match {
-            case LongType => s"$rep int64 $fileName;"
-            case IntegerType => s"$rep int32 $fileName;"
-            case DoubleType => s"$rep double $fileName;"
-            case BooleanType => s"$rep boolean $fileName;"
-            case StringType => s"$rep binary $fileName (UTF8);"
-            case DateType => s"$rep int32 $fileName (DATE);"
-            // writer pins int64 micros (spec physical type for timestamps)
-            case TimestampType => s"$rep int64 $fileName;"
+            // the writer pins int64 micros (spec physical type for timestamps)
+            case LongType | TimestampType => Types.primitive(INT64, rep)
+            case IntegerType => Types.primitive(INT32, rep)
+            case DoubleType => Types.primitive(DOUBLE, rep)
+            case BooleanType => Types.primitive(BOOLEAN, rep)
+            case StringType => Types.primitive(BINARY, rep).as(LogicalTypeAnnotation.stringType())
+            case DateType => Types.primitive(INT32, rep).as(LogicalTypeAnnotation.dateType())
             case other => sys.error(s"graft iceberg: unsupported read type $other")
-          })
+          }).named(fileName)
       }
     }
     // all-missing projection (every required column newer than the
     // file): keep ONE file column so the reader still iterates rows.
     // The sentinel must mirror the file's OWN primitive type — parquet
     // checkContains rejects a type mismatch even for a never-read column.
-    val body = if (cols.isEmpty) {
+    if (cols.isEmpty) {
       srcIdx.indices.foreach(srcIdx(_) = -1)
       val p = fileFields.head.asPrimitiveType()
-      s"optional ${p.getPrimitiveTypeName.name.toLowerCase} ${p.getName};"
-    } else cols.mkString(" ")
-    conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-      s"message graft_projection { $body }")
+      cols += Types.optional(p.getPrimitiveTypeName).named(p.getName)
+    }
+    new MessageType("graft_projection", cols.asJava)
   }
-  private val reader = org.apache.parquet.hadoop.ParquetReader
-    .builder(new GroupReadSupport(), new Path(file)).withConf(conf).build()
+  private val reader = org.apache.parquet.hadoop.ParquetReader.builder(new GroupReadSupport {
+    override def init(ctx: InitContext): ReadContext = new ReadContext(projection
+      .map(ReadSupport.getSchemaForRead(ctx.getFileSchema, _)).getOrElse(ctx.getFileSchema))
+  }, new Path(file)).withConf(conf).build()
   private var current: org.apache.parquet.example.data.Group = _
 
   override def next(): Boolean = {

@@ -738,15 +738,13 @@ object Streams {
       .filter(col("__rn") === 1).drop("__rn")
     exactlyOnce(batch, batchId)(graft.sources.HudiSink.lastCommittedBatchId(
       spark, tableDir, _)) { em =>
-      val fs = new org.apache.hadoop.fs.Path(tableDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val instant = graft.sources.HudiSink.nextInstant(spark, tableDir)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$tableDir/.hoodie")))
+      val tl = graft.sources.HudiRO.timeline(spark, tableDir)
+      if (!tl.isTable)
         graft.sources.HudiSink.insert(collapsed, tableDir, keyCol, partitionCol,
-          instant, extraMetadata = em)
+          tl.nextInstant, extraMetadata = em)
       else
         graft.sources.HudiSink.upsert(collapsed, tableDir, keyCol, partitionCol,
-          instant, extraMetadata = em)
+          tl.nextInstant, extraMetadata = em)
     }
   }
 

@@ -2559,4 +2559,97 @@ class SourcesSpec extends SparkSpec {
     put("not json at all")
     intercept[IllegalArgumentException] { HudiRO.read(spark, copy) }
   }
+
+  test("S16p: an Iceberg commit refuses a metadata version another writer already took") {
+    import graft.sources.IcebergWrite
+    import java.nio.file.{Files, Paths}
+    val dir = tempDir("graft_src") + "/iceberg_taken"
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+    IcebergWrite.write(docs.filter(col("doc_id") < 400), dir, "doc_id", 8)
+    // a second writer that read version 1 too committed v2 first (the
+    // hint not moved yet)
+    val meta = Paths.get(dir, "metadata")
+    Files.copy(meta.resolve("v1.metadata.json"), meta.resolve("v2.metadata.json"))
+    val taken = Files.readAllBytes(meta.resolve("v2.metadata.json"))
+    val e = intercept[IllegalStateException] {
+      IcebergWrite.append(docs.filter(col("doc_id") >= 400), dir)
+    }
+    assert(e.getMessage.contains("v2.metadata.json"), e.getMessage)
+    assert(java.util.Arrays.equals(Files.readAllBytes(meta.resolve("v2.metadata.json")), taken))
+    assert(Files.readString(meta.resolve("version-hint.text")).trim == "1")
+  }
+
+  test("S16q: a column named with quotes and a space reads through the Iceberg DSv2 source and a Hudi stream") {
+    import graft.sources.{HudiSink, IcebergWrite}
+    import org.apache.spark.sql.Row
+    val quoted = "say \"hi\""
+    val schema = StructType(Seq(StructField("id", LongType), StructField(quoted, StringType)))
+    val rows = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(1L, "a"), Row(2L, "b"))), schema)
+    val want = Seq((1L, "a"), (2L, "b"))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id"), col(quoted)).collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+    val root = tempDir("graft_src")
+    IcebergWrite.write(rows, s"$root/iceberg", "id", "identity")
+    assert(pairs(spark.read.format("graft.sources.IcebergSource").load(s"$root/iceberg")) == want)
+    HudiSink.insert(rows, s"$root/hudi", "id", None, "20300101000000001")
+    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
+    val q = spark.readStream.format("graft.sources.HudiStreamSource").load(s"$root/hudi")
+      .writeStream.foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        got.synchronized { got ++= pairs(df) }; ()
+      }.option("checkpointLocation", s"$root/ckpt").start()
+    try q.processAllAvailable() finally q.stop()
+    assert(got.sortBy(_._1).toSeq == want)
+  }
+
+  test("S20h: one upsert lists the timeline once and the table directory once while it holds the writer lock") {
+    import graft.sources.{HudiRO, HudiSink}
+    import spark.implicits._
+    CountingFs.register(spark)
+    val local = tempDir("graft_src") + "/hudicount"
+    val dir = s"counting:$local"
+    HudiSink.insert(Seq(("a", 1L, "x"), ("b", 2L, "y")).toDF("k", "v", "p"), dir, "k",
+      Some("p"), "20300101000000001")
+    CountingFs.events.clear()
+    HudiSink.upsert(Seq(("a", 10L, "x"), ("c", 3L, "y")).toDF("k", "v", "p"), dir, "k",
+      Some("p"), "20300101000000002")
+    val log = CountingFs.events.toArray(Array.empty[String]).toSeq
+    // held: from the owner write into the just-taken lock to its release
+    val lock = s"$local/.hoodie/.lock"
+    val from = log.indexOf(s"create $lock")
+    val to = log.indexOf(s"delete $lock")
+    assert(from >= 0 && to > from, log.mkString("\n"))
+    val held = log.slice(from, to)
+    val timelineLists = held.count(_ == s"list $local/.hoodie")
+    val tableLists = held.count(_ == s"list $local")
+    assert((timelineLists, tableLists) == ((1, 1)), held.filter(_.startsWith("list")).mkString("\n"))
+    assert(HudiRO.read(spark, dir).count() == 3)
+  }
+}
+
+/** The local filesystem under its own scheme, `counting:`, logging each
+  * `listStatus`, `create` and `delete` as "<op> <path>" in call order,
+  * so a spec can count the listings a writer makes while it holds its
+  * lock. */
+class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, Path}
+  override def getUri: java.net.URI = java.net.URI.create("counting:///")
+  override def getScheme: String = "counting"
+  private def note(op: String, p: Path): Unit = CountingFs.events.add(s"$op ${p.toUri.getPath}")
+  override def listStatus(p: Path): Array[FileStatus] = { note("list", p); super.listStatus(p) }
+  override def create(p: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+                      blockSize: Long,
+                      progress: org.apache.hadoop.util.Progressable): FSDataOutputStream = {
+    note("create", p); super.create(p, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def delete(p: Path, recursive: Boolean): Boolean = { note("delete", p); super.delete(p, recursive) }
+}
+
+object CountingFs {
+  val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  /** Maps the `counting:` scheme to this filesystem in the session's
+    * Hadoop configuration. */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.hadoopConfiguration.set("fs.counting.impl", classOf[CountingFs].getName)
 }
