@@ -386,16 +386,13 @@ object HudiSink {
     * HERE, before the snapshot read — not at commit time — so the
     * snapshot the rewrite plans against is the snapshot it commits
     * against (two serialized distinct-instant upserts can never both
-    * succeed with the second planning from a stale snapshot). Under
-    * the lock the timeline and the table directory are each listed
-    * once. */
+    * succeed with the second planning from a stale snapshot). */
   private def rewrite(batch: DataFrame, tableDir: String, keyCol: String,
                       instant: String, recordsPerGroup: Long, op: String,
                       extraMetadata: Map[String, String],
                       deleteKeys: Boolean): Unit = {
     val spark = batch.sparkSession
-    withWriterLock(spark, tableDir, instant, op) {
-      val snap = HudiRO.snapshot(spark, tableDir)
+    withLockedSnapshot(spark, tableDir, instant, op) { snap =>
       // the table's own partition column (from the dir layout), which may
       // differ from / confirm the caller's: data files never carry it
       val tablePart = snap.layout.partitionCol
@@ -508,8 +505,7 @@ object HudiSink {
     * slice before and after is row-identical, which the oracle pins. */
   def cluster(spark: SparkSession, tableDir: String, instant: String,
               extraMetadata: Map[String, String] = Map.empty): Unit =
-    withWriterLock(spark, tableDir, instant, "CLUSTER") {
-      val snap = HudiRO.snapshot(spark, tableDir)
+    withLockedSnapshot(spark, tableDir, instant, "CLUSTER") { snap =>
       val files = snap.visibleFiles
       require(files.nonEmpty, s"no completed Hudi base files under $tableDir")
       val cur = HudiRO.readFiles(spark, tableDir, files)
@@ -543,8 +539,21 @@ object HudiSink {
     * ~3 missed heartbeats of slack. Test seam: specs shrink it. */
   @volatile private[graft] var lockTtlMs: Long = 10 * 60 * 1000L
 
+  /** Runs `body` under the writer lock on the table as read there
+    * ([[HudiRO.snapshot]]: the timeline and the table directory listed
+    * once each), so [[rewrite]] and [[cluster]] plan against the
+    * snapshot they commit against. The table must exist: the lock
+    * lives in its `.hoodie`. */
+  private def withLockedSnapshot[T](spark: SparkSession, tableDir: String,
+                                    instant: String, op: String)(body: HudiRO.Snapshot => T): T = {
+    require(HudiRO.timeline(spark, tableDir).isTable,
+      s"$op: no Hudi table at $tableDir (no .hoodie timeline)")
+    withWriterLock(spark, tableDir, instant, op)(body(HudiRO.snapshot(spark, tableDir)))
+  }
+
   /** Acquire the table's create-exclusive writer LOCK (owner metadata
-    * in the body), run `body`, release. Released on success AND on
+    * in the body; the table's `.hoodie` must exist), run `body`,
+    * release. Released on success AND on
     * in-process failure (a failed commit must not wedge the table).
     * [[rewrite]] and [[cluster]] hold it across PLANNING +
     * COMMIT, so the snapshot a rewrite reads is the snapshot it
@@ -567,8 +576,6 @@ object HudiSink {
     * instant. */
   private def withWriterLock[T](spark: SparkSession, tableDir: String,
                                 instant: String, op: String)(body: => T): T = {
-    require(HudiRO.timeline(spark, tableDir).isTable,
-      s"$op: no Hudi table at $tableDir (no .hoodie timeline)")
     val fs = hfs(spark, tableDir)
     val lock = new Path(s"$tableDir/.hoodie/.lock")
     val owner = java.lang.management.ManagementFactory.getRuntimeMXBean.getName
